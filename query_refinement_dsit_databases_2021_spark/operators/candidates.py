@@ -6,10 +6,14 @@ value}`` by a double loop over both decision domains
 ``(x, lx, m_<constraint>, ...)`` built by one of two declarative
 strategies (chosen by a cost rule, SURVEY §4 O11):
 
-**W — per-lx window frames.** For each offset value ``lx`` compute
-``agg(y) OVER (ORDER BY time_id RANGE BETWEEN ...)`` columns, then
-unpivot (explode) to candidate rows. Work is O(N · Σ frame width);
-optimal when the offset domain is small.
+**W — one forward frame + array slices.** One
+``collect_list(y) OVER (ORDER BY time_id ROWS BETWEEN CURRENT ROW AND
+reach FOLLOWING)`` gives each start row its forward values, plus one
+``max(y)`` frame per distinct left neighbourhood; the offsets are then
+exploded and each measure is an array expression over
+``slice(fwd, 1, lx+1)``. The plan has the same shape for any offset
+count L. Work is O(N · reach) for the frame plus O(window) per
+candidate; best when the offset domain is small.
 
 **S — prefix sums + sparse table (doubling RMQ).** One pass builds
 inclusive prefix sums; ⌈log2 L⌉ passes build doubling-max levels
@@ -35,11 +39,16 @@ from query_refinement_dsit_databases_2021_spark.errors import QueryError
 from query_refinement_dsit_databases_2021_spark.operators.measures import (
     REGISTRY,
     SparseCtx,
+    WindowCtx,
 )
 from query_refinement_dsit_databases_2021_spark.plans.spec import QuerySpec
 
 # Auto strategy: W while the offset domain stays small (every committed
-# reference query has <= 46 offsets), else S.
+# reference query has <= 46 offsets), else S. Re-measured for the
+# forward-frame W on a 4-vCPU machine (1e5-point series, avg_amp +
+# max_amp_excess_left(20), build + noop write, median of 4): at 8,000
+# starts W leads at 48 and 64 offsets (2.5 vs 2.8 s, 4.5 vs 4.9 s) and
+# S at 96 (4.5 vs 7.0 s); at 1,000 starts the two tie near 128.
 WINDOW_STRATEGY_MAX_OFFSETS = 64
 
 # Sparse-path scratch pre-flight (r08 verdict item 5). Measured on the
@@ -151,7 +160,8 @@ def build_candidates(
     partition_rows: int | None = None,
 ) -> DataFrame:
     """segment: DataFrame[time_id long, y double], dense over
-    [t_start, t_end] (already range-filtered to [x0, x1+l1] ∩ data).
+    [t_start, t_end] with non-null y (already range-filtered to
+    [x0, x1+l1] ∩ data).
 
     Returns DataFrame[x long, lx int, m_* double] with one row per
     in-data candidate: x ∈ [x0, x1] ∩ [t_start, ..], x+lx <= t_end.
@@ -241,7 +251,7 @@ SPARSE_OFFSET_FAN = 4096
 
 
 # ---------------------------------------------------------------------------
-# strategy W: per-lx window frames
+# strategy W: one forward frame + array slices
 # ---------------------------------------------------------------------------
 
 def _build_window(
@@ -266,72 +276,35 @@ def _build_window(
         segment, t_start, t_end, block, reach_fwd, reach_bwd
     )
 
-    # SQL-text fast path (r09): a scale-domain query builds dozens of
-    # frame columns and per-lx structs; assembling them through the
-    # Column API measured ~4,000 py4j round trips (~1.8 s of pure
-    # driver time per build at 36 offsets). When every measure
-    # provides its w_expr as SQL text, the whole projection parses
-    # JVM-side in two calls and resolves to the identical plan.
-    sql_ok = all(
-        mdef.w_expr_sql(l0, args) is not None
-        for mdef, args in measures.values()
+    # measure expressions first: they record the left neighbourhoods
+    # whose max frames the start rows must carry
+    ctx = WindowCtx(fwd=F.col("fwd"), lx=F.col("lx"))
+    measure_exprs = {
+        col_name: mdef.w_expr(ctx, args).cast("double")
+        for col_name, (mdef, args) in measures.items()
+    }
+
+    w = Window.partitionBy("wpid").orderBy("time_id")
+    frames = [F.collect_list("y").over(w.rowsBetween(0, reach_fwd)).alias("fwd")]
+    frames += [
+        F.max("y").over(w.rowsBetween(-lw, 0)).alias(f"lmax_{lw}")
+        for lw in sorted(ctx.left_ws)
+    ]
+    starts = (
+        seg2.select("wpid", "time_id", *frames)
+        # drop halo evaluation rows; keep candidate starts only
+        .where((F.col("wpid") == true_pid) & F.col("time_id").between(x0, x1))
     )
-
-    # deduplicated base frame columns across measures and lx values
-    frame_cols: dict[str, object] = {}
-    w = None if sql_ok else Window.partitionBy("wpid").orderBy("time_id")
-    for lx in range(l0, l1 + 1):
-        for mdef, args in measures.values():
-            for fr in mdef.w_frames(lx, args):
-                if fr.name not in frame_cols:
-                    frame_cols[fr.name] = fr.sql() if sql_ok else fr.column(w)
-
-    if sql_ok:
-        computed = seg2.selectExpr(
-            "wpid",
-            "time_id",
-            *[f"{sql} AS {n}" for n, sql in frame_cols.items()],
-        )
-    else:
-        computed = seg2.select(
-            "wpid",
-            "time_id",
-            *[c.alias(n) for n, c in frame_cols.items()],
-        )
-    # drop halo evaluation rows; keep candidate starts only
-    computed = computed.where(
-        (F.col("wpid") == true_pid) & F.col("time_id").between(x0, x1)
+    cands = starts.withColumn(
+        "lx", F.explode(F.sequence(F.lit(l0), F.lit(l1)))
+    ).where(  # complete-window guard: window must not leave the data
+        F.col("time_id") + F.col("lx") <= F.lit(t_end)
     )
-
-    if sql_ok:
-        struct_sqls = []
-        for lx in range(l0, l1 + 1):
-            fields = [f"CAST({lx} AS INT) AS lx"]
-            for col_name, (mdef, args) in measures.items():
-                fields.append(
-                    f"CAST({mdef.w_expr_sql(lx, args)} AS DOUBLE)"
-                    f" AS {col_name}"
-                )
-            struct_sqls.append("struct(" + ", ".join(fields) + ")")
-        exploded = F.explode(
-            F.expr("array(" + ", ".join(struct_sqls) + ")")
-        )
-    else:
-        structs = []
-        for lx in range(l0, l1 + 1):
-            fields = [F.lit(lx).cast("int").alias("lx")]
-            for col_name, (mdef, args) in measures.items():
-                fields.append(
-                    mdef.w_expr(lx, args).cast("double").alias(col_name)
-                )
-            structs.append(F.struct(*fields))
-        exploded = F.explode(F.array(*structs))
-
-    out = computed.select(
-        F.col("time_id").alias("x"), exploded.alias("c")
-    ).select("x", "c.*")
-    # complete-window guard: window must not leave the data
-    return out.where(F.col("x") + F.col("lx") <= F.lit(t_end))
+    return cands.select(
+        F.col("time_id").alias("x"),
+        "lx",
+        *[e.alias(n) for n, e in measure_exprs.items()],
+    )
 
 
 # ---------------------------------------------------------------------------

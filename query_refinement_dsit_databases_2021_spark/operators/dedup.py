@@ -55,13 +55,6 @@ SIMHASH_BITS = 32
 SIMHASH_BANDS = 4  # 8 bits per band; hamming<=3 => >=1 band equal
 SIMHASH_MOD = 1 << SIMHASH_BITS
 
-# broadcast the per-round label frame in neardup_components while the
-# node set fits a comfortable broadcast (~16 B/row → ~160 MB at the
-# bound) — the components-loop analogue of graph.PR_BROADCAST_MAX_NODES
-# (same rationale, same measured-switch convention); beyond it the
-# labels shuffle (plain equi-join)
-CC_BROADCAST_MAX_NODES = 10_000_000
-
 
 def _release_with(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Tie the lifetime of internally ``persist()``-ed frames to the
@@ -851,8 +844,8 @@ def neardup_components(
         F.sum("label").alias("s"), F.count(F.lit(1)).alias("n")
     ).first()
     prev_sum = first["s"]
-    # r09 (guide §3.1, same measured-switch convention as
-    # graph.PR_BROADCAST_MAX_NODES): the per-round join shuffles the
+    # r09 (guide §3.1, same measured-switch convention as graph.pagerank,
+    # bounded by materialize.broadcast_ok): the per-round join shuffles the
     # EDGE table against a node-sized label frame; while the labels
     # fit a comfortable broadcast (~16 B/row), broadcasting them keeps
     # the edges out of every round's join exchange — the groupBy(a)

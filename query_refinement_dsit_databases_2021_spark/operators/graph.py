@@ -43,11 +43,6 @@ from query_refinement_dsit_databases_2021_spark.operators.materialize import (
 INIT_MASS = 1_000_000_000
 TELEPORT = 150_000_000  # floor(0.15 * INIT_MASS)
 PR_ITERATIONS = 5
-# broadcast the per-iteration send frame while the node set fits a
-# comfortable broadcast (≈16 B/row → ~160 MB at the bound); measured
-# 1.65× at 100M edges / 10M nodes, no regression at smaller sizes
-# (graph_scale.csv, BASELINE.md round 7)
-PR_BROADCAST_MAX_NODES = 10_000_000
 
 
 def pagerank(
@@ -84,8 +79,9 @@ def pagerank(
     per-iteration shuffle — at 100M edges / 10M nodes that measured
     309 s → 187 s (1.65×, quiet box; ties at ≤30M edges where the
     shuffle is cheap anyway). ``broadcast_send=None`` probes once
-    (`nodes.count()`) and broadcasts ≤ ``PR_BROADCAST_MAX_NODES``
-    (~160 MB send frame, comfortably inside executor memory), plain
+    (`nodes.count()`) and broadcasts while ``materialize.broadcast_ok``
+    holds (the send frame within ``BROADCAST_MAX_BYTES``, 160 MB —
+    comfortably inside executor memory), plain
     equi-join beyond it (a billion-node graph must shuffle — a blind
     broadcast would OOM the executors). The probe is itself a job (it
     re-runs the edge derivation), and the r07 interleaved A/B caught
@@ -242,7 +238,7 @@ def hits(
     the caller knows the node scale (the workload passes False — its
     trade graph is dim-sized, where pagerank measured broadcast builds
     as a ~10% loss); None probes `nodes.count()` once and broadcasts
-    ≤ ``PR_BROADCAST_MAX_NODES``.
+    while ``materialize.broadcast_ok`` holds (160 MB byte bound).
 
     Returns ``(node, authority, hub)`` for every node.
     """
@@ -1855,7 +1851,8 @@ def label_propagation(
     groupBy(n, label) shuffle after the join still runs either way.
     Same contract: True/False when the caller knows the node scale
     (the workload passes False — dim-sized co-purchase graph), None
-    probes once and broadcasts ≤ ``PR_BROADCAST_MAX_NODES``.
+    probes once and broadcasts while ``materialize.broadcast_ok``
+    holds (160 MB byte bound).
 
     Returns ``(node, label)`` after ``rounds`` rounds.
     """

@@ -7,9 +7,11 @@ each measure is a *builder of native Column expressions* over one of
 two physical encodings of the series segment (see
 ``operators/candidates.py``):
 
-- **window strategy** ("W"): per-``lx`` sliding frames over the
-  time-ordered segment — O(N·Σ frame) work, best when the offset
-  domain is small (all committed reference queries: ≤ 46 values).
+- **window strategy** ("W"): one forward frame collects each start
+  row's values ``y[x .. x+reach]``; every measure is an array
+  expression over a slice of it, so the plan shape does not grow with
+  the offset domain — best when that domain is small (all committed
+  reference queries: ≤ 46 values).
 - **sparse strategy** ("S"): prefix sums + doubling max tables
   (sparse table / RMQ), then per-candidate equi-join lookups —
   O(N log L + |candidates|) work, the 100 TB path for large domains.
@@ -113,44 +115,52 @@ class SparseCtx:
 # measure definitions
 # ---------------------------------------------------------------------------
 
-@dataclass(frozen=True)
-class WindowFrame:
-    """One base window column for strategy W: agg(y) over
-    rangeBetween(lo, hi) relative to the current row's time_id."""
+def array_sum(arr: Column) -> Column:
+    """Left-to-right sum from 0.0: the accumulation order of Spark's
+    sliding-frame ``Sum``/``Average``, so strategy W's sums are
+    bit-identical to a ``sum(y) OVER (... FOLLOWING)`` frame."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
 
-    name: str
-    agg: str  # 'avg' | 'max'
-    lo: int
-    hi: int
 
-    def column(self, window_spec) -> Column:
-        fn = {"avg": F.avg, "max": F.max, "min": F.min, "sum": F.sum}[self.agg]
-        return fn("y").over(window_spec.rangeBetween(self.lo, self.hi))
+@dataclass
+class WindowCtx:
+    """What a measure's strategy-W expression reads for one candidate.
 
-    def sql(self) -> str:
-        """SQL-text twin of :meth:`column` over the canonical
-        ``(wpid, time_id)`` window (r09: strategy W builds dozens of
-        frame columns per query; one ``selectExpr`` parse replaces
-        ~8 py4j round trips per frame of driver time — the resolved
-        window expression is identical)."""
+    ``fwd`` is the start row's forward values ``y[x .. x+reach]`` in
+    time order (clamped at the segment end) and ``lx`` the candidate's
+    offset. A left-neighbourhood max is one ``max(y)`` frame per
+    distinct ``w``; :meth:`left_max` records the ``w`` it is asked for
+    so the builder computes only those frames (as :class:`SparseCtx`
+    collects its lookups)."""
 
-        def bound(v: int) -> str:
-            if v == 0:
-                return "CURRENT ROW"
-            return f"{-v} PRECEDING" if v < 0 else f"{v} FOLLOWING"
+    fwd: Column
+    lx: Column
+    left_ws: set[int] = field(default_factory=set)
 
-        return (
-            f"{self.agg}(y) OVER (PARTITION BY wpid ORDER BY time_id "
-            f"RANGE BETWEEN {bound(self.lo)} AND {bound(self.hi)})"
-        )
+    @property
+    def win(self) -> Column:
+        """The window ``y[x .. x+lx]``."""
+        return F.slice(self.fwd, 1, self.lx + 1)
+
+    def right(self, w: int) -> Column:
+        """The right neighbourhood ``y[x+lx .. min(x+lx+w, t_end)]``:
+        it shares the window's last point and clamps at the segment
+        end because ``fwd`` does."""
+        return F.slice(self.fwd, self.lx + 1, F.lit(w + 1))
+
+    def left_max(self, w: int) -> Column:
+        """``max(y[max(x-w, t_start) .. x])``."""
+        self.left_ws.add(w)
+        return F.col(f"lmax_{w}")
 
 
 class MeasureDef:
     """Base class; subclasses implement the physical strategies.
 
-    ``native`` measures implement W (window frames) and S (sparse
-    table) as Column builders — the JVM-side fast paths. Every measure
-    additionally implements ``py_kernel``, the Arrow-batched escape
+    ``native`` measures implement W (array expressions over a forward
+    frame, see :class:`WindowCtx`) and S (sparse table) as Column
+    builders — the JVM-side fast paths. Every measure additionally
+    implements ``py_kernel``, the Arrow-batched escape
     hatch (strategy P, ``candidates._build_pandas``): the reference's
     own kernel contract ``f(series, x, lx, args) -> float``
     (reference:src/server.py:960-1016) evaluated per candidate over a
@@ -162,17 +172,8 @@ class MeasureDef:
     native: bool = True
 
     # --- strategy W -------------------------------------------------
-    def w_frames(self, lx: int, args: tuple) -> list[WindowFrame]:
+    def w_expr(self, ctx: WindowCtx, args: tuple) -> Column:
         raise NotImplementedError
-
-    def w_expr(self, lx: int, args: tuple) -> Column:
-        raise NotImplementedError
-
-    def w_expr_sql(self, lx: int, args: tuple) -> str | None:
-        """SQL-text twin of :meth:`w_expr` (r09 fast path; see
-        WindowFrame.sql). ``None`` -> the builder falls back to the
-        Column form for this measure."""
-        return None
 
     def w_reach(self, l1: int, args: tuple) -> tuple[int, int]:
         """(forward, backward) halo row reach required at partition
@@ -207,22 +208,13 @@ class MeasureDef:
         raise NotImplementedError
 
 
-def _wmax_frame(lx: int) -> WindowFrame:
-    return WindowFrame(f"wmax_{lx}", "max", 0, lx)
-
-
 class AvgAmp(MeasureDef):
     name = "avg_amp"
     n_args = 0
 
-    def w_frames(self, lx, args):
-        return [WindowFrame(f"wavg_{lx}", "avg", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wavg_{lx}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wavg_{lx}"
+    def w_expr(self, ctx, args):
+        # sum / count, as Spark's Average evaluates
+        return array_sum(ctx.win) / (ctx.lx + F.lit(1)).cast("double")
 
     def w_reach(self, l1, args):
         return (l1, 0)
@@ -242,16 +234,8 @@ class MaxAmpExcessRight(MeasureDef):
     name = "max_amp_excess_right"
     n_args = 1
 
-    def w_frames(self, lx, args):
-        w = args[0]
-        return [_wmax_frame(lx), WindowFrame(f"rmax_{lx}_{w}", "max", lx, lx + w)]
-
-    def w_expr(self, lx, args):
-        w = args[0]
-        return F.col(f"wmax_{lx}") - F.col(f"rmax_{lx}_{w}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wmax_{lx} - rmax_{lx}_{args[0]}"
+    def w_expr(self, ctx, args):
+        return F.array_max(ctx.win) - F.array_max(ctx.right(args[0]))
 
     def w_reach(self, l1, args):
         return (l1 + args[0], 0)
@@ -280,16 +264,8 @@ class MaxAmpExcessLeft(MeasureDef):
     name = "max_amp_excess_left"
     n_args = 1
 
-    def w_frames(self, lx, args):
-        w = args[0]
-        return [_wmax_frame(lx), WindowFrame(f"lmax_{w}", "max", -w, 0)]
-
-    def w_expr(self, lx, args):
-        w = args[0]
-        return F.col(f"wmax_{lx}") - F.col(f"lmax_{w}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wmax_{lx} - lmax_{args[0]}"
+    def w_expr(self, ctx, args):
+        return F.array_max(ctx.win) - ctx.left_max(args[0])
 
     def w_reach(self, l1, args):
         return (l1, args[0])
@@ -323,14 +299,8 @@ class SumAmp(MeasureDef):
     name = "sum_amp"
     n_args = 0
 
-    def w_frames(self, lx, args):
-        return [WindowFrame(f"wsum_{lx}", "sum", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wsum_{lx}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wsum_{lx}"
+    def w_expr(self, ctx, args):
+        return array_sum(ctx.win)
 
     def w_reach(self, l1, args):
         return (l1, 0)
@@ -351,14 +321,8 @@ class MinAmp(MeasureDef):
     name = "min_amp"
     n_args = 0
 
-    def w_frames(self, lx, args):
-        return [WindowFrame(f"wmin_{lx}", "min", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wmin_{lx}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wmin_{lx}"
+    def w_expr(self, ctx, args):
+        return F.array_min(ctx.win)
 
     def w_reach(self, l1, args):
         return (l1, 0)
@@ -380,14 +344,8 @@ class RangeAmp(MeasureDef):
     name = "range_amp"
     n_args = 0
 
-    def w_frames(self, lx, args):
-        return [_wmax_frame(lx), WindowFrame(f"wmin_{lx}", "min", 0, lx)]
-
-    def w_expr(self, lx, args):
-        return F.col(f"wmax_{lx}") - F.col(f"wmin_{lx}")
-
-    def w_expr_sql(self, lx, args):
-        return f"wmax_{lx} - wmin_{lx}"
+    def w_expr(self, ctx, args):
+        return F.array_max(ctx.win) - F.array_min(ctx.win)
 
     def w_reach(self, l1, args):
         return (l1, 0)

@@ -168,10 +168,16 @@ class Engine:
             F.min("time_id").alias("lo"),
             F.max("time_id").alias("hi"),
             F.count("*").alias("n"),
+            F.count("y").alias("n_y"),
             F.var_pop("y").alias("v"),
         ).first()
         if stats["n"] == 0:
             raise QueryError("ERROR: no data in the requested time domain")
+        if stats["n_y"] != stats["n"]:
+            raise QueryError(
+                f"ERROR: column {spec.column!r} has nulls in the requested "
+                "time domain; measures need a value at every time_id"
+            )
         t_start, t_end = int(stats["lo"]), int(stats["hi"])
         if stats["n"] != t_end - t_start + 1:
             raise QueryError(

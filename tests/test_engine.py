@@ -143,6 +143,17 @@ def test_gap_detection(spark):
         eng.execute(_spec((1, 30), (1, 3), [ConstraintSpec("avg_amp", (), 0, 1)]))
 
 
+def test_null_values_rejected(spark):
+    holey = spark.createDataFrame(
+        [(t, None if t == 17 else float(t)) for t in range(1, 40)],
+        "time_id long, y double",
+    )
+    eng = Engine(spark)
+    eng.register_series("tiny", holey)
+    with pytest.raises(QueryError, match="nulls"):
+        eng.execute(_spec((1, 30), (1, 3), [ConstraintSpec("avg_amp", (), 0, 1)]))
+
+
 def test_unknown_table_and_column(spark):
     eng = Engine(spark)
     with pytest.raises(QueryError):

@@ -106,6 +106,8 @@ def test_operators_route_through_materialize_modes(spark, tmp_path):
 
     base = run()
     ckpt_dir = tmp_path / "ckpt"
+    jsc = spark.sparkContext._jsc.sc()
+    prev_dir = jsc.getCheckpointDir()  # scala Option[String]
     spark.sparkContext.setCheckpointDir(str(ckpt_dir))
     try:
         for mode in ("reliable", "disk"):
@@ -113,6 +115,9 @@ def test_operators_route_through_materialize_modes(spark, tmp_path):
             assert run() == base, mode
     finally:
         spark.conf.set(M.MATERIALIZE_MODE_CONF, "local")
+        # the session is shared: later tests must not inherit tmp_path
+        getattr(jsc, "checkpointDir_$eq")(prev_dir)
+    assert jsc.getCheckpointDir().isDefined() == prev_dir.isDefined()
     # the reliable pass must have actually written checkpoint data
     files = list(ckpt_dir.rglob("*"))
     assert files, "reliable mode wrote nothing to the checkpoint dir"

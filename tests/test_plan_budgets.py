@@ -1254,3 +1254,59 @@ def test_round9_operator_exchange_budgets(pdocs, spark):
     df = spark.createDataFrame(rows, "k long, side string")
     est = kmv_set_ops(df, "k", "side")
     assert _exchanges(est) <= 8
+
+
+def _window_expressions(df):
+    """Window expressions in the optimized plan, counted on the plan
+    tree (the plan string elides lists past 25 fields)."""
+
+    def walk(node):
+        n = node.windowExpressions().size() if node.nodeName() == "Window" else 0
+        kids = node.children()
+        return n + sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(df._jdf.queryExecution().optimizedPlan())
+
+
+def test_window_strategy_plan_shape_is_fixed_in_offsets(spark):
+    """Strategy W plans one forward collect_list frame plus one max
+    frame per distinct left neighbourhood, whatever the offset count;
+    and a second query with the same measures reuses the generated
+    code instead of compiling a class per frame again."""
+    from query_refinement_dsit_databases_2021_spark.operators.candidates import (
+        build_candidates,
+    )
+    from query_refinement_dsit_databases_2021_spark.plans.spec import (
+        ConstraintSpec,
+        QuerySpec,
+    )
+
+    n = 2000
+    series = spark.createDataFrame(
+        [(i + 1, float((i * 7919) % 101)) for i in range(n)],
+        "time_id long, y double",
+    )
+    cons = (
+        ConstraintSpec("avg_amp", (), None, None),
+        ConstraintSpec("max_amp_excess_left", (20,), None, None),
+        ConstraintSpec("max_amp_excess_left", (5,), None, None),
+        ConstraintSpec("max_amp_excess_right", (12,), None, None),
+    )
+
+    def cands(x_dom, lx_dom):
+        spec = QuerySpec(
+            table="t", column="y", x_domain=x_dom, lx_domain=lx_dom,
+            constraints=cons,
+        )
+        return build_candidates(series, spec, 1, n, "window")
+
+    # 1 forward frame + left neighbourhoods {5, 20}
+    assert _window_expressions(cands((1, 500), (1, 8))) == 3
+    assert _window_expressions(cands((1, 500), (1, 64))) == 3
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    cands((1, 500), (1, 32)).write.format("noop").mode("overwrite").save()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    cands((101, 600), (1, 32)).write.format("noop").mode("overwrite").save()
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled <= 10, compiled

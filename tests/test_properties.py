@@ -234,6 +234,92 @@ def test_none_domains_resolve_to_data_min_max(spark, ys, lo_hi):
     assert engine.last_info.spec.x_domain[0] == 1
 
 
+WINDOW_SERIES_N = 80
+NATIVE_MEASURES = [
+    "avg_amp",
+    "sum_amp",
+    "min_amp",
+    "range_amp",
+    "max_amp_excess_left",
+    "max_amp_excess_right",
+]
+
+
+@st.composite
+def window_cases(draw):
+    """A strategy-W build: spec over every native measure kind, the
+    segment the engine would fetch for it, and a block size between the
+    halo minimum and a little over it (so blocks really split)."""
+    from query_refinement_dsit_databases_2021_spark.operators.candidates import (
+        _block_size,
+    )
+    from query_refinement_dsit_databases_2021_spark.operators.measures import (
+        REGISTRY,
+    )
+
+    n = WINDOW_SERIES_N
+    # x0 is the segment's first row (as the engine fetches it) and
+    # x1 + l1 may run past the data: both edges clamp
+    x0 = draw(st.integers(min_value=1, max_value=n - 10))
+    x1 = draw(st.integers(min_value=x0, max_value=n))
+    l0 = draw(st.integers(min_value=0, max_value=4))
+    l1 = l0 + draw(st.integers(min_value=0, max_value=8))
+    kinds = draw(
+        st.lists(st.sampled_from(NATIVE_MEASURES), min_size=1, max_size=6, unique=True)
+    )
+    cons = tuple(
+        ConstraintSpec(
+            kind,
+            (draw(st.integers(min_value=1, max_value=6)),) if "excess" in kind else (),
+            None,
+            None,
+        )
+        for kind in kinds
+    )
+    spec = QuerySpec("prop_series", "y", (x0, x1), (l0, l1), cons)
+    reach_fwd = max(REGISTRY[c.name].w_reach(l1, c.args)[0] for c in cons)
+    reach_bwd = max(REGISTRY[c.name].w_reach(l1, c.args)[1] for c in cons)
+    halo_min = _block_size(1, reach_fwd, reach_bwd)
+    block = draw(st.integers(min_value=halo_min, max_value=halo_min + 16))
+    return spec, (x0, min(n, x1 + l1)), block
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    ys=st.lists(
+        st.integers(min_value=-20, max_value=20),
+        min_size=WINDOW_SERIES_N,
+        max_size=WINDOW_SERIES_N,
+    ),
+    case=window_cases(),
+)
+def test_window_candidates_match_brute_oracle(spark, ys, case):
+    from query_refinement_dsit_databases_2021_spark.operators.candidates import (
+        build_candidates,
+    )
+
+    spec, (t_start, t_end), block = case
+    series, rows = _mk_series(spark, ys)
+    segment = series.where(F.col("time_id").between(t_start, t_end))
+    got = {
+        (r["x"], r["lx"]): r.asDict()
+        for r in build_candidates(
+            segment, spec, t_start, t_end, "window", partition_rows=block
+        ).collect()
+    }
+    want = brute_candidates(
+        [(t, y) for t, y in rows if t_start <= t <= t_end], spec
+    )
+    assert set(got) == set(want)
+    for key, vals in want.items():
+        for col, val in vals.items():
+            assert got[key][col] == pytest.approx(val, abs=1e-9), (key, col)
+
+
 def _level_commit(levels, k_new):
     """Test-local model of the reference's multi-level relaxation commit
     (reference:src/server.py:706-719): each "search level" is replayed

@@ -12,7 +12,8 @@ a code-change measurement, not a weather report.
 
 Protocol:
   * REF is checked out into a throwaway git worktree (never touching
-    this working tree); both sides run tools/bench_worker.py FROM THIS
+    this working tree), or run from --ref-dir, a clean clone that must
+    sit exactly at REF; both sides run tools/bench_worker.py FROM THIS
     CHECKOUT (the worker imports the registry from its --repo, so the
     REF side needs no copy of the worker script).
   * Both workers warm up and force one-time artifacts (PREBUILD) off
@@ -27,6 +28,7 @@ Protocol:
 
 Usage:
   python tools/bench_ab.py --ref <rev> [--repeat 5] [--out BENCH_AB_r07.json]
+                           [--ref-dir <existing checkout of rev>]
 """
 
 from __future__ import annotations
@@ -88,6 +90,12 @@ class Worker:
         self.proc.wait(timeout=60)
 
 
+def _git(cwd: str, *args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=cwd, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--ref", required=True, help="reference commit/rev")
@@ -108,6 +116,11 @@ def main() -> None:
         "the compact summary is skipped so a subset run never "
         "masquerades as a full-set comparison on bench.py's echo line",
     )
+    ap.add_argument(
+        "--ref-dir", default=None,
+        help="a clean git clone checked out at --ref, run instead of a "
+        "throwaway worktree; refused unless its HEAD is --ref",
+    )
     args = ap.parse_args()
 
     names = list(FROZEN_24)
@@ -123,26 +136,37 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
-    ref_sha = subprocess.run(
-        ["git", "rev-parse", "--short", args.ref],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    cur_sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.strip()
+    ref_sha = _git(REPO, "rev-parse", "--short", args.ref)
+    cur_sha = _git(REPO, "rev-parse", "--short", "HEAD")
+    # CUR runs the working tree, which may carry uncommitted edits
+    if _git(REPO, "status", "--porcelain", "--untracked-files=no"):
+        cur_sha += "-dirty"
+    if args.ref_dir is not None:
+        # an unchecked directory would be recorded as ref_sha whatever
+        # it holds: demand the exact commit and no tracked edits
+        want = _git(REPO, "rev-parse", f"{args.ref}^{{commit}}")
+        have = _git(args.ref_dir, "rev-parse", "HEAD")
+        if have != want or _git(
+            args.ref_dir, "status", "--porcelain", "--untracked-files=no"
+        ):
+            raise SystemExit(
+                f"--ref-dir {args.ref_dir} is not a clean checkout of "
+                f"{args.ref} ({want[:12]}): HEAD is {have[:12]}"
+            )
 
-    wt = f"/tmp/bench_ab_ref_{ref_sha}"
-    if os.path.exists(wt):
+    own_wt = args.ref_dir is None
+    wt = args.ref_dir or f"/tmp/bench_ab_ref_{ref_sha}"
+    if own_wt:
+        if os.path.exists(wt):
+            subprocess.run(
+                ["git", "worktree", "remove", "--force", wt], cwd=REPO,
+                capture_output=True,
+            )
+            shutil.rmtree(wt, ignore_errors=True)
         subprocess.run(
-            ["git", "worktree", "remove", "--force", wt], cwd=REPO,
-            capture_output=True,
+            ["git", "worktree", "add", "--detach", wt, ref_sha],
+            cwd=REPO, check=True, capture_output=True,
         )
-        shutil.rmtree(wt, ignore_errors=True)
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, ref_sha],
-        cwd=REPO, check=True, capture_output=True,
-    )
 
     cur = ref = None
     try:
@@ -193,10 +217,11 @@ def main() -> None:
         for w in (cur, ref):
             if w is not None:
                 w.close()
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt], cwd=REPO,
-            capture_output=True,
-        )
+        if own_wt:
+            subprocess.run(
+                ["git", "worktree", "remove", "--force", wt], cwd=REPO,
+                capture_output=True,
+            )
 
     per_query = {}
     flagged = []
@@ -227,6 +252,7 @@ def main() -> None:
         "metric": "bench_ab_interleaved",
         "cur": cur_sha,
         "ref": ref_sha,
+        "ref_checkout": "worktree" if own_wt else "ref_dir",
         "date": datetime.date.today().isoformat(),
         "sf_dir": sf_dir,
         "cpus": cpus,

@@ -167,7 +167,7 @@ def main() -> int:
                    time.time() - t0, f"{chk[0]}/{chk[1]}/{chk[2]}")
 
         if "hits_fallback" not in skip:
-            # the shuffle-join branch past PR_BROADCAST_MAX_NODES,
+            # the shuffle-join branch past materialize.broadcast_ok's bound,
             # forced so the fallback curve has same-session points at
             # node counts where the default still broadcasts (r08
             # verdict item 7)
