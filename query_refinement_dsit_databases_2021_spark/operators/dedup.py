@@ -823,12 +823,11 @@ def neardup_components(
             ).alias("e")
         )
         .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
-    # lazy checkpoints (r10): the convergence probe right below
-    # materializes labels AND edges (labels derive from edges) in ONE
-    # job instead of two eager checkpoint jobs + a probe job
+    # lazy checkpoint (r10): the convergence probe right below
+    # materializes labels in the same job instead of an eager
+    # checkpoint job + a probe job
     labels = (
         edges.select(F.col("a").alias("node"))
         .distinct()

@@ -105,27 +105,11 @@ def pagerank(
     checkpointing here adjudicated PER-ROUND checkpoints of the
     loop-carried ``ranks`` (an eager job per round); invariants are
     checkpointed ONCE, outside the loop.
-    PARTITIONED materialization for the BEYOND-BROADCAST regime (r10,
-    guide §2.4 — remove shuffles outright). When the node state no
-    longer fits a broadcast, the old fallback was a plain equi-join
-    loop: every iteration shuffled (and sorted) BOTH the edge table
-    and the node-sized send frame into a sort-merge join — 3 Exchanges
-    per iteration where the algorithm fundamentally needs ONE (the
-    contribution groupBy(dst)). The r10 large-graph path materializes
-    ``edges`` hash(src)-partitioned and the node state
-    hash(node)-partitioned (see :func:`materialize`), and the loop
-    joins carry SHUFFLE_HASH hints: the send join and the rank join
-    are then co-partitioned, exchange-free AND sort-free (the send
-    frame inherits hash(src) through the rank projection,
-    alias-aware), leaving exactly one Exchange per iteration.
-    Measured at sf0.1 (dim-sized graph) the SAME form is 1.3-1.45x
-    SLOWER than the AQE path — the partitioned build forgoes AQE's
-    runtime broadcast of the fact join and of the per-iteration send
-    frame, which at dim scale is the whole cost — so the partitioned
-    loop is entered only where its per-iteration savings exist at all:
-    the probe path (``broadcast_send=None``) beyond the broadcast byte
-    bound. Explicit ``True``/``False`` keep their r07 contract
-    (broadcast loop / plain loop) for callers that know their scale.
+    Past the broadcast bound the probe path runs the plain equi-join
+    loop, which `graph_scale.csv` measured linear to 300M edges / 30M
+    nodes; a co-partitioned shuffle-hash form was removed because its
+    only A/B (a forced 20M-edge point) read 31.6 s vs 33.5 s and it
+    ran 1.3-1.45x slower at sf0.1.
     """
     edges = materialize(edges.select("src", "dst").distinct())
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -146,15 +130,6 @@ def pagerank(
         if broadcast_send is not None
         else broadcast_ok(ndeg.count(), ndeg)
     )
-    partitioned = broadcast_send is None and not bcast
-    if partitioned:
-        # probed past the broadcast byte bound: re-materialize the two
-        # (already materialized) invariants partitioned for the
-        # exchange-free loop — one cheap extra pass each, repaid
-        # `iterations` times over by the removed per-round edge
-        # shuffle+sort
-        edges = materialize(edges, partition_by=("src",))
-        ndeg = materialize(ndeg, partition_by=("node",))
     ranks = ndeg.select(
         "node", F.lit(INIT_MASS).cast("long").alias("rank"), "outdeg"
     )
@@ -165,19 +140,13 @@ def pagerank(
         )
         if bcast:
             send = F.broadcast(send)
-        elif partitioned:
-            # co-partitioned with the materialized hash(src) edges:
-            # SHUFFLE_HASH avoids SMJ's per-iteration sort of the edge
-            # table; neither side exchanges
-            send = send.hint("shuffle_hash")
         contrib = (
             edges.join(send, "src")
             .select(F.col("dst").alias("node"), "c")
             .groupBy("node")
             .agg(F.sum("c").alias("c"))
         )
-        rjoin = contrib.hint("shuffle_hash") if partitioned else contrib
-        ranks = ndeg.join(rjoin, "node", "left").select(
+        ranks = ndeg.join(contrib, "node", "left").select(
             "node",
             (F.lit(TELEPORT) + F.coalesce(F.col("c"), F.lit(0)))
             .cast("long")
@@ -569,7 +538,6 @@ def triangle_count(
             tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-            .where(F.col("n_triangles") > 0)
         )
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
@@ -2482,8 +2450,11 @@ def ktruss(
         tri = e1.join(e2, "y").join(e3, ["x", "z"])
         # one enumeration per round (r09): the 3-branch union of tri
         # projections re-ran the two-join enumeration three times;
-        # explode emits each triangle's three member edges map-side
-        sup = materialize(
+        # explode emits each triangle's three member edges map-side.
+        # Lazy localCheckpoint (not materialize): the count below
+        # materializes the round in the same job, and under the disk
+        # mode a per-round persist would never be unpersisted
+        sup = (
             tri.select(
                 F.explode(
                     F.array(
@@ -2497,6 +2468,7 @@ def ktruss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("s"))
             .where(F.col("s") >= int(k) - 2)
+            .localCheckpoint(eager=False)
         )
         alive = sup.select("a", "b")
         cur = alive.count()

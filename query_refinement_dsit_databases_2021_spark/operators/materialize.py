@@ -2,9 +2,10 @@
 
 Every iterative operator in this engine (pagerank/HITS/BFS loops,
 k-core peeling, connected components, the dedup closure frames)
-truncates loop lineage by materializing its loop invariants and
-per-round state. Round 9 used bare ``localCheckpoint()`` everywhere;
-the round-9 verdict flagged two scale hazards this module closes:
+truncates loop lineage: loop invariants through :func:`materialize`,
+per-round state through a lazy ``localCheckpoint``. Round 9 used bare
+``localCheckpoint()`` everywhere; the round-9 verdict flagged two
+scale hazards this module closes:
 
 1. ``localCheckpoint`` pins blocks in executor-local storage with NO
    lineage to recompute them on executor loss. For node-sized frames
@@ -26,16 +27,6 @@ the round-9 verdict flagged two scale hazards this module closes:
    count rule gave a 16-byte (node, label) row, so behavior at the old
    calibration point is unchanged and wider rows now switch to the
    shuffle fallback proportionally earlier).
-
-``materialize`` also owns the PARTITIONED materialization trick
-(round 10): Spark preserves a checkpointed frame's outputPartitioning
-into the LogicalRDD scan — but only when the checkpoint is created
-while AQE is off, because an AdaptiveSparkPlan reports unknown
-partitioning at checkpoint-creation time. Creating the checkpoint
-under a momentary AQE toggle (execution-strategy only — results are
-unaffected) lets every later join/groupBy on the partition key skip
-its Exchange entirely, which removes the per-iteration edge-table
-shuffle from the fixed-point loops.
 """
 
 from __future__ import annotations
@@ -86,16 +77,11 @@ def broadcast_ok(n_rows: int, df: DataFrame) -> bool:
 MATERIALIZE_MODE_CONF = "spark.qr.materialize"
 
 
-def materialize(
-    df: DataFrame,
-    partition_by: tuple[str, ...] | None = None,
-    eager: bool = True,
-    dedup: bool = False,
-    preserve_partitioning: bool = False,
-) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Cut ``df``'s lineage and return a frame backed by materialized
-    blocks — the engine-wide truncation primitive for loop invariants
-    and per-round loop state.
+    blocks — the engine-wide truncation primitive for loop invariants.
+    Materialization is eager: the frame is computed before this
+    returns.
 
     Mode (``spark.qr.materialize`` conf):
 
@@ -109,32 +95,12 @@ def materialize(
     - ``disk``: ``persist(StorageLevel.DISK_ONLY)`` + an eager
       materializing action. Lineage is kept (recompute on loss) while
       the plan is truncated at analysis time via the CacheManager.
-      NOTE: cache lifetime is then the caller's to manage; loops that
-      re-materialize every round should prefer the checkpoint modes,
-      so ``disk`` is offered for invariants only.
+      NOTE: cache lifetime is then the caller's to manage, so per-round
+      loop state must not come through here: loops truncate it with a
+      lazy ``localCheckpoint`` that their convergence probe
+      materializes in the same job.
 
-    ``partition_by``: hash-partition on these keys before
-    materializing AND preserve that partitioning into the
-    materialized scan (AQE is toggled off around the checkpoint
-    creation — see module docstring; execution-strategy only, results
-    identical). Downstream joins/groupBys keyed on a prefix of
-    ``partition_by`` then skip their Exchange.
-
-    ``dedup=True`` (only with ``partition_by``) dropDuplicates AFTER
-    the repartition: rows equal on all columns share every partition
-    key, so the dedup aggregate runs exchange-free on the repartition's
-    clustering — ONE exchange replaces the distinct-then-repartition
-    pair the edge-canonicalization call sites would otherwise pay.
-
-    ``preserve_partitioning=True`` (without ``partition_by``): ``df``'s
-    own plan already ends in the partitioning the caller wants kept
-    (e.g. a join on the key) — materialize under the AQE toggle without
-    adding any repartition.
-
-    ``eager=False`` defers materialization to the first action that
-    consumes the frame — a convergence loop's probe aggregate then
-    materializes the round's state in the SAME job instead of paying
-    a separate checkpoint job per round.
+    Only the conf decides the mode; no session state is changed.
     """
     spark = df.sparkSession
     mode = (spark.conf.get(MATERIALIZE_MODE_CONF, "local") or "local").lower()
@@ -142,34 +108,17 @@ def materialize(
         raise ValueError(
             f"{MATERIALIZE_MODE_CONF} must be local|reliable|disk, got {mode!r}"
         )
+    if mode == "reliable":
+        if spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
+            raise RuntimeError(
+                "spark.qr.materialize=reliable requires "
+                "SparkContext.setCheckpointDir"
+            )
+        return df.checkpoint()
+    if mode == "disk":
+        from pyspark import StorageLevel
 
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        if mode == "reliable":
-            if spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
-                raise RuntimeError(
-                    "spark.qr.materialize=reliable requires "
-                    "SparkContext.setCheckpointDir"
-                )
-            return frame.checkpoint(eager=eager)
-        if mode == "disk":
-            from pyspark import StorageLevel
-
-            frame = frame.persist(StorageLevel.DISK_ONLY)
-            if eager:
-                frame.count()
-            return frame
-        return frame.localCheckpoint(eager=eager)
-
-    if not partition_by and not preserve_partitioning:
-        return _ckpt(df)
-    if partition_by:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(n, *partition_by)
-        if dedup:
-            df = df.dropDuplicates()
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _ckpt(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+        df = df.persist(StorageLevel.DISK_ONLY)
+        df.count()
+        return df
+    return df.localCheckpoint()

@@ -41,6 +41,7 @@ from query_refinement_dsit_databases_2021_spark.errors import (
 from query_refinement_dsit_databases_2021_spark.operators import scoring
 from query_refinement_dsit_databases_2021_spark.operators.candidates import (
     build_candidates,
+    pick_strategy,
 )
 from query_refinement_dsit_databases_2021_spark.plans.domains import resolve_domains
 from query_refinement_dsit_databases_2021_spark.plans.parser import parse_query
@@ -190,10 +191,6 @@ class Engine:
                 "Chosen segment presents no variability. "
                 "Please select a different segment."
             )
-
-        from query_refinement_dsit_databases_2021_spark.operators.candidates import (
-            pick_strategy,
-        )
 
         strategy = self.strategy if self.strategy != "auto" else pick_strategy(spec)
         if self.cache_dir is not None:

@@ -617,12 +617,13 @@ def test_ktruss_order_invariant_under_repartition(spark):
     assert one == two
 
 
-def test_pagerank_partitioned_path_output_invariant(spark, monkeypatch):
-    """r10: past the broadcast byte bound the probe path switches to
-    co-partitioned materialized invariants with SHUFFLE_HASH loop
-    joins (zero per-iteration edge exchanges). Forced via the bound,
-    the partitioned loop must be bit-identical to both the broadcast
-    loop and the plain-join loop."""
+def test_pagerank_probe_past_bound_output_invariant(
+    spark, monkeypatch, materialize_mode
+):
+    """Past the broadcast byte bound the probe path
+    (``broadcast_send=None``) runs the plain equi-join loop: forced via
+    the bound, it must be bit-identical to both explicit loops under
+    every ``spark.qr.materialize`` mode."""
     from query_refinement_dsit_databases_2021_spark.operators import graph
 
     edges = spark.createDataFrame(
@@ -631,14 +632,12 @@ def test_pagerank_partitioned_path_output_invariant(spark, monkeypatch):
     plain = sorted(map(tuple, pagerank(edges, 3, broadcast_send=False).collect()))
     bcast = sorted(map(tuple, pagerank(edges, 3, broadcast_send=True).collect()))
     monkeypatch.setattr(graph, "broadcast_ok", lambda n, df: False)
-    part_df = pagerank(edges, 3, broadcast_send=None)
-    part_plan = part_df._jdf.queryExecution().executedPlan().toString()
-    part = sorted(map(tuple, part_df.collect()))
-    assert plain == bcast == part
-    # the partitioned loop's joins are shuffled-hash over the
-    # materialized partitioning: no sort-merge, no per-iteration sorts
-    assert "ShuffledHashJoin" in part_plan
-    assert "SortMergeJoin" not in part_plan
+    probed_df = pagerank(edges, 3, broadcast_send=None)
+    # past the bound the loop carries no broadcast hint on its send frame
+    plan = probed_df._jdf.queryExecution().analyzed().toString()
+    assert "strategy=broadcast" not in plan
+    probed = sorted(map(tuple, probed_df.collect()))
+    assert plain == bcast == probed
 
 
 def test_bfs_broadcast_fallback_output_invariant(spark, monkeypatch):

@@ -13,9 +13,11 @@ take and the one that stresses the groupBy(dst) shuffle with skew.
 Self-loops are kept (pagerank/HITS handle them; components unaffected).
 
 Measurements per size (edges 10M/30M/100M, N = E/10 nodes):
-  * pagerank (5 iters) — as shipped (shuffle join edges⋈send), and a
-    BROADCAST(send) variant, to answer the verdict's "should the node
-    frame switch to broadcast below a size threshold?"
+  * pagerank (5 iters) — both of the engine's explicit loop forms:
+    ``graph.pagerank(edges, broadcast_send=False)`` (plain equi-join
+    edges⋈send, label ``shuffle_join``) and
+    ``graph.pagerank(edges, broadcast_send=True)`` (broadcast send
+    frame, label ``broadcast_send``)
   * hits (4 iters) — as shipped (localCheckpoint per half-step)
   * components — min-label pointer jumping over the edge list
     (dedup.neardup_components, the shared machinery)
@@ -89,37 +91,6 @@ def main() -> int:
         out.flush()
         print("RESULT " + line, flush=True)
 
-    def pagerank_bcast(edges, iterations=graph.PR_ITERATIONS):
-        """pagerank with the send frame explicitly broadcast — the
-        candidate strategy switch under test. Identical arithmetic."""
-        edges = edges.select("src", "dst").distinct()
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        ranks = nodes.select(
-            "node", F.lit(graph.INIT_MASS).cast("long").alias("rank")
-        )
-        for _ in range(iterations):
-            send = ranks.join(deg, ranks.node == deg.src).select(
-                "src", F.expr("(85 * rank DIV 100) DIV outdeg").alias("c")
-            )
-            contrib = (
-                edges.join(F.broadcast(send), "src")
-                .select(F.col("dst").alias("node"), "c")
-                .groupBy("node")
-                .agg(F.sum("c").alias("c"))
-            )
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node",
-                (F.lit(graph.TELEPORT) + F.coalesce(F.col("c"), F.lit(0)))
-                .cast("long")
-                .alias("rank"),
-            )
-        return ranks
-
     for n_edges in (int(x) for x in args.sizes.split(",")):
         n_nodes = n_edges // 10
         tag = f"powerlaw_e{n_edges}"
@@ -135,7 +106,7 @@ def main() -> int:
         if "pagerank" not in skip:
             t0 = time.time()
             chk = (
-                graph.pagerank(edges)
+                graph.pagerank(edges, broadcast_send=False)
                 .agg(F.sum("rank"), F.count(F.lit(1)))
                 .collect()[0]
             )
@@ -146,7 +117,7 @@ def main() -> int:
             t0 = time.time()
             try:
                 chk = (
-                    pagerank_bcast(edges)
+                    graph.pagerank(edges, broadcast_send=True)
                     .agg(F.sum("rank"), F.count(F.lit(1)))
                     .collect()[0]
                 )
