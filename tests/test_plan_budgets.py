@@ -728,6 +728,64 @@ def test_round3h_operator_exchange_budgets(spark):
     assert "CartesianProduct" not in full
 
 
+def test_graph_operator_exchange_budgets(spark):
+    """Exchange pins for the graph operators that share the canonical
+    undirected edge set, the symmetric adjacency or the min-plus BFS
+    loop and had no pin of their own."""
+    from query_refinement_dsit_databases_2021_spark.operators.graph import (
+        bfs_distances,
+        clustering_coefficient,
+        degree_assortativity,
+        harmonic_centrality_sampled,
+        katz_centrality,
+        ktruss,
+        resource_allocation,
+    )
+
+    edges = spark.createDataFrame(
+        [(i % 7, (i * 3) % 11) for i in range(40)], "src long, dst long"
+    )
+    src = spark.createDataFrame([(0,)], "node long")
+
+    # BFS: every round is a lazy checkpoint, so the returned frame is
+    # the last round's materialized state — no exchange left in it
+    for bp in (_plan(bfs_distances(edges, src)), _plan(bfs_distances(edges, None))):
+        assert bp.count("Exchange") == 0 and bp.count("Scan ExistingRDD") == 1, bp
+
+    # harmonic: the (seed, node) BFS result plus ONE groupBy(seed) and
+    # the final sort
+    hp = _plan(harmonic_centrality_sampled(edges, seeds=(0, 3)))
+    assert hp.count("Exchange") == 2 and hp.count("Exchange hashpartitioning") == 1, hp
+
+    # resource allocation: wedge self-join, broadcast centre degrees,
+    # one (a, b) rollup, the anti-join and the top-k gather
+    rp = _plan(resource_allocation(edges))
+    assert rp.count("Exchange") == 6 and rp.count("BroadcastHashJoin") == 1, rp
+    assert rp.count("SortMergeJoin") == 2, rp
+
+    # assortativity: degree agg joined twice onto the adjacency, one
+    # moment rollup
+    ap = _plan(degree_assortativity(edges))
+    assert ap.count("Exchange") == 5 and ap.count("SortMergeJoin") == 2, ap
+
+    # clustering: wedge rollup cross-joined (1 row) with the triangle
+    # total; the dense triangle kernel reads the shared canonical frame
+    cp = _plan(clustering_coefficient(edges))
+    assert cp.count("Exchange") == 3, cp
+    assert cp.count("BroadcastNestedLoopJoin") == 1, cp
+    assert "CartesianProduct" not in cp
+
+    # k-truss: the peel loop ends on a checkpointed support frame; only
+    # the final ordering shuffles
+    tp = _plan(ktruss(edges, k=3))
+    assert tp.count("Exchange") == 1 and tp.count("Scan ExistingRDD") == 1, tp
+
+    # katz: per iteration one groupBy(dst) and one node left-join
+    kp = _plan(katz_centrality(edges, 2))
+    assert kp.count("Exchange") == 7 and kp.count("SortMergeJoin") == 4, kp
+    assert "CartesianProduct" not in kp
+
+
 def test_round4_operator_exchange_budgets(spark):
     """Exchange pins for the round-4 additions (PQ already pinned in
     test_simsearch.py::test_pq_plan_shapes)."""
