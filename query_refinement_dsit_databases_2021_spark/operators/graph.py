@@ -6,26 +6,46 @@ iterative structure is the BST refinement walk, reference:src/server.py
 These operators cover the iterative/relational-graph workloads a
 training-data platform runs on entity graphs derived from its tables
 (supplier-customer trade graphs, co-purchase graphs, document link
-graphs):
+graphs).
 
-- **PageRank** as a fixed-iteration loop of join + groupBy rounds —
-  the canonical "iterative algorithm on Spark" shape. Each iteration
-  is one shuffle (contributions grouped by destination); the rank and
-  degree tables stay partitioned by node key so AQE reuses the
-  exchange. Ranks are **integer fixed-point** (1e9 units of mass,
-  integer `DIV`), which makes the result bit-identical across engines
-  and across partitionings: float PageRank sums contributions in
-  nondeterministic order, integer sums are associative-exact.
-- **Triangle counting** via the classic two-join enumeration over the
-  oriented (a < b) distinct edge set — each triangle counted exactly
-  once. The oriented edge list bounds the join fan-out by max
-  out-degree; at 100 TB the standard refinement is degree-ordering
-  (orient edges from low- to high-degree endpoint) which bounds
-  fan-out by arboricity instead; documented in SCALE.md.
+Every operator takes a directed edge list ``(src, dst)`` and derives
+what it needs through one private vocabulary, so each derivation is
+decided in one place:
 
-Both oracles are plain ANSI SQL: PageRank's fixed 5 iterations unroll
-into a CTE chain (no recursion needed — the iteration count is part of
-the operator contract), triangles into the same two joins.
+- :func:`_undirected` is the canonical undirected edge set ``(a, b)``:
+  ``a = least(src, dst)``, ``b = greatest(src, dst)``, deduplicated.
+  Self-loops are dropped (``a < b``) everywhere except BFS, whose
+  ``sources=None`` contract is the minimum id of the graph INCLUDING
+  self-loop-only nodes.
+- :func:`_adjacency` is the symmetric ``(n, nb)`` adjacency, exploded
+  map-side from the canonical set (half the shuffled bytes of
+  deduplicating both directions).
+- :func:`_nodes` is the distinct node set of a directed edge list.
+- :func:`_triangles` enumerates each triangle ``a < b < c`` of a
+  canonical set exactly once as ``e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)``.
+- :func:`_min_plus_bfs` is the one BFS convergence loop, keyed by
+  ``node`` or by ``(seed, node)``.
+- :func:`_copurchase_edges` and :func:`_cosupplier_edges` are the two
+  lineitem self-join graphs the workloads share.
+
+Exactness: every score is an int64 (or exact rational) computed with
+floor division, so results are bit-identical across engines and
+partitionings. PageRank, PPR, HITS and Katz carry integer fixed-point
+ranks (float ranks sum contributions in nondeterministic order;
+integer sums are associative-exact).
+
+Triangle counting picks one of three exact strategies from the degree
+table: a dense ``mapInArrow`` matmul kernel for small graphs, the lazy
+wedge join when the wedge mass is small, and otherwise the
+degree-ordered adjacency intersection (orientation by ``(degree,
+node)`` bounds every out-list by √(2m)).
+
+Loop-invariant frames (edges, node state, adjacency) go through
+``materialize`` once; convergence loops truncate lineage with lazy
+local checkpoints that their ``count`` probe materializes in the same
+job. The DuckDB oracles are plain SQL: fixed-round loops unroll into
+CTE chains, convergence loops into bounded unrolls with a guard that
+errors if the last two rounds still differ.
 """
 
 from __future__ import annotations
@@ -37,6 +57,48 @@ from query_refinement_dsit_databases_2021_spark.operators.materialize import (
     broadcast_ok,
     materialize,
 )
+
+
+def _undirected(edges: DataFrame, keep_loops: bool = False) -> DataFrame:
+    """Lazy canonical undirected edge set ``(a, b)``, ``a <= b``,
+    distinct; self-loops dropped unless ``keep_loops``."""
+    und = edges.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    )
+    if not keep_loops:
+        und = und.where(F.col("a") < F.col("b"))
+    return und.distinct()
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """Symmetric adjacency ``(n, nb)`` of a canonical edge set: both
+    directions of every edge, exploded map-side."""
+    return und.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
+                F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
+            )
+        ).alias("e")
+    ).select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Distinct ``node`` set of a directed edge list."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """Every triangle ``a < b < c`` of a canonical edge set, once:
+    ``e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)``."""
+    e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
+    e3 = und.select("a", F.col("b").alias("c"))
+    return und.join(e2, "b").join(e3, ["a", "c"])
+
 
 # fixed-point PageRank constants: ranks carry 1e9 units per node of
 # initial mass; damping 0.85 applied as integer `* 85 DIV 100`.
@@ -111,28 +173,46 @@ def pagerank(
     only A/B (a forced 20M-edge point) read 31.6 s vs 33.5 s and it
     ran 1.3-1.45x slower at sf0.1.
     """
+    return _rank_fixed_point(edges, iterations, broadcast_send)
+
+
+def _rank_fixed_point(
+    edges: DataFrame,
+    iterations: int,
+    broadcast_send: bool | None,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The integer fixed-point loop of :func:`pagerank` (``seeds`` is
+    None: every node starts with ``INIT_MASS`` and receives
+    ``TELEPORT``) and :func:`personalized_pagerank` (only seeds
+    start with mass and receive the teleport share)."""
     edges = materialize(edges.select("src", "dst").distinct())
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # node state carries the loop-invariant outdeg (NULL for dangling
-    # nodes), so the per-iteration send frame is a pure PROJECTION of
-    # the state instead of a state ⋈ deg join — one join and its
-    # exchange removed per iteration.
-    ndeg = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(deg, F.col("node") == deg.src, "left")
-        .select("node", "outdeg")
-        .localCheckpoint()
-    )
+    # nodes) and the seed flag, so the per-iteration send frame is a
+    # pure PROJECTION of the state instead of a state ⋈ deg join — one
+    # join and its exchange removed per iteration.
+    ndeg = _nodes(edges).join(deg, F.col("node") == deg.src, "left")
+    if seeds is None:
+        ndeg = ndeg.select("node", "outdeg").localCheckpoint()
+        init, teleport = F.lit(INIT_MASS), F.lit(TELEPORT)
+    else:
+        seed_flag = F.broadcast(
+            seeds.select(F.col("node"), F.lit(True).alias("_seed"))
+        )
+        ndeg = (
+            ndeg.join(seed_flag, "node", "left")
+            .select("node", "outdeg", "_seed")
+            .localCheckpoint()
+        )
+        init = F.when(F.col("_seed"), F.lit(INIT_MASS)).otherwise(F.lit(0))
+        teleport = F.when(F.col("_seed"), F.lit(TELEPORT)).otherwise(F.lit(0))
     bcast = (
         broadcast_send
         if broadcast_send is not None
         else broadcast_ok(ndeg.count(), ndeg)
     )
-    ranks = ndeg.select(
-        "node", F.lit(INIT_MASS).cast("long").alias("rank"), "outdeg"
-    )
+    ranks = ndeg.select("node", init.cast("long").alias("rank"), "outdeg")
     for _ in range(iterations):
         send = ranks.where(F.col("outdeg").isNotNull()).select(
             F.col("node").alias("src"),
@@ -148,9 +228,7 @@ def pagerank(
         )
         ranks = ndeg.join(contrib, "node", "left").select(
             "node",
-            (F.lit(TELEPORT) + F.coalesce(F.col("c"), F.lit(0)))
-            .cast("long")
-            .alias("rank"),
+            (teleport + F.coalesce(F.col("c"), F.lit(0))).cast("long").alias("rank"),
             "outdeg",
         )
     return ranks.select("node", "rank")
@@ -216,12 +294,7 @@ def hits(
     # nodes twice, so lazy frames re-embed the upstream edge derivation
     # (a fact-table join for the workload) 8+ times across 4 iterations
     edges = materialize(edges.select("src", "dst").distinct())
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _nodes(edges).localCheckpoint()
     bcast = (
         broadcast_scores
         if broadcast_scores is not None
@@ -502,14 +575,7 @@ def triangle_count(
     canonicalized and materialized ONCE, not twice.
     """
     if und is None:
-        und = materialize(
-            edges.select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .where(F.col("a") < F.col("b"))
-            .distinct()
-        )
+        und = materialize(_undirected(edges))
     # the degree table serves the gate AND the big path's orientation;
     # its bounded aggregate yields exact n_nodes (dense-kernel memory
     # gate), exact m and the exact wedge mass in ONE job
@@ -528,14 +594,10 @@ def triangle_count(
     if n_nodes <= TRI_DENSE_MAX_NODES and m <= TRI_DENSE_MAX_EDGES:
         return _triangle_count_dense(und)
     if (gate["wedge_mass"] or 0) <= TRI_WEDGE_MAX_MASS:
-        # lazy wedge enumeration (a < b < c found once at e1⋈e2⋈e3);
-        # ONE map-side explode credits all three corners
-        e1 = und
-        e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
-        e3 = und.select("a", F.col("b").alias("c"))
-        tri = e1.join(e2, "b").join(e3, ["a", "c"])
+        # lazy wedge enumeration; ONE map-side explode credits all
+        # three corners
         return (
-            tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+            _triangles(und).select(F.explode(F.array("a", "b", "c")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
         )
@@ -621,6 +683,20 @@ def _trade_edges(spark: SparkSession) -> DataFrame:
     return l.join(o, l.l_orderkey == o.o_orderkey).select(
         F.col("l_suppkey").alias("src"),
         (F.lit(100000) + F.col("o_custkey")).cast("long").alias("dst"),
+    )
+
+
+def _cosupplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supplier co-occurrence graph ``(src, dst)``, ``src < dst``: two
+    suppliers are linked when they supply lineitems of the same
+    order."""
+    from query_refinement_dsit_databases_2021_spark.workloads import register_views
+
+    register_views(spark, sf_dir)
+    l = spark.table("lineitem").select("l_orderkey", "l_suppkey")
+    r = l.select(F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2"))
+    return l.join(r, (l.l_orderkey == r.o2) & (l.l_suppkey < r.s2)).select(
+        F.col("l_suppkey").alias("src"), F.col("s2").alias("dst")
     )
 
 
@@ -763,20 +839,7 @@ GROUP BY seed ORDER BY seed"""
 
 
 def _wl_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    # supplier co-occurrence graph: two suppliers are adjacent when
-    # they supply lineitems of the same order
-    l = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    r = l.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2")
-    )
-    edges = (
-        l.join(r, (l.l_orderkey == r.o2) & (l.l_suppkey < r.s2))
-        .select(F.col("l_suppkey").alias("src"), F.col("s2").alias("dst"))
-    )
-    part = triangle_count(edges)
+    part = triangle_count(_cosupplier_edges(spark, sf_dir))
     return part.orderBy(F.col("n_triangles").desc(), F.col("node")).limit(15)
 
 
@@ -930,32 +993,25 @@ def bfs_distances(
     duplicate (s, s) rows a self-loop contributes, so results are
     identical (pinned by the self-loop case in the unit tests).
     """
-    canon = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).distinct()
-    )
-    und = (
-        canon.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("src"), F.col("b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("b").alias("src"), F.col("a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-    )
+    # self-loops kept: sources=None is the minimum id of the graph
+    # including nodes whose only edge is a self-loop
+    canon = materialize(_undirected(edges, keep_loops=True))
     if sources is None:
         sources = canon.agg(F.min("a").alias("node"))
     dist = sources.select(
         F.col("node"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=False)
+    return _min_plus_bfs(_adjacency(canon), dist, ["node"], max_iters)
+
+
+def _min_plus_bfs(
+    adj: DataFrame, dist: DataFrame, keys: list[str], max_iters: int
+) -> DataFrame:
+    """The min-plus BFS loop of :func:`bfs_distances` and
+    :func:`_bfs_distances_multi`: ``dist`` is the seeded frontier
+    ``(*keys, dist)`` with ``keys`` ending in ``node``; each round every
+    key takes ``min(own dist, neighbor dist + 1)`` over ``adj``, until
+    the ``(count, sum)`` probe stops changing."""
     prev = (dist.count(), 0)
     for _ in range(max_iters + 1):
         # broadcast the frontier while it fits (r09; r10: BYTE-based
@@ -970,10 +1026,14 @@ def bfs_distances(
             lambda df: df
         )
         stepped = (
-            und.join(hint(dist), und.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .unionByName(dist.select("node", "dist"))
-            .groupBy("node")
+            adj.join(hint(dist), adj.n == dist.node)
+            .select(
+                *keys[:-1],
+                F.col("nb").alias("node"),
+                (F.col("dist") + 1).alias("dist"),
+            )
+            .unionByName(dist.select(*keys, "dist"))
+            .groupBy(*keys)
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=False)
         )
@@ -1003,79 +1063,17 @@ def _bfs_distances_multi(
     ``seeds``: iterable of node ids (plan-time literals, like the
     sampled-seed contract of :func:`harmonic_centrality_sampled`).
     """
-    spark = edges.sparkSession
-    # canonicalize-then-explode (r10, same rationale and identical-
-    # result argument as :func:`bfs_distances`): distinct + checkpoint
-    # on m canonical rows, the symmetric explode map-side in the loop
-    canon = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).distinct()
-    )
-    und = (
-        canon.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("src"), F.col("b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("b").alias("src"), F.col("a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-    )
-    dist = spark.createDataFrame(
+    canon = materialize(_undirected(edges, keep_loops=True))
+    dist = edges.sparkSession.createDataFrame(
         [(int(s), int(s), 0) for s in seeds], "seed long, node long, dist long"
     ).localCheckpoint()
-    prev = (dist.count(), 0)
-    for _ in range(max_iters + 1):
-        # same frontier broadcast switch as :func:`bfs_distances` —
-        # the (seed, node) frontier count rides the convergence tuple,
-        # and the byte bound prices the WIDER (seed, node, dist) row;
-        # lazy checkpoint: the probe materializes the round (r10)
-        hint = F.broadcast if broadcast_ok(prev[0], dist) else (
-            lambda df: df
-        )
-        stepped = (
-            und.join(hint(dist), und.src == dist.node)
-            .select(
-                "seed",
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-            .unionByName(dist.select("seed", "node", "dist"))
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        agg = stepped.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        cur = (agg["n"], agg["s"])
-        dist = stepped
-        if cur == prev:
-            return dist
-        prev = cur
-    raise RuntimeError(
-        f"_bfs_distances_multi did not converge in {max_iters} rounds"
-    )
+    return _min_plus_bfs(_adjacency(canon), dist, ["seed", "node"], max_iters)
 
 
 def _wl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS level histogram over the supplier co-occurrence graph from
     its minimum-id supplier — ``(dist, n_nodes)``."""
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    l = spark.table("lineitem").select("l_orderkey", "l_suppkey")
-    r = l.select(F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2"))
-    edges = l.join(r, (l.l_orderkey == r.o2) & (l.l_suppkey < r.s2)).select(
-        F.col("l_suppkey").alias("src"), F.col("s2").alias("dst")
-    )
+    edges = _cosupplier_edges(spark, sf_dir)
     # sources=None: BFS from the graph's min node, computed off the
     # operator's materialized canonical frame — the explicit source
     # probe re-ran the whole co-occurrence self-join for one scalar
@@ -1144,57 +1142,7 @@ def personalized_pagerank(
     (tiny) seed set into the rank projection. Returns ``(node,
     rank)``.
     """
-    # loop invariants materialized ONCE, seed flag and outdeg folded
-    # into the node state so the per-iteration send frame is a pure
-    # projection (r09 — identical restructure, and rationale, as
-    # :func:`pagerank`)
-    edges = materialize(edges.select("src", "dst").distinct())
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    seed_flag = F.broadcast(
-        seeds.select(F.col("node"), F.lit(True).alias("_seed"))
-    )
-    ndeg = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(deg, F.col("node") == deg.src, "left")
-        .join(seed_flag, "node", "left")
-        .select("node", "outdeg", "_seed")
-        .localCheckpoint()
-    )
-    ranks = ndeg.select(
-        "node",
-        F.when(F.col("_seed"), F.lit(INIT_MASS))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-        "outdeg",
-    )
-    for _ in range(iterations):
-        # node-sized send frame first, ONE edge-sized join per round
-        # (same shape as pagerank; no per-round checkpoint — see the
-        # pagerank docstring on fixed-depth vs convergence loops)
-        send = ranks.where(F.col("outdeg").isNotNull()).select(
-            F.col("node").alias("src"),
-            F.expr("(85 * rank DIV 100) DIV outdeg").alias("c"),
-        )
-        contrib = (
-            edges.join(send, "src")
-            .select(F.col("dst").alias("node"), "c")
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = ndeg.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.when(F.col("_seed"), F.lit(TELEPORT)).otherwise(F.lit(0))
-                + F.coalesce(F.col("c"), F.lit(0))
-            )
-            .cast("long")
-            .alias("rank"),
-            "outdeg",
-        )
-    return ranks.select("node", "rank")
+    return _rank_fixed_point(edges, iterations, False, seeds)
 
 
 PPR_N_SEEDS = 2
@@ -1205,12 +1153,7 @@ def _wl_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     edges = _trade_edges(spark)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(PPR_N_SEEDS)
+    seeds = _nodes(edges).orderBy("node").limit(PPR_N_SEEDS)
     ranks = personalized_pagerank(edges, seeds, PR_ITERATIONS)
     return (
         ranks.where(F.col("rank") > 0)
@@ -1284,21 +1227,8 @@ def link_prediction(edges: DataFrame, k: int = 20) -> DataFrame:
     # wedge arms, the degree table and the anti-join — lazily that was
     # 7 evaluations of the caller's edge derivation; the symmetric
     # adjacency is a map-side explode over the materialized frame
-    und = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    adj = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
-                F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
-            )
-        ).alias("e")
-    ).select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
+    und = materialize(_undirected(edges))
+    adj = _adjacency(und)
     w1 = adj.select(F.col("n").alias("c"), F.col("nb").alias("a"))
     w2 = adj.select(F.col("n").alias("c"), F.col("nb").alias("b"))
     cn = (
@@ -1331,9 +1261,10 @@ LINK_PRED_MIN_QTY = 45  # bulk co-purchases only: keeps the graph
 # this synthetic data, which would leave zero non-adjacent pairs)
 
 
-def _wl_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-sell candidates: parts that share bulk-order neighbors
-    but are never bulk-ordered together."""
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bulk co-purchase part graph ``(src, dst)``, ``src < dst``: two
+    parts are linked when one order has a line of each with quantity
+    >= ``LINK_PRED_MIN_QTY``."""
     from query_refinement_dsit_databases_2021_spark.workloads import register_views
 
     register_views(spark, sf_dir)
@@ -1341,10 +1272,15 @@ def _wl_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity") >= LINK_PRED_MIN_QTY
     ).select("l_orderkey", "l_partkey")
     r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
+    return li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
         F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
     )
-    return link_prediction(edges)
+
+
+def _wl_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-sell candidates: parts that share bulk-order neighbors
+    but are never bulk-ordered together."""
+    return link_prediction(_copurchase_edges(spark, sf_dir))
 
 
 ORACLE_LINK_PREDICTION = f"""
@@ -1394,21 +1330,8 @@ def resource_allocation(edges: DataFrame, k: int = 20) -> DataFrame:
     (ra_ppm desc, node_a, node_b).
     """
     # same materialize-once treatment as :func:`link_prediction` (r09)
-    und = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    adj = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
-                F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
-            )
-        ).alias("e")
-    ).select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
+    und = materialize(_undirected(edges))
+    adj = _adjacency(und)
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     w1 = adj.select(F.col("n").alias("c"), F.col("nb").alias("a"))
     w2 = adj.select(F.col("n").alias("c"), F.col("nb").alias("b"))
@@ -1438,17 +1361,7 @@ def _wl_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-sell candidates, hub-discounted: same bulk co-purchase
     graph as ``graph_link_prediction``, scored by RA instead of raw
     common-neighbor count."""
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
-    return resource_allocation(edges)
+    return resource_allocation(_copurchase_edges(spark, sf_dir))
 
 
 ORACLE_RESOURCE_ALLOC = f"""
@@ -1487,13 +1400,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """
     # materialize once (r09): und feeds the wedge count AND the
     # triangle enumeration — lazily the edge derivation ran twice
-    und = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = materialize(_undirected(edges))
     adj = und.select(
         F.explode(F.array(F.col("a"), F.col("b"))).alias("n")
     )
@@ -1524,17 +1431,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
 
 
 def _wl_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
-    return clustering_coefficient(edges)
+    return clustering_coefficient(_copurchase_edges(spark, sf_dir))
 
 
 ORACLE_CLUSTERING = f"""
@@ -1579,21 +1476,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     # materialize once + explode-adjacency (r09): adj feeds the degree
     # table and the moment join — lazily that re-ran the edge
     # derivation three times
-    und = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    adj = und.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
-                F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
-            )
-        ).alias("e")
-    ).select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
+    adj = _adjacency(materialize(_undirected(edges)))
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     dx = deg.select(F.col("n"), F.col("d").alias("x"))
     dy = deg.select(F.col("n").alias("nb"), F.col("d").alias("y"))
@@ -1624,17 +1507,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
 
 
 def _wl_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
-    return degree_assortativity(edges)
+    return degree_assortativity(_copurchase_edges(spark, sf_dir))
 
 
 ORACLE_ASSORTATIVITY = f"""
@@ -1687,26 +1560,9 @@ def kcore(
     Returns ``(node, core_degree)`` for the k-core members — degrees
     measured inside the core.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    # explode-based symmetric adjacency: und (and the caller's whole
-    # edge derivation under it) evaluated once, not twice (r09)
-    adj = materialize(
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
-                    F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
-                )
-            ).alias("e")
-        )
-        .select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
-    )
+    # explode-based symmetric adjacency: the canonical set (and the
+    # caller's whole edge derivation under it) evaluated once (r09)
+    adj = materialize(_adjacency(_undirected(edges)))
     # lazy checkpoint + count probe = one job (r10)
     alive = adj.select("n").distinct().localCheckpoint(eager=False)
     prev = alive.count()
@@ -1735,17 +1591,7 @@ def kcore(
 
 
 def _wl_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
-    return kcore(edges)
+    return kcore(_copurchase_edges(spark, sf_dir))
 
 
 def _kcore_oracle(k: int = KCORE_K, rounds: int = 16) -> str:
@@ -1824,27 +1670,9 @@ def label_propagation(
 
     Returns ``(node, label)`` after ``rounds`` rounds.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
     # loop invariant materialized once (r09): adj is joined EVERY
-    # round, so lazily each round re-ran the whole edge derivation;
-    # explode replaces the two-branch union (one evaluation of und)
-    adj = materialize(
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("n"), F.col("b").alias("nb")),
-                    F.struct(F.col("b").alias("n"), F.col("a").alias("nb")),
-                )
-            ).alias("e")
-        )
-        .select(F.col("e.n").alias("n"), F.col("e.nb").alias("nb"))
-    )
+    # round, so lazily each round re-ran the whole edge derivation
+    adj = materialize(_adjacency(_undirected(edges)))
     labels = adj.select(F.col("n").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1878,16 +1706,7 @@ def label_propagation(
 def _wl_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Communities in the bulk co-purchase graph (same sparsified
     graph as link prediction / k-core)."""
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     # broadcast_labels=False, no probe: dim-sized co-purchase graph
     # (same measured reasoning as _wl_pagerank)
     return label_propagation(edges, broadcast_labels=False).orderBy("node")
@@ -1947,14 +1766,9 @@ def modularity(edges: DataFrame, communities: DataFrame) -> DataFrame:
     + a 1-row rollup. Returns ``(m_edges, n_communities, q_num,
     q_den, q_ppm)``.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-        .persist()
-    )
+    # materialized once: und feeds the tagged join, the degree table
+    # and the edge count
+    und = materialize(_undirected(edges))
     la = communities.select(F.col("node").alias("a"), F.col("label").alias("lab_a"))
     lb = communities.select(F.col("node").alias("b"), F.col("label").alias("lab_b"))
     tagged = und.join(F.broadcast(la), "a").join(F.broadcast(lb), "b")
@@ -2007,16 +1821,7 @@ def _wl_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modularity attestation of the LPA communities on the bulk
     co-purchase graph — the number that says label propagation found
     structure, certified cross-engine."""
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     return modularity(edges, label_propagation(edges, broadcast_labels=False))
 
 
@@ -2220,12 +2025,7 @@ def katz_centrality(
     # loop invariants materialized once (r09, same rationale as
     # :func:`pagerank`: each iteration otherwise re-derives both)
     edges = materialize(edges.select("src", "dst").distinct())
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _nodes(edges).localCheckpoint()
     x = nodes.select("node", F.lit(KATZ_INIT).cast("long").alias("katz"))
     for _ in range(iterations):
         contrib = (
@@ -2417,9 +2217,9 @@ def ktruss(
     degree). The standard cohesive-subgraph extractor where k-core is
     too permissive — spam-ring and community-kernel mining.
 
-    Per round: one oriented triangle enumeration over the surviving
-    edge set (the same two-equi-join plan as :func:`triangle_count`,
-    cost bounded by arboricity after low-to-high orientation), an
+    Per round: one triangle enumeration over the surviving edge set
+    (:func:`_triangles`, the same two-equi-join plan as
+    :func:`triangle_count`'s wedge branch), an
     explode of each triangle into its three member edges, ONE
     map-combinable groupBy(a, b) for support, and an integer filter
     ``support >= k - 2``; ``localCheckpoint`` truncates loop lineage.
@@ -2434,20 +2234,9 @@ def ktruss(
     Returns ``(node_a, node_b, support)`` for the k-truss edges —
     support measured inside the truss — ordered by (node_a, node_b).
     """
-    und = materialize(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    alive = und
+    alive = materialize(_undirected(edges))
     prev = alive.count()
     for _ in range(max_iters):
-        e1 = alive.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        e2 = alive.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        e3 = alive.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
         # one enumeration per round (r09): the 3-branch union of tri
         # projections re-ran the two-join enumeration three times;
         # explode emits each triangle's three member edges map-side.
@@ -2455,12 +2244,12 @@ def ktruss(
         # materializes the round in the same job, and under the disk
         # mode a per-round persist would never be unpersisted
         sup = (
-            tri.select(
+            _triangles(alive).select(
                 F.explode(
                     F.array(
-                        F.struct(F.col("x").alias("a"), F.col("y").alias("b")),
-                        F.struct(F.col("y").alias("a"), F.col("z").alias("b")),
-                        F.struct(F.col("x").alias("a"), F.col("z").alias("b")),
+                        F.struct("a", "b"),
+                        F.struct(F.col("b").alias("a"), F.col("c").alias("b")),
+                        F.struct("a", F.col("c").alias("b")),
                     )
                 ).alias("e")
             )
@@ -2486,17 +2275,7 @@ def _wl_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohesive cross-sell kernel: the 4-truss of the bulk co-purchase
     graph — every surviving part pair is co-bulk-ordered with >= 2
     common partners that are themselves bulk-linked."""
-    from query_refinement_dsit_databases_2021_spark.workloads import register_views
-
-    register_views(spark, sf_dir)
-    li = spark.table("lineitem").where(
-        F.col("l_quantity") >= LINK_PRED_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    r = li.select(F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("p2"))
-    edges = li.join(r, (li.l_orderkey == r.o2) & (li.l_partkey < r.p2)).select(
-        F.col("l_partkey").alias("src"), F.col("p2").alias("dst")
-    )
-    return ktruss(edges)
+    return ktruss(_copurchase_edges(spark, sf_dir))
 
 
 def _ktruss_oracle(k: int = KTRUSS_K, rounds: int = 6) -> str:

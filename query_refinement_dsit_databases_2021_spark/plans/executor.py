@@ -88,7 +88,8 @@ class Engine:
         # (reference:src/server.py:249-286, threshold at :264). Here the
         # distributed UDF map (the candidates DataFrame) is written to
         # parquet keyed by a fingerprint of (table, column, domains,
-        # measure set) — the exact inputs that determine its content.
+        # measure set, segment content) — the exact inputs that determine
+        # its content.
         # Two modes, both requiring cache_dir:
         #   cache_auto_seconds=None  -> cache every build (opt-in eager)
         #   cache_auto_seconds=T     -> reference parity: build in
@@ -100,17 +101,26 @@ class Engine:
         self._tables: dict[str, DataFrame] = {}
         self.last_info = ExecutionInfo()
 
-    def _cache_key(self, spec: QuerySpec) -> str:
+    def _cache_key(self, spec: QuerySpec, fingerprint: int) -> str:
         import hashlib
 
         measures = sorted(
             {(c.name, c.args) for c in spec.constraints}
         )  # bounds/targets don't change candidate values — only measures do
-        # "v2": measure values are 9-dp-stabilized since
-        # candidates.py:build_candidates grew that projection — caches
-        # written before it hold raw floats and must not be reused
+        # "v3": the key carries the segment's content fingerprint, so a
+        # table re-registered under the same name (or a series that grew
+        # under fixed domains) never reuses another frame's candidates;
+        # "v2" keys held no data fingerprint and must not be reused
         raw = repr(
-            ("v2", spec.table, spec.column, spec.x_domain, spec.lx_domain, measures)
+            (
+                "v3",
+                spec.table,
+                spec.column,
+                spec.x_domain,
+                spec.lx_domain,
+                measures,
+                fingerprint,
+            )
         )
         return hashlib.sha256(raw.encode()).hexdigest()[:24]
 
@@ -171,6 +181,10 @@ class Engine:
             F.count("*").alias("n"),
             F.count("y").alias("n_y"),
             F.var_pop("y").alias("v"),
+            # order-independent content fingerprint for the K2 cache key;
+            # 32-bit hashes summed into a long cannot overflow below 2^32
+            # rows
+            F.sum(F.hash("time_id", "y")).alias("fp"),
         ).first()
         if stats["n"] == 0:
             raise QueryError("ERROR: no data in the requested time domain")
@@ -197,7 +211,7 @@ class Engine:
             import os
 
             path = os.path.join(
-                self.cache_dir, f"udfmap_{self._cache_key(spec)}.parquet"
+                self.cache_dir, f"udfmap_{self._cache_key(spec, stats['fp'])}.parquet"
             )
             if os.path.exists(path):
                 candidates = self.spark.read.parquet(path).persist()

@@ -176,7 +176,8 @@ def test_query_text_end_to_end(engine):
 def test_udf_map_parquet_cache(spark, tmp_path, series_tiny):
     """K2: candidates cache round-trips through parquet and is reused
     across executions AND constraint-bound changes (the cache key is
-    (table, column, domains, measures) — bounds don't affect it)."""
+    (table, column, domains, measures, segment content) — bounds don't
+    affect it)."""
     import os
 
     from query_refinement_dsit_databases_2021_spark.plans.executor import Engine
@@ -214,6 +215,18 @@ def test_udf_map_parquet_cache(spark, tmp_path, series_tiny):
         QuerySpec("t", "y", (2, 8), (2, 4), (ConstraintSpec("avg_amp", (), 1, 3),))
     ).collect()
     assert len(os.listdir(cache)) == 2
+    # same name, different data -> the key carries the segment's
+    # content, so the stale candidates are never served
+    other = spark.createDataFrame(
+        [(i + 1, float(y)) for i, y in enumerate(reversed(SERIES_TINY_Y))],
+        "time_id long, y double",
+    )
+    eng.register_series("t", other)
+    plain.register_series("t", other)
+    fresh = sorted(map(tuple, eng.execute(spec(1, 3)).collect()))
+    assert fresh != first
+    assert fresh == sorted(map(tuple, plain.execute(spec(1, 3)).collect()))
+    assert len(os.listdir(cache)) == 3
 
 
 def test_udf_map_cache_auto_threshold(spark, tmp_path, series_tiny):

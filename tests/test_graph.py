@@ -352,6 +352,26 @@ def test_modularity_hand_values(spark):
     assert rb["q_ppm"] == (1_000_000 * rb["q_num"]) // rb["q_den"]
 
 
+def test_modularity_leaves_no_cache_entry(spark):
+    """modularity's canonical edge frame is materialized, not
+    persisted: no CacheManager entry outlives the call."""
+    from query_refinement_dsit_databases_2021_spark.operators.graph import (
+        modularity,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
+    )
+    comm = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 0), (4, 1)], "node long, label long"
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    assert modularity(edges, comm).collect()[0]["m_edges"] == 4
+    assert cache.isEmpty()
+
+
 def test_copurchase_projection_hand_basket(spark):
     from query_refinement_dsit_databases_2021_spark.operators.graph import (
         copurchase_projection,
@@ -525,6 +545,28 @@ def test_harmonic_centrality_hand_path(spark):
     }
     assert got[1] == (4, 1000000 + 500000 + 333333 + 250000)
     assert got[3] == (4, 2 * 1000000 + 2 * 500000)
+
+    # the multi-source loop restricted to one seed IS single-source
+    # BFS, on a graph with a self-loop, a reversed duplicate and a
+    # second component
+    from query_refinement_dsit_databases_2021_spark.operators.graph import (
+        _bfs_distances_multi,
+        bfs_distances,
+    )
+
+    edges2 = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 3), (3, 4), (7, 8), (8, 9)],
+        "src long, dst long",
+    )
+    seeds = (1, 3, 8)
+    multi = _bfs_distances_multi(edges2, seeds).collect()
+    for s in seeds:
+        single = bfs_distances(
+            edges2, spark.createDataFrame([(s,)], "node long")
+        ).collect()
+        assert sorted((r["node"], r["dist"]) for r in multi if r["seed"] == s) == (
+            sorted((r["node"], r["dist"]) for r in single)
+        ), s
 
 
 def test_harmonic_zero_reach_seed_omitted(spark):
