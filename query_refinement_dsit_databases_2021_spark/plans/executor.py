@@ -210,9 +210,8 @@ class Engine:
         if self.cache_dir is not None:
             import os
 
-            path = os.path.join(
-                self.cache_dir, f"udfmap_{self._cache_key(spec, stats['fp'])}.parquet"
-            )
+            key = self._cache_key(spec, stats["fp"])
+            path = os.path.join(self.cache_dir, f"udfmap_{key}.parquet")
             if os.path.exists(path):
                 candidates = self.spark.read.parquet(path).persist()
             elif self.cache_auto_seconds is None:

@@ -567,6 +567,9 @@ def test_harmonic_centrality_hand_path(spark):
         assert sorted((r["node"], r["dist"]) for r in multi if r["seed"] == s) == (
             sorted((r["node"], r["dist"]) for r in single)
         ), s
+    # the second component is reached only from its own seed
+    assert {r["node"] for r in multi if r["seed"] == 8} == {7, 8, 9}
+    assert {r["node"] for r in multi if r["seed"] == 1} == {1, 2, 3, 4}
 
 
 def test_harmonic_zero_reach_seed_omitted(spark):
