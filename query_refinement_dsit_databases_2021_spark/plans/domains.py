@@ -8,8 +8,11 @@ Semantics of reference:src/server.py:124-183 (``fixDecisionDomains``):
   lo = 1, default hi = ``max(time_id) - min(time_id) + 1``
   (reference:src/server.py:172-181).
 
-This is plan-time parameter resolution on the driver (SURVEY §4 O3) —
-one tiny aggregate, not a Catalyst rule.
+:func:`fill_domains` is that rule, pure, on given data bounds; it is
+the only place open sides are filled. The engine reads the bounds in
+the same scan as its segment statistics (``plans/executor.py``);
+:func:`resolve_domains` is the standalone form, one tiny MIN/MAX
+aggregate on the driver followed by the same rule (SURVEY §4 O3).
 """
 
 from __future__ import annotations
@@ -19,6 +22,21 @@ from pyspark.sql import functions as F
 
 from query_refinement_dsit_databases_2021_spark.errors import QueryError
 from query_refinement_dsit_databases_2021_spark.plans.spec import QuerySpec
+
+
+def fill_domains(spec: QuerySpec, t_min: int, t_max: int) -> QuerySpec:
+    """Return ``spec`` with every ``None`` domain side filled from the
+    series' ``time_id`` bounds ``[t_min, t_max]``."""
+    x_lo, x_hi = spec.x_domain
+    lx_lo, lx_hi = spec.lx_domain
+    return spec.with_domains(
+        (t_min if x_lo is None else x_lo, t_max if x_hi is None else x_hi),
+        (
+            1 if lx_lo is None else lx_lo,  # reference:src/server.py:177
+            # reference:src/server.py:178-181
+            t_max - t_min + 1 if lx_hi is None else lx_hi,
+        ),
+    )
 
 
 def series_bounds(series: DataFrame) -> tuple[int, int]:
@@ -35,19 +53,4 @@ def resolve_domains(series: DataFrame, spec: QuerySpec) -> QuerySpec:
     """Return a spec with all four domain bounds concrete."""
     if spec.resolved:
         return spec
-
-    t_min, t_max = series_bounds(series)
-
-    x_lo, x_hi = spec.x_domain
-    if x_lo is None:
-        x_lo = t_min
-    if x_hi is None:
-        x_hi = t_max
-
-    lx_lo, lx_hi = spec.lx_domain
-    if lx_lo is None:
-        lx_lo = 1  # reference:src/server.py:177
-    if lx_hi is None:
-        lx_hi = t_max - t_min + 1  # reference:src/server.py:178-181
-
-    return spec.with_domains((x_lo, x_hi), (lx_lo, lx_hi))
+    return fill_domains(spec, *series_bounds(series))

@@ -2,9 +2,38 @@
 
 Lifecycle (SURVEY §3.4):
 
-    parse -> resolve domains -> segment scan -> candidates (distributed
-    UDF map) -> pass/fail split -> count -> [limit | tighten | relax]
-    -> union -> result
+    parse -> one scan (domain bounds + segment stats) -> candidates
+    (distributed UDF map) -> [refined: one dispatch aggregate] ->
+    pass/fail split -> [limit | tighten | relax] -> union -> result
+
+On small series the fixed cost of a query is its Spark jobs (about
+0.1 s each on 4 cores, against milliseconds of data work), so the
+engine keeps them few: an unrefined query runs one statistics job and
+one result job; a refined one adds the AQE stage that caches its
+candidates and one dispatch aggregate.
+
+- **One scan before the build.** A single aggregate reads the series'
+  ``time_id`` bounds (when a domain side is open) together with the
+  segment statistics the guards need, as conditional aggregates under
+  the segment predicate of the concrete sides (``_segment_stats``);
+  ``plans/domains.fill_domains`` then fills the open sides.
+- **One dispatch aggregate.** On the refined path the passing count and
+  every measure's min/max (the relaxation normalizers) come from one
+  ``agg`` over the persisted candidates.
+- **No Exchange when the work is one partition anyway.** A source
+  whose plan-time size estimate fits one scan split
+  (``spark.sql.files.maxPartitionBytes``) is read by one task in any
+  plan, so it is coalesced to one partition before the statistics
+  aggregate, and a segment that also fits one halo block
+  (``candidates._block_size``) before the candidate build: the global
+  aggregates, the window and the sort-limit then need no Exchange and
+  no AQE stage job. This is safe at scale because it never removes
+  parallelism: past one split the source keeps its scan partitions,
+  past one block the halo partitioning keeps its per-block Exchange,
+  and sources without statistics (JDBC) never qualify.
+
+The engine keeps at most one candidates frame persisted, the last
+refined query's; ``Engine.close`` releases it.
 
 The reference's BST/backtracking machinery (reference:src/bst_class.py,
 reference:src/server.py:364-493) is execution strategy, not semantics —
@@ -29,9 +58,8 @@ stability over a random exploration order.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_refinement_dsit_databases_2021_spark.errors import (
@@ -40,14 +68,86 @@ from query_refinement_dsit_databases_2021_spark.errors import (
 )
 from query_refinement_dsit_databases_2021_spark.operators import scoring
 from query_refinement_dsit_databases_2021_spark.operators.candidates import (
+    _block_size,
     build_candidates,
     pick_strategy,
 )
-from query_refinement_dsit_databases_2021_spark.plans.domains import resolve_domains
+from query_refinement_dsit_databases_2021_spark.plans.domains import fill_domains
 from query_refinement_dsit_databases_2021_spark.plans.parser import parse_query
 from query_refinement_dsit_databases_2021_spark.plans.spec import QuerySpec
 
 VARIABILITY_EPS = 5e-28  # reference:src/server.py:211
+
+
+def _fits_one_split(table: DataFrame) -> bool:
+    """True when the source's plan-time size estimate is at most one
+    scan split (``spark.sql.files.maxPartitionBytes``). Sources without
+    statistics (JDBC, Python data sources) report Spark's default size,
+    which never qualifies."""
+    jspark = table.sparkSession._jsparkSession
+    size = table._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= jspark.sessionState().conf().filesMaxPartitionBytes()
+
+
+def _stats_aggs(cond: Column | None = None) -> list[Column]:
+    """Segment statistics over the rows where ``cond`` holds (all rows
+    when None): time_id range, row and value counts, value variance and
+    an order-independent content fingerprint for the K2 cache key
+    (32-bit hashes summed into a long cannot overflow below 2^32
+    rows)."""
+
+    def pick(c: Column) -> Column:
+        return c if cond is None else F.when(cond, c)
+
+    t, y = F.col("time_id"), F.col("y")
+    return [
+        F.min(pick(t)).alias("lo"),
+        F.max(pick(t)).alias("hi"),
+        F.count(pick(F.lit(1))).alias("n"),
+        F.count(pick(y)).alias("n_y"),
+        F.var_pop(pick(y)).alias("v"),
+        F.sum(pick(F.hash("time_id", "y"))).alias("fp"),
+    ]
+
+
+def _segment_stats(series: DataFrame, spec: QuerySpec):
+    """Resolve ``spec``'s open domain sides and read the statistics of
+    its segment ``[x0, x1 + l1]`` in one scan of ``series``.
+
+    The segment predicate is built from the concrete sides only; an
+    open side, once filled, reaches the data edge (``x_lo`` -> t_min;
+    ``x_hi`` or ``lx_hi`` open puts ``x1 + l1`` at or past t_max),
+    except when a concrete ``x_hi`` ends before the data or a concrete
+    ``lx_hi`` is negative. Then the filled upper bound cuts inside the
+    rows the aggregate saw and the segment is aggregated again.
+    Returns (resolved spec, statistics row)."""
+
+    def segment_stats(spec: QuerySpec):
+        (x0, x1), (_, l1) = spec.x_domain, spec.lx_domain
+        return series.where(F.col("time_id").between(x0, x1 + l1)).agg(
+            *_stats_aggs()
+        ).first()
+
+    if spec.resolved:
+        return spec, segment_stats(spec)
+    (x_lo, x_hi), (_, lx_hi) = spec.x_domain, spec.lx_domain
+    t = F.col("time_id")
+    cond = t.isNotNull()
+    if x_lo is not None:
+        cond &= t >= x_lo
+    upper_open = x_hi is None or lx_hi is None
+    if not upper_open:
+        cond &= t <= x_hi + lx_hi
+    row = series.agg(
+        F.min(t).alias("t_min"), F.max(t).alias("t_max"), *_stats_aggs(cond)
+    ).first()
+    if row["t_min"] is None:
+        raise QueryError("ERROR: series table is empty")
+    t_max = int(row["t_max"])
+    spec = fill_domains(spec, int(row["t_min"]), t_max)
+    if upper_open and spec.x_domain[1] + spec.lx_domain[1] < t_max:
+        row = segment_stats(spec)
+    return spec, row
 
 
 @dataclass
@@ -99,7 +199,23 @@ class Engine:
         self.cache_dir = cache_dir
         self.cache_auto_seconds = cache_auto_seconds
         self._tables: dict[str, DataFrame] = {}
+        self._held: DataFrame | None = None
         self.last_info = ExecutionInfo()
+
+    # -- cached candidates ---------------------------------------------
+    def _hold(self, candidates: DataFrame) -> DataFrame:
+        """Persist ``candidates`` as the one frame this engine keeps
+        cached, releasing the previous query's. A result returned
+        earlier stays valid: its plan recomputes what was released."""
+        self.close()
+        self._held = candidates.persist()
+        return self._held
+
+    def close(self) -> None:
+        """Unpersist the cached candidates of the last query, if any."""
+        if self._held is not None:
+            self._held.unpersist()
+            self._held = None
 
     def _cache_key(self, spec: QuerySpec, fingerprint: int) -> str:
         import hashlib
@@ -167,25 +283,14 @@ class Engine:
             F.col("time_id").cast("long").alias("time_id"),
             F.col(spec.column).cast("double").alias("y"),
         )
-        spec = resolve_domains(series, spec)
+        # A source of at most one scan split is read by one task anyway:
+        # planning it on one partition lets the global aggregates, the
+        # window and the sort-limit run without an Exchange, so no AQE
+        # stage job either.
+        one_split = _fits_one_split(table)
+        spec, stats = _segment_stats(series.coalesce(1) if one_split else series, spec)
         x0, x1 = spec.x_domain
         l0, l1 = spec.lx_domain
-
-        # S5 range scan: the only bulk data read; Parquet pushdown
-        # handles the rest (reference:src/server.py:190-206).
-        segment = series.where(F.col("time_id").between(x0, x1 + l1))
-
-        stats = segment.agg(
-            F.min("time_id").alias("lo"),
-            F.max("time_id").alias("hi"),
-            F.count("*").alias("n"),
-            F.count("y").alias("n_y"),
-            F.var_pop("y").alias("v"),
-            # order-independent content fingerprint for the K2 cache key;
-            # 32-bit hashes summed into a long cannot overflow below 2^32
-            # rows
-            F.sum(F.hash("time_id", "y")).alias("fp"),
-        ).first()
         if stats["n"] == 0:
             raise QueryError("ERROR: no data in the requested time domain")
         if stats["n_y"] != stats["n"]:
@@ -206,6 +311,13 @@ class Engine:
                 "Please select a different segment."
             )
 
+        # S5 range scan: the only bulk data read; Parquet pushdown
+        # handles the rest (reference:src/server.py:190-206).
+        segment = series.where(F.col("time_id").between(x0, x1 + l1))
+        # a segment of one halo block is windowed in one task anyway
+        if one_split and t_end - t_start + 1 <= _block_size(self.partition_rows, 0, 0):
+            segment = segment.coalesce(1)
+
         strategy = self.strategy if self.strategy != "auto" else pick_strategy(spec)
         if self.cache_dir is not None:
             import os
@@ -213,12 +325,12 @@ class Engine:
             key = self._cache_key(spec, stats["fp"])
             path = os.path.join(self.cache_dir, f"udfmap_{key}.parquet")
             if os.path.exists(path):
-                candidates = self.spark.read.parquet(path).persist()
+                candidates = self._hold(self.spark.read.parquet(path))
             elif self.cache_auto_seconds is None:
                 build_candidates(
                     segment, spec, t_start, t_end, strategy, self.partition_rows
                 ).write.mode("overwrite").parquet(path)
-                candidates = self.spark.read.parquet(path).persist()
+                candidates = self._hold(self.spark.read.parquet(path))
             else:
                 # reference parity (src/server.py:264): time the build
                 # and self-cache only when it was expensive enough that
@@ -226,9 +338,11 @@ class Engine:
                 import time as _time
 
                 t0 = _time.time()
-                candidates = build_candidates(
-                    segment, spec, t_start, t_end, strategy, self.partition_rows
-                ).persist()
+                candidates = self._hold(
+                    build_candidates(
+                        segment, spec, t_start, t_end, strategy, self.partition_rows
+                    )
+                )
                 candidates.count()  # materialize so the timer sees the build
                 if _time.time() - t0 > self.cache_auto_seconds:
                     candidates.write.mode("overwrite").parquet(path)
@@ -237,12 +351,12 @@ class Engine:
                 segment, spec, t_start, t_end, strategy, self.partition_rows
             )
             # O4: persist only when the dispatch actually re-reads the
-            # frame (refined: pass/fail split + count + scoring +
-            # min/max). The unrefined path consumes candidates exactly
-            # once, so caching it is pure write overhead (guide §5:
-            # cache only what is reused).
+            # frame (refined: one count + min/max aggregate, then the
+            # pass/fail split and scoring). The unrefined path consumes
+            # candidates exactly once, so caching it is pure write
+            # overhead (guide §5: cache only what is reused).
             if spec.refined:
-                candidates = candidates.persist()
+                candidates = self._hold(candidates)
 
         info = ExecutionInfo(
             spec=spec,
@@ -275,10 +389,22 @@ class Engine:
             info.action = "all" if k is None else "limit"
             out = passing if k is None else passing.limit(k)
         else:
-            n = passing.count()
-            info.n_passing = n
             if k is None:
                 raise QueryError("ERROR: REFINED requires a cardinality")
+            # one aggregate: the passing count, and the global per-measure
+            # min/max over ALL candidates -- the RD normalizers
+            # (reference:src/server.py:306-317, 345-349) relaxation needs
+            measures = list(dict.fromkeys(c.column for c in cons))
+            row = candidates.agg(
+                F.count_if(all_pass).alias("n"),
+                *[
+                    agg(m).alias(f"{name}_{m}")
+                    for m in measures
+                    for name, agg in (("min", F.min), ("max", F.max))
+                ],
+            ).first()
+            n = row["n"]
+            info.n_passing = n
             if n == k:
                 info.action = "exact"
                 out = passing
@@ -299,7 +425,10 @@ class Engine:
                 # C2 relaxation: best k-n failing by RP asc, RP <= 1
                 # (reference:src/server.py:691-772)
                 info.action = "relax"
-                bounds = self._measure_bounds(candidates, cons)
+                bounds = {
+                    m: (float(row[f"min_{m}"]), float(row[f"max_{m}"]))
+                    for m in measures
+                }
                 failing = candidates.where(~all_pass)
                 relaxed = (
                     failing.withColumn(
@@ -319,23 +448,3 @@ class Engine:
         for old, new in renames.items():
             out = out.withColumnRenamed(old, new)
         return out
-
-    @staticmethod
-    def _measure_bounds(
-        candidates: DataFrame, cons: Iterable
-    ) -> dict[str, tuple[float, float]]:
-        """A4 global per-measure min/max over ALL candidates — the RD
-        normalizers (reference:src/server.py:306-317, 345-349). A tiny
-        aggregate collected to the driver (scalars, not data)."""
-        aggs = []
-        names = []
-        for c in cons:
-            if c.column in names:
-                continue
-            names.append(c.column)
-            aggs.append(F.min(c.column).alias(f"min_{c.column}"))
-            aggs.append(F.max(c.column).alias(f"max_{c.column}"))
-        row = candidates.agg(*aggs).first()
-        return {
-            n: (float(row[f"min_{n}"]), float(row[f"max_{n}"])) for n in names
-        }

@@ -45,6 +45,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame call-site capture costs ~5 extra py4j round
+        # trips per DataFrame/Column call; the engine plans many small
+        # queries, and no error here relies on the Python call site
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )

@@ -56,12 +56,15 @@ def refine_on_stream(
         batch_df.select("time_id", "y").write.mode("append").parquet(series_path)
         engine = engine_factory(spark) if engine_factory else Engine(spark)
         engine.register_parquet(series_name, series_path)
-        result = engine.execute(query_text)
-        (
-            result.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(results_path)
-        )
+        try:
+            result = engine.execute(query_text)
+            (
+                result.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(results_path)
+            )
+        finally:
+            engine.close()  # the batch's cached candidates
 
     return process_batch
 

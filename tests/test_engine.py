@@ -269,3 +269,71 @@ def test_udf_map_cache_auto_threshold(spark, tmp_path, series_tiny):
     assert os.listdir(hot) == files
     assert os.path.getmtime(os.path.join(hot, files[0])) == mtime
     assert first == second == baseline
+
+
+def test_fused_resolution_matches_resolve_domains(spark, series_tiny):
+    """The engine reads open domain sides in the same scan as its
+    segment statistics; every combination of open sides, and x-domains
+    that end before or start after the data, must behave exactly like
+    resolving first with ``resolve_domains``."""
+    from itertools import product
+
+    from query_refinement_dsit_databases_2021_spark.plans.domains import (
+        resolve_domains,
+    )
+
+    eng = Engine(spark)
+    eng.register_series("tiny", series_tiny)
+    cons = [ConstraintSpec("avg_amp", (), 2, 4)]
+
+    def outcome(spec):
+        try:
+            rows = _pairs(eng.execute(spec))
+        except Exception as ex:  # noqa: BLE001 - the class is compared
+            return type(ex)
+        return rows, eng.last_info.spec
+
+    concrete = (3, 14, 2, 4)  # x_lo, x_hi, lx_lo, lx_hi
+    domains = [
+        tuple(v if keep else None for v, keep in zip(concrete, mask))
+        for mask in product((True, False), repeat=4)
+    ]
+    domains += [(-10, -5, None, None), (25, 30, None, None), (None, None, None, -2)]
+    for x_lo, x_hi, lx_lo, lx_hi in domains:
+        spec = _spec((x_lo, x_hi), (lx_lo, lx_hi), cons)
+        want = outcome(resolve_domains(series_tiny, spec))
+        assert outcome(spec) == want, (x_lo, x_hi, lx_lo, lx_hi)
+
+
+def test_engine_keeps_one_candidates_frame(spark, series_tiny, tmp_path):
+    """Refined queries persist their candidates; an engine keeps only
+    the last query's, K2-cache reloads included, and a result returned
+    earlier still collects the same rows after its frame is released."""
+    jsc = spark.sparkContext._jsc
+    cons = [ConstraintSpec("avg_amp", (), 1, 5, "maximization")]
+
+    def spec(x0):
+        return _spec((x0, x0 + 8), (1, 3), cons, k=4, refined=True)
+
+    before = jsc.getPersistentRDDs().size()
+    eng = Engine(spark)
+    eng.register_series("tiny", series_tiny)
+    first = eng.execute(spec(1))
+    want = _pairs(first)
+    for x0 in range(2, 7):
+        eng.execute(spec(x0)).collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert _pairs(first) == want
+    eng.close()
+    assert jsc.getPersistentRDDs().size() <= before
+
+    cached = Engine(spark, cache_dir=str(tmp_path))
+    cached.register_series("tiny", series_tiny)
+    for x0 in (1, 2, 1, 2, 1):  # builds, then reloads from parquet
+        cached.execute(spec(x0)).collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    cached.close()
+
+
+def test_session_disables_dataframe_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -1368,3 +1368,68 @@ def test_window_strategy_plan_shape_is_fixed_in_offsets(spark):
     cands((101, 600), (1, 32)).write.format("noop").mode("overwrite").save()
     compiled = metrics.METRIC_COMPILATION_TIME().getCount() - before
     assert compiled <= 10, compiled
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job budget")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_cp_query_job_budget(spark, tmp_path_factory):
+    """A CP query over a single-file series pays one statistics scan,
+    then one job for the result; the refined path adds the AQE stage
+    that caches its candidates and one dispatch aggregate. The open
+    domain sides are read in the statistics scan, and a series that is
+    one partition anyway is planned without an Exchange — while a
+    segment of several halo blocks keeps its block Exchange."""
+    from query_refinement_dsit_databases_2021_spark.plans.executor import Engine
+    from query_refinement_dsit_databases_2021_spark.plans.spec import (
+        ConstraintSpec,
+        QuerySpec,
+    )
+
+    path = str(tmp_path_factory.mktemp("plan") / "series.parquet")
+    spark.createDataFrame(
+        [(i + 1, float((i * 7919) % 101)) for i in range(600)],
+        "time_id long, y double",
+    ).coalesce(1).write.parquet(path)
+    eng = Engine(spark)
+    eng.register_parquet("s", path)
+    cons = (
+        ConstraintSpec("avg_amp", (), 45, 55),
+        ConstraintSpec("max_amp_excess_left", (5,), -20, 40),
+    )
+
+    for x_dom, lx_dom in (((101, 400), (1, 16)), ((None, None), (None, 16))):
+        def spec(k=None, refined=False):
+            return QuerySpec("s", "y", x_dom, lx_dom, cons, k, refined)
+
+        n = eng.execute(spec()).count()
+        assert n > 5
+        for k, refined, action, budget in (
+            (None, False, "all", 2),
+            (5, False, "limit", 2),
+            (n, True, "exact", 4),
+            (5, True, "tighten", 4),
+            (n + 20, True, "relax", 4),
+        ):
+            q = spec(k, refined)
+            jobs = _jobs(spark, lambda: eng.execute(q).collect())
+            assert eng.last_info.action == action
+            assert jobs <= budget, (x_dom, action, jobs)
+
+    closed = QuerySpec("s", "y", (101, 400), (1, 16), cons)
+    assert _exchanges(eng.execute(closed)) == 0
+    blocks = Engine(spark, partition_rows=100)
+    blocks.register_parquet("s", path)
+    assert "hashpartitioning(wpid" in _plan(blocks.execute(closed))

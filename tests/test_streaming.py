@@ -188,7 +188,10 @@ def test_foreachbatch_continuous_refinement(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir))
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     run_refine_stream(events, series_path, q, results_path)
+    # every trigger releases the candidates its engine cached
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     results = spark.read.parquet(results_path)
     batches = sorted(r["batch_id"] for r in results.select("batch_id").distinct().collect())
