@@ -391,9 +391,9 @@ class Engine:
         else:
             if k is None:
                 raise QueryError("ERROR: REFINED requires a cardinality")
-            # one aggregate: the passing count, and the global per-measure
-            # min/max over ALL candidates -- the RD normalizers
-            # (reference:src/server.py:306-317, 345-349) relaxation needs
+            # one aggregate: the passing count and, for relaxation, the
+            # global per-measure min/max over ALL candidates -- the RD
+            # normalizers (reference:src/server.py:306-317, 345-349)
             measures = list(dict.fromkeys(c.column for c in cons))
             row = candidates.agg(
                 F.count_if(all_pass).alias("n"),
