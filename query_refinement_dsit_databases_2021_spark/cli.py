@@ -47,12 +47,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--plot", action="store_true", help="save the result plot (K1)")
     p.add_argument("--scores", action="store_true", help="include RK/RP score column")
     p.add_argument(
-        "--strategy",
-        default="auto",
-        choices=["auto", "window", "sparse", "pandas"],
-        help="candidate-build strategy (auto: cost rule + non-native measures)",
-    )
-    p.add_argument(
         "--cache-dir",
         default=None,
         help="parquet cache dir for the candidate matrix (K2)",
@@ -113,7 +107,7 @@ def main(argv: list[str] | None = None) -> int:
 
     table = pick_dataset(args.table)
     name = args.name or os.path.splitext(os.path.basename(table))[0]
-    engine = Engine(spark, strategy=args.strategy, cache_dir=args.cache_dir)
+    engine = Engine(spark, cache_dir=args.cache_dir)
     with t.stage("get-data"):
         engine.register_parquet(name, table)
 

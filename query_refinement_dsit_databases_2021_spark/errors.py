@@ -17,12 +17,3 @@ class DataVariabilityError(QueryError):
     Mirrors reference:src/server.py:209-214 (``var(y) <= 5e-28`` aborts).
     """
 
-
-class ScratchSpaceError(RuntimeError):
-    """Pre-dispatch estimate says the sparse path's candidate shuffle
-    would spill more than the free local scratch space.
-
-    Raised by the W→S strategy path BEFORE the job runs, instead of
-    letting a multi-minute shuffle die ``No space left on device``
-    mid-flight (the measured failure mode of the 194M-candidate run:
-    46 GB of spill against 25 GB free)."""

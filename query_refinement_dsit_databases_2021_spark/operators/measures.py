@@ -3,18 +3,12 @@
 The reference's extension point is a name-registered family of
 per-window scalar functions ``f(series, x, lx, args) -> float``
 (reference:src/client.py:160, reference:src/server.py:960-1016). Here
-each measure is a *builder of native Column expressions* over one of
-two physical encodings of the series segment (see
-``operators/candidates.py``):
-
-- **window strategy** ("W"): one forward frame collects each start
-  row's values ``y[x .. x+reach]``; every measure is an array
-  expression over a slice of it, so the plan shape does not grow with
-  the offset domain — best when that domain is small (all committed
-  reference queries: ≤ 46 values).
-- **sparse strategy** ("S"): prefix sums + doubling max tables
-  (sparse table / RMQ), then per-candidate equi-join lookups —
-  O(N log L + |candidates|) work, the 100 TB path for large domains.
+a native measure is a *builder of a Column expression* over what
+strategy W (``operators/candidates.py``) computes per candidate
+``(x, lx)``: running ``sum``/``max``/``min`` of the window
+``y[x .. x+lx]`` and max frames of the neighbourhoods
+(:class:`WindowCtx`). Every measure also has a NumPy kernel for
+strategy P, the ``applyInPandas`` escape hatch.
 
 Semantics are pinned to the reference kernels:
 
@@ -39,114 +33,46 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# exact integer helpers (no float-log pitfalls)
-# ---------------------------------------------------------------------------
-
-def int_log2(m: Column) -> Column:
-    """floor(log2(m)) for integer m >= 1, computed exactly via the
-    length of the base-2 string representation (no libm rounding)."""
-    return (F.length(F.conv(m.cast("string"), 10, 2)) - F.lit(1)).cast("int")
-
-
-def pow2(j: Column) -> Column:
-    """2**j as a long (exact for j <= 52)."""
-    return F.pow(F.lit(2.0), j.cast("double")).cast("long")
-
-
-# ---------------------------------------------------------------------------
-# sparse-strategy lookup context
-# ---------------------------------------------------------------------------
-
-@dataclass
-class SparseCtx:
-    """Collects the helper-table lookups a measure expression needs.
-
-    A lookup is an equi-join of the candidates table to the helper
-    table at position ``pos`` (a Column expression over ``x``/``lx``),
-    pulling field ``y``, ``S`` (inclusive prefix sum) or ``M`` (array
-    of doubling-max levels). Identical positions are deduplicated so
-    the physical plan performs one join per distinct position.
-    """
-
-    x: Column
-    lx: Column
-    t_start: int
-    t_end: int
-    # key -> (pos_expr, set of fields)
-    lookups: dict[str, tuple[Column, set]] = field(default_factory=dict)
-    _names: dict[str, str] = field(default_factory=dict)
-
-    def _register(self, pos: Column, fld: str) -> str:
-        key = pos._jc.toString() if hasattr(pos, "_jc") else str(pos)
-        if key not in self.lookups:
-            self.lookups[key] = (pos, set())
-            self._names[key] = f"p{len(self._names)}"
-        self.lookups[key][1].add(fld)
-        return self._names[key]
-
-    def col_at(self, pos: Column, fld: str) -> Column:
-        """Column `fld` of the helper row whose time_id == pos."""
-        name = self._register(pos, fld)
-        return F.col(f"{name}_{fld}")
-
-    def interval_max(self, start: Column, length: Column) -> Column:
-        """max(y) over [start, start+length-1] via two sparse-table
-        lookups: max(M_j[start], M_j[start+length-2^j]) with
-        j = floor(log2(length))."""
-        j = int_log2(length)
-        p2 = start + length - pow2(j)
-        return F.greatest(
-            F.element_at(self.col_at(start, "M"), j + 1),
-            F.element_at(self.col_at(p2, "M"), j + 1),
-        )
-
-    def interval_min(self, start: Column, length: Column) -> Column:
-        """min(y) over [start, start+length-1] — same doubling trick
-        over the ``Mn`` (doubling-min) levels."""
-        j = int_log2(length)
-        p2 = start + length - pow2(j)
-        return F.least(
-            F.element_at(self.col_at(start, "Mn"), j + 1),
-            F.element_at(self.col_at(p2, "Mn"), j + 1),
-        )
-
-
-# ---------------------------------------------------------------------------
 # measure definitions
 # ---------------------------------------------------------------------------
 
-def array_sum(arr: Column) -> Column:
-    """Left-to-right sum from 0.0: the accumulation order of Spark's
-    sliding-frame ``Sum``/``Average``, so strategy W's sums are
-    bit-identical to a ``sum(y) OVER (... FOLLOWING)`` frame."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
-
-
 @dataclass
 class WindowCtx:
-    """What a measure's strategy-W expression reads for one candidate.
+    """What a measure's strategy-W expression reads for one candidate
+    ``(x, lx)``.
 
-    ``fwd`` is the start row's forward values ``y[x .. x+reach]`` in
-    time order (clamped at the segment end) and ``lx`` the candidate's
-    offset. A left-neighbourhood max is one ``max(y)`` frame per
-    distinct ``w``; :meth:`left_max` records the ``w`` it is asked for
-    so the builder computes only those frames (as :class:`SparseCtx`
-    collects its lookups)."""
+    ``win_sum``, ``win_max`` and ``win_min`` are running aggregates of
+    the window ``y[x .. x+lx]``; :meth:`right_max` and :meth:`left_max`
+    are the max frames of the neighbourhoods. Each accessor records
+    what it is asked for, so the builder computes only those columns."""
 
-    fwd: Column
     lx: Column
+    aggs: set[str] = field(default_factory=set)
+    right_ws: set[int] = field(default_factory=set)
     left_ws: set[int] = field(default_factory=set)
 
-    @property
-    def win(self) -> Column:
-        """The window ``y[x .. x+lx]``."""
-        return F.slice(self.fwd, 1, self.lx + 1)
+    def _win(self, fn: str) -> Column:
+        self.aggs.add(fn)
+        return F.col(f"win_{fn}")
 
-    def right(self, w: int) -> Column:
-        """The right neighbourhood ``y[x+lx .. min(x+lx+w, t_end)]``:
-        it shares the window's last point and clamps at the segment
-        end because ``fwd`` does."""
-        return F.slice(self.fwd, self.lx + 1, F.lit(w + 1))
+    @property
+    def win_sum(self) -> Column:
+        """``sum(y[x .. x+lx])``, added left to right from 0.0."""
+        return self._win("sum")
+
+    @property
+    def win_max(self) -> Column:
+        return self._win("max")
+
+    @property
+    def win_min(self) -> Column:
+        return self._win("min")
+
+    def right_max(self, w: int) -> Column:
+        """``max(y[x+lx .. min(x+lx+w, t_end)])``: the neighbourhood
+        shares the window's last point and clamps at the segment end."""
+        self.right_ws.add(w)
+        return F.col(f"rmax_{w}")
 
     def left_max(self, w: int) -> Column:
         """``max(y[max(x-w, t_start) .. x])``."""
@@ -157,9 +83,8 @@ class WindowCtx:
 class MeasureDef:
     """Base class; subclasses implement the physical strategies.
 
-    ``native`` measures implement W (array expressions over a forward
-    frame, see :class:`WindowCtx`) and S (sparse table) as Column
-    builders — the JVM-side fast paths. Every measure additionally
+    ``native`` measures implement W as a Column builder over
+    :class:`WindowCtx` — the JVM-side fast path. Every measure additionally
     implements ``py_kernel``, the Arrow-batched escape
     hatch (strategy P, ``candidates._build_pandas``): the reference's
     own kernel contract ``f(series, x, lx, args) -> float``
@@ -181,20 +106,6 @@ class MeasureDef:
         BOTH strategy W and strategy P to size halo duplication."""
         raise NotImplementedError
 
-    # --- strategy S -------------------------------------------------
-    def s_expr(self, ctx: SparseCtx, args: tuple) -> Column:
-        raise NotImplementedError
-
-    def s_max_interval(self, l1: int, args: tuple) -> int:
-        """Longest max-interval this measure queries (sizes the sparse
-        table depth); 0 if it needs no max intervals."""
-        return 0
-
-    def s_min_interval(self, l1: int, args: tuple) -> int:
-        """Longest MIN-interval this measure queries; 0 if it needs no
-        doubling-min levels (the builder then skips the ``Mn`` table)."""
-        return 0
-
     # --- strategy P (Arrow/pandas escape hatch) ---------------------
     def py_kernel(
         self,
@@ -214,17 +125,10 @@ class AvgAmp(MeasureDef):
 
     def w_expr(self, ctx, args):
         # sum / count, as Spark's Average evaluates
-        return array_sum(ctx.win) / (ctx.lx + F.lit(1)).cast("double")
+        return ctx.win_sum / (ctx.lx + F.lit(1)).cast("double")
 
     def w_reach(self, l1, args):
         return (l1, 0)
-
-    def s_expr(self, ctx, args):
-        # mean over [x, x+lx] = (S[x+lx] - S[x] + y[x]) / (lx + 1)
-        s_end = ctx.col_at(ctx.x + ctx.lx, "S")
-        s_x = ctx.col_at(ctx.x, "S")
-        y_x = ctx.col_at(ctx.x, "y")
-        return (s_end - s_x + y_x) / (ctx.lx + F.lit(1)).cast("double")
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         return float(y[i : i + lx + 1].mean())
@@ -235,21 +139,10 @@ class MaxAmpExcessRight(MeasureDef):
     n_args = 1
 
     def w_expr(self, ctx, args):
-        return F.array_max(ctx.win) - F.array_max(ctx.right(args[0]))
+        return ctx.win_max - ctx.right_max(args[0])
 
     def w_reach(self, l1, args):
         return (l1 + args[0], 0)
-
-    def s_expr(self, ctx, args):
-        w = args[0]
-        x_prime = ctx.x + ctx.lx
-        lx_prime = F.least(F.lit(w).cast("long"), F.lit(ctx.t_end) - x_prime)
-        win = ctx.interval_max(ctx.x, ctx.lx + F.lit(1))
-        nbr = ctx.interval_max(x_prime, lx_prime + F.lit(1))
-        return win - nbr
-
-    def s_max_interval(self, l1, args):
-        return max(l1 + 1, args[0] + 1)
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         # boundary point x+lx in BOTH windows; neighborhood clamped at
@@ -265,20 +158,10 @@ class MaxAmpExcessLeft(MeasureDef):
     n_args = 1
 
     def w_expr(self, ctx, args):
-        return F.array_max(ctx.win) - ctx.left_max(args[0])
+        return ctx.win_max - ctx.left_max(args[0])
 
     def w_reach(self, l1, args):
         return (l1, args[0])
-
-    def s_expr(self, ctx, args):
-        w = args[0]
-        w_prime = F.least(F.lit(w).cast("long"), ctx.x - F.lit(ctx.t_start))
-        win = ctx.interval_max(ctx.x, ctx.lx + F.lit(1))
-        nbr = ctx.interval_max(ctx.x - w_prime, w_prime + F.lit(1))
-        return win - nbr
-
-    def s_max_interval(self, l1, args):
-        return max(l1 + 1, args[0] + 1)
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         # boundary point x shared; clamped at the segment start
@@ -300,16 +183,10 @@ class SumAmp(MeasureDef):
     n_args = 0
 
     def w_expr(self, ctx, args):
-        return array_sum(ctx.win)
+        return ctx.win_sum
 
     def w_reach(self, l1, args):
         return (l1, 0)
-
-    def s_expr(self, ctx, args):
-        s_end = ctx.col_at(ctx.x + ctx.lx, "S")
-        s_x = ctx.col_at(ctx.x, "S")
-        y_x = ctx.col_at(ctx.x, "y")
-        return s_end - s_x + y_x
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         return float(y[i : i + lx + 1].sum())
@@ -322,16 +199,10 @@ class MinAmp(MeasureDef):
     n_args = 0
 
     def w_expr(self, ctx, args):
-        return F.array_min(ctx.win)
+        return ctx.win_min
 
     def w_reach(self, l1, args):
         return (l1, 0)
-
-    def s_expr(self, ctx, args):
-        return ctx.interval_min(ctx.x, ctx.lx + F.lit(1))
-
-    def s_min_interval(self, l1, args):
-        return l1 + 1
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         return float(y[i : i + lx + 1].min())
@@ -339,26 +210,16 @@ class MinAmp(MeasureDef):
 
 class RangeAmp(MeasureDef):
     """Amplitude spread over the window: max(y) − min(y) on
-    [x, x+lx] — composes the doubling-max and doubling-min tables."""
+    [x, x+lx]."""
 
     name = "range_amp"
     n_args = 0
 
     def w_expr(self, ctx, args):
-        return F.array_max(ctx.win) - F.array_min(ctx.win)
+        return ctx.win_max - ctx.win_min
 
     def w_reach(self, l1, args):
         return (l1, 0)
-
-    def s_expr(self, ctx, args):
-        win = ctx.lx + F.lit(1)
-        return ctx.interval_max(ctx.x, win) - ctx.interval_min(ctx.x, win)
-
-    def s_max_interval(self, l1, args):
-        return l1 + 1
-
-    def s_min_interval(self, l1, args):
-        return l1 + 1
 
     def py_kernel(self, y, i, lx, args, left_gap, right_gap):
         win = y[i : i + lx + 1]
@@ -366,8 +227,8 @@ class RangeAmp(MeasureDef):
 
 
 # ---------------------------------------------------------------------------
-# non-native measures: semantics the built-in window/sparse operators
-# cannot express — they run on strategy P (applyInPandas), which the
+# non-native measures: semantics the built-in window aggregates cannot
+# express — they run on strategy P (applyInPandas), which the
 # planner auto-selects when such a measure appears in a query
 # ---------------------------------------------------------------------------
 
@@ -375,7 +236,7 @@ class MedianAmp(MeasureDef):
     """Exact median of ``y`` over [x, x+lx]. Spark's ``median``/
     ``percentile`` aggregates reject window frames
     (INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC) and an exact median is
-    not decomposable into prefix/doubling tables, so this is the
+    not a running aggregate, so this is the
     canonical escape-hatch measure: NumPy ``median`` per candidate
     window under strategy P."""
 
@@ -438,6 +299,6 @@ def register_measure(measure: MeasureDef) -> None:
     """Extension hook for user-defined interval measures (the Spark
     analogue of adding a kernel to reference:src/server.py:960-1016 and
     its name to reference:src/client.py:160). Native measures plug
-    into the W/S Column builders; ``PythonKernelMeasure`` instances
+    into the strategy-W Column builder; ``PythonKernelMeasure`` instances
     run via the Arrow-batched strategy P."""
     REGISTRY[measure.name] = measure

@@ -175,13 +175,11 @@ class Engine:
     def __init__(
         self,
         spark: SparkSession,
-        strategy: str = "auto",
         partition_rows: int | None = None,
         cache_dir: str | None = None,
         cache_auto_seconds: float | None = None,
     ):
         self.spark = spark
-        self.strategy = strategy
         self.partition_rows = partition_rows
         # K2 cache: the reference pickles its UDF map when the build
         # exceeds 300 s and reloads it on demand
@@ -318,7 +316,7 @@ class Engine:
         if one_split and t_end - t_start + 1 <= _block_size(self.partition_rows, 0, 0):
             segment = segment.coalesce(1)
 
-        strategy = self.strategy if self.strategy != "auto" else pick_strategy(spec)
+        strategy = pick_strategy(spec)
         if self.cache_dir is not None:
             import os
 

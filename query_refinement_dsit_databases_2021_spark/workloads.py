@@ -413,7 +413,7 @@ def _cp_workloads() -> list[Workload]:
         headline=True,
     )
     # extension measures (sum/min/range amplitude) via register_measure's
-    # registry — window strategy (small lx domain) ...
+    # registry ...
     cp(
         "cp_ext_sum_min_range",
         "SELECT time_id, offset IN_DOMAIN [101, 600], [5, 16]\n"
@@ -434,7 +434,7 @@ def _cp_workloads() -> list[Workload]:
     )
     # non-native measure -> planner auto-selects strategy P (the
     # Arrow/pandas escape hatch): exact per-window median, which Spark's
-    # window frames and the sparse table cannot express
+    # running window aggregates cannot express
     cp(
         "cp_ext_median_pandas",
         "SELECT time_id, offset IN_DOMAIN [101, 400], [5, 12]\n"
@@ -451,7 +451,8 @@ def _cp_workloads() -> list[Workload]:
             ],
         ),
     )
-    # ... and sparse strategy (lx domain wider than the window cutoff)
+    # ... and a wide offset domain (86 offsets) on strategy W; the
+    # historical name stays because the correctness ledger keys on it
     cp(
         "cp_ext_sparse_strategy",
         "SELECT time_id, offset IN_DOMAIN [101, 500], [5, 90]\n"

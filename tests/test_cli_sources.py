@@ -126,14 +126,13 @@ def test_cli_strategy_flag(spark, tmp_path, capsys):
         "SELECT time_id, offset IN_DOMAIN [50, 150], [5, 20]\n"
         "FROM emg_data.emg1\nWHERE avg_amp() in [1, 2] MAX\nLIMIT REFINED 5\n"
     )
-    rc = main(
-        [
-            "--table", table, "--query", str(qf),
-            "--out-dir", str(tmp_path / "obj2"), "--strategy", "sparse",
-        ]
-    )
-    assert rc == 0
-    assert "strategy=sparse" in capsys.readouterr().out
+    args = ["--table", table, "--query", str(qf), "--out-dir", str(tmp_path / "obj2")]
+    # the strategy is derived from the measures, not chosen by a flag
+    with pytest.raises(SystemExit):
+        main(args + ["--strategy", "window"])
+    capsys.readouterr()
+    assert main(args) == 0
+    assert "strategy=window" in capsys.readouterr().out
 
 
 def test_cli_interactive_dataset_pick(spark, tmp_path, capsys, monkeypatch):

@@ -20,11 +20,15 @@ from tests.oracle_np import brute_execute
 SERIES = [(i + 1, float(y)) for i, y in enumerate(SERIES_TINY_Y)]
 
 
-@pytest.fixture(scope="module", params=["window", "sparse"])
+@pytest.fixture(scope="module", params=["window"])
 def engine(request, spark, series_tiny):
-    eng = Engine(spark, strategy=request.param)
+    """One Engine; the param is the strategy the planner must derive
+    for every query these tests run (all their measures are native)."""
+    eng = Engine(spark)
     eng.register_series("tiny", series_tiny)
-    return eng
+    yield eng
+    eng.close()
+    assert eng.last_info.strategy == request.param
 
 
 def _pairs(df):
@@ -333,6 +337,32 @@ def test_engine_keeps_one_candidates_frame(spark, series_tiny, tmp_path):
         cached.execute(spec(x0)).collect()
     assert jsc.getPersistentRDDs().size() - before <= 1
     cached.close()
+
+
+def test_wide_offset_domain_leaves_nothing_persisted(spark):
+    """Refined queries over a 100-offset domain hold nothing past
+    ``Engine.close()``: the candidate build persists no helper table of
+    its own."""
+    import math
+
+    jsc = spark.sparkContext._jsc
+    series = spark.createDataFrame(
+        [(i, 1.5 + math.sin(i / 7.0)) for i in range(1, 401)],
+        "time_id long, y double",
+    )
+    cons = [ConstraintSpec("avg_amp", (), 1, 2, "maximization")]
+    before = jsc.getPersistentRDDs().size()
+    eng = Engine(spark)
+    eng.register_series("wide", series)
+    for x0 in (1, 51, 101):
+        spec = QuerySpec(
+            table="wide", column="y", x_domain=(x0, x0 + 150),
+            lx_domain=(1, 100), constraints=tuple(cons), cardinality=5,
+            refined=True,
+        )
+        assert len(eng.execute(spec).collect()) == 5
+    eng.close()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_session_disables_dataframe_call_site_capture(spark):

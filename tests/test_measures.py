@@ -1,6 +1,6 @@
 """Per-operator unit tests on the hand-checkable series (FIXTURES.md §3):
-measure kernels A1-A3 under both physical strategies, boundary
-clamping, inclusive-both-ends windows."""
+measure kernels A1-A3 under both physical strategies (W and P),
+boundary clamping, inclusive-both-ends windows."""
 
 import pytest
 
@@ -43,7 +43,7 @@ CONS_ALL = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_measures_match_bruteforce(spark, series_tiny, strategy):
     spec = _spec((1, 15), (0, 5), CONS_ALL)
     seg = series_tiny  # whole table: [1, 20] covers x1 + l1 = 20
@@ -55,7 +55,7 @@ def test_measures_match_bruteforce(spark, series_tiny, strategy):
             assert got[key][col] == pytest.approx(val, abs=1e-9), (key, col)
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_hand_computed_values(spark, series_tiny, strategy):
     # avg_amp over [2,5] = mean(1,2,3,4) = 2.5  (inclusive both ends)
     # excess_right(3) at x=2,lx=3: win [2,5]=max 4; nbr [5, 5+3]=[4,5,5,5]->5; 4-5=-1
@@ -67,7 +67,7 @@ def test_hand_computed_values(spark, series_tiny, strategy):
     assert got[(6, 2)]["m_max_amp_excess_left_4"] == pytest.approx(0.0)
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_edge_clamping(spark, series_tiny, strategy):
     # left neighborhood at x=1 clamps to w'=0 -> nbr=[x..x]=y[1]; excess = win_max - y[1]
     # right neighborhood at the last candidate clamps at t_end
@@ -79,7 +79,7 @@ def test_edge_clamping(spark, series_tiny, strategy):
     assert got[(18, 2)]["m_max_amp_excess_right_3"] == pytest.approx(1.0)
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_incomplete_windows_dropped(spark, series_tiny, strategy):
     # x+lx beyond data end must be dropped, not truncated
     spec = _spec((15, 20), (3, 8), [ConstraintSpec("avg_amp", (), None, None)])
@@ -88,7 +88,7 @@ def test_incomplete_windows_dropped(spark, series_tiny, strategy):
     assert (17, 3) in got and (18, 3) not in got
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_halo_partitioning_invariant(spark, strategy):
     """Small partition blocks (forcing real halo duplication) must not
     change any measure value vs the single-block plan."""
@@ -110,35 +110,6 @@ def test_halo_partitioning_invariant(spark, strategy):
             assert b[key][col] == pytest.approx(val, abs=1e-9), (key, col)
 
 
-def test_sparse_two_level_offset_fold(spark, monkeypatch):
-    """Strategy S's exclusive prefix over block totals is a two-level
-    fold (within-superblock scan + single-partition scan over superblock
-    totals). With the fan forced to 2 and 10 blocks (= 5 superblocks),
-    every fold path is exercised and measure values must be identical
-    to the brute-force oracle and the single-block plan."""
-    import numpy as np
-
-    from query_refinement_dsit_databases_2021_spark.operators import candidates
-
-    monkeypatch.setattr(candidates, "SPARSE_OFFSET_FAN", 2)
-    rng = np.random.default_rng(11)
-    ys = rng.integers(-50, 50, size=300).astype(float)
-    series = [(i + 1, float(y)) for i, y in enumerate(ys)]
-    df = spark.createDataFrame(series, "time_id long, y double")
-    spec = _spec((1, 280), (0, 6), CONS_ALL)
-
-    folded = _collect(build_candidates(df, spec, 1, 300, "sparse", partition_rows=30))
-    single = _collect(
-        build_candidates(df, spec, 1, 300, "sparse", partition_rows=10**6)
-    )
-    want = brute_candidates(series, spec)
-    assert set(folded) == set(single) == set(want)
-    for key in want:
-        for col, val in want[key].items():
-            assert folded[key][col] == pytest.approx(val, abs=1e-9), (key, col)
-            assert single[key][col] == pytest.approx(val, abs=1e-9), (key, col)
-
-
 EXT_CONS = [
     ConstraintSpec("sum_amp", (), None, None),
     ConstraintSpec("min_amp", (), None, None),
@@ -146,7 +117,7 @@ EXT_CONS = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_extension_measures_match_bruteforce(spark, series_tiny, strategy):
     spec = _spec((1, 15), (0, 5), EXT_CONS)
     got = _collect(build_candidates(series_tiny, spec, 1, 20, strategy, partition_rows=4))
@@ -157,7 +128,7 @@ def test_extension_measures_match_bruteforce(spark, series_tiny, strategy):
             assert got[key][col] == pytest.approx(val, abs=1e-9), (key, col)
 
 
-@pytest.mark.parametrize("strategy", ["window", "sparse", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "pandas"])
 def test_extension_measures_hand_values(spark, series_tiny, strategy):
     # series y = [0,1,2,3,4,5,5,5,5,10,0,-3,2,2,2,2,8,1,0,0] at t=1..20
     # sum_amp over [2,5]   = 1+2+3+4 = 10
@@ -197,9 +168,8 @@ def test_median_rejected_by_native_strategies(spark, series_tiny):
     from query_refinement_dsit_databases_2021_spark.errors import QueryError
 
     spec = _spec((1, 15), (0, 5), [ConstraintSpec("median_amp", (), 1, 5)])
-    for strategy in ("window", "sparse"):
-        with pytest.raises(QueryError, match="median_amp"):
-            build_candidates(series_tiny, spec, 1, 20, strategy)
+    with pytest.raises(QueryError, match="median_amp"):
+        build_candidates(series_tiny, spec, 1, 20, "window")
 
 
 def test_python_kernel_measure_end_to_end(spark, series_tiny):
@@ -258,36 +228,35 @@ def test_register_measure_extends_parser(spark, series_tiny):
         )
 
 
-def test_sparse_scratch_preflight(spark, series_tiny, monkeypatch):
-    """r08 verdict item 5: the W→S path estimates spill BEFORE
-    dispatch (measured rule: spill onset ~34M candidates, ~0.5 GB/M
-    past it — BASELINE.md 'Third decade') and raises the typed
-    ScratchSpaceError instead of dying ENOSPC mid-shuffle."""
-    from query_refinement_dsit_databases_2021_spark.errors import (
-        ScratchSpaceError,
-    )
-    from query_refinement_dsit_databases_2021_spark.operators import (
-        candidates as cand,
-    )
+def test_values_do_not_depend_on_offset_domain_size(spark):
+    """A candidate's measure values are a function of (x, lx) alone:
+    growing the offset domain by one offset must leave every shared
+    candidate bit-identical (a size rule that switched the physical
+    strategy at 64 offsets once changed thousands of them)."""
+    import numpy as np
+    from pyspark.sql import functions as F
 
-    # pure decision core: below onset → no estimate, no raise
-    assert cand.sparse_scratch_preflight(1_000_000, 0) == 0
-    # above onset with room → returns the estimate
-    need = cand.sparse_scratch_preflight(100_000_000, 1 << 60)
-    assert need == 100_000_000 * cand.SPARSE_SCRATCH_BYTES_PER_CANDIDATE
-    # unknown probe (-1) skips rather than false-positives
-    assert cand.sparse_scratch_preflight(100_000_000, -1) == need
-    # above onset without room → typed error
-    with pytest.raises(ScratchSpaceError):
-        cand.sparse_scratch_preflight(100_000_000, 10**9)
-
-    # wired into _build_sparse: a domain product past the onset with a
-    # mocked tiny free-space probe fails fast, before any Spark job
-    monkeypatch.setattr(cand, "_free_scratch_bytes", lambda _s: 10**9)
-    big = _spec((1, 40_000_000), (1, 2), CONS_ALL[:1])
-    with pytest.raises(ScratchSpaceError):
-        build_candidates(series_tiny, big, 1, 40_000_000, "sparse")
-    # reference-sized domains are untouched by the mocked probe
-    small = _spec((1, 15), (0, 5), CONS_ALL[:1])
-    got = build_candidates(series_tiny, small, 1, 20, "sparse").collect()
-    assert len(got) > 0
+    rng = np.random.default_rng(3)
+    ys = np.cumsum(rng.normal(0, 10, 3000))
+    df = spark.createDataFrame(
+        [(i + 1, float(y)) for i, y in enumerate(ys)], "time_id long, y double"
+    )
+    cons = [
+        ConstraintSpec("avg_amp", (), None, None),
+        ConstraintSpec("sum_amp", (), None, None),
+        ConstraintSpec("max_amp_excess_left", (20,), None, None),
+    ]
+    narrow, wide = (
+        build_candidates(df, _spec((1, 2900), lx_dom, cons), 1, 3000)
+        for lx_dom in ((1, 64), (1, 65))
+    )
+    meas = [c for c in narrow.columns if c.startswith("m_")]
+    shared = narrow.alias("a").join(wide.alias("b"), ["x", "lx"])
+    differ = F.lit(False)
+    for c in meas:
+        differ = differ | (F.col(f"a.{c}") != F.col(f"b.{c}"))
+    counts = shared.agg(
+        F.count("*").alias("n"), F.sum(differ.cast("int")).alias("diff")
+    ).first()
+    assert counts["n"] == 2900 * 64
+    assert counts["diff"] == 0, f"{counts['diff']} of {counts['n']} differ"

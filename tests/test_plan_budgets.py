@@ -1327,10 +1327,11 @@ def _window_expressions(df):
 
 
 def test_window_strategy_plan_shape_is_fixed_in_offsets(spark):
-    """Strategy W plans one forward collect_list frame plus one max
-    frame per distinct left neighbourhood, whatever the offset count;
-    and a second query with the same measures reuses the generated
-    code instead of compiling a class per frame again."""
+    """Strategy W plans one forward collect_list frame, one max frame
+    per distinct left and right neighbourhood, and one running
+    aggregate per window function the measures read, whatever the
+    offset count; and a second query with the same measures reuses the
+    generated code instead of compiling a class per frame again."""
     from query_refinement_dsit_databases_2021_spark.operators.candidates import (
         build_candidates,
     )
@@ -1358,9 +1359,11 @@ def test_window_strategy_plan_shape_is_fixed_in_offsets(spark):
         )
         return build_candidates(series, spec, 1, n, "window")
 
-    # 1 forward frame + left neighbourhoods {5, 20}
-    assert _window_expressions(cands((1, 500), (1, 8))) == 3
-    assert _window_expressions(cands((1, 500), (1, 64))) == 3
+    # 1 forward frame + left neighbourhoods {5, 20} + right {12}
+    # + running sum (avg) and max (every excess measure)
+    assert _window_expressions(cands((1, 500), (1, 8))) == 6
+    assert _window_expressions(cands((1, 500), (1, 64))) == 6
+    assert _window_expressions(cands((1, 500), (1, 512))) == 6
 
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     cands((1, 500), (1, 32)).write.format("noop").mode("overwrite").save()

@@ -235,6 +235,7 @@ def test_none_domains_resolve_to_data_min_max(spark, ys, lo_hi):
 
 
 WINDOW_SERIES_N = 80
+WIDE_SERIES_N = 600
 NATIVE_MEASURES = [
     "avg_amp",
     "sum_amp",
@@ -246,10 +247,12 @@ NATIVE_MEASURES = [
 
 
 @st.composite
-def window_cases(draw):
+def window_cases(draw, n=WINDOW_SERIES_N, spans=(0, 8), max_width=None):
     """A strategy-W build: spec over every native measure kind, the
     segment the engine would fetch for it, and a block size between the
-    halo minimum and a little over it (so blocks really split)."""
+    halo minimum and a little over it (so blocks really split when the
+    series is long enough). ``spans`` bounds ``l1 - l0``; ``max_width``
+    bounds ``x1 - x0``."""
     from query_refinement_dsit_databases_2021_spark.operators.candidates import (
         _block_size,
     )
@@ -257,13 +260,13 @@ def window_cases(draw):
         REGISTRY,
     )
 
-    n = WINDOW_SERIES_N
     # x0 is the segment's first row (as the engine fetches it) and
     # x1 + l1 may run past the data: both edges clamp
     x0 = draw(st.integers(min_value=1, max_value=n - 10))
-    x1 = draw(st.integers(min_value=x0, max_value=n))
+    x_hi = n if max_width is None else min(n, x0 + max_width)
+    x1 = draw(st.integers(min_value=x0, max_value=x_hi))
     l0 = draw(st.integers(min_value=0, max_value=4))
-    l1 = l0 + draw(st.integers(min_value=0, max_value=8))
+    l1 = l0 + draw(st.integers(min_value=spans[0], max_value=spans[1]))
     kinds = draw(
         st.lists(st.sampled_from(NATIVE_MEASURES), min_size=1, max_size=6, unique=True)
     )
@@ -298,6 +301,28 @@ def window_cases(draw):
     case=window_cases(),
 )
 def test_window_candidates_match_brute_oracle(spark, ys, case):
+    _check_window_case(spark, ys, case)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    seed=st.integers(min_value=0, max_value=2**32 - 1),
+    case=window_cases(n=WIDE_SERIES_N, spans=(60, 508), max_width=12),
+)
+def test_window_candidates_match_brute_oracle_wide_domains(spark, seed, case):
+    """The same differential over offset domains of up to 512 values:
+    one plan shape serves every domain size."""
+    import numpy as np
+
+    ys = np.random.default_rng(seed).integers(-20, 21, WIDE_SERIES_N).tolist()
+    _check_window_case(spark, ys, case)
+
+
+def _check_window_case(spark, ys, case):
     from query_refinement_dsit_databases_2021_spark.operators.candidates import (
         build_candidates,
     )
