@@ -2,7 +2,9 @@
 
 ``entry(spark)`` smoke-runs the flagship CP refined query at sf0.001;
 ``queries()``/``oracle_sql()`` expose every implemented workload from
-SURVEY.md §2 for the sf0.01 DuckDB differential check.
+SURVEY.md §2 for the sf0.01 DuckDB differential check, in
+``workloads.gate_order`` order over the CORRECTNESS_r*.json ledger
+beside this file: never-checked names first, then the stalest.
 """
 
 from __future__ import annotations
@@ -13,11 +15,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
-from query_refinement_dsit_databases_2021_spark.workloads import workloads  # noqa: E402
+from query_refinement_dsit_databases_2021_spark.workloads import (  # noqa: E402
+    gate_order,
+    workloads,
+)
 
-_WORKLOADS = workloads()
+_REGISTRY = workloads()
+_WORKLOADS = {n: _REGISTRY[n] for n in gate_order(list(_REGISTRY), _HERE)}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -95,12 +95,24 @@ def build_candidates(
 
     if strategy == "auto":
         strategy = pick_strategy(spec)
-    if strategy == "window":
-        out = _build_window(segment, spec, t_start, t_end, partition_rows)
-    elif strategy == "pandas":
-        out = _build_pandas(segment, spec, t_start, t_end, partition_rows)
-    else:
+    if strategy not in ("window", "pandas"):
         raise QueryError(f"unknown strategy: {strategy}")
+
+    # both strategies evaluate each block's frames over the same
+    # halo-complete blocks, sized by the widest measure reach
+    measures = _dedup_constraints(spec)
+    reach_fwd, reach_bwd = 0, 0
+    for mdef, args in measures.values():
+        f, b = mdef.w_reach(l1, args)
+        reach_fwd, reach_bwd = max(reach_fwd, f), max(reach_bwd, b)
+    block = _block_size(partition_rows, reach_fwd, reach_bwd)
+    seg2, true_pid = _halo_partition(
+        segment, t_start, t_end, block, reach_fwd, reach_bwd
+    )
+    if strategy == "window":
+        out = _build_window(seg2, true_pid, spec, measures)
+    else:
+        out = _build_pandas(seg2, spec, measures, t_start, t_end, block)
     # Stabilize measures to 9 dp: strategy W sums left to right in
     # Spark, strategy P in NumPy, and the DuckDB oracle in its own
     # order, so a candidate whose true measure sits exactly on a
@@ -164,15 +176,13 @@ def _block_size(partition_rows: int | None, reach_fwd: int, reach_bwd: int) -> i
 # ---------------------------------------------------------------------------
 
 def _build_window(
-    segment: DataFrame,
+    seg2: DataFrame,
+    true_pid: "F.Column",
     spec: QuerySpec,
-    t_start: int,
-    t_end: int,
-    partition_rows: int | None,
+    measures: dict[str, tuple],
 ) -> DataFrame:
     x0, x1 = spec.x_domain
     l0, l1 = spec.lx_domain
-    measures = _dedup_constraints(spec)
     for mdef, _args in measures.values():
         if not mdef.native:
             raise QueryError(
@@ -180,16 +190,6 @@ def _build_window(
                 "build it with strategy 'pandas' (pick_strategy chooses "
                 "it for a query that uses the measure)"
             )
-
-    reach_fwd, reach_bwd = 0, 0
-    for mdef, args in measures.values():
-        f, b = mdef.w_reach(l1, args)
-        reach_fwd, reach_bwd = max(reach_fwd, f), max(reach_bwd, b)
-
-    block = _block_size(partition_rows, reach_fwd, reach_bwd)
-    seg2, true_pid = _halo_partition(
-        segment, t_start, t_end, block, reach_fwd, reach_bwd
-    )
 
     # measure expressions first: they record the aggregates and the
     # neighbourhood frames the build must compute
@@ -258,11 +258,12 @@ def _build_window(
 # ---------------------------------------------------------------------------
 
 def _build_pandas(
-    segment: DataFrame,
+    seg2: DataFrame,
     spec: QuerySpec,
+    measures: dict[str, tuple],
     t_start: int,
     t_end: int,
-    partition_rows: int | None,
+    block: int,
 ) -> DataFrame:
     """Evaluate measures through their ``py_kernel`` — the reference's
     own UDF contract ``f(series, x, lx, args) -> float``
@@ -280,18 +281,7 @@ def _build_pandas(
 
     x0, x1 = spec.x_domain
     l0, l1 = spec.lx_domain
-    measures = _dedup_constraints(spec)
     meas_items = list(measures.items())  # [(col_name, (mdef, args))]
-
-    reach_fwd, reach_bwd = 0, 0
-    for mdef, args in measures.values():
-        f, b = mdef.w_reach(l1, args)
-        reach_fwd, reach_bwd = max(reach_fwd, f), max(reach_bwd, b)
-
-    block = _block_size(partition_rows, reach_fwd, reach_bwd)
-    seg2, _true_pid = _halo_partition(
-        segment, t_start, t_end, block, reach_fwd, reach_bwd
-    )
 
     schema = "x long, lx int, " + ", ".join(
         f"{name} double" for name in measures

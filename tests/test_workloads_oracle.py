@@ -166,100 +166,43 @@ def test_workload_matches_duckdb(spark, duck, name):
     assert _approx_eq(_rowset(srows), _rowset(orows)), name
 
 
-def test_gate_rotation_ledger_closes_registry():
-    """The r09/r10 rotation math (COVERAGE.md "Gate rotation ledger"):
-    the ACTIVE r09 window is exactly 50 names (4 never-gated round-7
-    leads + 46 green anchors whose last external row is r01/r02,
-    promoted verbatim from the window committed at the r08 freeze), the
-    committed r10 window is exactly 50 (5 never-gated round-8 leads +
-    45 green anchors chosen by the stalest-external-row rule over the
-    r01-r08 ledger excluding the active window), they are disjoint, and
-    window-r09 ∪ window-r10 ∪ externally-gated covers the ENTIRE
-    registry minus the r11 queue — i.e. after r10 every workload
-    registered by the r09 freeze holds an external row."""
+def test_gate_order_rule(tmp_path):
+    """gate_order (COVERAGE.md "Gate rotation ledger"): names with no
+    ledger row lead in registry order, the rest follow by (last round
+    that checked them, name); no ledger leaves the order unchanged."""
     import json
     import pathlib
 
     from query_refinement_dsit_databases_2021_spark.workloads import (
-        DRIVER_PRIORITY,
-        DRIVER_PRIORITY_R10,
-        DRIVER_QUEUE_R11,
+        GATE_WINDOW,
+        gate_order,
     )
+
+    names = ["e", "d", "c", "b", "a", "z", "y"]
+    assert gate_order(names, str(tmp_path)) == names
+    ledger = {1: ["c", "d", "gone"], 2: ["b", "a"], 3: ["c"]}
+    for rnd, rows in ledger.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {"hash_match": True} for n in rows})
+        )
+    # e, z, y were never checked; d last r1; b and a tie at r2 and sort
+    # by name; c is listed in r1 and r3, so it sorts as r3
+    assert gate_order(names, str(tmp_path)) == ["e", "z", "y", "d", "a", "b", "c"]
 
     root = pathlib.Path(__file__).resolve().parent.parent
-    gated: set[str] = set()
-    last: dict[str, int] = {}
-    for r in (1, 2, 3, 4, 5, 6, 7, 8):
-        p = root / f"CORRECTNESS_r0{r}.json"
-        if p.exists():
-            for k in json.loads(p.read_text()):
-                gated.add(k)
-                last[k] = r
-    if not gated:
-        pytest.skip("no external CORRECTNESS records present")
+    checked: set[str] = set()
+    for path in root.glob("CORRECTNESS_r*.json"):
+        checked.update(json.loads(path.read_text()))
+    if not checked:
+        pytest.skip("no CORRECTNESS ledger present")
+    # the entry point serves the derived order: the never-checked names
+    # lead the window the external gate reads
+    import __spark_entry__
 
-    assert len(DRIVER_PRIORITY) == 50
-    assert len(DRIVER_PRIORITY_R10) == 50
-    assert len(set(DRIVER_PRIORITY)) == 50
-    assert len(set(DRIVER_PRIORITY_R10)) == 50
-    assert not set(DRIVER_PRIORITY) & set(DRIVER_PRIORITY_R10)
-    missing = [
-        n
-        for n in (*DRIVER_PRIORITY, *DRIVER_PRIORITY_R10)
-        if n not in WORKLOADS
-    ]
-    assert not missing, missing
-    # the 4 round-7 additions lead the active r09 window and must
-    # never have held an external row; the other 46 are green anchors
-    # picked at the r08 freeze by the stalest rule (last gated r01/r02)
-    r09_leads = set(DRIVER_PRIORITY[:4])
-    anchors_r09 = set(DRIVER_PRIORITY[4:])
-    assert not r09_leads & gated, (
-        f"r09 leads waste slots on gated names: {r09_leads & gated}"
-    )
-    assert anchors_r09 <= gated, (
-        f"r09 anchors must already be gated: {anchors_r09 - gated}"
-    )
-    stale_r09 = {n for n in anchors_r09 if last[n] > 2}
-    assert not stale_r09, (
-        f"r09 anchors must be the stalest rows (last gated r01/r02): "
-        f"{stale_r09}"
-    )
-    # the 5 round-8 additions lead the committed r10 window; the other
-    # 45 are green anchors picked by the stalest-external-row rule over
-    # names NOT already in the active window — that consumes every
-    # remaining r02/r03-last row, so no anchor may be newer than r04
-    # and every r02/r03-last name must sit in one window or the other
-    r10_leads = set(DRIVER_PRIORITY_R10[:5])
-    anchors_r10 = set(DRIVER_PRIORITY_R10) - r10_leads
-    assert not r10_leads & gated, (
-        f"r10 leads waste slots on gated names: {r10_leads & gated}"
-    )
-    assert anchors_r10 <= gated, (
-        f"r10 anchors must already be gated: {anchors_r10 - gated}"
-    )
-    fresh = {n for n in anchors_r10 if last[n] > 4}
-    assert not fresh, (
-        f"r10 anchors must be the stalest rows (last gated <= r04): {fresh}"
-    )
-    skipped_stale = {
-        n
-        for n in gated
-        if last[n] <= 3
-        and n in WORKLOADS
-        and n not in set(DRIVER_PRIORITY) | anchors_r10
-    }
-    assert not skipped_stale, (
-        f"stalest-first violated; r02/r03-last rows left out: {skipped_stale}"
-    )
-    uncovered = (
-        set(WORKLOADS) - gated - set(DRIVER_PRIORITY) - set(DRIVER_PRIORITY_R10)
-    )
-    # post-r10-freeze additions must be queued for r11 — exactly them
-    assert uncovered == set(DRIVER_QUEUE_R11), (
-        f"not in any window or queue: {uncovered - set(DRIVER_QUEUE_R11)}; "
-        f"queued but covered: {set(DRIVER_QUEUE_R11) - uncovered}"
-    )
+    fresh = [n for n in WORKLOADS if n not in checked]
+    window = list(__spark_entry__.queries())[:GATE_WINDOW]
+    assert len(fresh) <= GATE_WINDOW, fresh
+    assert window[: len(fresh)] == fresh
 
 
 def test_coverage_md_counts_match_registry():
@@ -307,16 +250,19 @@ def test_gate_window_schemas_are_scalar_only(spark):
     # window must therefore emit scalars only — this is the structural
     # form of the per-rotation hand audit (BASELINE.md gate-hardening
     # notes). Schema construction is lazy: nothing executes here.
+    import pathlib
+
     from query_refinement_dsit_databases_2021_spark.workloads import (
-        DRIVER_PRIORITY,
-        DRIVER_PRIORITY_R10,
+        GATE_WINDOW,
+        gate_order,
     )
 
+    root = pathlib.Path(__file__).resolve().parent.parent
     banned = ("array", "map", "struct", "binary", "decimal", "timestamp")
     offenders = []
-    # audit the committed next window too, so the r10 rotation cannot
-    # land a non-scalar schema surprise
-    for name in (*DRIVER_PRIORITY, *DRIVER_PRIORITY_R10):
+    # audit the next window too, so the following rotation cannot land a
+    # non-scalar schema surprise
+    for name in gate_order(list(WORKLOADS), str(root))[: 2 * GATE_WINDOW]:
         df = WORKLOADS[name].fn(spark, SF_DIR)
         for f in df.schema.fields:
             t = f.dataType.simpleString()

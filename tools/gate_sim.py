@@ -1,5 +1,6 @@
 """Local simulation of the external driver's correctness gate, strict
-form: for every DRIVER_PRIORITY workload, run the Spark query AND the
+form: for every workload in the gate window (the first GATE_WINDOW names
+of ``workloads.gate_order``), run the Spark query AND the
 DuckDB oracle at the gate SF and require
 
 - identical row counts,
@@ -24,7 +25,8 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _kind(dtype) -> str:
@@ -68,8 +70,9 @@ def main() -> int:
 
     from query_refinement_dsit_databases_2021_spark import get_spark
     from query_refinement_dsit_databases_2021_spark.workloads import (
-        DRIVER_PRIORITY,
+        GATE_WINDOW,
         TABLES,
+        gate_order,
         workloads,
     )
 
@@ -84,7 +87,7 @@ def main() -> int:
     if args.names:
         names = [n.strip() for n in args.names.split(",") if n.strip()]
     else:
-        names = list(ws) if args.all else [n for n in DRIVER_PRIORITY]
+        names = list(ws) if args.all else gate_order(list(ws), ROOT)[:GATE_WINDOW]
     failures = []
     for i, name in enumerate(names):
         w = ws[name]

@@ -169,7 +169,7 @@ NOTES = {
         "query/idf tables; the filter-before-shuffle postings passes "
         "and the candidate broadcast semi-join run inside the "
         "checkpoint jobs (the pre-r09 composed plan held 318 "
-        "Exchanges — see plans/r09/pipe_search_prf_before.txt)."
+        "Exchanges)."
     ),
     "pipe_ann_hard_negatives": (
         "Broadcast queries × ONE corpus scan; the label inequality "
