@@ -1097,7 +1097,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     max_posting: int | None = None,
-    cap_strategy: str = "window",
     shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram (shingle-set) Jaccard similarity for all pairs
@@ -1112,38 +1111,24 @@ def ngram_jaccard_pairs(
     corpus scale (SCALE.md). Scores then UNDER-estimate (intersections
     lose capped shingles while union sizes keep them), so capped runs
     trade exactness for a bounded shuffle — the MinHash path is the
-    calibrated approximation.
-
-    ``cap_strategy`` picks how the document frequency is computed:
-    ``"window"`` (default) counts and filters in the SAME shuffle that
-    the self-join needs (one exchange on the shingle, ~2x faster,
-    measured at sf0.1); ``"join"`` uses a map-side-combinable
-    groupBy + equi-join — one extra shuffle, but AQE can split a
-    pathologically skewed stop-shingle's partitions there, so prefer
-    it when a mega-shingle would straggle the window task."""
-    if cap_strategy not in ("window", "join"):
-        raise ValueError("cap_strategy must be 'window' or 'join'")
+    calibrated approximation. The document frequency is counted and
+    filtered in the SAME shuffle that the self-join needs (one
+    exchange on the shingle, ~2x faster than a groupBy + equi-join,
+    measured at sf0.1)."""
     # shingle_rows: precomputed (persisted) shingle frame, so an
     # adaptive caller pays the tokenize+distinct stage ONCE for
-    # advisor + join (mirrors minhash_lsh_pairs' sig_wide seam)
-    sh = (
-        shingle_rows if shingle_rows is not None else shingles(docs).persist()
-    )
-    if max_posting is not None and cap_strategy == "window":
+    # advisor + join (mirrors minhash_lsh_pairs' sig_wide seam); the
+    # caller owns its lifetime, while a frame persisted here is tied
+    # to the result
+    own = shingle_rows is None
+    sh = shingles(docs).persist() if own else shingle_rows
+    if max_posting is not None:
         w = Window.partitionBy("s")
         joined_sh = (
             sh.withColumn("_df", F.count("*").over(w))
             .where(F.col("_df") <= max_posting)
             .drop("_df")
         )
-    elif max_posting is not None:
-        rare = (
-            sh.groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_posting)
-            .select("s")
-        )
-        joined_sh = sh.join(rare, "s").persist()
     else:
         joined_sh = sh
 
@@ -1158,12 +1143,13 @@ def ngram_jaccard_pairs(
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
+    out = (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
         .where(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
+    return _release_with(out, sh) if own else out
 
 
 # posting_advisor decision constants (r07 verdict item 5 — unify the
@@ -1296,10 +1282,7 @@ def ngram_jaccard_pairs_advised(
     adv = posting_advisor(docs, shingle_rows=sh).collect()[0]
     cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
     return _release_with(
-        ngram_jaccard_pairs(
-            docs, threshold, max_posting=cap, cap_strategy="window",
-            shingle_rows=sh,
-        ),
+        ngram_jaccard_pairs(docs, threshold, max_posting=cap, shingle_rows=sh),
         sh,
     )
 

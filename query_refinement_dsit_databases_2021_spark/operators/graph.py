@@ -107,11 +107,7 @@ TELEPORT = 150_000_000  # floor(0.15 * INIT_MASS)
 PR_ITERATIONS = 5
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = PR_ITERATIONS,
-    broadcast_send: bool | None = None,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
     """Fixed-point PageRank over a directed edge list ``(src, dst)``.
 
     Every node (source or destination) starts with ``INIT_MASS`` rank
@@ -135,25 +131,10 @@ def pagerank(
     belongs only in convergence loops of unbounded depth (kcore,
     components, label propagation). Returns ``(node, rank)``.
 
-    Send-frame strategy (r07, measured on the 10M→100M-edge power-law
-    curve, `graph_scale.csv`): while the node frame is broadcastable,
-    `F.broadcast(send)` keeps the EDGE table out of every
-    per-iteration shuffle — at 100M edges / 10M nodes that measured
-    309 s → 187 s (1.65×, quiet box; ties at ≤30M edges where the
-    shuffle is cheap anyway). ``broadcast_send=None`` probes once
-    (`nodes.count()`) and broadcasts while ``materialize.broadcast_ok``
-    holds (the send frame within ``BROADCAST_MAX_BYTES``, 160 MB —
-    comfortably inside executor memory), plain
-    equi-join beyond it (a billion-node graph must shuffle — a blind
-    broadcast would OOM the executors). The probe is itself a job (it
-    re-runs the edge derivation), and the r07 interleaved A/B caught
-    it costing +1.4 s on the dim-sized sf0.1 trade graph, then caught
-    broadcast itself costing ~10% there (five per-iteration broadcast
-    builds vs an already-trivial shuffle) — so callers that KNOW their
-    scale pass ``broadcast_send`` explicitly (the workload passes
-    False: dim-sized graph, shuffle already trivial; large-graph
-    callers pass True for the measured 1.65×) and only genuinely
-    unknown inputs pay the probe.
+    Send frame: broadcast while the probed node frame fits
+    ``materialize.broadcast_ok``'s 160 MB bound, which keeps the EDGE
+    table out of every per-iteration shuffle — 1.65× at 100M edges /
+    10M nodes (`graph_scale.csv`).
     Loop-INVARIANT materialization (r09 optimization, guide §2.4):
     ``edges``, ``nodes`` and ``deg`` are referenced by every iteration,
     so leaving them lazy embeds the whole upstream edge derivation (for
@@ -173,14 +154,11 @@ def pagerank(
     only A/B (a forced 20M-edge point) read 31.6 s vs 33.5 s and it
     ran 1.3-1.45x slower at sf0.1.
     """
-    return _rank_fixed_point(edges, iterations, broadcast_send)
+    return _rank_fixed_point(edges, iterations)
 
 
 def _rank_fixed_point(
-    edges: DataFrame,
-    iterations: int,
-    broadcast_send: bool | None,
-    seeds: DataFrame | None = None,
+    edges: DataFrame, iterations: int, seeds: DataFrame | None = None
 ) -> DataFrame:
     """The integer fixed-point loop of :func:`pagerank` (``seeds`` is
     None: every node starts with ``INIT_MASS`` and receives
@@ -207,11 +185,7 @@ def _rank_fixed_point(
         )
         init = F.when(F.col("_seed"), F.lit(INIT_MASS)).otherwise(F.lit(0))
         teleport = F.when(F.col("_seed"), F.lit(TELEPORT)).otherwise(F.lit(0))
-    bcast = (
-        broadcast_send
-        if broadcast_send is not None
-        else broadcast_ok(ndeg.count(), ndeg)
-    )
+    bcast = broadcast_ok(ndeg.count(), ndeg)
     ranks = ndeg.select("node", init.cast("long").alias("rank"), "outdeg")
     for _ in range(iterations):
         send = ranks.where(F.col("outdeg").isNotNull()).select(
@@ -242,11 +216,7 @@ HITS_SCALE = 1_000_000
 HITS_ITERATIONS = 4
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = HITS_ITERATIONS,
-    broadcast_scores: bool | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     list ``(src, dst)`` — the authority-transfer companion to
     :func:`pagerank`, and the same Spark iteration shape: a FIXED
@@ -276,16 +246,8 @@ def hits(
     localCheckpoint as a net LOSS — that guidance is for linear
     chains; dual-consumer rescale loops need the truncation.)
 
-    Score-frame strategy (r07, same question as :func:`pagerank`'s
-    send frame, same measurement discipline): each half-step joins the
-    edge table against a node-sized score frame; broadcasting that
-    frame keeps the edges out of the join shuffle — a same-session A/B
-    at 100M edges / 10M nodes measured **485.7 s vs 1036.8 s (2.13×)**
-    with identical checksums. ``broadcast_scores``: True/False when
-    the caller knows the node scale (the workload passes False — its
-    trade graph is dim-sized, where pagerank measured broadcast builds
-    as a ~10% loss); None probes `nodes.count()` once and broadcasts
-    while ``materialize.broadcast_ok`` holds (160 MB byte bound).
+    Score frame: broadcast by the same probe and bound as
+    :func:`pagerank`'s send frame — 2.13× at 100M edges / 10M nodes.
 
     Returns ``(node, authority, hub)`` for every node.
     """
@@ -295,11 +257,7 @@ def hits(
     # (a fact-table join for the workload) 8+ times across 4 iterations
     edges = materialize(edges.select("src", "dst").distinct())
     nodes = _nodes(edges).localCheckpoint()
-    bcast = (
-        broadcast_scores
-        if broadcast_scores is not None
-        else broadcast_ok(nodes.count(), nodes)
-    )
+    bcast = broadcast_ok(nodes.count(), nodes)
     hint = F.broadcast if bcast else (lambda df: df)
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("h"))
     auth = None
@@ -411,12 +369,18 @@ def harmonic_centrality_sampled(
     )
 
 
+# dense-kernel gate: graph_triangles (the 1,000-node sf0.1 co-supplier
+# graph) runs the kernel at a 0.011 min-ratio against pre-r09 f922b4b
+# (BENCH_AB_pr10_graph_strategies.json)
 TRI_DENSE_MAX_NODES = 4096
 TRI_DENSE_MAX_EDGES = 4_000_000
 # below this exact wedge mass (Σ_n d(n)·(d(n)−1)/2 over the canonical
 # graph — the tight bound on the wedge join's row count) the plain
 # lazy two-join enumeration beats the checkpointed intersection
-# machinery (see the small-sparse note in triangle_count's docstring)
+# machinery (see the small-sparse note in triangle_count's docstring);
+# graph_clustering_coeff (15k-node co-purchase graph, past the node
+# gate) runs it at a 0.751 min-ratio against f922b4b (same file). No
+# sf0.1 workload reaches the intersection path, the 100 TB form.
 TRI_WEDGE_MAX_MASS = 10_000_000
 
 
@@ -704,13 +668,7 @@ def _wl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from query_refinement_dsit_databases_2021_spark.workloads import register_views
 
     register_views(spark, sf_dir)
-    # broadcast_send=False, no probe: the co-trading graph is
-    # dim-sized by construction (suppliers + customers) — here the
-    # per-iteration shuffle is already trivial and the five broadcast
-    # builds measurably cost ~10% (r07 A/B, 5.50 vs 4.96 s min), while
-    # the probe job alone cost +1.4 s. Broadcast pays only where the
-    # edge-table shuffle dominates (~100M edges: 1.65×, BASELINE.md).
-    ranks = pagerank(_trade_edges(spark), PR_ITERATIONS, broadcast_send=False)
+    ranks = pagerank(_trade_edges(spark), PR_ITERATIONS)
     return ranks.orderBy(F.col("rank").desc(), F.col("node")).limit(20)
 
 
@@ -750,9 +708,7 @@ def _wl_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from query_refinement_dsit_databases_2021_spark.workloads import register_views
 
     register_views(spark, sf_dir)
-    # broadcast_scores=False, no probe: dim-sized trade graph (same
-    # measured reasoning as _wl_pagerank's broadcast_send=False)
-    scores = hits(_trade_edges(spark), HITS_ITERATIONS, broadcast_scores=False)
+    scores = hits(_trade_edges(spark), HITS_ITERATIONS)
     return scores.orderBy(
         F.col("authority").desc(), F.col("hub").desc(), F.col("node")
     ).limit(20)
@@ -1142,7 +1098,7 @@ def personalized_pagerank(
     (tiny) seed set into the rank projection. Returns ``(node,
     rank)``.
     """
-    return _rank_fixed_point(edges, iterations, False, seeds)
+    return _rank_fixed_point(edges, iterations, seeds)
 
 
 PPR_N_SEEDS = 2
@@ -1638,11 +1594,7 @@ ORACLE_KCORE = _kcore_oracle()
 LPA_ROUNDS = 3
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = LPA_ROUNDS,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan
     et al. 2007, determinized): labels start as node ids; each round
     every node adopts the most frequent label among its neighbors
@@ -1658,15 +1610,10 @@ def label_propagation(
     ``localCheckpoint`` truncates the loop lineage (same pattern as
     pagerank/kcore). All counts integer; tie-break total.
 
-    ``broadcast_labels`` (r07, the pagerank/HITS send-frame question
-    applied here): broadcasting the node-sized label frame into the
-    adjacency join measured 57.0 s vs 72.0 s (1.26×) at 30M edges /
-    3M nodes, identical labels — smaller than HITS' 2.13× because the
-    groupBy(n, label) shuffle after the join still runs either way.
-    Same contract: True/False when the caller knows the node scale
-    (the workload passes False — dim-sized co-purchase graph), None
-    probes once and broadcasts while ``materialize.broadcast_ok``
-    holds (160 MB byte bound).
+    Label frame: broadcast into the adjacency join by the same probe
+    and bound as :func:`pagerank`'s send frame — 1.26× at 30M edges /
+    3M nodes (the groupBy(n, label) shuffle after the join runs
+    either way).
 
     Returns ``(node, label)`` after ``rounds`` rounds.
     """
@@ -1676,11 +1623,7 @@ def label_propagation(
     labels = adj.select(F.col("n").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    bcast = (
-        broadcast_labels
-        if broadcast_labels is not None
-        else broadcast_ok(labels.count(), labels)
-    )
+    bcast = broadcast_ok(labels.count(), labels)
     hint = F.broadcast if bcast else (lambda df: df)
     w = Window.partitionBy("n").orderBy(F.desc("cnt"), F.asc("label"))
     for _ in range(rounds):
@@ -1707,9 +1650,7 @@ def _wl_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Communities in the bulk co-purchase graph (same sparsified
     graph as link prediction / k-core)."""
     edges = _copurchase_edges(spark, sf_dir)
-    # broadcast_labels=False, no probe: dim-sized co-purchase graph
-    # (same measured reasoning as _wl_pagerank)
-    return label_propagation(edges, broadcast_labels=False).orderBy("node")
+    return label_propagation(edges).orderBy("node")
 
 
 def _lpa_oracle(rounds: int = LPA_ROUNDS) -> str:
@@ -1822,7 +1763,7 @@ def _wl_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph — the number that says label propagation found
     structure, certified cross-engine."""
     edges = _copurchase_edges(spark, sf_dir)
-    return modularity(edges, label_propagation(edges, broadcast_labels=False))
+    return modularity(edges, label_propagation(edges))
 
 
 def _modularity_oracle(rounds: int = LPA_ROUNDS) -> str:

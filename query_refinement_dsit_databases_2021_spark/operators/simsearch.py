@@ -285,30 +285,27 @@ def _centroid_literals(emb: DataFrame, centroid_ids) -> list[tuple[int, list[flo
 UNROLL_MAX_CELLS = 4096
 
 
-def _nearest_cells(
-    base: DataFrame, cents, n_cells: int, *, strategy: str = "auto"
-) -> DataFrame:
+def _nearest_cells(base: DataFrame, cents, n_cells: int) -> DataFrame:
     """(vec_id, cell, rnk) for the n_cells nearest centroids of every
     vector in `base`.
 
-    Two bit-identical strategies (parity pinned by a unit test):
+    Two bit-identical forms, picked by the centroid count against
+    UNROLL_MAX_CELLS (parity pinned by a unit test):
 
-    - ``unroll`` (default up to UNROLL_MAX_CELLS centroids): pure
+    - unroll (up to UNROLL_MAX_CELLS centroids): pure
       column arithmetic per row — the centroid loop is unrolled into
       the projection; no shuffle, no join — plus one explode and a
       per-vector ranking window.
-    - ``join`` (past ~4k cells, where an unrolled projection stops
+    - join (past ~4k cells, where an unrolled projection stops
       being codegen-able): centroids as a broadcast dim table, one
       BroadcastNestedLoopJoin fan-out, the same rounded-cosine /
       cell-asc ranking window. Still zero corpus-side shuffle.
 
     Both compute the identical left-fold dot product over the identical
     double values and rank on round(cos, 6) with a cell tie-break, so
-    the strategies agree bit-for-bit.
+    the forms agree bit-for-bit.
     """
-    if strategy == "auto":
-        strategy = "unroll" if len(cents) <= UNROLL_MAX_CELLS else "join"
-    if strategy == "join":
+    if len(cents) > UNROLL_MAX_CELLS:
         cdf = base.sparkSession.createDataFrame(
             [(int(c), [float(x) for x in cv], float(cn)) for c, cv, cn in cents],
             "cell long, cv array<double>, cn double",

@@ -784,35 +784,30 @@ TOKENIZE_JOIN_THRESHOLD = 4096
 def tokenize_ids(
     docs: DataFrame,
     vocab_size: int = TOKENIZE_VOCAB_SIZE,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Tokenize against a corpus-trained vocabulary: ids are the
     frequency ranks (1 = most frequent; ties broken by term ascending),
     out-of-vocabulary tokens map to 0 — the id-ization step between
     text curation and sequence packing.
 
-    Two encode strategies, same output:
+    Two encode forms, same output, picked by ``vocab_size`` against
+    :data:`TOKENIZE_JOIN_THRESHOLD`:
 
-    - ``literal`` (small vocabs): the vocabulary is a bounded artifact
+    - literal (small vocabs): the vocabulary is a bounded artifact
       (like IVF centroids), collected once and inlined as a map
       literal; the encode is a per-row ``transform`` — order-preserving
       by construction, no explode/re-sort round trip, no shuffle.
-    - ``join`` (real 32k–100k vocabularies, where the map literal
+    - join (real 32k–100k vocabularies, where the map literal
       bloats every task's expression tree): posexplode the tokens,
       broadcast-join the vocab table on term, re-assemble per doc with
       ``array_sort(collect_list(struct(pos, id)))`` — one doc_id
       exchange, vocab never leaves the JVM, token order restored by
       the (pos, id) struct sort.
 
-    ``auto`` picks by :data:`TOKENIZE_JOIN_THRESHOLD`. At 100 TB:
-    train once, persist the vocab table, encode any corpus map-only
-    (literal) or with one broadcast + one doc-key exchange (join).
+    At 100 TB: train once, persist the vocab table, encode any corpus
+    map-only (literal) or with one broadcast + one doc-key exchange
+    (join).
     """
-    if strategy not in ("auto", "literal", "join"):
-        raise ValueError(f"unknown tokenize strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = "join" if vocab_size > TOKENIZE_JOIN_THRESHOLD else "literal"
-
     # tf-only training: ONE map-combinable groupBy count — token_stats'
     # document frequency would force a needless two-phase distinct agg
     tf = (
@@ -821,7 +816,7 @@ def tokenize_ids(
         .agg(F.count("*").alias("tf"))
     )
 
-    if strategy == "join":
+    if vocab_size > TOKENIZE_JOIN_THRESHOLD:
         # rank inside the bounded top-vocab_size slice: the window is
         # single-partition but only ever sees <= vocab_size rows (a
         # vocabulary artifact, not corpus-scale data)

@@ -31,19 +31,17 @@ def refine_on_stream(
     series_path: str,
     query_text: str,
     results_path: str,
-    engine_factory: Callable | None = None,
-    series_name: str = "stream_series",
 ) -> "Callable[[DataFrame, int], None]":
     """Build the ``foreachBatch`` function for continuous refinement.
 
     ``events``: streaming DataFrame with ``(time_id, y)`` rows (dense,
     in arrival order). Each micro-batch is appended to the parquet
     series at ``series_path``; the CP ``query_text`` (reference
-    grammar) is then re-run over the whole accumulated series, and the
-    refined result set — stamped with ``batch_id`` — is appended to
-    ``results_path``. Query domains with ``None`` bounds re-resolve
-    against the grown series every trigger, so an open upper domain
-    follows the stream head.
+    grammar, reading the table ``stream_series``) is then re-run over
+    the whole accumulated series, and the refined result set — stamped
+    with ``batch_id`` — is appended to ``results_path``. Query domains
+    with ``None`` bounds re-resolve against the grown series every
+    trigger, so an open upper domain follows the stream head.
 
     Returns the batch function; attach with::
 
@@ -54,8 +52,8 @@ def refine_on_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df.select("time_id", "y").write.mode("append").parquet(series_path)
-        engine = engine_factory(spark) if engine_factory else Engine(spark)
-        engine.register_parquet(series_name, series_path)
+        engine = Engine(spark)
+        engine.register_parquet("stream_series", series_path)
         try:
             result = engine.execute(query_text)
             (
@@ -74,13 +72,10 @@ def run_refine_stream(
     series_path: str,
     query_text: str,
     results_path: str,
-    engine_factory: Callable | None = None,
 ):
     """Drive the stream until all available input is processed (test/
     dev harness; production attaches a real trigger/checkpoint)."""
-    fn = refine_on_stream(
-        events, series_path, query_text, results_path, engine_factory
-    )
+    fn = refine_on_stream(events, series_path, query_text, results_path)
     q = events.writeStream.foreachBatch(fn).outputMode("update").start()
     q.processAllAvailable()
     q.stop()

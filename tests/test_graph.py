@@ -662,27 +662,54 @@ def test_ktruss_order_invariant_under_repartition(spark):
     assert one == two
 
 
-def test_pagerank_probe_past_bound_output_invariant(
+def test_loop_broadcast_probe_output_invariant(
     spark, monkeypatch, materialize_mode
 ):
-    """Past the broadcast byte bound the probe path
-    (``broadcast_send=None``) runs the plain equi-join loop: forced via
-    the bound, it must be bit-identical to both explicit loops under
-    every ``spark.qr.materialize`` mode."""
+    """pagerank, hits and label_propagation each probe their node-sized
+    loop frame once and broadcast it while ``broadcast_ok`` holds. On a
+    small graph the real rule adds one broadcast hint per loop join;
+    with the rule forced False the loop joins carry none. Both paths
+    are bit-identical under every ``spark.qr.materialize`` mode.
+
+    The loops truncate lineage with ``localCheckpoint``, so the hints
+    are counted over the analyzed plan of every frame the operator
+    checkpoints plus the frame it returns (hits also broadcasts its
+    one-row rescale max either way, hence the difference)."""
     from query_refinement_dsit_databases_2021_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(i % 23, (i * 7) % 31) for i in range(300)], "src long, dst long"
     )
-    plain = sorted(map(tuple, pagerank(edges, 3, broadcast_send=False).collect()))
-    bcast = sorted(map(tuple, pagerank(edges, 3, broadcast_send=True).collect()))
-    monkeypatch.setattr(graph, "broadcast_ok", lambda n, df: False)
-    probed_df = pagerank(edges, 3, broadcast_send=None)
-    # past the bound the loop carries no broadcast hint on its send frame
-    plan = probed_df._jdf.queryExecution().analyzed().toString()
-    assert "strategy=broadcast" not in plan
-    probed = sorted(map(tuple, probed_df.collect()))
-    assert plain == bcast == probed
+    frame_cls = type(edges)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def run(op):
+        plans = []
+
+        def spy(df, *args, **kwargs):
+            plans.append(df._jdf.queryExecution().analyzed().toString())
+            return real_checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+        out = op(edges)
+        plans.append(out._jdf.queryExecution().analyzed().toString())
+        monkeypatch.setattr(frame_cls, "localCheckpoint", real_checkpoint)
+        hints = sum(p.count("strategy=broadcast") for p in plans)
+        return hints, sorted(map(tuple, out.collect()))
+
+    # (operator, loop joins it runs against its node-sized frame)
+    cases = [
+        (lambda e: graph.pagerank(e, 3), 3),
+        (lambda e: graph.hits(e, 2), 4),
+        (lambda e: graph.label_propagation(e, 2), 2),
+    ]
+    for op, loop_joins in cases:
+        real_hints, real_rows = run(op)
+        monkeypatch.setattr(graph, "broadcast_ok", lambda n, df: False)
+        forced_hints, forced_rows = run(op)
+        monkeypatch.undo()
+        assert real_hints - forced_hints == loop_joins
+        assert real_rows == forced_rows and real_rows
 
 
 def test_bfs_broadcast_fallback_output_invariant(spark, monkeypatch):

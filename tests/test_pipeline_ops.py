@@ -46,24 +46,19 @@ def test_jaccard_posting_cap_bounds_join(docs, spark):
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(df, threshold=0.0).collect()
     }
-    by_strategy = {}
-    for strat in ("window", "join"):
-        capped = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in dedup.ngram_jaccard_pairs(
-                df, threshold=0.0, max_posting=2, cap_strategy=strat
-            ).collect()
-        }
-        by_strategy[strat] = capped
-        assert set(capped) <= set(full)
-        for pair, j in capped.items():
-            assert j <= full[pair] + 1e-9
-        # the genuine near-dup pair survives the cap (its distinctive
-        # shingles are rare), while stop-shingle-only pairs drop out
-        assert (1, 10) in capped
-        assert len(capped) < len(full)
-    # both cap strategies compute the same document frequencies
-    assert by_strategy["window"] == by_strategy["join"]
+    capped = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(
+            df, threshold=0.0, max_posting=2
+        ).collect()
+    }
+    assert set(capped) <= set(full)
+    for pair, j in capped.items():
+        assert j <= full[pair] + 1e-9
+    # the genuine near-dup pair survives the cap (its distinctive
+    # shingles are rare), while stop-shingle-only pairs drop out
+    assert (1, 10) in capped
+    assert len(capped) < len(full)
 
 
 def test_shingles_short_doc_empty(docs):
@@ -322,7 +317,9 @@ def test_advised_paths_release_caches_on_gc(spark):
     materializes and drops the result, no net persisted RDDs remain
     (DataFrame.persist registers in the JVM CacheManager, which GC
     never clears, so without the tie a long-lived session accumulates
-    caches until LRU eviction). Data is unique to this test: the JVM
+    caches until LRU eviction). The plain ngram_jaccard_pairs, called
+    without ``shingle_rows``, persists its own shingle frame and is
+    held to the same rule. Data is unique to this test: the JVM
     CacheManager keys entries by logical plan, so reusing the shared
     fixture would alias cache entries persisted (untied) by other
     tests and make the count deltas order-dependent."""
@@ -350,6 +347,7 @@ def test_advised_paths_release_caches_on_gc(spark):
     # GC'd at any gc.collect() in this process, which made count-delta
     # assertions order-dependent (flaked in the full-suite run).
     for fn in (
+        dedup.ngram_jaccard_pairs,
         dedup.minhash_lsh_pairs_advised,
         dedup.ngram_jaccard_pairs_advised,
         dedup.ngram_containment_pairs_advised,
@@ -747,18 +745,20 @@ def test_tokenize_ids_order_rank_and_oov(spark):
     assert got == {1: [2, 1, 1, 0], 2: [1, 2, 2, 1]}
 
 
-def test_tokenize_ids_join_strategy_matches_literal(spark):
+def test_tokenize_ids_join_strategy_matches_literal(spark, monkeypatch):
     """The broadcast-join encode (the 32k–100k vocab path where the
     create_map literal would bloat the plan) must reproduce the literal
-    path exactly, including OOV->0 and empty-token docs."""
+    path exactly, including OOV->0 and empty-token docs; the join side
+    is forced by lowering the vocab-size gate."""
     df = spark.createDataFrame(
         [(1, "a b b c d e"), (2, "b a a b"), (3, "zz yy"), (4, "")],
         "doc_id long, text string",
     )
     lit = {r["doc_id"]: r["ids"] for r in
-           textops.tokenize_ids(df, vocab_size=3, strategy="literal").collect()}
+           textops.tokenize_ids(df, vocab_size=3).collect()}
+    monkeypatch.setattr(textops, "TOKENIZE_JOIN_THRESHOLD", 2)
     join = {r["doc_id"]: r["ids"] for r in
-            textops.tokenize_ids(df, vocab_size=3, strategy="join").collect()}
+            textops.tokenize_ids(df, vocab_size=3).collect()}
     assert lit == join
     # rank sanity on the join path: b(tf 4)=1, a(tf 3)=2, c(tf 1)=3
     assert join[2] == [1, 2, 2, 1] and join[1][:3] == [2, 1, 1]
@@ -770,7 +770,7 @@ def test_tokenize_ids_auto_picks_join_at_large_vocab(spark):
     df = spark.createDataFrame(
         [(1, "a b b c"), (2, "b a a b")], "doc_id long, text string"
     )
-    out = textops.tokenize_ids(df, vocab_size=50_000)  # auto
+    out = textops.tokenize_ids(df, vocab_size=50_000)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "map(" not in plan  # literal path would inline create_map
     assert "Join" in plan

@@ -672,18 +672,19 @@ def test_round3h_operator_exchange_budgets(spark):
     # scale). Since r09 the seed flag is broadcast-joined ONCE into the
     # localCheckpointed node frame, so the iteration plan scans a
     # materialized (node, outdeg, _seed) state with NO per-round
-    # broadcast join at all. Growth must stay LINEAR in iterations — a
-    # quadratic lineage blow-up would show as super-linear Exchange
-    # counts.
+    # join against the seed table; the only per-round broadcast join
+    # is the node-sized send frame, which this small graph broadcasts.
+    # Growth must stay LINEAR in iterations — a quadratic lineage
+    # blow-up would show as super-linear Exchange counts.
     p2 = _plan(personalized_pagerank(edges, seeds, iterations=2))
     p3 = _plan(personalized_pagerank(edges, seeds, iterations=3))
-    for p in (p2, p3):
+    for iters, p in ((2, p2), (3, p3)):
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
         # seed flag folded into the checkpointed node state: the loop
         # body carries zero joins against the seed table
         assert "_seed" in p and "Scan ExistingRDD" in p
-        assert "BroadcastHashJoin" not in p
+        assert p.count("BroadcastHashJoin") == iters, p
     g2 = p2.count("Exchange hashpartitioning")
     g3 = p3.count("Exchange hashpartitioning")
     assert g3 - g2 <= 10 and g3 <= 30, (g2, g3)

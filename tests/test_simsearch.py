@@ -360,12 +360,14 @@ def test_ivfpq_layout_serving_matches_inline_and_prunes(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_nearest_cells_join_strategy_matches_unroll(spark):
-    """_nearest_cells' two strategies (unrolled projection vs broadcast
-    centroid dim table) are bit-identical, and the join form carries
+def test_nearest_cells_join_strategy_matches_unroll(spark, monkeypatch):
+    """_nearest_cells' two forms (unrolled projection vs broadcast
+    centroid dim table; the join side forced by lowering the
+    centroid-count gate) are bit-identical, and the join form carries
     the plan you'd want past ~4k cells: a broadcast join fan-out with
     no SortMergeJoin and no corpus-side Exchange before the ranking
     window."""
+    from query_refinement_dsit_databases_2021_spark.operators import simsearch
     from query_refinement_dsit_databases_2021_spark.operators.simsearch import (
         IVF_CENTROID_IDS,
         _centroid_literals,
@@ -379,8 +381,10 @@ def test_nearest_cells_join_strategy_matches_unroll(spark):
     base = _with_norm(emb)
     cents = _centroid_literals(emb, IVF_CENTROID_IDS)
     for n_cells in (1, 3):
-        un = _nearest_cells(base, cents, n_cells, strategy="unroll")
-        jn = _nearest_cells(base, cents, n_cells, strategy="join")
+        un = _nearest_cells(base, cents, n_cells)
+        monkeypatch.setattr(simsearch, "UNROLL_MAX_CELLS", 0)
+        jn = _nearest_cells(base, cents, n_cells)
+        monkeypatch.undo()
         assert [(f.name, f.dataType) for f in un.schema] == [
             (f.name, f.dataType) for f in jn.schema
         ]

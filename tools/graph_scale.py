@@ -13,14 +13,19 @@ take and the one that stresses the groupBy(dst) shuffle with skew.
 Self-loops are kept (pagerank/HITS handle them; components unaffected).
 
 Measurements per size (edges 10M/30M/100M, N = E/10 nodes):
-  * pagerank (5 iters) — both of the engine's explicit loop forms:
-    ``graph.pagerank(edges, broadcast_send=False)`` (plain equi-join
-    edges⋈send, label ``shuffle_join``) and
-    ``graph.pagerank(edges, broadcast_send=True)`` (broadcast send
-    frame, label ``broadcast_send``)
-  * hits (4 iters) — as shipped (localCheckpoint per half-step)
+  * pagerank (5 iters) — both loop forms: the plain equi-join
+    edges⋈send (label ``shuffle_join``) and the operator's own choice
+    (label ``shipped``: it broadcasts the send frame while
+    ``materialize.broadcast_ok`` holds, which covers every size here;
+    earlier rows of graph_scale.csv forced that broadcast)
+  * hits (4 iters) — as shipped (localCheckpoint per half-step), and
+    its shuffle join (label ``shuffle_fallback``)
+  * lpa (3 rounds) — its shuffle join (label ``shuffle_fallback``)
   * components — min-label pointer jumping over the edge list
     (dedup.neardup_components, the shared machinery)
+The shuffle-join rows set ``materialize.BROADCAST_MAX_BYTES = 0``
+around the call, so the operator's broadcast rule declines. A run that
+raises is recorded with checksum ``FAILED:<exception>``.
 All results are forced through value checksums (sum of ranks/labels),
 never bare count() — Catalyst prunes unkeyed work under count().
 
@@ -38,6 +43,7 @@ import argparse
 import os
 import sys
 import time
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -71,7 +77,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from query_refinement_dsit_databases_2021_spark.session import get_spark
-    from query_refinement_dsit_databases_2021_spark.operators import dedup, graph
+    from query_refinement_dsit_databases_2021_spark.operators import dedup, graph, materialize
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     spark = get_spark(
@@ -91,6 +97,32 @@ def main() -> int:
         out.flush()
         print("RESULT " + line, flush=True)
 
+    def components(edges):
+        return dedup.neardup_components(
+            edges.select(
+                F.least("src", "dst").alias("doc_a"),
+                F.greatest("src", "dst").alias("doc_b"),
+            ).where(F.col("doc_a") != F.col("doc_b"))
+        )
+
+    # (--skip-variants name, op, variant label, forced shuffle,
+    #  operator, summed checksum columns)
+    runs = (
+        ("pagerank", "pagerank", "shuffle_join", True, graph.pagerank,
+         ("rank",)),
+        ("pagerank_bcast", "pagerank", "shipped", False, graph.pagerank,
+         ("rank",)),
+        ("hits", "hits", "shipped", False, graph.hits, ("authority", "hub")),
+        # forced so the fallback curve has same-session points at node
+        # counts where the default still broadcasts (r08 verdict item 7)
+        ("hits_fallback", "hits", "shuffle_fallback", True, graph.hits,
+         ("authority", "hub")),
+        ("lpa_fallback", "lpa", "shuffle_fallback", True,
+         graph.label_propagation, ("label",)),
+        ("components", "components", "pointer_jump", False, components,
+         ("cluster_id",)),
+    )
+
     for n_edges in (int(x) for x in args.sizes.split(",")):
         n_nodes = n_edges // 10
         tag = f"powerlaw_e{n_edges}"
@@ -103,76 +135,20 @@ def main() -> int:
             print(f"# generated {tag} in {time.time() - t0:.1f}s", flush=True)
         edges = spark.read.parquet(path)
 
-        if "pagerank" not in skip:
-            t0 = time.time()
-            chk = (
-                graph.pagerank(edges, broadcast_send=False)
-                .agg(F.sum("rank"), F.count(F.lit(1)))
-                .collect()[0]
-            )
-            record(tag, n_edges, n_nodes, "pagerank", "shuffle_join",
-                   time.time() - t0, f"{chk[0]}/{chk[1]}")
-
-        if "pagerank_bcast" not in skip:
+        for name, op, variant, forced, fn, cols in runs:
+            if name in skip:
+                continue
+            bound = 0 if forced else materialize.BROADCAST_MAX_BYTES
             t0 = time.time()
             try:
-                chk = (
-                    graph.pagerank(edges, broadcast_send=True)
-                    .agg(F.sum("rank"), F.count(F.lit(1)))
-                    .collect()[0]
-                )
-                record(tag, n_edges, n_nodes, "pagerank", "broadcast_send",
-                       time.time() - t0, f"{chk[0]}/{chk[1]}")
+                with mock.patch.object(materialize, "BROADCAST_MAX_BYTES", bound):
+                    row = fn(edges).agg(
+                        *[F.sum(c) for c in cols], F.count(F.lit(1))
+                    ).collect()[0]
+                chk = "/".join(str(v) for v in row)
             except Exception as exc:
-                record(tag, n_edges, n_nodes, "pagerank", "broadcast_send",
-                       time.time() - t0, f"FAILED:{type(exc).__name__}")
-
-        if "hits" not in skip:
-            t0 = time.time()
-            chk = (
-                graph.hits(edges)
-                .agg(F.sum("authority"), F.sum("hub"), F.count(F.lit(1)))
-                .collect()[0]
-            )
-            record(tag, n_edges, n_nodes, "hits", "shipped",
-                   time.time() - t0, f"{chk[0]}/{chk[1]}/{chk[2]}")
-
-        if "hits_fallback" not in skip:
-            # the shuffle-join branch past materialize.broadcast_ok's bound,
-            # forced so the fallback curve has same-session points at
-            # node counts where the default still broadcasts (r08
-            # verdict item 7)
-            t0 = time.time()
-            chk = (
-                graph.hits(edges, broadcast_scores=False)
-                .agg(F.sum("authority"), F.sum("hub"), F.count(F.lit(1)))
-                .collect()[0]
-            )
-            record(tag, n_edges, n_nodes, "hits", "shuffle_fallback",
-                   time.time() - t0, f"{chk[0]}/{chk[1]}/{chk[2]}")
-
-        if "lpa_fallback" not in skip:
-            t0 = time.time()
-            chk = (
-                graph.label_propagation(edges, broadcast_labels=False)
-                .agg(F.sum("label"), F.count(F.lit(1)))
-                .collect()[0]
-            )
-            record(tag, n_edges, n_nodes, "lpa", "shuffle_fallback",
-                   time.time() - t0, f"{chk[0]}/{chk[1]}")
-
-        if "components" not in skip:
-            pairs = edges.select(
-                F.least("src", "dst").alias("doc_a"),
-                F.greatest("src", "dst").alias("doc_b"),
-            ).where(F.col("doc_a") != F.col("doc_b"))
-            t0 = time.time()
-            comp = dedup.neardup_components(pairs)
-            chk = comp.agg(
-                F.sum("cluster_id"), F.count(F.lit(1))
-            ).collect()[0]
-            record(tag, n_edges, n_nodes, "components", "pointer_jump",
-                   time.time() - t0, f"{chk[0]}/{chk[1]}")
+                chk = f"FAILED:{type(exc).__name__}"
+            record(tag, n_edges, n_nodes, op, variant, time.time() - t0, chk)
 
     out.close()
     return 0
