@@ -49,7 +49,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--cache-dir",
         default=None,
-        help="parquet cache dir for the candidate matrix (K2)",
+        help="parquet candidate store (K2): every build is written here "
+        "and later queries on the same data, domains and measures read it",
     )
     p.add_argument("--master", default=None, help="spark master override")
     return p
@@ -122,7 +123,8 @@ def main(argv: list[str] | None = None) -> int:
     info = engine.last_info
     print(
         f"action={info.action} strategy={info.strategy} "
-        f"candidates={info.udf_size} passing={info.n_passing}"
+        f"candidates={info.udf_size} passing={info.n_passing} "
+        f"candidates_from={info.candidates_from}"
     )
     # K4: result-pair print (reference:src/server.py:888-898)
     score_col = next((c for c in result.columns if c in ("rk", "rp")), None)

@@ -10,7 +10,9 @@ On small series the fixed cost of a query is its Spark jobs (about
 0.1 s each on 4 cores, against milliseconds of data work), so the
 engine keeps them few: an unrefined query runs one statistics job and
 one result job; a refined one adds the AQE stage that caches its
-candidates and one dispatch aggregate.
+candidates and one dispatch aggregate. A refined query re-run with new
+bounds, targets or ``k`` reuses the held candidates and runs 3 jobs
+(statistics, dispatch, result).
 
 - **One scan before the build.** A single aggregate reads the series'
   ``time_id`` bounds (when a domain side is open) together with the
@@ -32,8 +34,12 @@ candidates and one dispatch aggregate.
   past one block the halo partitioning keeps its per-block Exchange,
   and sources without statistics (JDBC) never qualify.
 
-The engine keeps at most one candidates frame persisted, the last
-refined query's; ``Engine.close`` releases it.
+- **One candidate store.** Candidates depend only on what
+  ``Engine._cache_key`` hashes, the segment fingerprint of the
+  statistics scan included. A query whose key equals the held frame's
+  reuses it; else, with ``cache_dir``, it reads (first writing) that
+  key's parquet entry; else it builds. The engine holds at most one
+  frame, the last refined query's; ``Engine.close`` releases it.
 
 The reference's BST/backtracking machinery (reference:src/bst_class.py,
 reference:src/server.py:364-493) is execution strategy, not semantics —
@@ -57,8 +63,11 @@ stability over a random exploration order.
 
 from __future__ import annotations
 
+import hashlib
+import os
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,7 +101,7 @@ def _fits_one_split(table: DataFrame) -> bool:
 def _stats_aggs(cond: Column | None = None) -> list[Column]:
     """Segment statistics over the rows where ``cond`` holds (all rows
     when None): time_id range, row and value counts, value variance and
-    an order-independent content fingerprint for the K2 cache key
+    an order-independent content fingerprint for the candidate-store key
     (32-bit hashes summed into a long cannot overflow below 2^32
     rows)."""
 
@@ -160,6 +169,7 @@ class ExecutionInfo:
     n_passing: int | None = None
     action: str | None = None  # 'all' | 'limit' | 'exact' | 'tighten' | 'relax'
     udf_size: int | None = None  # candidate-count scale variable, server.py:37
+    candidates_from: str | None = None  # 'built' | 'held' | 'parquet'
 
 
 class Engine:
@@ -177,47 +187,36 @@ class Engine:
         spark: SparkSession,
         partition_rows: int | None = None,
         cache_dir: str | None = None,
-        cache_auto_seconds: float | None = None,
     ):
         self.spark = spark
         self.partition_rows = partition_rows
         # K2 cache: the reference pickles its UDF map when the build
-        # exceeds 300 s and reloads it on demand
-        # (reference:src/server.py:249-286, threshold at :264). Here the
-        # distributed UDF map (the candidates DataFrame) is written to
-        # parquet keyed by a fingerprint of (table, column, domains,
-        # measure set, segment content) — the exact inputs that determine
-        # its content.
-        # Two modes, both requiring cache_dir:
-        #   cache_auto_seconds=None  -> cache every build (opt-in eager)
-        #   cache_auto_seconds=T     -> reference parity: build in
-        #       memory, persist to parquet only when the measured build
-        #       took longer than T seconds (the reference's 300 s
-        #       trigger); cheap builds stay cache-free.
+        # exceeds 300 s (reference:src/server.py:249-286). With cache_dir
+        # every build is written to parquet under its candidate-store
+        # key and read back from there; the held frame serves the same
+        # key in memory either way.
         self.cache_dir = cache_dir
-        self.cache_auto_seconds = cache_auto_seconds
         self._tables: dict[str, DataFrame] = {}
         self._held: DataFrame | None = None
+        self._held_key: str | None = None
         self.last_info = ExecutionInfo()
 
-    # -- cached candidates ---------------------------------------------
-    def _hold(self, candidates: DataFrame) -> DataFrame:
+    # -- candidate store -----------------------------------------------
+    def _hold(self, candidates: DataFrame, key: str) -> DataFrame:
         """Persist ``candidates`` as the one frame this engine keeps
         cached, releasing the previous query's. A result returned
         earlier stays valid: its plan recomputes what was released."""
         self.close()
-        self._held = candidates.persist()
+        self._held, self._held_key = candidates.persist(), key
         return self._held
 
     def close(self) -> None:
         """Unpersist the cached candidates of the last query, if any."""
         if self._held is not None:
             self._held.unpersist()
-            self._held = None
+            self._held = self._held_key = None
 
     def _cache_key(self, spec: QuerySpec, fingerprint: int) -> str:
-        import hashlib
-
         measures = sorted(
             {(c.name, c.args) for c in spec.constraints}
         )  # bounds/targets don't change candidate values — only measures do
@@ -317,49 +316,32 @@ class Engine:
             segment = segment.coalesce(1)
 
         strategy = pick_strategy(spec)
-        if self.cache_dir is not None:
-            import os
-
-            key = self._cache_key(spec, stats["fp"])
-            path = os.path.join(self.cache_dir, f"udfmap_{key}.parquet")
-            if os.path.exists(path):
-                candidates = self._hold(self.spark.read.parquet(path))
-            elif self.cache_auto_seconds is None:
-                build_candidates(
-                    segment, spec, t_start, t_end, strategy, self.partition_rows
-                ).write.mode("overwrite").parquet(path)
-                candidates = self._hold(self.spark.read.parquet(path))
-            else:
-                # reference parity (src/server.py:264): time the build
-                # and self-cache only when it was expensive enough that
-                # a reload beats a rebuild
-                import time as _time
-
-                t0 = _time.time()
-                candidates = self._hold(
-                    build_candidates(
-                        segment, spec, t_start, t_end, strategy, self.partition_rows
-                    )
-                )
-                candidates.count()  # materialize so the timer sees the build
-                if _time.time() - t0 > self.cache_auto_seconds:
-                    candidates.write.mode("overwrite").parquet(path)
+        key = self._cache_key(spec, stats["fp"])
+        path = self.cache_dir and os.path.join(self.cache_dir, f"udfmap_{key}.parquet")
+        # a held frame whose cache entry another engine released (plan-
+        # equal frames share one entry) would recompute twice: rebuild it
+        if key == self._held_key and self._held.storageLevel != StorageLevel.NONE:
+            candidates, source = self._held, "held"
+        elif path and os.path.exists(path):
+            candidates, source = self.spark.read.parquet(path), "parquet"
         else:
-            candidates = build_candidates(
+            candidates, source = build_candidates(
                 segment, spec, t_start, t_end, strategy, self.partition_rows
-            )
-            # O4: persist only when the dispatch actually re-reads the
-            # frame (refined: one count + min/max aggregate, then the
-            # pass/fail split and scoring). The unrefined path consumes
-            # candidates exactly once, so caching it is pure write
-            # overhead (guide §5: cache only what is reused).
-            if spec.refined:
-                candidates = self._hold(candidates)
+            ), "built"
+            if path:
+                candidates.write.mode("overwrite").parquet(path)
+                candidates = self.spark.read.parquet(path)
+        # O4: persist only when the dispatch re-reads the frame (refined:
+        # one count + min/max aggregate, then the pass/fail split and
+        # scoring). The unrefined path reads candidates exactly once.
+        if spec.refined and source != "held":
+            candidates = self._hold(candidates, key)
 
         info = ExecutionInfo(
             spec=spec,
             strategy=strategy,
             udf_size=(x1 - x0 + 1) * (l1 - l0 + 1),
+            candidates_from=source,
         )
         try:
             result = self._dispatch(spec, candidates, info, include_scores)

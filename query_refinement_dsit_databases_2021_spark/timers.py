@@ -14,23 +14,6 @@ import csv
 import time
 from contextlib import contextmanager
 
-# reference stage names (src/LibraryOfTime.py:7-26); Spark engine uses
-# the subset that still exists plus its own planning/execution stages
-REFERENCE_STAGES = (
-    "connect",
-    "read-query",
-    "parse",
-    "fix-dict",
-    "get-data",
-    "build-UDF-map",
-    "create-BST",
-    "explore-BST",
-    "check-constraints",
-    "prep-fails",
-    "relaxation",
-    "rank-at-client",
-)
-
 
 class StageTimers:
     """Ordered name -> seconds accumulator with context-manager timing."""

@@ -202,11 +202,13 @@ def test_udf_map_parquet_cache(spark, tmp_path, series_tiny):
         )
 
     first = sorted(map(tuple, eng.execute(spec(1, 3)).collect()))
+    assert eng.last_info.candidates_from == "built"
     files = os.listdir(cache)
     assert len(files) == 1
     mtime = os.path.getmtime(os.path.join(cache, files[0]))
     # same measures, different bounds -> same cache entry, not rebuilt
     second = sorted(map(tuple, eng.execute(spec(2, 5)).collect()))
+    assert eng.last_info.candidates_from == "parquet"
     assert os.listdir(cache) == files
     assert os.path.getmtime(os.path.join(cache, files[0])) == mtime
     # results match an uncached engine exactly
@@ -228,51 +230,10 @@ def test_udf_map_parquet_cache(spark, tmp_path, series_tiny):
     eng.register_series("t", other)
     plain.register_series("t", other)
     fresh = sorted(map(tuple, eng.execute(spec(1, 3)).collect()))
+    assert eng.last_info.candidates_from == "built"
     assert fresh != first
     assert fresh == sorted(map(tuple, plain.execute(spec(1, 3)).collect()))
     assert len(os.listdir(cache)) == 3
-
-
-def test_udf_map_cache_auto_threshold(spark, tmp_path, series_tiny):
-    """K2 time trigger (reference:src/server.py:264): with
-    cache_auto_seconds set, the build self-caches only when it exceeds
-    the threshold; a second execute() then reads the parquet cache."""
-    import os
-
-    from query_refinement_dsit_databases_2021_spark.plans.executor import Engine
-    from query_refinement_dsit_databases_2021_spark.plans.spec import (
-        ConstraintSpec,
-        QuerySpec,
-    )
-
-    spec = QuerySpec(
-        "t", "y", (2, 10), (2, 4), (ConstraintSpec("avg_amp", (), 1, 3),)
-    )
-
-    # threshold no real build can beat -> never caches
-    cold = str(tmp_path / "cold")
-    os.makedirs(cold)
-    eng = Engine(spark, cache_dir=cold, cache_auto_seconds=1e9)
-    eng.register_series("t", series_tiny)
-    baseline = sorted(map(tuple, eng.execute(spec).collect()))
-    assert os.listdir(cold) == []
-
-    # zero threshold -> every build is "slow", triggering the
-    # reference's >300s pickle behavior
-    hot = str(tmp_path / "hot")
-    os.makedirs(hot)
-    eng2 = Engine(spark, cache_dir=hot, cache_auto_seconds=0.0)
-    eng2.register_series("t", series_tiny)
-    first = sorted(map(tuple, eng2.execute(spec).collect()))
-    files = os.listdir(hot)
-    assert len(files) == 1
-    # second execute() reads the parquet cache (entry untouched) and
-    # returns identical rows
-    mtime = os.path.getmtime(os.path.join(hot, files[0]))
-    second = sorted(map(tuple, eng2.execute(spec).collect()))
-    assert os.listdir(hot) == files
-    assert os.path.getmtime(os.path.join(hot, files[0])) == mtime
-    assert first == second == baseline
 
 
 def test_fused_resolution_matches_resolve_domains(spark, series_tiny):
@@ -337,6 +298,45 @@ def test_engine_keeps_one_candidates_frame(spark, series_tiny, tmp_path):
         cached.execute(spec(x0)).collect()
     assert jsc.getPersistentRDDs().size() - before <= 1
     cached.close()
+
+
+def test_held_candidates_outlive_a_released_cache_entry(spark, series_tiny):
+    """Plan-equal candidates frames share one Spark cache entry, so
+    another engine's close() releases this engine's held frame too: the
+    next re-bound query rebuilds rather than reading an uncached frame
+    twice, and returns a fresh engine's rows. A table re-registered with
+    new content never hits the held frame."""
+
+    def spec(lo, hi):
+        cons = [ConstraintSpec("avg_amp", (), lo, hi, "maximization")]
+        return _spec((1, 12), (1, 3), cons, k=4, refined=True)
+
+    eng, other = Engine(spark), Engine(spark)
+    for e in (eng, other):
+        e.register_series("tiny", series_tiny)
+    eng.execute(spec(1, 3)).collect()
+    other.execute(spec(1, 3)).collect()
+    eng.execute(spec(2, 4)).collect()
+    assert eng.last_info.candidates_from == "held"
+    other.close()
+    rows = _pairs(eng.execute(spec(2, 5)))
+    assert eng.last_info.candidates_from == "built"
+    fresh = Engine(spark)
+    fresh.register_series("tiny", series_tiny)
+    assert rows == _pairs(fresh.execute(spec(2, 5)))
+    fresh.close()
+
+    changed = spark.createDataFrame(
+        [(i + 1, float(y)) for i, y in enumerate(reversed(SERIES_TINY_Y))],
+        "time_id long, y double",
+    )
+    eng.register_series("tiny", changed)
+    fresh.register_series("tiny", changed)
+    rows = _pairs(eng.execute(spec(2, 5)))
+    assert eng.last_info.candidates_from == "built"
+    assert rows == _pairs(fresh.execute(spec(2, 5)))
+    eng.close()
+    fresh.close()
 
 
 def test_wide_offset_domain_leaves_nothing_persisted(spark):

@@ -1392,7 +1392,8 @@ def _jobs(spark, fn) -> int:
 def test_cp_query_job_budget(spark, tmp_path_factory):
     """A CP query over a single-file series pays one statistics scan,
     then one job for the result; the refined path adds the AQE stage
-    that caches its candidates and one dispatch aggregate. The open
+    that caches its candidates and one dispatch aggregate, and a query
+    re-run with new bounds reuses those candidates. The open
     domain sides are read in the statistics scan, and a series that is
     one partition anyway is planned without an Exchange — while a
     segment of several halo blocks keeps its block Exchange."""
@@ -1431,6 +1432,27 @@ def test_cp_query_job_budget(spark, tmp_path_factory):
             jobs = _jobs(spark, lambda: eng.execute(q).collect())
             assert eng.last_info.action == action
             assert jobs <= budget, (x_dom, action, jobs)
+
+        # re-bound after exact: the held candidates serve new bounds,
+        # so no build stage runs
+        rebound = (
+            ConstraintSpec("avg_amp", (), 40, 60),
+            ConstraintSpec("max_amp_excess_left", (5,), -30, 45),
+        )
+        eng.execute(QuerySpec("s", "y", x_dom, lx_dom, cons, n, True)).collect()
+        fresh = Engine(spark)
+        fresh.register_parquet("s", path)
+        m = fresh.execute(QuerySpec("s", "y", x_dom, lx_dom, rebound)).count()
+        assert m > 5
+        for k, action in ((5, "tighten"), (m + 20, "relax")):
+            q = QuerySpec("s", "y", x_dom, lx_dom, rebound, k, True)
+            rows = []
+            jobs = _jobs(spark, lambda: rows.extend(eng.execute(q).collect()))
+            assert eng.last_info.action == action
+            assert eng.last_info.candidates_from == "held"
+            assert jobs <= 3, (x_dom, action, jobs)
+            assert sorted(rows) == sorted(fresh.execute(q).collect())
+        fresh.close()
 
     closed = QuerySpec("s", "y", (101, 400), (1, 16), cons)
     assert _exchanges(eng.execute(closed)) == 0
