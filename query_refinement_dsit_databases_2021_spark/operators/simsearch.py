@@ -1,36 +1,51 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two strategies over ``embeddings.parquet`` (vec_id, embedding, label):
+Every top-k search over ``embeddings.parquet`` (vec_id, embedding,
+label) has one shape: generate candidates, score them, keep the top k
+per query. The generators differ; the rest is one shared core:
 
-- **Brute-force cosine top-k** (the correctness baseline): broadcast
-  the (small) query set against the corpus — ONE scan of the corpus,
-  no corpus-side shuffle; per-query top-k via a ranking window whose
-  partition count equals |queries|. At 100 TB the corpus side stays
-  partition-parallel; only the k·|queries| result rows move.
-- **LSH-bucketed ANN** (the scale path): multi-table random-hyperplane
-  LSH — L independent tables of nbits hyperplane sign bits each; a
-  corpus vector is a candidate iff it shares a bucket with the query
-  in >=1 table. Exact cosine is computed only for deduped candidates.
-  With per-bit collision prob p = 1 - theta/pi, recall is
-  1-(1-p^nbits)^L (tested against the brute-force baseline); at
-  corpus scale nbits grows ~log2(n / target_bucket_size) to keep
-  buckets bounded, and the candidate join stays an equi-join
-  shuffle-partitioned on (table, bucket) — never all-pairs.
+- :func:`_with_norm` — the normalized-vector frame ``(vec_id, v,
+  nrm)`` every cosine scorer reads;
+- :func:`_cross_scored` (brute force: broadcast queries × ONE corpus
+  scan) and :func:`_rescore` (a ``(q_id, vec_id)`` candidate set
+  against broadcast queries), both scoring the 6-dp
+  :func:`_cosine`;
+- :func:`_adc_topk` — PQ distance tables, code-lookup sum and top-k,
+  keyed by ``(s, code)`` or, for IVF-PQ, ``(cell, s, code)``;
+- :func:`_topk` — the per-query ``row_number`` over (score, vec_id
+  asc), ranks 1..k as ``long``.
+
+Candidate generators:
+
+- **Brute force** (the correctness baseline): every corpus vector.
+  Only the k·|queries| result rows move; the corpus side stays
+  partition-parallel.
+- **LSH** (multi-table random-hyperplane): L independent tables of
+  nbits sign bits each; a corpus vector is a candidate iff it shares a
+  bucket with the query in >= 1 table, deduped before the exact
+  rescore. With per-bit collision prob p = 1 - theta/pi, recall is
+  1-(1-p^nbits)^L; the candidate join is an equi-join on (table,
+  bucket) — never all-pairs.
+- **IVF**: stride-sampled corpus vectors as centroids; every vector
+  sits in its nearest cell, queries rescore only their nprobe nearest
+  cells. nprobe == |centroids| degenerates to exact brute force
+  (pinned by a unit test).
+- **PQ / IVF-PQ**: codes (of the vector, or of its cell residual)
+  scored by ADC, optionally reranked exactly by :func:`_exact_rerank`.
+
+The inline IVF and IVF-PQ searches and their layout-served forms
+(:func:`ivf_topk_from_layout`, :func:`ivfpq_topk_from_layout`) differ
+only in where the corpus comes from: the inline form assigns (and
+encodes) the corpus by projection on every call, the served form scans
+the pruned cell directories a ``write_*_layout`` build wrote with the
+same projection and encoder.
 
 Determinism contract (same as the dedup/text operators): every dot
 product is a left fold in index order over doubles, hyperplane
 components are Python-float literals inlined into BOTH engines, and
-scores are rounded to 6 dp before ranking with a vec_id tie-break —
-so Spark and the DuckDB oracles rank identically bit-for-bit.
-
-- **IVF-bucketed ANN** (the second scale path): a coarse quantizer of
-  stride-sampled corpus vectors as centroids; every vector sits in
-  exactly one cell (nearest centroid), queries rescore only their
-  nprobe nearest cells. The dataflow is the same bucket equi-join as
-  LSH but needs no candidate dedup, and at corpus scale the cell id
-  doubles as a bucketing/partition key so probes read only their
-  cells. nprobe == |centroids| degenerates to exact brute force
-  (pinned by a unit test).
+scores are rounded to 6 dp (cosine) or floor-lifted to int64
+micro-units (L2) before ranking with a vec_id tie-break — so Spark and
+the DuckDB oracles rank identically bit-for-bit.
 """
 
 from __future__ import annotations
@@ -138,11 +153,70 @@ def _cell_entries_expr(cents, col: str = "v", nrm: str = "nrm") -> Column:
     return F.expr("array(" + ",".join(parts) + ")")
 
 
-def _with_norm(emb: DataFrame) -> DataFrame:
-    v = _as_double(F.col("embedding"))
+def _with_norm(
+    emb: DataFrame, src: str = "embedding", keep=("vec_id",)
+) -> DataFrame:
+    """The normalized-vector frame ``(*keep, v, nrm)``: ``src`` as
+    doubles plus its L2 norm (one index-order fold). Every cosine
+    scorer reads this frame."""
+    v = _as_double(F.col(src))
     return emb.select(
-        "vec_id", v.alias("v"), F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm")
+        *keep, v.alias("v"), F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm")
     )
+
+
+def _queries(base: DataFrame, *carry: Column) -> DataFrame:
+    """A normalized frame renamed as the query side ``(q_id, *carry,
+    qv, qn)``."""
+    return base.select(
+        F.col("vec_id").alias("q_id"), *carry, F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+
+
+def _cosine(out_col: str) -> Column:
+    """The 6-dp cosine of a query row (qv, qn) against a corpus row
+    (v, nrm): the score every cosine search ranks on."""
+    return F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(out_col)
+
+
+def _topk(scored: DataFrame, k: int, score: str, ascending: bool = False) -> DataFrame:
+    """Per-query top-k of a ``(q_id, vec_id, score)`` frame: ranks
+    1..k (``long``) by score (desc; asc for distances), ties by
+    vec_id asc. The single place that owns the tie-break contract the
+    oracles mirror."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), score)
+    )
+
+
+def _cross_scored(
+    q: DataFrame, base: DataFrame, keep: Column, *extra: Column, out_col: str = "cos_sim"
+) -> DataFrame:
+    """Brute-force scoring: broadcast queries × ONE corpus scan, the
+    pairs that pass ``keep``, cosine-scored. At 100 TB the corpus side
+    stays partition-parallel and no corpus row is shuffled."""
+    return (
+        F.broadcast(q)
+        .crossJoin(base)
+        .where(keep)
+        .select("q_id", "vec_id", *extra, _cosine(out_col))
+    )
+
+
+def _rescore(
+    cand: DataFrame, q: DataFrame, corpus: DataFrame | None = None
+) -> DataFrame:
+    """Exact cosine of a ``(q_id, vec_id)`` candidate set against the
+    broadcast queries ``q``. The candidates carry ``(v, nrm)``
+    themselves unless ``corpus`` supplies them by vec_id."""
+    scored = cand.join(F.broadcast(q), "q_id")
+    if corpus is not None:
+        scored = scored.join(corpus, "vec_id")
+    return scored.select("q_id", "vec_id", _cosine("cos_sim"))
 
 
 def _brute_topk(
@@ -152,31 +226,14 @@ def _brute_topk(
     out_col: str,
     query_base: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared brute-force shape: broadcast queries × ONE corpus scan
-    over a (vec_id, v, nrm) frame, exact cosine, per-query top-k by
-    (score desc, vec_id asc). The single place that owns the 6-dp
-    rounding and tie-break contract the oracles mirror. ``query_base``
-    lets a filtered search draw its queries from the UNfiltered frame
-    (hybrid retrieval: the predicate restricts candidates, not
-    queries)."""
-    queries = (query_base if query_base is not None else base).where(
-        F.col("vec_id") < n_queries
-    ).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(base)
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cos.alias(out_col))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc(out_col), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), out_col)
-    )
+    """Exact top-k over a ``(vec_id, v, nrm)`` frame, self excluded.
+    ``query_base`` lets a filtered search draw its queries from the
+    UNfiltered frame (hybrid retrieval: the predicate restricts
+    candidates, not queries)."""
+    qsrc = query_base if query_base is not None else base
+    q = _queries(qsrc.where(F.col("vec_id") < n_queries))
+    scored = _cross_scored(q, base, F.col("vec_id") != F.col("q_id"), out_col=out_col)
+    return _topk(scored, k, out_col)
 
 
 def cosine_topk(
@@ -247,21 +304,8 @@ def lsh_ann_topk(
         .select("q_id", "vec_id")
         .distinct()
     )
-    q = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = (
-        cand.join(F.broadcast(q), "q_id")
-        .join(base, "vec_id")
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-    )
+    q = _queries(base.where(F.col("vec_id") < n_queries))
+    return _topk(_rescore(cand, q, corpus=base), k, "cos_sim")
 
 
 def _centroid_literals(emb: DataFrame, centroid_ids) -> list[tuple[int, list[float], float]]:
@@ -373,7 +417,7 @@ def ivf_ann_topk(
     (pinned by a unit test). At 100 TB the assignment is a pure
     projection on the corpus scan (centroids broadcast as literals),
     the corpus can be written bucketed by cell, and only probed cells
-    are read. Same output shape as :func:`cosine_topk`.
+    are read.
 
     ``assignments`` > 1 stores each corpus vector in its a nearest
     cells (multi-assignment, see :func:`ivf_assign`) and dedups the
@@ -385,44 +429,51 @@ def ivf_ann_topk(
     """
     base = _with_norm(emb)
     cents = _centroid_literals(emb, centroid_ids)
-    # assignment as a pure projection CARRYING the vector (r09, guide
-    # §2.4): the (vec_id, cell)-only assignment forced a corpus re-join
-    # on vec_id to recover v for scoring — one corpus Exchange for
-    # nothing. Projection forms are bit-identical to _nearest_cells
-    # (parity test-pinned).
-    if assignments == 1:
-        assign = base.withColumn("cell", _cell_projection(cents))
-    else:
-        assign = base.withColumn(
-            "cell", F.explode(_cells_projection(cents, assignments))
-        )
-    probes = (
-        _nearest_cells(base.where(F.col("vec_id") < n_queries), cents, nprobe)
-        .select(F.col("vec_id").alias("q_id"), "cell")
+    # the assignment projection CARRIES the vector: a (vec_id, cell)-only
+    # assignment would force a corpus re-join on vec_id to recover v for
+    # scoring — one corpus Exchange for nothing
+    assign = _assign_cells(base, cents, assignments)
+    qbase = base.where(F.col("vec_id") < n_queries)
+    return _ivf_topk(
+        _probes(qbase, cents, nprobe), assign, _queries(qbase), k, assignments > 1
     )
+
+
+def _assign_cells(frame: DataFrame, cents, assignments: int) -> DataFrame:
+    """``frame`` plus its IVF ``cell``: the nearest centroid as a pure
+    projection, or with ``assignments`` > 1 one row per each of the a
+    nearest (an array projection exploded map-side). Both forms are
+    bit-identical to :func:`_nearest_cells` (parity test-pinned)."""
+    if assignments == 1:
+        return frame.withColumn("cell", _cell_projection(cents))
+    return frame.withColumn("cell", F.explode(_cells_projection(cents, assignments)))
+
+
+def _probes(qbase: DataFrame, cents, nprobe: int) -> DataFrame:
+    """``(q_id, cell)``: each query's ``nprobe`` nearest cells."""
+    return _nearest_cells(qbase, cents, nprobe).select(
+        F.col("vec_id").alias("q_id"), "cell"
+    )
+
+
+def _ivf_topk(
+    probes: DataFrame, corpus: DataFrame, q: DataFrame, k: int, dedup: bool
+) -> DataFrame:
+    """The IVF search both forms share: the broadcast probes join a
+    ``(vec_id, cell, v, nrm)`` corpus on cell, the candidates are
+    rescored exactly, top-k per query. ``dedup`` drops the duplicate
+    pairs a multi-assigned vector yields when two of its cells are
+    probed (the rows are FULLY identical, so the dedup is
+    deterministic); single assignment skips its exchange."""
     cand = (
         F.broadcast(probes)
-        .join(assign, "cell")
+        .join(corpus, "cell")
         .where(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", "v", "nrm")
     )
-    if assignments > 1:
-        # same pair set as the previous (q_id, vec_id) DISTINCT — v and
-        # nrm are functionally dependent on vec_id
+    if dedup:
         cand = cand.dropDuplicates(["q_id", "vec_id"])
-    q = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = cand.join(F.broadcast(q), "q_id").select(
-        "q_id", "vec_id", cos.alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-    )
+    return _topk(_rescore(cand, q), k, "cos_sim")
 
 
 def embedding_neardup_pairs(
@@ -793,25 +844,16 @@ def write_ivf_layout(
     :func:`ivf_assign`) the projection is array-valued and exploded,
     an a× row fan-out that stays map-side. The sidecar records the
     build's ``assignments`` so serving knows whether candidate dedup
-    is needed; layouts written before the column existed read as
-    a = 1."""
+    is needed."""
     spark = emb.sparkSession
     cents = _centroid_literals(emb, centroid_ids)
     spark.createDataFrame(
         [(cell, cv, cn, assignments) for cell, cv, cn in cents],
         "cell long, cv array<double>, cn double, a int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}__centroids")
-    v = _as_double(F.col("embedding"))
-    nrm = F.sqrt(_fold_sum(F.transform(v, lambda x: x * x)))
-    staged = emb.withColumn("v", v).withColumn("nrm", nrm)
-    if assignments == 1:
-        staged = staged.withColumn("cell", _cell_projection(cents))
-    else:
-        staged = staged.withColumn(
-            "cell", F.explode(_cells_projection(cents, assignments))
-        )
     (
-        staged.drop("v", "nrm")
+        _assign_cells(_with_norm(emb, keep=emb.columns), cents, assignments)
+        .drop("v", "nrm")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -832,68 +874,40 @@ def ivf_topk_from_layout(
     those literals, and ONE scan reads only the probed cell directories
     (``cell IN (...)`` prunes at plan time — PartitionFilters content
     is asserted in the test). Per-query corpus cost is the probed
-    share, with zero per-search assignment work. Same output
-    shape/semantics as :func:`ivf_ann_topk` over the same
-    corpus+queries (pinned by a test).
+    share, with zero per-search assignment work; the search itself is
+    :func:`ivf_ann_topk`'s (parity pinned by a test).
 
-    The probe assignment stays a distributed DataFrame end-to-end —
-    the query batch is NEVER materialized on the driver (a million-
-    query batch flows through the same plan). The only driver hop is
-    the distinct probed-cell set for the static partition filter,
-    which is bounded by |centroids| (metadata scale), not by
-    |queries|; the test pins that bound by intercepting collect()."""
-    crows = spark.read.parquet(f"{path}__centroids").collect()
-    cents = [
-        (int(r["cell"]), [float(x) for x in r["cv"]], float(r["cn"]))
-        for r in crows
-    ]
-    cents.sort()
-    # pre-"a"-column layouts are single-assignment by construction
-    layout_a = int(crows[0]["a"]) if "a" in crows[0].__fields__ else 1
+    The query batch is NEVER materialized on the driver: every collect
+    is bounded by |centroids| (the test pins that bound by
+    intercepting collect())."""
+    crows, cents = _layout_centroids(spark, path)
     qbase = _with_norm(queries)
-    probes = _nearest_cells(qbase, cents, nprobe).select(
-        F.col("vec_id").alias("q_id"), "cell"
+    probes = _probes(qbase, cents, nprobe)
+    corpus = _with_norm(_probed_scan(spark, path, probes), keep=("vec_id", "cell"))
+    return _ivf_topk(probes, corpus, _queries(qbase), k, crows[0]["a"] > 1)
+
+
+def _layout_centroids(spark, path: str):
+    """A layout's ``__centroids`` sidecar (|cells| rows — the corpus is
+    never scanned for them, and the set is the one that partitioned
+    the layout): the rows, and the ``(cell, cv, cn)`` literals in
+    cell order."""
+    rows = sorted(
+        spark.read.parquet(f"{path}__centroids").collect(), key=lambda r: int(r["cell"])
     )
-    # metadata-scale driver hop: the DISTINCT probed cells (<= |cells|
-    # rows regardless of query-batch size) become the plan-time
-    # partition filter; the per-query probe rows stay distributed.
-    probe_cells = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
-    # ONE pruned scan; keep cell alongside the normalized vector
-    raw = spark.read.parquet(path).where(F.col("cell").isin(probe_cells))
-    v = _as_double(F.col("embedding"))
-    corpus = raw.select(
-        "vec_id",
-        "cell",
-        v.alias("v"),
-        F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm"),
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(corpus, "cell")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "v", "nrm")
-    )
-    if layout_a > 1:
-        # multi-assignment stores a vector in a cells: a candidate
-        # reached through two probed cells appears twice with FULLY
-        # identical rows, so the dedup is deterministic. Skipped
-        # entirely on single-assignment layouts (no extra exchange).
-        cand = cand.dropDuplicates(["q_id", "vec_id"])
-    q = qbase.select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = cand.join(F.broadcast(q), "q_id").select(
-        "q_id", "vec_id", cos.alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-    )
+    return rows, [
+        (int(r["cell"]), [float(x) for x in r["cv"]], float(r["cn"])) for r in rows
+    ]
+
+
+def _probed_scan(spark, path: str, probes: DataFrame) -> DataFrame:
+    """ONE scan of a ``partitionBy(cell)`` layout that reads only the
+    probed cell directories (``cell IN (...)`` prunes at plan time).
+    The distinct probed cells (<= |cells| rows whatever the query
+    batch — a metadata-scale driver hop) become the partition filter;
+    the per-query probe rows stay distributed."""
+    cells = sorted(int(r["cell"]) for r in probes.select("cell").distinct().collect())
+    return spark.read.parquet(path).where(F.col("cell").isin(cells))
 
 
 # spherical k-means defaults: 8 seeds drawn from the same id lattice
@@ -1159,13 +1173,7 @@ def quantized_cosine_topk(
 
     Returns (q_id, vec_id, rank, qcos_sim), rank by (cos desc, vec_id).
     """
-    qz = quantize_int8(emb)
-    v = _as_double(F.col("q"))
-    base = qz.select(
-        "vec_id",
-        v.alias("v"),
-        F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm"),
-    ).where(F.col("nrm") > 0)
+    base = _with_norm(quantize_int8(emb), "q").where(F.col("nrm") > 0)
     return _brute_topk(base, n_queries, k, "qcos_sim")
 
 
@@ -1273,52 +1281,22 @@ def contrastive_pairs(
     the corpus is never scanned twice). Returns ``(q_id, pos_id,
     neg_id, neg_rank, pos_cos, neg_cos, margin)``.
     """
-    v = _as_double(F.col("embedding"))
-    base = emb.select(
-        "vec_id",
-        "label",
-        v.alias("v"),
-        F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm"),
+    base = _with_norm(emb, keep=("vec_id", "label"))
+    q = _queries(base.where(F.col("vec_id") < n_queries), F.col("label").alias("q_label"))
+    scored = _cross_scored(
+        q,
+        base,
+        F.col("vec_id") != F.col("q_id"),
+        (F.col("label") == F.col("q_label")).alias("same"),
     )
-    q = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
+    pos = _topk(scored.where(F.col("same")), 1, "cos_sim").select(
+        "q_id", F.col("vec_id").alias("pos_id"), F.col("cos_sim").alias("pos_cos")
     )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            (F.col("label") == F.col("q_label")).alias("same"),
-            cos.alias("cos_sim"),
-        )
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    pos = (
-        scored.where(F.col("same"))
-        .withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") == 1)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("pos_id"),
-            F.col("cos_sim").alias("pos_cos"),
-        )
-    )
-    neg = (
-        scored.where(~F.col("same"))
-        .withColumn("neg_rank", F.row_number().over(wp))
-        .where(F.col("neg_rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neg_id"),
-            F.col("neg_rank").cast("long").alias("neg_rank"),
-            F.col("cos_sim").alias("neg_cos"),
-        )
+    neg = _topk(scored.where(~F.col("same")), k, "cos_sim").select(
+        "q_id",
+        F.col("vec_id").alias("neg_id"),
+        F.col("rank").alias("neg_rank"),
+        F.col("cos_sim").alias("neg_cos"),
     )
     margin = (
         F.floor((F.col("pos_cos") - F.col("neg_cos")) * 1e6 + F.lit(0.5))
@@ -1955,9 +1933,7 @@ def hard_negative_topk(
     no embedding surface; this is the training-data-pipeline
     extension over the same `embeddings` table as :func:`cosine_topk`).
 
-    Semantics: similarity ranking identical to :func:`cosine_topk`
-    (6-dp cosine, ties broken by vec_id asc); the label inequality
-    replaces the self-exclusion (a vector shares its own label, so
+    Semantics: the label inequality replaces the self-exclusion (a vector shares its own label, so
     self never qualifies). NULL-labeled rows drop out on both sides
     (``!=`` is NULL) — same contract in Spark and the oracle.
 
@@ -1970,32 +1946,9 @@ def hard_negative_topk(
 
     Returns ``(q_id, vec_id, rank, cos_sim)``.
     """
-    v = _as_double(F.col("embedding"))
-    base = emb.select(
-        "vec_id",
-        "label",
-        v.alias("v"),
-        F.sqrt(_fold_sum(F.transform(v, lambda x: x * x))).alias("nrm"),
-    )
-    q = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(base)
-        .where(F.col("label") != F.col("q_label"))
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "cos_sim")
-    )
+    base = _with_norm(emb, keep=("vec_id", "label"))
+    q = _queries(base.where(F.col("vec_id") < n_queries), F.col("label").alias("q_label"))
+    return _topk(_cross_scored(q, base, F.col("label") != F.col("q_label")), k, "cos_sim")
 
 
 def oracle_hard_negative_topk(
@@ -2171,25 +2124,33 @@ def pq_adc_topk(
     Returns ``(q_id, vec_id, rank, adist)``; adist = Σ_s d2m lookups.
     """
     cws = _pq_codewords(emb, codeword_ids)
-    sub = dim // m
     codes = pq_encode(emb, codeword_ids, m, dim)
     qframe = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"),
         _as_double(F.col("embedding")).alias("r"),
     )
-    qtab = _pq_grid(qframe, cws, m, sub, ("q_id",), argmin_only=False)
+    return _adc_topk(codes, qframe, ("q_id",), cws, m, dim // m, k)
+
+
+def _adc_topk(
+    codes: DataFrame, qframe: DataFrame, qkeys, cws, m: int, sub: int, k: int
+) -> DataFrame:
+    """The ADC scorer every PQ search shares: per-query distance tables
+    from ``qframe`` (``(*qkeys, r)``; ``qkeys`` is ``("q_id",)``, or
+    ``("q_id", "cell")`` for IVF-PQ's per-(query, cell) residual
+    tables), broadcast and equi-joined to the codes on ``(s, code)``
+    or ``(cell, s, code)``, one integer-sum groupBy per (query,
+    vector), top-k by (adist asc, vec_id asc). No float crosses rows:
+    distances are int64 micro-units, so the sum and the ranking are
+    engine-exact."""
+    qtab = _pq_grid(qframe, cws, m, sub, qkeys, argmin_only=False)
     scored = (
-        codes.join(F.broadcast(qtab), ["s", "code"])
+        codes.join(F.broadcast(qtab), [*qkeys[1:], "s", "code"])
         .where(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d2m").cast("long").alias("adist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "adist")
-    )
+    return _topk(scored, k, "adist", ascending=True)
 
 
 def pq_rerank_topk(
@@ -2203,39 +2164,15 @@ def pq_rerank_topk(
 ) -> DataFrame:
     """Production PQ serving: ADC shortlist of ``c`` candidates per
     query (:func:`pq_adc_topk` with k = c — the scan never touches raw
-    vectors), then EXACT squared-L2 rerank of the shortlist only. The
-    rerank join is candidate-count-sized (n_queries · c rows against
-    the corpus by key — an equi-join that reads c vectors per query,
-    never a second corpus scan shape). Exactness contract: true d2 is
-    the same index-order fold floor-lifted to int64 micro-units;
-    ranking is (d2 asc, vec_id asc).
+    vectors), then the EXACT squared-L2 :func:`_exact_rerank` of the
+    shortlist only.
 
     Returns ``(q_id, vec_id, rank, d2_micro)`` — rank 1..k by exact
     distance among the shortlist."""
     shortlist = pq_adc_topk(emb, n_queries, c, codeword_ids, m, dim).select(
         "q_id", "vec_id"
     )
-    v = _as_double(F.col("embedding"))
-    base = emb.select("vec_id", v.alias("v"))
-    q = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    d2 = _fold_sum(F.zip_with(F.col("qv"), F.col("v"), lambda x, y: (x - y) * (x - y)))
-    scored = (
-        shortlist.join(base, "vec_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            F.floor(d2 * F.lit(1e6) + F.lit(0.5)).cast("long").alias("d2_micro"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("d2_micro"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "d2_micro")
-    )
+    return _exact_rerank(shortlist, emb, n_queries, k)
 
 
 def _pq_adc_sql(codeword_ids, m: int, dim: int, n_queries: int) -> str:
@@ -2357,69 +2294,63 @@ def ivfpq_topk(
 
     Returns ``(q_id, vec_id, rank, adist)`` over the probed cells.
     """
-    spark = emb.sparkSession
+    cents, cws = _ivfpq_codebooks(emb, centroid_ids, codeword_ids)
     base = _with_norm(emb)
-    # ONE literal-fetch job for both dim tables: centroid and codeword
-    # ids share a corpus filter-scan, so fetching them separately paid
-    # a second fixed-cost Spark job for zero information (bench: ~0.9 s
-    # of the ivfpq wall). Ordering contracts preserved: both fetchers
-    # sort by vec_id.
-    all_ids = sorted(set(centroid_ids) | set(codeword_ids))
-    fetched = (
-        _with_norm(emb.where(F.col("vec_id").isin(*all_ids)))
-        .orderBy("vec_id")
-        .collect()
-    )
+    codes = _ivfpq_encode(base, cents, cws, m, dim)
+    probes = _probes(base.where(F.col("vec_id") < n_queries), cents, nprobe)
+    return _ivfpq_search(codes, probes, base, cents, cws, m, dim, k)
+
+
+def _ivfpq_codebooks(emb: DataFrame, centroid_ids, codeword_ids):
+    """Both IVF-PQ dim tables in ONE literal-fetch job: centroid and
+    codeword ids share a corpus filter-scan, so fetching them
+    separately paid a second fixed-cost Spark job for zero information
+    (bench: ~0.9 s of the ivfpq wall). Returns the ``(cell, cv, cn)``
+    centroids and the codewords, each in ascending vec_id order."""
     by_id = {
-        int(r["vec_id"]): ([float(x) for x in r["v"]], float(r["nrm"]))
-        for r in fetched
+        i: (v, n)
+        for i, v, n in _centroid_literals(
+            emb, sorted(set(centroid_ids) | set(codeword_ids))
+        )
     }
-    cents = [(i, by_id[i][0], by_id[i][1]) for i in sorted(centroid_ids)]
-    cws = [by_id[i][0] for i in sorted(codeword_ids)]
-    sub = dim // m
-    cdf = spark.createDataFrame(
+    cents = [(i, *by_id[i]) for i in sorted(centroid_ids)]
+    return cents, [by_id[i][0] for i in sorted(codeword_ids)]
+
+
+def _residuals(frame: DataFrame, cents, id_col: str) -> DataFrame:
+    """``(id_col, cell, r)``: each row's vector ``v`` minus its
+    ``cell``'s centroid (the centroid table joins by broadcast)."""
+    cdf = frame.sparkSession.createDataFrame(
         [(int(cell), [float(x) for x in cv]) for cell, cv, _ in cents],
         "cell long, cent array<double>",
     )
-    # assignment as a pure projection (bit-identical to the
-    # _nearest_cells(…, 1) rule, parity test-pinned): carrying the cell
-    # on the corpus row avoids the base ⋈ assign self-join — one corpus
-    # Exchange removed (r09; the layout builder already used this form)
-    res = (
-        base.withColumn("cell", _cell_projection(cents))
-        .join(F.broadcast(cdf), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with("v", "cent", lambda x, c: x - c).alias("r"),
-        )
+    return frame.join(F.broadcast(cdf), "cell").select(
+        id_col, "cell", F.zip_with("v", "cent", lambda x, c: x - c).alias("r")
     )
-    codes = _pq_grid(res, cws, m, sub, ("vec_id", "cell"), argmin_only=True)
-    probes = _nearest_cells(base.where(F.col("vec_id") < n_queries), cents, nprobe).select(
-        F.col("vec_id").alias("q_id"), "cell"
+
+
+def _ivfpq_encode(base: DataFrame, cents, cws, m: int, dim: int) -> DataFrame:
+    """``(vec_id, cell, s, code)``: each vector of a ``(vec_id, v,
+    nrm)`` frame in its nearest cell (a pure projection, bit-identical
+    to the ``_nearest_cells(…, 1)`` rule — carrying the cell on the
+    corpus row avoids a base ⋈ assign self-join) and the PQ codes of
+    its cell residual. One corpus pass, no shuffle: what
+    :func:`write_ivfpq_layout` stores and :func:`ivfpq_topk` scores."""
+    res = _residuals(_assign_cells(base, cents, 1), cents, "vec_id")
+    return _pq_grid(res, cws, m, dim // m, ("vec_id", "cell"), argmin_only=True)
+
+
+def _ivfpq_search(
+    codes: DataFrame, probes: DataFrame, qvecs: DataFrame, cents, cws, m: int, dim: int, k: int
+) -> DataFrame:
+    """The IVF-PQ search both forms share: each probed (query, cell)
+    pair's residual (the query vector from ``qvecs``, a ``(vec_id, v)``
+    frame joined on q_id) becomes an ADC table scored against the
+    ``(vec_id, cell, s, code)`` codes on (cell, s, code)."""
+    qres = _residuals(
+        probes.join(qvecs.select(F.col("vec_id").alias("q_id"), "v"), "q_id"), cents, "q_id"
     )
-    qres = (
-        probes.join(
-            base.select(F.col("vec_id").alias("q_id"), "v"), "q_id"
-        )
-        .join(F.broadcast(cdf), "cell")
-        .select(
-            "q_id", "cell", F.zip_with("v", "cent", lambda x, c: x - c).alias("r")
-        )
-    )
-    qtab = _pq_grid(qres, cws, m, sub, ("q_id", "cell"), argmin_only=False)
-    scored = (
-        codes.join(F.broadcast(qtab), ["cell", "s", "code"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("d2m").cast("long").alias("adist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "adist")
-    )
+    return _adc_topk(codes, qres, ("q_id", "cell"), cws, m, dim // m, k)
 
 
 def oracle_ivfpq_topk(
@@ -2545,9 +2476,9 @@ def _exact_rerank(
     shortlist: DataFrame, emb: DataFrame, n_queries: int, k: int
 ) -> DataFrame:
     """EXACT squared-L2 rerank of a (q_id, vec_id) shortlist against
-    the raw vectors — the recall-recovery half of IVFADC-R, shared by
-    the inline (:func:`ivfpq_rerank_topk`) and layout-served
-    (:func:`ivfpq_rerank_from_layout`) forms. The rerank join is
+    the raw vectors — the recall-recovery half of :func:`pq_rerank_topk`,
+    :func:`ivfpq_rerank_topk` and :func:`ivfpq_rerank_from_layout`. The
+    rerank join is
     shortlist-sized (n_queries · c rows) against the corpus — a
     broadcast-able equi-join at any corpus scale; the query side stays
     a pushed-down ``vec_id < n_queries`` scan."""
@@ -2568,14 +2499,7 @@ def _exact_rerank(
             F.floor(d2 * F.lit(1e6) + F.lit(0.5)).cast("long").alias("d2_micro"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("d2_micro"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "d2_micro"
-        )
-    )
+    return _topk(scored, k, "d2_micro", ascending=True)
 
 
 def oracle_ivfpq_rerank_topk(
@@ -2637,52 +2561,18 @@ def write_ivfpq_layout(
     every call — at 100 TB that is the difference between one build
     pass and one per query batch.
 
-    Build cost: ONE literal-fetch job for both codebooks (same fused
-    fetch as :func:`ivfpq_topk`), then one corpus pass — assignment is
-    a pure projection (:func:`_cell_projection`, bit-identical to the
-    ``_nearest_cells(…, 1)`` rule), the centroid join is broadcast, and
-    the PQ encode is the Arrow :func:`_pq_grid` kernel. No corpus-side
-    shuffle before partitionBy's task-side split."""
+    Build cost: ONE literal-fetch job for both codebooks, then the one
+    corpus pass of :func:`_ivfpq_encode`. No corpus-side shuffle before
+    partitionBy's task-side split."""
     spark = emb.sparkSession
-    all_ids = sorted(set(centroid_ids) | set(codeword_ids))
-    fetched = (
-        _with_norm(emb.where(F.col("vec_id").isin(*all_ids)))
-        .orderBy("vec_id")
-        .collect()
-    )
-    by_id = {
-        int(r["vec_id"]): ([float(x) for x in r["v"]], float(r["nrm"]))
-        for r in fetched
-    }
-    cents = [(i, by_id[i][0], by_id[i][1]) for i in sorted(centroid_ids)]
-    cws = [by_id[i][0] for i in sorted(codeword_ids)]
+    cents, cws = _ivfpq_codebooks(emb, centroid_ids, codeword_ids)
     spark.createDataFrame(
-        [(cell, cv, cn) for cell, cv, cn in cents],
-        "cell long, cv array<double>, cn double",
+        cents, "cell long, cv array<double>, cn double"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}__centroids")
     spark.createDataFrame(
-        [(j, cw) for j, cw in enumerate(cws)],
-        "j long, cwv array<double>",
+        list(enumerate(cws)), "j long, cwv array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}__codewords")
-    sub = dim // m
-    cdf = spark.createDataFrame(
-        [(int(cell), [float(x) for x in cv]) for cell, cv, _ in cents],
-        "cell long, cent array<double>",
-    )
-    v = _as_double(F.col("embedding"))
-    nrm = F.sqrt(_fold_sum(F.transform(v, lambda x: x * x)))
-    res = (
-        emb.withColumn("v", v)
-        .withColumn("nrm", nrm)
-        .withColumn("cell", _cell_projection(cents))
-        .join(F.broadcast(cdf), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with("v", "cent", lambda x, c: x - c).alias("r"),
-        )
-    )
-    codes = _pq_grid(res, cws, m, sub, ("vec_id", "cell"), argmin_only=True)
+    codes = _ivfpq_encode(_with_norm(emb), cents, cws, m, dim)
     codes.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
@@ -2702,63 +2592,23 @@ def ivfpq_topk_from_layout(
     only the probed cell directories of the CODES table
     (``cell IN (...)`` lands in PartitionFilters — asserted in the
     test). Zero per-search corpus work: no assignment, no residual
-    encode — the scan is m int64 codes per candidate, and the scoring
-    join is the same (cell, s, code) equi against the broadcast
-    per-(query, cell) residual distance tables as :func:`ivfpq_topk`,
-    whose output this matches exactly (parity pinned by a test).
-
-    The probe assignment stays a distributed DataFrame end-to-end; the
-    only driver hop is the distinct probed-cell set for the plan-time
-    partition filter, bounded by |centroids|, not |queries| (the test
-    pins that bound by intercepting collect())."""
-    cents = [
-        (int(r["cell"]), [float(x) for x in r["cv"]], float(r["cn"]))
-        for r in spark.read.parquet(f"{path}__centroids").collect()
-    ]
-    cents.sort()
+    encode — the scan is m int64 codes per candidate, scored by
+    :func:`ivfpq_topk`'s search, whose output this matches exactly
+    (parity pinned by a test). Every collect is bounded by |centroids|,
+    not |queries| (the test pins that bound by intercepting
+    collect())."""
+    _, cents = _layout_centroids(spark, path)
     cwrows = spark.read.parquet(f"{path}__codewords").collect()
     cws = [
         [float(x) for x in r["cwv"]]
         for r in sorted(cwrows, key=lambda r: int(r["j"]))
     ]
-    sub = dim // m
     qbase = _with_norm(queries)
-    probes = _nearest_cells(qbase, cents, nprobe).select(
-        F.col("vec_id").alias("q_id"), "cell"
+    probes = _probes(qbase, cents, nprobe)
+    codes = _probed_scan(spark, path, probes).select(
+        "vec_id", F.col("cell").cast("long").alias("cell"), "s", "code"
     )
-    # metadata-scale driver hop: distinct probed cells (<= |cells|)
-    probe_cells = sorted(
-        int(r["cell"]) for r in probes.select("cell").distinct().collect()
-    )
-    codes = (
-        spark.read.parquet(path)
-        .where(F.col("cell").isin(probe_cells))
-        .select("vec_id", F.col("cell").cast("long").alias("cell"), "s", "code")
-    )
-    cdf = spark.createDataFrame(
-        [(int(cell), [float(x) for x in cv]) for cell, cv, _ in cents],
-        "cell long, cent array<double>",
-    )
-    qres = (
-        probes.join(qbase.select(F.col("vec_id").alias("q_id"), "v"), "q_id")
-        .join(F.broadcast(cdf), "cell")
-        .select(
-            "q_id", "cell", F.zip_with("v", "cent", lambda x, c: x - c).alias("r")
-        )
-    )
-    qtab = _pq_grid(qres, cws, m, sub, ("q_id", "cell"), argmin_only=False)
-    scored = (
-        codes.join(F.broadcast(qtab), ["cell", "s", "code"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("d2m").cast("long").alias("adist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.col("rank").cast("long").alias("rank"), "adist")
-    )
+    return _ivfpq_search(codes, probes, qbase, cents, cws, m, dim, k)
 
 
 def ivfpq_rerank_from_layout(

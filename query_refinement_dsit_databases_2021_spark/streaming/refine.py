@@ -20,6 +20,7 @@ file-source offsets; there is no driver-side accumulation of data.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -108,29 +109,18 @@ def upsert_on_stream(
     query resumes from the last committed version. Returns the
     ``foreachBatch`` function.
     """
-    import os
-
     from query_refinement_dsit_databases_2021_spark.operators.cdc import merge_upsert
-
-    def latest_version():
-        if not os.path.isdir(snapshot_root):
-            return None
-        vs = sorted(
-            int(d[1:]) for d in os.listdir(snapshot_root)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        return vs[-1] if vs else None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         updates = batch_df.select(key, ts, tiebreak, value)
-        cur = latest_version()
-        if cur is None:
+        vs = _committed_versions(snapshot_root)
+        if not vs:
             base = spark.createDataFrame(
                 [], f"{key} long, {ts} timestamp, {value} double"
             )
         else:
-            base = spark.read.parquet(f"{snapshot_root}/v{cur}")
+            base = spark.read.parquet(f"{snapshot_root}/v{vs[-1]}")
         new_snap = merge_upsert(
             base, updates, key=key, ts=ts, tiebreak=tiebreak, value=value
         )
@@ -141,15 +131,24 @@ def upsert_on_stream(
     return process_batch
 
 
-def read_snapshot(spark, snapshot_root: str) -> DataFrame:
-    """Resolve the highest committed snapshot version (see
-    :func:`upsert_on_stream`'s commit protocol)."""
-    import os
-
-    vs = sorted(
+def _committed_versions(snapshot_root: str) -> list[int]:
+    """The committed ``v<N>`` version numbers under ``snapshot_root``,
+    ascending; empty when the root is missing or holds no version."""
+    if not os.path.isdir(snapshot_root):
+        return []
+    return sorted(
         int(d[1:]) for d in os.listdir(snapshot_root)
         if d.startswith("v") and d[1:].isdigit()
     )
+
+
+def read_snapshot(spark, snapshot_root: str) -> DataFrame:
+    """Resolve the highest committed snapshot version (see
+    :func:`upsert_on_stream`'s commit protocol). Raises
+    ``FileNotFoundError`` when the root holds no committed version."""
+    vs = _committed_versions(snapshot_root)
+    if not vs:
+        raise FileNotFoundError(f"no committed snapshot version under {snapshot_root}")
     return spark.read.parquet(f"{snapshot_root}/v{vs[-1]}")
 
 
@@ -164,15 +163,11 @@ def sweep_snapshot_versions(snapshot_root: str, keep: int = 2) -> list[int]:
     formats make: commits stay cheap and readers define the retention
     window, not the writer.
     """
-    import os
     import shutil
 
     if keep < 1:
         raise ValueError("keep must be >= 1")
-    vs = sorted(
-        int(d[1:]) for d in os.listdir(snapshot_root)
-        if d.startswith("v") and d[1:].isdigit()
-    )
+    vs = _committed_versions(snapshot_root)
     doomed = vs[:-keep] if len(vs) > keep else []
     for v in doomed:
         shutil.rmtree(os.path.join(snapshot_root, f"v{v}"))

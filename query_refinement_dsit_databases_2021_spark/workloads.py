@@ -80,7 +80,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 SERIES_SQL = "SELECT event_id + 1 AS time_id, value AS y FROM events"
 
 
-def _run_cp(query_text: str) -> Callable[[SparkSession, str], DataFrame]:
+def _run_cp(
+    query_text: str, include_scores: bool = False
+) -> Callable[[SparkSession, str], DataFrame]:
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from query_refinement_dsit_databases_2021_spark.plans.executor import Engine
 
@@ -88,25 +90,20 @@ def _run_cp(query_text: str) -> Callable[[SparkSession, str], DataFrame]:
         series = spark.sql(SERIES_SQL)
         engine = Engine(spark)
         engine.register_series("events_series", series)
-        return engine.execute(query_text)
+        return engine.execute(query_text, include_scores=include_scores)
 
     return fn
 
 
 def _run_cp_scores(query_text: str) -> Callable[[SparkSession, str], DataFrame]:
-    """Like :func:`_run_cp` but exposing the refinement score column
-    (rk on the tighten path, rp on relax; C4 surface) rounded to 6 dp
-    as ``score`` — value-checked against the oracle's own R1-R4
+    """:func:`_run_cp` exposing the refinement score column (rk on the
+    tighten path, rp on relax; C4 surface) rounded to 6 dp as
+    ``score`` — value-checked against the oracle's own R1-R4
     computation, not just row membership."""
+    run = _run_cp(query_text, include_scores=True)
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from query_refinement_dsit_databases_2021_spark.plans.executor import Engine
-
-        register_views(spark, sf_dir)
-        series = spark.sql(SERIES_SQL)
-        engine = Engine(spark)
-        engine.register_series("events_series", series)
-        out = engine.execute(query_text, include_scores=True)
+        out = run(spark, sf_dir)
         score = next(c for c in out.columns if c in ("rk", "rp"))
         return out.select(
             "time_id", "offset", F.round(F.col(score), 6).alias("score")

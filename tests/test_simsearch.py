@@ -37,6 +37,64 @@ def test_brute_force_hand_vectors(tiny):
     assert out[(0, 3)] == (3, -1.0)  # opposite
 
 
+@pytest.fixture(scope="module")
+def ties(spark):
+    # query e0 against e1, e2, 2·e0 and e0: cosine ties at 1.0 (ids 3,
+    # 4) and 0.0 (ids 1, 2); squared-L2 ties at 2.0 (ids 1, 2). The
+    # query alone has label 0, so hard negatives see every other row.
+    def e(i, scale=1.0):
+        return [scale if d == i else 0.0 for d in range(64)]
+
+    rows = [(0, e(0), 0), (1, e(1), 1), (2, e(2), 1), (3, e(0, 2.0), 1), (4, e(0), 1)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+
+@pytest.mark.parametrize(
+    "search, want",
+    [
+        ("cosine", [3, 4, 1]),
+        ("ivf", [3, 4, 1]),
+        ("ivf_layout", [3, 4, 1]),
+        ("hard_negative", [3, 4, 1]),
+        ("pq_adc", [4, 3, 1]),
+        ("pq_rerank", [4, 3, 1]),
+    ],
+)
+def test_topk_orders_ties_by_vec_id(spark, ties, tmp_path, search, want):
+    """Every search ranks exact score ties by vec_id asc, numbers
+    ranks 1..k as ``long`` and never returns the query itself. k = 3
+    cuts through the (1, 2) tie, so id 1 must be kept over id 2."""
+    from pyspark.sql.types import LongType
+
+    ids = (0, 1, 2, 3, 4)
+    if search == "cosine":
+        out = simsearch.cosine_topk(ties, n_queries=1, k=3)
+    elif search == "ivf":
+        out = simsearch.ivf_ann_topk(
+            ties, n_queries=1, k=3, centroid_ids=ids, nprobe=len(ids)
+        )
+    elif search == "ivf_layout":
+        path = str(tmp_path / "ivf_ties")
+        simsearch.write_ivf_layout(ties, path, centroid_ids=ids)
+        queries = ties.where(F.col("vec_id") < 1)
+        out = simsearch.ivf_topk_from_layout(spark, path, queries, k=3, nprobe=len(ids))
+    elif search == "hard_negative":
+        out = simsearch.hard_negative_topk(ties, n_queries=1, k=3)
+    elif search == "pq_adc":
+        out = simsearch.pq_adc_topk(ties, n_queries=1, k=3, codeword_ids=ids)
+    else:
+        out = simsearch.pq_rerank_topk(ties, n_queries=1, k=3, c=4, codeword_ids=ids)
+    assert out.schema["rank"].dataType == LongType()
+    rows = sorted(out.collect(), key=lambda r: r["rank"])
+    score = out.columns[3]
+    assert [r["rank"] for r in rows] == [1, 2, 3]
+    assert [r["vec_id"] for r in rows] == want
+    assert all(r["q_id"] == 0 != r["vec_id"] for r in rows)
+    assert all(
+        a["vec_id"] < b["vec_id"] for a, b in zip(rows, rows[1:]) if a[score] == b[score]
+    )
+
+
 def test_lsh_recall_on_real_embeddings(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     exact = {

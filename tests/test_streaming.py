@@ -404,6 +404,21 @@ def test_sweep_snapshot_versions_keeps_newest(spark, tmp_path):
     assert read_snapshot(spark, root).collect()[0]["value"] == 2.0
 
 
+def test_read_snapshot_without_committed_version_names_root(spark, tmp_path):
+    from query_refinement_dsit_databases_2021_spark.streaming.refine import (
+        read_snapshot,
+    )
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    stray = tmp_path / "stray"
+    (stray / "vtmp").mkdir(parents=True)
+    (stray / "_SUCCESS").write_text("")
+    for root in (empty, stray):
+        with pytest.raises(FileNotFoundError, match=str(root)):
+            read_snapshot(spark, str(root))
+
+
 def test_windowed_uniques_matches_batch_distinct(spark, events_dir):
     # dedup-then-count (the streaming COUNT DISTINCT shape): with a
     # watermark covering the whole span no dedup state expires, so the
