@@ -228,11 +228,10 @@ def minhash_lsh_pairs(
     organic buckets are tiny — the cap exists purely to bound the
     adversarial/template tail at corpus scale.
     """
-    wide = (
-        sig_wide
-        if sig_wide is not None
-        else minhash_signatures_wide(docs, n_hashes).persist()
-    )
+    # a caller-passed sig_wide is the caller's to release; one persisted
+    # here is tied to the result (the ngram_jaccard_pairs rule)
+    own = sig_wide is None
+    wide = minhash_signatures_wide(docs, n_hashes).persist() if own else sig_wide
     bsig = lsh_band_signatures(wide, rows_per_band, n_hashes)
     if max_bucket is not None:
         w = Window.partitionBy("band", "sig")
@@ -273,7 +272,8 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b", (k / float(n_hashes)).alias("est_sim"))
         .where(F.col("est_sim") >= threshold)
     )
-    return est.select("doc_a", "doc_b", F.round("est_sim", 6).alias("est_sim"))
+    out = est.select("doc_a", "doc_b", F.round("est_sim", 6).alias("est_sim"))
+    return _release_with(out, wide) if own else out
 
 
 # lsh_bucket_advisor decision constants (r06 verdict item 7). The
@@ -1456,9 +1456,8 @@ def ngram_containment_pairs(
     shingles, sizes keep them), same documented contract. Returns
     ``(doc_a, doc_b, inter_size, cont_ppm)`` with doc_a < doc_b.
     """
-    sh = (
-        shingle_rows if shingle_rows is not None else shingles(docs).persist()
-    )
+    own = shingle_rows is None  # as in ngram_jaccard_pairs
+    sh = shingles(docs).persist() if own else shingle_rows
     if max_posting is not None:
         w = Window.partitionBy("s")
         joined_sh = (
@@ -1478,7 +1477,7 @@ def ngram_containment_pairs(
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
+    out = (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
         .select(
@@ -1491,6 +1490,7 @@ def ngram_containment_pairs(
         )
         .where(F.col("cont_ppm") >= threshold_ppm)
     )
+    return _release_with(out, sh) if own else out
 
 
 def ngram_containment_pairs_advised(

@@ -2092,10 +2092,13 @@ def pq_encode(
     at 100 TB this is a map-only pass exactly like IVF assignment,
     with the distance grid as a vectorized numpy kernel instead of a
     Catalyst expression forest (20-30× faster, bit-identical)."""
-    cws = _pq_codewords(emb, codeword_ids)
-    sub = dim // m
+    return _pq_codes(emb, _pq_codewords(emb, codeword_ids), m, dim)
+
+
+def _pq_codes(emb: DataFrame, cws, m: int, dim: int) -> DataFrame:
+    """:func:`pq_encode` against an already fetched codebook ``cws``."""
     frame = emb.select("vec_id", _as_double(F.col("embedding")).alias("r"))
-    return _pq_grid(frame, cws, m, sub, ("vec_id",), argmin_only=True)
+    return _pq_grid(frame, cws, m, dim // m, ("vec_id",), argmin_only=True)
 
 
 def pq_adc_topk(
@@ -2124,7 +2127,7 @@ def pq_adc_topk(
     Returns ``(q_id, vec_id, rank, adist)``; adist = Σ_s d2m lookups.
     """
     cws = _pq_codewords(emb, codeword_ids)
-    codes = pq_encode(emb, codeword_ids, m, dim)
+    codes = _pq_codes(emb, cws, m, dim)
     qframe = emb.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"),
         _as_double(F.col("embedding")).alias("r"),

@@ -1,31 +1,43 @@
-"""Time-series analytics operators (TSDB breadth).
+"""Time-series analytics operators over the ``events`` table.
 
-The reference is a time-series CP engine (SURVEY §0) but ships no
-resampling / gap-filling / downsampling surface — its time axis is a
-dense integer key, so those ops are trivially absent. A TSDB user
-expects them, and the driver's category for this build is ``tsdb``, so
-we provide the standard family over event-time data, Spark-first:
+The reference engine's time axis is a dense integer key, so it ships no
+resampling, gap-filling or forecasting surface; this module supplies
+the TSDB family over event-time data, Spark-first. Every operator is
+paired with a DuckDB oracle (an ``ORACLE_*`` constant or a
+``_*_oracle()`` function) and registered by :func:`timeseries_workloads`
+as one of 45 ``ts_*`` workloads: rollups (OHLC, M4, LTTB, histograms,
+percentiles, time-weighted averages), gap handling (LOCF,
+interpolation, gap detection), smoothing and trend (moving stats,
+EWMA, OLS, Theil–Sen, Mann–Kendall, STL), anomaly and change detection
+(z-score, MAD, seasonal, CUSUM, level shift, episodes), forecasting
+(Holt, Holt-Winters, AR(1), backtests, model selection, Ljung–Box),
+correlation (cross-correlation, ACF) and similarity (SAX, DTW, matrix
+profile).
 
-- :func:`resample_ohlc` — bucketed first/last/min/max (OHLC) rollup;
-  ``first``/``last`` are made deterministic by ordering on a unique
-  tiebreak column (``min_by``/``max_by``), not arrival order.
-- :func:`gapfill_locf` — dense bucket spine + last-observation-carried-
-  forward fill.
-- :func:`gapfill_interp` — dense spine + linear interpolation between
-  the surrounding observations.
-- :func:`moving_stats` — trailing moving average / stddev over a
-  resampled series.
-- :func:`rate_of_change` — per-entity discrete derivative on an
-  irregular time axis (lag-based).
+Each repeated step has one private definition:
 
-Scale notes (100 TB): every operator here is a single hash shuffle on
-its grouping key (bucket × series key) or one window sort partitioned
-by the series key — no global ordering anywhere. The gap-fill spine is
-built per partition key via ``sequence``/``explode``, so its size is
-(span / step) rows per key, independent of the input row count; the
-fill itself is one window pass. ``rate_of_change`` partitions by the
-entity key, so skew follows entity hotness — salt via
-``operators.scale.salted_join`` patterns if one entity dominates.
+- :func:`_cents` — the ``floor(x*100 + 0.5)`` integer-cents lift. Sums
+  of cents are exact int64, so no aggregate depends on partitioning or
+  on the engine.
+- :func:`_bucket_cents` — the per-(key, bucket) cents sum ``(key, t,
+  y)`` every daily or hourly series starts from.
+- :func:`_per_key_fit` — strategy P: a sequential fit with no
+  scan-parallel form runs per key in ``applyInPandas`` over the
+  t-ordered int list, while the aggregation stays JVM-side.
+- :func:`_holt` — the integer Holt recursion; :func:`_holt_sql` builds
+  the matching recursive-CTE oracle, and :func:`_fdiv` pins floor
+  division on DuckDB's truncating ``//``.
+- :func:`_dtw` — one DTW over raw or PAA-compressed series, one DP
+  expression per engine; :func:`_mp_from_series` — one banded matrix
+  profile over the capped or PAA series.
+
+Scale notes (100 TB): every operator is a hash shuffle on its grouping
+key (bucket × series key) or a window sort partitioned by the series
+key — no global ordering except the matrix profile's capped series.
+The gap-fill spine is (span / step) rows per key, independent of the
+input row count. Sequential fits see only bucket-count-sized series.
+Skew follows key hotness — salt via ``operators.scale.salted_join``
+patterns if one key dominates.
 """
 
 from __future__ import annotations
@@ -41,6 +53,38 @@ def bucket_start(ts, width: str):
     bucketing ``F.window(ts, width)`` applies, exposed as a plain
     column (epoch-aligned, like DuckDB/TimescaleDB ``time_bucket``)."""
     return F.window(ts, width).start
+
+
+def _cents(col: str):
+    """Integer cents, half up: ``floor(x*100 + 0.5)`` — a long, since
+    Spark's floor of a double is one."""
+    return F.floor(F.col(col) * 100 + F.lit(0.5))
+
+
+def _bucket_cents(
+    events: DataFrame, bucket, key: str = "event_type", value: str = "value"
+) -> DataFrame:
+    """Per-(key, bucket) cents sum ``(key, t, y)``: ``t`` is the
+    ``bucket`` column (a day, an hour or an epoch index) and ``y`` the
+    exact int64 sum of :func:`_cents`. One map-combinable hash agg."""
+    return events.groupBy(F.col(key).alias("key"), bucket.alias("t")).agg(
+        F.sum(_cents(value)).alias("y")
+    )
+
+
+def _epoch_day(ts: str):
+    return F.datediff(F.to_date(ts), F.lit("1970-01-01"))
+
+
+def _day_index(events: DataFrame, ts: str, key: str, value: str) -> DataFrame:
+    """Daily cents against a 0-based per-key day index: ``(key, x, y)``.
+    A small x keeps the regression sums exact, and puts each key's
+    intercept at its own first day."""
+    # renamed before the window, so the later per-key aggs and joins
+    # reuse its partitioning instead of shuffling again
+    daily = _bucket_cents(events, _epoch_day(ts), key, value).toDF(key, "d", "y")
+    x = F.col("d") - F.min("d").over(Window.partitionBy(key))
+    return daily.select(key, x.cast("long").alias("x"), "y")
 
 
 def resample_ohlc(
@@ -388,10 +432,7 @@ def changepoint_cusum(
     one key-sized join. Returns one row per key:
     ``(key, cp_day, s_scaled, pre_mean_cents, post_mean_cents)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = events.groupBy(F.to_date(ts).alias("day"), F.col(key)).agg(
-        F.sum(cents).alias("x")
-    )
+    daily = _bucket_cents(events, F.to_date(ts), key, value).toDF(key, "day", "x")
     w = Window.partitionBy(key).orderBy("day")
     d2 = daily.withColumn("t", F.row_number().over(w)).withColumn(
         "p", F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -479,9 +520,10 @@ def ewma_crossover(
     Returns crossover days only: ``(day, key, fast, slow, direction)``
     with direction ∈ {−1, 0, 1} = the NEW side of the cross.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = events.groupBy(F.to_date(ts).alias("day"), F.col(key)).agg(
-        (F.sum(cents) / F.lit(100.0)).alias("total")
+    daily = _bucket_cents(events, F.to_date(ts), key, value).select(
+        F.col("key").alias(key),
+        F.col("t").alias("day"),
+        (F.col("y") / F.lit(100.0)).alias("total"),
     )
     w = Window.partitionBy(key).orderBy("day")
 
@@ -1000,11 +1042,7 @@ def cross_correlation(
     Scale: the daily rollup is ONE map-combinable agg; the per-lag
     joins touch days×lags rows (render-sized, not data-sized).
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.groupBy(F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"), F.col(key))
-        .agg(F.sum(cents).alias("c"))
-    )
+    daily = _bucket_cents(events, _epoch_day(ts), key, value).toDF(key, "d", "c")
     a = daily.where(F.col(key) == key_a).select("d", F.col("c").alias("ca"))
     b = daily.where(F.col(key) == key_b).select(
         F.col("d").alias("db"), F.col("c").alias("cb")
@@ -1093,8 +1131,7 @@ def anomaly_mad(
     ``(event_id, key, value_r, rz)``.
     """
     thr = int(round(threshold * 14826))
-    c = F.floor(F.col(value) * 100 + F.lit(0.5))
-    base = events.select("event_id", key, c.alias("_c"))
+    base = events.select("event_id", key, _cents(value).alias("_c"))
     med = base.groupBy(key).agg(F.median("_c").alias("_med"))
     j1 = base.join(F.broadcast(med), key)
     mad = j1.groupBy(key).agg(
@@ -1241,7 +1278,7 @@ def level_shift(
     win = Window.partitionBy(key).orderBy(ts, "event_id")
     pre = win.rowsBetween(-w, -1)
     post = win.rowsBetween(0, w - 1)
-    c = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
+    c = _cents(value)
     scored = events.select(
         "event_id",
         key,
@@ -1323,15 +1360,7 @@ def linear_trend(
     sums — no window sort, no join. Returns
     ``(key, n_days, slope, intercept, r2)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = events.groupBy(
-        F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"), F.col(key)
-    ).agg(F.sum(cents).alias("y"))
-    # 0-based day index per key keeps x small (exactness headroom) and
-    # makes the intercept the key's own series origin
-    x = (F.col("d") - F.min("d").over(Window.partitionBy(key))).cast("long")
-    staged = daily.select(key, x.alias("x"), "y")
-    agg = staged.groupBy(key).agg(
+    agg = _day_index(events, ts, key, value).groupBy(key).agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
@@ -1422,12 +1451,7 @@ def theil_sen(
     the repeated-median or sampled-pairs variants (same frame, fewer
     pairs). Returns ``(key, n_days, n_pairs, slope, intercept)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = events.groupBy(
-        F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"), F.col(key)
-    ).agg(F.sum(cents).alias("y"))
-    x = (F.col("d") - F.min("d").over(Window.partitionBy(key))).cast("long")
-    staged = daily.select(key, x.alias("x"), "y")
+    staged = _day_index(events, ts, key, value)
     a = staged.select(key, F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = staged.select(key, F.col("x").alias("xb"), F.col("y").alias("yb"))
     slope_c = (F.col("yb") - F.col("ya")).cast("double") / (
@@ -1539,8 +1563,9 @@ def cusum_alerts(
     """
     slack_hc = int(round(slack * 200))
     h_hc = int(round(h * 200))
-    c = F.floor(F.col(value) * 100 + F.lit(0.5))
-    base = events.select("event_id", key, F.col(ts).alias("_ts"), c.alias("_c"))
+    base = events.select(
+        "event_id", key, F.col(ts).alias("_ts"), _cents(value).alias("_c")
+    )
     med = base.groupBy(key).agg(F.median("_c").alias("_med"))
     j = base.join(F.broadcast(med), key)
     d = (F.lit(2) * F.col("_c") - F.lit(2) * F.col("_med")).cast("long") - slack_hc
@@ -1625,12 +1650,7 @@ def detrended_anomaly(
     passes over the DAILY table (key-count-sized), one over events.
     Returns flagged ``(key, x, day_total, z)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = events.groupBy(
-        F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"), F.col(key)
-    ).agg(F.sum(cents).alias("y"))
-    x = (F.col("d") - F.min("d").over(Window.partitionBy(key))).cast("long")
-    staged = daily.select(key, x.alias("x"), "y")
+    staged = _day_index(events, ts, key, value)
     tr = staged.groupBy(key).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -1721,6 +1741,86 @@ WHERE mom.sd_r > 0
 ORDER BY rs.{key}, rs.x"""
 
 
+def _per_key_fit(
+    series: DataFrame, fit, schema: str, min_len: int = 0
+) -> DataFrame:
+    """Strategy P: ``fit(key, ts, ys)`` runs once per key of a
+    :func:`_bucket_cents` series in an Arrow-batched ``applyInPandas``
+    kernel, over the t-ordered buckets ``ts`` and their cents ``ys``
+    (Python ints), and returns the key's output rows. Keys with fewer
+    than ``min_len`` buckets return none. The aggregation stays
+    JVM-side; the kernel sees bucket-count-sized series."""
+    import pandas as pd
+
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def run(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        pdf = pdf.sort_values("t")
+        ys = [int(v) for v in pdf["y"]]
+        if len(ys) < min_len:
+            return pd.DataFrame(columns=cols)
+        rows = fit(pdf["key"].iloc[0], list(pdf["t"]), ys)
+        return pd.DataFrame(rows, columns=cols)
+
+    return series.groupBy("key").applyInPandas(run, schema)
+
+
+def _holt(ys: list[int], a: int, b: int):
+    """Holt's integer recursion from ``l₀ = y₀, b₀ = y₁ − y₀`` (weights
+    ``a/10``, ``b/10``, floor division): yields ``(fc, l_t, b_t)`` for
+    each step t ≥ 1, where ``fc = l_{t−1} + b_{t−1}`` is the forecast
+    held before seeing y_t."""
+    lvl, trd = ys[0], ys[1] - ys[0]
+    for y in ys[1:]:
+        fc = lvl + trd
+        lt = (a * y + (10 - a) * (lvl + trd)) // 10
+        trd = (b * (lt - lvl) + (10 - b) * trd) // 10
+        lvl = lt
+        yield fc, lvl, trd
+
+
+def _fdiv(x: str, k: int) -> str:
+    """DuckDB floor division of ``x`` by ``k > 0``: subtracting the
+    nonnegative pmod first makes the truncating ``//`` exact, matching
+    Python's ``//`` on negative numerators."""
+    return f"(({x}) - ((({x}) % {k} + {k}) % {k})) // {k}"
+
+
+def _holt_sql(
+    alpha10: int, beta10: int, tail: str, h: int | None = None, min_n: int = 0
+) -> str:
+    """Oracle text for :func:`_holt`: the ``daily`` series and the
+    ``hw(key, t, l, b)`` recursive CTE replaying the recursion,
+    followed by ``tail``. With a holdout ``h`` the recursion runs over
+    ``train``: keys with at least ``min_n`` days, minus their last
+    ``h``."""
+    a, b = int(alpha10), int(beta10)
+    src = "daily" if h is None else "train"
+    l_expr = _fdiv(f"{a}*d.y + {10 - a}*(hw.l + hw.b)", 10)
+    b_expr = _fdiv(f"{b}*(s.lt - s.l) + {10 - b}*s.b", 10)
+    holdout = "" if h is None else f"""
+nn AS (SELECT key, count(*) AS n FROM daily GROUP BY key
+       HAVING count(*) >= {min_n}),
+train AS (SELECT d.key, d.t, d.y FROM daily d JOIN nn ON nn.key = d.key
+          WHERE d.t <= nn.n - {h} - 1),"""
+    return f"""
+WITH RECURSIVE daily AS (
+  SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY day) - 1
+              AS BIGINT) AS t, y
+  FROM (SELECT event_type AS key, CAST(ts AS DATE) AS day,
+               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
+        FROM events GROUP BY 1, 2)),{holdout}
+hw(key, t, l, b) AS (
+  SELECT d0.key, CAST(0 AS BIGINT) AS t, d0.y AS l, d1.y - d0.y AS b
+  FROM {src} d0 JOIN {src} d1 ON d1.key = d0.key AND d1.t = 1
+  WHERE d0.t = 0
+  UNION ALL
+  SELECT s.key, s.t, s.lt AS l, CAST({b_expr} AS BIGINT) AS b FROM (
+    SELECT hw.key AS key, d.t AS t, hw.l AS l, hw.b AS b,
+           CAST({l_expr} AS BIGINT) AS lt
+    FROM hw JOIN {src} d ON d.key = hw.key AND d.t = hw.t + 1) s){tail}"""
+
+
 def holt_linear(events: DataFrame, alpha10: int = 3, beta10: int = 2) -> DataFrame:
     """Holt's linear (double exponential) smoothing per key — the
     level+trend forecaster. Unlike EWMA (a linear recurrence this repo
@@ -1745,70 +1845,21 @@ def holt_linear(events: DataFrame, alpha10: int = 3, beta10: int = 2) -> DataFra
     Returns ``(key, n_days, level_cents, trend_cents,
     forecast3_cents)`` with forecast3 = level + 3·trend.
     """
-    import pandas as pd
+    a, b = int(alpha10), int(beta10)
 
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
-    a, b10 = int(alpha10), int(beta10)
-
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
-        key = pdf["key"].iloc[0]
-        if len(ys) < 2:
-            return pd.DataFrame(
-                columns=["key", "n_days", "level_cents", "trend_cents",
-                         "forecast3_cents"]
-            )
-        lvl, trd = ys[0], ys[1] - ys[0]
-        for y in ys[1:]:
-            lt = (a * y + (10 - a) * (lvl + trd)) // 10
-            trd = (b10 * (lt - lvl) + (10 - b10) * trd) // 10
-            lvl = lt
-        return pd.DataFrame(
-            [[key, len(ys), lvl, trd, lvl + 3 * trd]],
-            columns=["key", "n_days", "level_cents", "trend_cents",
-                     "forecast3_cents"],
-        )
+    def fit(key, _ts, ys):
+        *_, (_, lvl, trd) = _holt(ys, a, b)
+        return [[key, len(ys), lvl, trd, lvl + 3 * trd]]
 
     schema = ("key string, n_days long, level_cents long, trend_cents long, "
               "forecast3_cents long")
-    return daily.groupBy("key").applyInPandas(fit, schema).orderBy("key")
+    return _per_key_fit(
+        _bucket_cents(events, F.to_date("ts")), fit, schema, min_len=2
+    ).orderBy("key")
 
 
 def _holt_oracle(alpha10: int = 3, beta10: int = 2) -> str:
-    # FLOOR division on possibly-negative numerators: subtract the
-    # nonnegative pmod first so DuckDB's truncating `//` divides
-    # exactly (matching Python's `//`)
-    def fdiv10(x: str) -> str:
-        return f"(({x}) - ((({x}) % 10 + 10) % 10)) // 10"
-
-    a, b = int(alpha10), int(beta10)
-    l_expr = fdiv10(f"{a}*d.y + {10 - a}*(hw.l + hw.b)")
-    b_expr = fdiv10(f"{b}*(s.lt - s.l) + {10 - b}*s.b")
-    return f"""
-WITH RECURSIVE daily AS (
-  SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY day) - 1
-              AS BIGINT) AS t, y
-  FROM (SELECT event_type AS key, CAST(ts AS DATE) AS day,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
-        FROM events GROUP BY 1, 2)),
-hw(key, t, l, b) AS (
-  SELECT d0.key, CAST(0 AS BIGINT) AS t, d0.y AS l, d1.y - d0.y AS b
-  FROM daily d0 JOIN daily d1 ON d1.key = d0.key AND d1.t = 1
-  WHERE d0.t = 0
-  UNION ALL
-  SELECT s.key, s.t, s.lt AS l, CAST({b_expr} AS BIGINT) AS b FROM (
-    SELECT hw.key AS key, d.t AS t, hw.l AS l, hw.b AS b,
-           CAST({l_expr} AS BIGINT) AS lt
-    FROM hw JOIN daily d ON d.key = hw.key AND d.t = hw.t + 1) s),
+    return _holt_sql(alpha10, beta10, """,
 last AS (SELECT key, max(t) AS tmax FROM daily GROUP BY key
          HAVING max(t) >= 1)
 SELECT hw.key AS key, CAST(la.tmax + 1 AS BIGINT) AS n_days,
@@ -1816,7 +1867,7 @@ SELECT hw.key AS key, CAST(la.tmax + 1 AS BIGINT) AS n_days,
        CAST(hw.b AS BIGINT) AS trend_cents,
        CAST(hw.l + 3 * hw.b AS BIGINT) AS forecast3_cents
 FROM hw JOIN last la ON la.key = hw.key AND hw.t = la.tmax
-ORDER BY key"""
+ORDER BY key""")
 
 
 def holt_residuals(
@@ -1835,70 +1886,27 @@ def holt_residuals(
     Returns ``(key, t, y_cents, fc_cents, resid_cents)`` ordered by
     (key, t); keys need >= 2 days.
     """
-    import pandas as pd
+    a, b = int(alpha10), int(beta10)
 
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
-    a, b10 = int(alpha10), int(beta10)
+    def fit(key, _ts, ys):
+        steps = zip(ys[1:], _holt(ys, a, b))
+        return [
+            [key, t, y, fc, y - fc] for t, (y, (fc, _, _)) in enumerate(steps, 1)
+        ]
 
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
-        key = pdf["key"].iloc[0]
-        cols = ["key", "t", "y_cents", "fc_cents", "resid_cents"]
-        if len(ys) < 2:
-            return pd.DataFrame(columns=cols)
-        lvl, trd = ys[0], ys[1] - ys[0]
-        rows = []
-        for t, y in enumerate(ys[1:], start=1):
-            fc = lvl + trd
-            rows.append([key, t, y, fc, y - fc])
-            lt = (a * y + (10 - a) * (lvl + trd)) // 10
-            trd = (b10 * (lt - lvl) + (10 - b10) * trd) // 10
-            lvl = lt
-        return pd.DataFrame(rows, columns=cols)
-
-    schema = (
-        "key string, t long, y_cents long, fc_cents long, resid_cents long"
-    )
-    return daily.groupBy("key").applyInPandas(fit, schema).orderBy("key", "t")
+    schema = "key string, t long, y_cents long, fc_cents long, resid_cents long"
+    return _per_key_fit(
+        _bucket_cents(events, F.to_date("ts")), fit, schema, min_len=2
+    ).orderBy("key", "t")
 
 
 def _holt_residuals_oracle(alpha10: int = 3, beta10: int = 2) -> str:
-    def fdiv10(x: str) -> str:
-        return f"(({x}) - ((({x}) % 10 + 10) % 10)) // 10"
-
-    a, b = int(alpha10), int(beta10)
-    l_expr = fdiv10(f"{a}*d.y + {10 - a}*(hw.l + hw.b)")
-    b_expr = fdiv10(f"{b}*(s.lt - s.l) + {10 - b}*s.b")
-    return f"""
-WITH RECURSIVE daily AS (
-  SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY day) - 1
-              AS BIGINT) AS t, y
-  FROM (SELECT event_type AS key, CAST(ts AS DATE) AS day,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
-        FROM events GROUP BY 1, 2)),
-hw(key, t, l, b) AS (
-  SELECT d0.key, CAST(0 AS BIGINT) AS t, d0.y AS l, d1.y - d0.y AS b
-  FROM daily d0 JOIN daily d1 ON d1.key = d0.key AND d1.t = 1
-  WHERE d0.t = 0
-  UNION ALL
-  SELECT s.key, s.t, s.lt AS l, CAST({b_expr} AS BIGINT) AS b FROM (
-    SELECT hw.key AS key, d.t AS t, hw.l AS l, hw.b AS b,
-           CAST({l_expr} AS BIGINT) AS lt
-    FROM hw JOIN daily d ON d.key = hw.key AND d.t = hw.t + 1) s)
+    return _holt_sql(alpha10, beta10, """
 SELECT hw.key AS key, d.t AS t, d.y AS y_cents,
        CAST(hw.l + hw.b AS BIGINT) AS fc_cents,
        CAST(d.y - (hw.l + hw.b) AS BIGINT) AS resid_cents
 FROM hw JOIN daily d ON d.key = hw.key AND d.t = hw.t + 1
-ORDER BY key, t"""
+ORDER BY key, t""")
 
 
 ORACLE_HOLT_RESIDUALS = _holt_residuals_oracle()
@@ -1940,31 +1948,10 @@ def holt_winters(
     Returns ``(key, n_hours, level_cents, trend_cents, fc1_cents)``
     where fc1 = l + b + s[next phase].
     """
-    import pandas as pd
-
-    hourly = (
-        events.groupBy(
-            F.col("event_type").alias("key"),
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"
-            ).alias("h"),
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
+    hour = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000")
     a, b10, g, m = int(alpha10), int(beta10), int(gamma10), int(period)
 
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("h")
-        ys = [int(v) for v in pdf["y"]]
-        key = pdf["key"].iloc[0]
-        if len(ys) < 2 * m:
-            return pd.DataFrame(
-                columns=["key", "n_hours", "level_cents", "trend_cents",
-                         "fc1_cents"]
-            )
+    def fit(key, _ts, ys):
         s1, s2 = sum(ys[:m]), sum(ys[m : 2 * m])
         lvl = s1 // m
         trd = (s2 - s1) // (m * m)
@@ -1977,28 +1964,22 @@ def holt_winters(
             st = (g * (ys[t] - lvl - trd) + (10 - g) * sm) // 10
             lvl, trd = lt, bt
             sl[p] = st
-        fc1 = lvl + trd + sl[len(ys) % m]
-        return pd.DataFrame(
-            [[key, len(ys), lvl, trd, fc1]],
-            columns=["key", "n_hours", "level_cents", "trend_cents",
-                     "fc1_cents"],
-        )
+        return [[key, len(ys), lvl, trd, lvl + trd + sl[len(ys) % m]]]
 
     schema = ("key string, n_hours long, level_cents long, trend_cents long, "
               "fc1_cents long")
-    return hourly.groupBy("key").applyInPandas(fit, schema).orderBy("key")
+    return _per_key_fit(
+        _bucket_cents(events, hour), fit, schema, min_len=2 * m
+    ).orderBy("key")
 
 
 def _holt_winters_oracle(
     alpha10: int = 3, beta10: int = 2, gamma10: int = 2, period: int = HW_PERIOD
 ) -> str:
-    def fdiv(x: str, k: int) -> str:
-        return f"(({x}) - ((({x}) % {k} + {k}) % {k})) // {k}"
-
     a, b, g, m = int(alpha10), int(beta10), int(gamma10), int(period)
-    l_expr = fdiv(f"{a}*(s.y - s.sm) + {10 - a}*(s.l + s.b)", 10)
-    b_expr = fdiv(f"{b}*(s2.lt - s2.l) + {10 - b}*s2.b", 10)
-    s_expr = fdiv(f"{g}*(s2.y - s2.l - s2.b) + {10 - g}*s2.sm", 10)
+    l_expr = _fdiv(f"{a}*(s.y - s.sm) + {10 - a}*(s.l + s.b)", 10)
+    b_expr = _fdiv(f"{b}*(s2.lt - s2.l) + {10 - b}*s2.b", 10)
+    s_expr = _fdiv(f"{g}*(s2.y - s2.l - s2.b) + {10 - g}*s2.sm", 10)
     return f"""
 WITH RECURSIVE hourly AS (
   SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY h) - 1
@@ -2012,8 +1993,8 @@ agg AS (
 init AS (
   SELECT key,
          CAST({m - 1} AS BIGINT) AS t,
-         CAST({fdiv("list_reduce(list_prepend(CAST(0 AS BIGINT), yl[1:" + str(m) + "]), (acc, x) -> acc + x)", m)} AS BIGINT) AS l0,
-         CAST({fdiv("list_reduce(list_prepend(CAST(0 AS BIGINT), yl[" + str(m + 1) + ":" + str(2 * m) + "]), (acc, x) -> acc + x) - list_reduce(list_prepend(CAST(0 AS BIGINT), yl[1:" + str(m) + "]), (acc, x) -> acc + x)", m * m)} AS BIGINT) AS b0,
+         CAST({_fdiv("list_reduce(list_prepend(CAST(0 AS BIGINT), yl[1:" + str(m) + "]), (acc, x) -> acc + x)", m)} AS BIGINT) AS l0,
+         CAST({_fdiv("list_reduce(list_prepend(CAST(0 AS BIGINT), yl[" + str(m + 1) + ":" + str(2 * m) + "]), (acc, x) -> acc + x) - list_reduce(list_prepend(CAST(0 AS BIGINT), yl[1:" + str(m) + "]), (acc, x) -> acc + x)", m * m)} AS BIGINT) AS b0,
          yl
   FROM agg),
 hw(key, t, l, b, sl) AS (
@@ -2066,73 +2047,26 @@ def forecast_backtest(
     dropped). Returns ``(key, n_train, n_test, sum_abs_err_cents,
     mae_cents)`` with ``mae = sum DIV n_test`` (int64 floor).
     """
-    import pandas as pd
+    a, b, h = int(alpha10), int(beta10), int(horizon)
 
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
-    a, b10, h = int(alpha10), int(beta10), int(horizon)
-
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cols = ["key", "n_train", "n_test", "sum_abs_err_cents", "mae_cents"]
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
+    def fit(key, _ts, ys):
         n = len(ys)
-        if n < h + 2:
-            return pd.DataFrame(columns=cols)
-        train = ys[: n - h]
-        lvl, trd = train[0], train[1] - train[0]
-        for y in train[1:]:
-            lt = (a * y + (10 - a) * (lvl + trd)) // 10
-            trd = (b10 * (lt - lvl) + (10 - b10) * trd) // 10
-            lvl = lt
-        sae = sum(
-            abs(lvl + (i + 1) * trd - ys[n - h + i]) for i in range(h)
-        )
-        return pd.DataFrame(
-            [[pdf["key"].iloc[0], len(train), h, sae, sae // h]], columns=cols
-        )
+        *_, (_, lvl, trd) = _holt(ys[: n - h], a, b)
+        sae = sum(abs(lvl + (i + 1) * trd - ys[n - h + i]) for i in range(h))
+        return [[key, n - h, h, sae, sae // h]]
 
     schema = ("key string, n_train long, n_test long, "
               "sum_abs_err_cents long, mae_cents long")
-    return daily.groupBy("key").applyInPandas(fit, schema).orderBy("key")
+    return _per_key_fit(
+        _bucket_cents(events, F.to_date("ts")), fit, schema, min_len=h + 2
+    ).orderBy("key")
 
 
 def _backtest_oracle(
     horizon: int = BACKTEST_HORIZON, alpha10: int = 3, beta10: int = 2
 ) -> str:
-    def fdiv10(x: str) -> str:
-        return f"(({x}) - ((({x}) % 10 + 10) % 10)) // 10"
-
-    a, b, h = int(alpha10), int(beta10), int(horizon)
-    l_expr = fdiv10(f"{a}*d.y + {10 - a}*(hw.l + hw.b)")
-    b_expr = fdiv10(f"{b}*(s.lt - s.l) + {10 - b}*s.b")
-    return f"""
-WITH RECURSIVE daily AS (
-  SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY day) - 1
-              AS BIGINT) AS t, y
-  FROM (SELECT event_type AS key, CAST(ts AS DATE) AS day,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
-        FROM events GROUP BY 1, 2)),
-nn AS (SELECT key, count(*) AS n FROM daily GROUP BY key
-       HAVING count(*) >= {h + 2}),
-train AS (SELECT d.key, d.t, d.y FROM daily d JOIN nn ON nn.key = d.key
-          WHERE d.t <= nn.n - {h} - 1),
-hw(key, t, l, b) AS (
-  SELECT d0.key, CAST(0 AS BIGINT) AS t, d0.y AS l, d1.y - d0.y AS b
-  FROM train d0 JOIN train d1 ON d1.key = d0.key AND d1.t = 1
-  WHERE d0.t = 0
-  UNION ALL
-  SELECT s.key, s.t, s.lt AS l, CAST({b_expr} AS BIGINT) AS b FROM (
-    SELECT hw.key AS key, d.t AS t, hw.l AS l, hw.b AS b,
-           CAST({l_expr} AS BIGINT) AS lt
-    FROM hw JOIN train d ON d.key = hw.key AND d.t = hw.t + 1) s),
+    h = int(horizon)
+    return _holt_sql(alpha10, beta10, f""",
 fitted AS (
   SELECT hw.key, hw.l, hw.b
   FROM hw JOIN nn ON nn.key = hw.key
@@ -2147,7 +2081,7 @@ SELECT e.key, CAST(nn.n - {h} AS BIGINT) AS n_train,
        CAST(sum(e.ae) AS BIGINT) AS sum_abs_err_cents,
        CAST(sum(e.ae) // {h} AS BIGINT) AS mae_cents
 FROM err e JOIN nn ON nn.key = e.key
-GROUP BY e.key, nn.n ORDER BY e.key"""
+GROUP BY e.key, nn.n ORDER BY e.key""", h, h + 2)
 
 
 PERIOD_MAX_LAG = 10
@@ -2192,24 +2126,12 @@ def acf_profile(events: DataFrame, max_lag: int = PERIOD_MAX_LAG) -> DataFrame:
 
     Returns ``(key, lag, n_pairs, acf)`` ordered by (key, lag).
     """
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"),
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-            ).alias("t"),
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("c")
-        )
+    daily = _bucket_cents(
+        events, F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
     )
-    spark = events.sparkSession
-    lags = spark.range(1, max_lag + 1).select(F.col("id").alias("lag"))
-    a = daily.select("key", "t", F.col("c").alias("x"))
-    b = daily.select(
-        F.col("key").alias("kb"), F.col("t").alias("tb"), F.col("c").alias("y")
-    )
+    lags = events.sparkSession.range(1, max_lag + 1).select(F.col("id").alias("lag"))
+    a = daily.select("key", "t", F.col("y").alias("x"))
+    b = daily.select(F.col("key").alias("kb"), F.col("t").alias("tb"), "y")
     pairs = (
         a.crossJoin(F.broadcast(lags))
         .join(b, (a.key == b.kb) & (b.tb == a.t + F.col("lag")))
@@ -2305,34 +2227,12 @@ def forecast_model_select(
     Returns ``(key, n_train, mae_naive, mae_snaive, mae_holt,
     winner)`` — MAEs in cents, ``sum|err| DIV horizon``.
     """
-    import pandas as pd
+    a, b, h = int(alpha10), int(beta10), int(horizon)
 
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
-    a, b10, h = int(alpha10), int(beta10), int(horizon)
-
-    def fit(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
-        key = pdf["key"].iloc[0]
-        cols = ["key", "n_train", "mae_naive", "mae_snaive", "mae_holt",
-                "winner"]
-        if len(ys) < h + 7:
-            return pd.DataFrame(columns=cols)
+    def fit(key, _ts, ys):
         train, test = ys[:-h], ys[-h:]
         n_tr = len(train)
-        lvl, trd = train[0], train[1] - train[0]
-        for y in train[1:]:
-            lt = (a * y + (10 - a) * (lvl + trd)) // 10
-            trd = (b10 * (lt - lvl) + (10 - b10) * trd) // 10
-            lvl = lt
+        *_, (_, lvl, trd) = _holt(train, a, b)
         mae_h = sum(
             abs(test[i] - (lvl + (i + 1) * trd)) for i in range(h)
         ) // h
@@ -2346,44 +2246,20 @@ def forecast_model_select(
             win = "naive"
         else:
             win = "snaive"
-        return pd.DataFrame(
-            [[key, n_tr, mae_n, mae_s, mae_h, win]], columns=cols
-        )
+        return [[key, n_tr, mae_n, mae_s, mae_h, win]]
 
     schema = ("key string, n_train long, mae_naive long, mae_snaive long,"
               " mae_holt long, winner string")
-    return daily.groupBy("key").applyInPandas(fit, schema).orderBy("key")
+    return _per_key_fit(
+        _bucket_cents(events, F.to_date("ts")), fit, schema, min_len=h + 7
+    ).orderBy("key")
 
 
 def _model_select_oracle(
     horizon: int = BACKTEST_HORIZON, alpha10: int = 3, beta10: int = 2
 ) -> str:
-    def fdiv10(x: str) -> str:
-        return f"(({x}) - ((({x}) % 10 + 10) % 10)) // 10"
-
-    a, b, h = int(alpha10), int(beta10), int(horizon)
-    l_expr = fdiv10(f"{a}*d.y + {10 - a}*(hw.l + hw.b)")
-    b_expr = fdiv10(f"{b}*(s.lt - s.l) + {10 - b}*s.b")
-    return f"""
-WITH RECURSIVE daily AS (
-  SELECT key, CAST(row_number() OVER (PARTITION BY key ORDER BY day) - 1
-              AS BIGINT) AS t, y
-  FROM (SELECT event_type AS key, CAST(ts AS DATE) AS day,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
-        FROM events GROUP BY 1, 2)),
-nn AS (SELECT key, count(*) AS n FROM daily GROUP BY key
-       HAVING count(*) >= {h + 7}),
-train AS (SELECT d.key, d.t, d.y FROM daily d JOIN nn ON nn.key = d.key
-          WHERE d.t <= nn.n - {h} - 1),
-hw(key, t, l, b) AS (
-  SELECT d0.key, CAST(0 AS BIGINT) AS t, d0.y AS l, d1.y - d0.y AS b
-  FROM train d0 JOIN train d1 ON d1.key = d0.key AND d1.t = 1
-  WHERE d0.t = 0
-  UNION ALL
-  SELECT s.key, s.t, s.lt AS l, CAST({b_expr} AS BIGINT) AS b FROM (
-    SELECT hw.key AS key, d.t AS t, hw.l AS l, hw.b AS b,
-           CAST({l_expr} AS BIGINT) AS lt
-    FROM hw JOIN train d ON d.key = hw.key AND d.t = hw.t + 1) s),
+    h = int(horizon)
+    return _holt_sql(alpha10, beta10, f""",
 fitted AS (
   SELECT hw.key, hw.l, hw.b
   FROM hw JOIN nn ON nn.key = hw.key
@@ -2414,7 +2290,7 @@ SELECT m.key, CAST(nn.n - {h} AS BIGINT) AS n_train,
             WHEN m.mae_naive <= m.mae_snaive THEN 'naive'
             ELSE 'snaive' END AS winner
 FROM mae m JOIN nn ON nn.key = m.key
-ORDER BY m.key"""
+ORDER BY m.key""", h, h + 7)
 
 
 ORACLE_MODEL_SELECT = _model_select_oracle()
@@ -2442,25 +2318,12 @@ def downsample_lttb(events: DataFrame, k: int = LTTB_K) -> DataFrame:
 
     Returns ``(key, day, y_cents)`` of the selected points.
     """
-    import pandas as pd
-
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
     kk = int(k)
 
-    def pick(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        n = len(pdf)
-        ys = [int(v) for v in pdf["y"]]
+    def pick(key, days, ys):
+        n = len(ys)
         if n <= kk:
-            return pdf[["key", "day", "y"]].rename(columns={"y": "y_cents"})
+            return [[key, d, y] for d, y in zip(days, ys)]
         buckets: list[list[int]] = [[] for _ in range(kk - 2)]
         for t in range(1, n - 1):
             buckets[(t - 1) * (kk - 2) // (n - 2)].append(t)
@@ -2484,11 +2347,12 @@ def downsample_lttb(events: DataFrame, k: int = LTTB_K) -> DataFrame:
             sel.append(best_t)
             ax, ay = best_t, ys[best_t]
         sel.append(n - 1)
-        out = pdf.iloc[sel][["key", "day", "y"]].rename(columns={"y": "y_cents"})
-        return out
+        return [[key, days[t], ys[t]] for t in sel]
 
     schema = "key string, day date, y_cents long"
-    return daily.groupBy("key").applyInPandas(pick, schema).orderBy("key", "day")
+    return _per_key_fit(
+        _bucket_cents(events, F.to_date("ts")), pick, schema
+    ).orderBy("key", "day")
 
 
 def _lttb_oracle(k: int = LTTB_K) -> str:
@@ -2627,7 +2491,7 @@ def seasonal_strength(events: DataFrame) -> DataFrame:
         F.expr(
             "(unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000) % 24"
         ).alias("hod"),
-        F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
+        _cents("value").alias("cents"),
     )
     hf = c.groupBy("key", "hod").agg(
         F.count(F.lit(1)).alias("n_h"),
@@ -2705,28 +2569,17 @@ def sax_symbols(events: DataFrame, alphabet: str = "abcd") -> DataFrame:
     Two windows per key partition (value-order ntile, day-order
     string agg) on one exchange. Returns ``(key, n_days, sax)``.
     """
-    k = len(alphabet)
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .alias("y")
-        )
-    )
-    w = Window.partitionBy("key").orderBy("y", "day")
-    sym = daily.select(
+    sym = _bucket_cents(events, F.to_date("ts")).select(
         "key",
-        "day",
-        F.expr(f"substring('{alphabet}', ntile({k}) OVER "
-               f"(PARTITION BY key ORDER BY y, day), 1)").alias("s"),
+        "t",
+        F.expr(f"substring('{alphabet}', ntile({len(alphabet)}) OVER "
+               f"(PARTITION BY key ORDER BY y, t), 1)").alias("s"),
     )
     return (
         sym.groupBy("key")
         .agg(
             F.count(F.lit(1)).alias("n_days"),
-            F.expr("listagg(s, '') WITHIN GROUP (ORDER BY day)").alias("sax"),
+            F.expr("listagg(s, '') WITHIN GROUP (ORDER BY t)").alias("sax"),
         )
         .orderBy("key")
     )
@@ -2781,15 +2634,8 @@ def stl_decompose(
     seas_den, resid_scaled)`` for full-window days.
     """
     width = 2 * half + 1
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        events.select(
-            F.col(key).alias("key"),
-            F.to_date(F.col(ts)).alias("day"),
-            cents.alias("_c"),
-        )
-        .groupBy("key", "day")
-        .agg(F.sum("_c").alias("c_cents"))
+    daily = _bucket_cents(events, F.to_date(ts), key, value).toDF(
+        "key", "day", "c_cents"
     )
     w = (
         Window.partitionBy("key")
@@ -2898,13 +2744,10 @@ def mann_kendall(
     raw events are genuinely scanned once, not once per consumer.
     Returns ``(key, n_days, s_stat, var18, z, trend)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
+    # key × day sized, so a bare localCheckpoint rather than materialize()
     daily = (
-        events.groupBy(
-            F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"),
-            F.col(key),
-        )
-        .agg(F.sum(cents).alias("y"))
+        _bucket_cents(events, _epoch_day(ts), key, value)
+        .toDF(key, "d", "y")
         .localCheckpoint()
     )
     a = daily.select(key, F.col("d").alias("da"), F.col("y").alias("ya"))
@@ -3021,12 +2864,9 @@ def ar1_forecast(
     5-value agg per key; nothing quadratic. Returns ``(key, n_pairs,
     slope, intercept, forecast)`` with intercept/forecast in dollars.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
     daily = (
-        events.groupBy(
-            F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("d"), F.col(key)
-        )
-        .agg(F.sum(cents).alias("yc"), F.count(F.lit(1)).alias("cnt"))
+        events.groupBy(_epoch_day(ts).alias("d"), F.col(key))
+        .agg(F.sum(_cents(value)).alias("yc"), F.count(F.lit(1)).alias("cnt"))
         .select(key, "d", F.expr("yc div cnt").alias("ym"))
     )
     w = Window.partitionBy(key).orderBy("d")
@@ -3120,8 +2960,7 @@ def winsorized_mean(
     map-combinable. Returns ``(key, n, lo_cents, hi_cents,
     win_mean_micro, raw_mean_micro)``.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
-    staged = events.select(F.col(key), cents.alias("c"))
+    staged = events.select(F.col(key), _cents(value).alias("c"))
     # Spark's percentile_disc returns DOUBLE even over longs; the
     # value is an actual observed cent amount, so the cast is exact
     band = staged.groupBy(key).agg(
@@ -3266,12 +3105,9 @@ def percentile_bands_daily(
     Returns ``(key, day_epoch, n, p50_cents, p95_cents)`` under a
     total order.
     """
-    cents = F.floor(F.col(value) * 100 + F.lit(0.5)).cast("long")
     return (
         events.select(
-            F.col(key),
-            F.datediff(F.to_date(ts), F.lit("1970-01-01")).alias("day_epoch"),
-            cents.alias("c"),
+            F.col(key), _epoch_day(ts).alias("day_epoch"), _cents(value).alias("c")
         )
         .groupBy(key, "day_epoch")
         .agg(
@@ -3301,69 +3137,27 @@ FROM events GROUP BY 1, 2 ORDER BY event_type, day_epoch"""
 
 DTW_INF = 1_000_000_000_000_000  # 1e15: >> any path cost, no overflow
 
+# The exact DP is O(n·m) per pair; above DTW_MAX_EXACT_LEN the auto
+# wrapper compresses each series to DTW_PAA_TARGET segments first
+# (Piecewise Aggregate Approximation — sax_symbols' front half), which
+# bounds every pair at O(target²) regardless of raw length. The
+# threshold is BASELINE.md's "DTW/MP strategy switch" measurement: the
+# nested-fold DP stays sub-second per pair to ~512-point series and
+# grows quadratically past it.
+DTW_MAX_EXACT_LEN = 512
+DTW_PAA_TARGET = 128
 
-def dtw_distances(events: DataFrame) -> DataFrame:
-    """Exact dynamic time warping distance between every pair of
-    event-type daily series — THE classic time-series similarity
-    measure (alignment-elastic, unlike lock-step L2/correlation): the
-    minimum total |a_i − b_j| cost over monotone alignments, via the
-    full O(n·m) DP.
-
-    Engine shape: the DP runs entirely JVM-side as NESTED higher-order
-    folds — the outer ``aggregate`` walks series A carrying the
-    previous DP row as its accumulator array, the inner ``aggregate``
-    walks series B appending ``cost + min(up, left, diag)`` — so the
-    whole matrix evaluates inside codegen'd expression machinery with
-    no UDF and no Python. Costs are integer cents, so every cell (and
-    the result) is exact int64 — bit-identical to the DuckDB oracle's
-    identical ``list_reduce`` nesting. Series are day-count-sized
-    (ordered collect_list over a per-key window, bounded by the
-    calendar); the pair table is |event_types|² — dim-sized. Per-pair
-    cost is O(n·m) DP cells — but the fold-append row construction
-    copies the growing row each step, so the EFFECTIVE cost is
-    O(n·m²) (measured: sub-second at 512 points, minutes past ~2k):
-    fine for daily/monthly rollups; long raw series go through
-    :func:`dtw_distances_auto`, which switches to the PAA-compressed
-    form past ``DTW_MAX_EXACT_LEN``.
-
-    Returns ``(key_a, key_b, n_a, n_b, dtw_cents)`` for key_a < key_b,
-    ordered by (key_a, key_b).
-    """
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"), F.to_date("ts").alias("day")
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).alias("c")
-        )
-    )
-    # day-ordered series without a window: sort_array over (day, c)
-    # structs is deterministic under any partitioning
-    series = daily.groupBy("key").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("day", "c"))),
-            lambda s: s["c"],
-        ).alias("s")
-    )
-    a = series.select(
-        F.col("key").alias("key_a"), F.col("s").alias("sa")
-    )
-    b = series.select(
-        F.col("key").alias("key_b"), F.col("s").alias("sb")
-    )
-    pairs = a.join(F.broadcast(b), F.col("key_a") < F.col("key_b"))
-    inf = f"{DTW_INF}L"
-    dtw = F.expr(
-        f"""
+# The DP as nested higher-order folds: the outer aggregate walks series
+# A carrying the previous DP row, the inner one walks series B
+# appending cost + min(up, left, diag).
+_DTW_DP = f"""
         element_at(
           aggregate(
             sa,
-            concat(array(0L), transform(sb, x -> {inf})),
+            concat(array(0L), transform(sb, x -> {DTW_INF}L)),
             (prev, ai) -> aggregate(
               sb,
-              array({inf}),
+              array({DTW_INF}L),
               (acc, bj) -> concat(
                 acc,
                 array(
@@ -3374,60 +3168,6 @@ def dtw_distances(events: DataFrame) -> DataFrame:
             row -> row),
           -1)
         """
-    )
-    return pairs.select(
-        "key_a",
-        "key_b",
-        F.size("sa").cast("long").alias("n_a"),
-        F.size("sb").cast("long").alias("n_b"),
-        dtw.cast("long").alias("dtw_cents"),
-    ).orderBy("key_a", "key_b")
-
-
-# DuckDB's list_reduce seeds the fold with the FIRST element (no init
-# parameter), so the DP-row accumulator rides as a prepended list and
-# series A's elements enter as singletons; the inner fold smuggles
-# `ai` into its elements as [bj, ai] pairs (outer lambda capture of
-# `prev` is supported, mirrored here for belt-and-braces portability).
-ORACLE_DTW = f"""
-WITH daily AS (
-  SELECT event_type AS key, CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-series AS (
-  SELECT key, list(c ORDER BY day) AS s FROM daily GROUP BY key),
-pairs AS (
-  SELECT a.key AS key_a, b.key AS key_b, a.s AS sa, b.s AS sb
-  FROM series a JOIN series b ON a.key < b.key)
-SELECT key_a, key_b,
-       CAST(len(sa) AS BIGINT) AS n_a, CAST(len(sb) AS BIGINT) AS n_b,
-       CAST(list_reduce(
-         list_prepend(
-           list_prepend(0::BIGINT,
-                        list_transform(sb, x -> {DTW_INF}::BIGINT)),
-           list_transform(sa, x -> [x])),
-         (prev, ai_l) -> list_reduce(
-             list_prepend([{DTW_INF}::BIGINT],
-                          list_transform(sb, bj -> [bj, ai_l[1]])),
-             (acc, bj_l) -> list_append(acc,
-                abs(bj_l[2] - bj_l[1]) + least(
-                  prev[len(acc) + 1],
-                  acc[len(acc)],
-                  prev[len(acc)]))))[len(sb) + 1] AS BIGINT) AS dtw_cents
-FROM pairs
-ORDER BY key_a, key_b"""
-
-
-# --- PAA front half + automatic strategy switch (r06 verdict item 8) -----
-# The exact DP is O(n·m) per pair; above DTW_MAX_EXACT_LEN the auto
-# wrapper compresses each series to DTW_PAA_TARGET segments first
-# (Piecewise Aggregate Approximation — sax_symbols' front half), which
-# bounds every pair at O(target²) regardless of raw length. Threshold
-# measured on this box (BASELINE.md "DTW/MP strategy switch"): the
-# exact DP's nested-fold expression stays sub-second per pair to
-# ~512-point series and grows quadratically past it.
-DTW_MAX_EXACT_LEN = 512
-DTW_PAA_TARGET = 128
 
 
 def _paa_expr(col: str, k: int) -> str:
@@ -3465,10 +3205,10 @@ def _sql_paa(col: str, k: int) -> str:
 
 
 def _dtw_bucket_col(bucket: str):
-    """Series granularity for the PAA/auto DTW family: ``day`` is the
-    rollup :func:`dtw_distances` certifies; ``hour`` is the long-series
-    regime that actually exercises the PAA switch (30 days × 24 h =
-    720 points > DTW_MAX_EXACT_LEN on the test corpus)."""
+    """Series granularity for the DTW family: ``day`` is the rollup
+    :func:`dtw_distances` certifies; ``hour`` is the long-series regime
+    that actually exercises the PAA switch (30 days × 24 h = 720
+    points > DTW_MAX_EXACT_LEN on the test corpus)."""
     if bucket == "day":
         return F.to_date("ts")
     if bucket == "hour":
@@ -3476,77 +3216,71 @@ def _dtw_bucket_col(bucket: str):
     raise ValueError(f"unknown dtw bucket {bucket!r}")
 
 
+def _dtw(events: DataFrame, bucket: str, k: int | None) -> DataFrame:
+    """The DTW every public form runs: per-key ``bucket`` series of
+    cents, PAA-compressed to ``k`` segments when ``k`` is given, and
+    every key pair (key_a < key_b; the |keys|-row side broadcast)
+    through the one :data:`_DTW_DP` expression. Series are ordered by
+    ``sort_array`` over (t, y) structs — deterministic under any
+    partitioning, no window. ``n_a``/``n_b`` are the raw lengths."""
+    ordered = F.sort_array(F.collect_list(F.struct("t", "y")))
+    raw = _bucket_cents(events, _dtw_bucket_col(bucket)).groupBy("key").agg(
+        F.transform(ordered, lambda p: p["y"]).alias("raw")
+    )
+    s = F.col("raw") if k is None else F.expr(_paa_expr("raw", k))
+    series = raw.select("key", F.size("raw").cast("long"), s)
+    a = series.toDF("key_a", "n_a", "sa")
+    b = series.toDF("key_b", "n_b", "sb")
+    dtw = F.expr(_DTW_DP).cast("long").alias("dtw_cents")
+    return (
+        a.join(F.broadcast(b), F.col("key_a") < F.col("key_b"))
+        .select("key_a", "key_b", "n_a", "n_b", dtw)
+        .orderBy("key_a", "key_b")
+    )
+
+
+def dtw_distances(events: DataFrame) -> DataFrame:
+    """Exact dynamic time warping distance between every pair of
+    event-type daily series — THE classic time-series similarity
+    measure (alignment-elastic, unlike lock-step L2/correlation): the
+    minimum total |a_i − b_j| cost over monotone alignments, via the
+    full O(n·m) DP.
+
+    Engine shape: the DP runs entirely JVM-side as nested
+    higher-order folds (:data:`_DTW_DP`), so the whole matrix
+    evaluates inside codegen'd expression machinery with no UDF and no
+    Python. Costs are integer cents, so every cell (and the result) is
+    exact int64 — bit-identical to the DuckDB oracle's identical
+    ``list_reduce`` nesting. Series are day-count-sized; the pair
+    table is |event_types|² — dim-sized. The fold-append row
+    construction copies the growing row each step, so the EFFECTIVE
+    per-pair cost is O(n·m²) (measured: sub-second at 512 points,
+    minutes past ~2k): fine for daily/monthly rollups; long raw series
+    go through :func:`dtw_distances_auto`, which switches to the
+    PAA-compressed form past ``DTW_MAX_EXACT_LEN``.
+
+    Returns ``(key_a, key_b, n_a, n_b, dtw_cents)`` for key_a < key_b,
+    ordered by (key_a, key_b).
+    """
+    return _dtw(events, "day", None)
+
+
 def dtw_distances_paa(
     events: DataFrame, k: int = DTW_PAA_TARGET, bucket: str = "day"
 ) -> DataFrame:
-    """DTW over PAA-compressed daily series — the bounded-cost form of
+    """DTW over PAA-compressed series — the bounded-cost form of
     :func:`dtw_distances` for long series: each series folds to ≤ ``k``
     integer segment means (floor means, exact int64) before the SAME
-    nested-fold DP, so per-pair cost is O(k²) no matter how long the
-    raw series runs. ``n_a``/``n_b`` report the ORIGINAL lengths (the
-    compression is the point; hiding it would misreport the input).
+    DP, so per-pair cost is O(k²) no matter how long the raw series
+    runs. ``n_a``/``n_b`` report the ORIGINAL lengths (the compression
+    is the point; hiding it would misreport the input).
 
     Returns ``(key_a, key_b, n_a, n_b, dtw_cents)`` ordered by
     (key_a, key_b) — dtw_cents here is the distance between the PAA
     sketches (an approximation of the raw-series DTW, standard
     PAA-DTW semantics; it lower-bounds raw DTW·(n/k) under the usual
     GEMINI framing)."""
-    daily = (
-        events.groupBy(
-            F.col("event_type").alias("key"),
-            _dtw_bucket_col(bucket).alias("day"),
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).alias("c")
-        )
-    )
-    series = daily.groupBy("key").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("day", "c"))),
-            lambda s: s["c"],
-        ).alias("raw")
-    ).select("key", "raw", F.expr(_paa_expr("raw", k)).alias("s"))
-    a = series.select(
-        F.col("key").alias("key_a"),
-        F.col("s").alias("sa"),
-        F.size("raw").alias("ra"),
-    )
-    b = series.select(
-        F.col("key").alias("key_b"),
-        F.col("s").alias("sb"),
-        F.size("raw").alias("rb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("key_a") < F.col("key_b"))
-    inf = f"{DTW_INF}L"
-    dtw = F.expr(
-        f"""
-        element_at(
-          aggregate(
-            sa,
-            concat(array(0L), transform(sb, x -> {inf})),
-            (prev, ai) -> aggregate(
-              sb,
-              array({inf}),
-              (acc, bj) -> concat(
-                acc,
-                array(
-                  abs(ai - bj) + least(
-                    element_at(prev, size(acc) + 1),
-                    element_at(acc, size(acc)),
-                    element_at(prev, size(acc)))))),
-            row -> row),
-          -1)
-        """
-    )
-    return pairs.select(
-        "key_a",
-        "key_b",
-        F.col("ra").cast("long").alias("n_a"),
-        F.col("rb").cast("long").alias("n_b"),
-        dtw.cast("long").alias("dtw_cents"),
-    ).orderBy("key_a", "key_b")
+    return _dtw(events, bucket, k)
 
 
 def pick_dtw_strategy(
@@ -3586,16 +3320,44 @@ def dtw_distances_auto(
     runs THIS function on hourly series, so the gate certifies probe +
     dispatch + PAA + DP end-to-end); the threshold crossing itself is
     pinned by a unit test on both sides."""
-    strategy, max_len = pick_dtw_strategy(events, max_exact_len, bucket)
-    if strategy == "exact" and bucket == "day":
-        return dtw_distances(events)
-    if strategy == "exact":
-        # exact DP on a non-day bucket: PAA with k = max series length
-        # is a pass-through (every series has size(s) <= k), so the
-        # paa form IS the exact DP here — k stays bounded (never a
-        # huge literal: sequence(0, k-1) would constant-fold)
-        return dtw_distances_paa(events, k=max(max_len, 1), bucket=bucket)
-    return dtw_distances_paa(events, k, bucket=bucket)
+    strategy, _ = pick_dtw_strategy(events, max_exact_len, bucket)
+    return _dtw(events, bucket, k if strategy == "paa" else None)
+
+
+# DuckDB's list_reduce seeds the fold with the FIRST element (no init
+# parameter), so the DP-row accumulator rides as a prepended list and
+# series A's elements enter as singletons; the inner fold smuggles
+# `ai` into its elements as [bj, ai] pairs (outer lambda capture of
+# `prev` is supported, mirrored here for belt-and-braces portability).
+_DTW_DP_SQL = f"""CAST(list_reduce(
+         list_prepend(
+           list_prepend(0::BIGINT,
+                        list_transform(sb, x -> {DTW_INF}::BIGINT)),
+           list_transform(sa, x -> [x])),
+         (prev, ai_l) -> list_reduce(
+             list_prepend([{DTW_INF}::BIGINT],
+                          list_transform(sb, bj -> [bj, ai_l[1]])),
+             (acc, bj_l) -> list_append(acc,
+                abs(bj_l[2] - bj_l[1]) + least(
+                  prev[len(acc) + 1],
+                  acc[len(acc)],
+                  prev[len(acc)]))))[len(sb) + 1] AS BIGINT) AS dtw_cents
+FROM pairs
+ORDER BY key_a, key_b"""
+
+ORACLE_DTW = f"""
+WITH daily AS (
+  SELECT event_type AS key, CAST(ts AS DATE) AS day,
+         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2),
+series AS (
+  SELECT key, list(c ORDER BY day) AS s FROM daily GROUP BY key),
+pairs AS (
+  SELECT a.key AS key_a, b.key AS key_b, a.s AS sa, b.s AS sb
+  FROM series a JOIN series b ON a.key < b.key)
+SELECT key_a, key_b,
+       CAST(len(sa) AS BIGINT) AS n_a, CAST(len(sb) AS BIGINT) AS n_b,
+       {_DTW_DP_SQL}"""
 
 
 # The oracle mirrors the AUTO dispatch, not just the PAA form: the
@@ -3623,21 +3385,7 @@ pairs AS (
   FROM series a JOIN series b ON a.key < b.key)
 SELECT key_a, key_b,
        CAST(ra AS BIGINT) AS n_a, CAST(rb AS BIGINT) AS n_b,
-       CAST(list_reduce(
-         list_prepend(
-           list_prepend(0::BIGINT,
-                        list_transform(sb, x -> {DTW_INF}::BIGINT)),
-           list_transform(sa, x -> [x])),
-         (prev, ai_l) -> list_reduce(
-             list_prepend([{DTW_INF}::BIGINT],
-                          list_transform(sb, bj -> [bj, ai_l[1]])),
-             (acc, bj_l) -> list_append(acc,
-                abs(bj_l[2] - bj_l[1]) + least(
-                  prev[len(acc) + 1],
-                  acc[len(acc)],
-                  prev[len(acc)]))))[len(sb) + 1] AS BIGINT) AS dtw_cents
-FROM pairs
-ORDER BY key_a, key_b"""
+       {_DTW_DP_SQL}"""
 
 
 # the certified holt-residual recursion as a composable fragment
@@ -3785,14 +3533,8 @@ def matrix_profile_discords(
 
     Returns ``(i, nn_j, nn_d2)`` for the ``top`` discords, ordered
     (nn_d2 desc, i asc)."""
-    s = (
-        events.where(F.col("event_id") < cap)
-        .select(
-            F.col("event_id").alias("i"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
-        )
+    s = events.where(F.col("event_id") < cap).select(
+        F.col("event_id").alias("i"), _cents("value").alias("c")
     )
     return _mp_from_series(s, m, band, top)
 
@@ -3801,9 +3543,8 @@ def _mp_from_series(
     s: DataFrame, m: int, band: int, top: int
 ) -> DataFrame:
     """Banded matrix-profile core over a prepared ``(i, c)`` integer
-    series — shared by the capped-exact and PAA paths (identical plan
-    to the pre-refactor inline form; ``ts_matrix_profile`` stays
-    byte-stable)."""
+    series — shared by the capped-exact and PAA paths, with
+    :func:`_mp_oracle` as its DuckDB text."""
     w = Window.orderBy("i").rowsBetween(0, m - 1)
     win = (
         s.select("i", F.collect_list("c").over(w).alias("w"))
@@ -3868,7 +3609,7 @@ def matrix_profile_discords_paa(
     is the identical certified core."""
     s = events.select(
         F.expr(f"event_id DIV {factor}").alias("i"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        _cents("value").alias("c"),
     ).groupBy("i").agg(
         F.expr("sum(c) div count(*)").alias("c")
     )
@@ -3902,13 +3643,41 @@ def matrix_profile_discords_auto(
     )
 
 
+def _mp_oracle(s_cte: str) -> str:
+    """Matrix-profile oracle over the CTEs ``s_cte`` ending in the
+    ``(i, c)`` series ``s`` — the text twin of :func:`_mp_from_series`."""
+    return f"""
+WITH {s_cte},
+win AS (
+  SELECT i, w FROM (
+    SELECT i, list(c) OVER (ORDER BY i
+        ROWS BETWEEN CURRENT ROW AND {MP_M - 1} FOLLOWING) AS w
+    FROM s)
+  WHERE len(w) = {MP_M}),
+pairs AS (
+  SELECT a.i, b.i AS j,
+         list_reduce(list_prepend(0::BIGINT, list_transform(
+             range(1, {MP_M + 1}),
+             k -> (a.w[k] - b.w[k]) * (a.w[k] - b.w[k]))),
+           (acc, v) -> acc + v) AS d2
+  FROM win a JOIN win b
+    ON b.i BETWEEN a.i - {MP_BAND} AND a.i + {MP_BAND}
+   AND abs(a.i - b.i) >= {MP_M}),
+profile AS (
+  SELECT i, j AS nn_j, d2 AS nn_d2,
+         row_number() OVER (PARTITION BY i ORDER BY d2, j) AS rn
+  FROM pairs)
+SELECT i, nn_j, CAST(nn_d2 AS BIGINT) AS nn_d2
+FROM profile WHERE rn = 1
+ORDER BY nn_d2 DESC, i LIMIT {MP_TOP}"""
+
+
 # Auto-switch oracle: fac is computed from the data exactly as the
 # Spark probe computes it (ceil(n / cap)); at fac = 1 the compression
 # CTE is the identity and this degenerates to the exact uncapped
 # profile — the same answer the Spark exact branch gives when the
 # series fits, so ONE oracle covers both sides of the switch.
-ORACLE_MATRIX_PROFILE_PAA = f"""
-WITH f AS (
+ORACLE_MATRIX_PROFILE_PAA = _mp_oracle(f"""f AS (
   SELECT CAST((max(event_id) + {MP_CAP}) // {MP_CAP} AS BIGINT) AS fac
   FROM events),
 s AS (
@@ -3916,57 +3685,11 @@ s AS (
     SELECT event_id // fac AS i,
            CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
     FROM events, f)
-  GROUP BY i),
-win AS (
-  SELECT i, w FROM (
-    SELECT i, list(c) OVER (ORDER BY i
-        ROWS BETWEEN CURRENT ROW AND {MP_M - 1} FOLLOWING) AS w
-    FROM s)
-  WHERE len(w) = {MP_M}),
-pairs AS (
-  SELECT a.i, b.i AS j,
-         list_reduce(list_prepend(0::BIGINT, list_transform(
-             range(1, {MP_M + 1}),
-             k -> (a.w[k] - b.w[k]) * (a.w[k] - b.w[k]))),
-           (acc, v) -> acc + v) AS d2
-  FROM win a JOIN win b
-    ON b.i BETWEEN a.i - {MP_BAND} AND a.i + {MP_BAND}
-   AND abs(a.i - b.i) >= {MP_M}),
-profile AS (
-  SELECT i, j AS nn_j, d2 AS nn_d2,
-         row_number() OVER (PARTITION BY i ORDER BY d2, j) AS rn
-  FROM pairs)
-SELECT i, nn_j, CAST(nn_d2 AS BIGINT) AS nn_d2
-FROM profile WHERE rn = 1
-ORDER BY nn_d2 DESC, i LIMIT {MP_TOP}"""
+  GROUP BY i)""")
 
-
-ORACLE_MATRIX_PROFILE = f"""
-WITH s AS (
+ORACLE_MATRIX_PROFILE = _mp_oracle(f"""s AS (
   SELECT event_id AS i, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-  FROM events WHERE event_id < {MP_CAP}),
-win AS (
-  SELECT i, w FROM (
-    SELECT i, list(c) OVER (ORDER BY i
-        ROWS BETWEEN CURRENT ROW AND {MP_M - 1} FOLLOWING) AS w
-    FROM s)
-  WHERE len(w) = {MP_M}),
-pairs AS (
-  SELECT a.i, b.i AS j,
-         list_reduce(list_prepend(0::BIGINT, list_transform(
-             range(1, {MP_M + 1}),
-             k -> (a.w[k] - b.w[k]) * (a.w[k] - b.w[k]))),
-           (acc, v) -> acc + v) AS d2
-  FROM win a JOIN win b
-    ON b.i BETWEEN a.i - {MP_BAND} AND a.i + {MP_BAND}
-   AND abs(a.i - b.i) >= {MP_M}),
-profile AS (
-  SELECT i, j AS nn_j, d2 AS nn_d2,
-         row_number() OVER (PARTITION BY i ORDER BY d2, j) AS rn
-  FROM pairs)
-SELECT i, nn_j, CAST(nn_d2 AS BIGINT) AS nn_d2
-FROM profile WHERE rn = 1
-ORDER BY nn_d2 DESC, i LIMIT {MP_TOP}"""
+  FROM events WHERE event_id < {MP_CAP})""")
 
 
 def timeseries_workloads():

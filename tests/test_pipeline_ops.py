@@ -317,9 +317,10 @@ def test_advised_paths_release_caches_on_gc(spark):
     materializes and drops the result, no net persisted RDDs remain
     (DataFrame.persist registers in the JVM CacheManager, which GC
     never clears, so without the tie a long-lived session accumulates
-    caches until LRU eviction). The plain ngram_jaccard_pairs, called
-    without ``shingle_rows``, persists its own shingle frame and is
-    held to the same rule. Data is unique to this test: the JVM
+    caches until LRU eviction). The plain ngram_jaccard_pairs,
+    ngram_containment_pairs and minhash_lsh_pairs, called without
+    ``shingle_rows``/``sig_wide``, persist their own frame and are held
+    to the same rule. Data is unique to this test: the JVM
     CacheManager keys entries by logical plan, so reusing the shared
     fixture would alias cache entries persisted (untied) by other
     tests and make the count deltas order-dependent."""
@@ -348,6 +349,8 @@ def test_advised_paths_release_caches_on_gc(spark):
     # assertions order-dependent (flaked in the full-suite run).
     for fn in (
         dedup.ngram_jaccard_pairs,
+        dedup.minhash_lsh_pairs,
+        dedup.ngram_containment_pairs,
         dedup.minhash_lsh_pairs_advised,
         dedup.ngram_jaccard_pairs_advised,
         dedup.ngram_containment_pairs_advised,

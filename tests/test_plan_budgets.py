@@ -1459,3 +1459,24 @@ def test_cp_query_job_budget(spark, tmp_path_factory):
     blocks = Engine(spark, partition_rows=100)
     blocks.register_parquet("s", path)
     assert "hashpartitioning(wpid" in _plan(blocks.execute(closed))
+
+
+def test_pq_adc_plan_fetches_codebook_once(spark):
+    """Building pq_adc_topk's plan runs the jobs of one codebook fetch
+    and no more: the corpus is encoded against the codebook already
+    fetched, not a second fetch inside pq_encode."""
+    from query_refinement_dsit_databases_2021_spark.operators.simsearch import (
+        DIM,
+        PQ_CODEWORD_IDS,
+        _pq_codewords,
+        pq_adc_topk,
+    )
+
+    emb = spark.range(max(PQ_CODEWORD_IDS) + 1).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") * (j + 3) % 17).cast("float") for j in range(DIM)])
+        .alias("embedding"),
+    )
+    one_fetch = _jobs(spark, lambda: _pq_codewords(emb))
+    assert one_fetch >= 1
+    assert _jobs(spark, lambda: pq_adc_topk(emb)) == one_fetch

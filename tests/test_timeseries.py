@@ -1221,9 +1221,10 @@ def test_dtw_matches_python_dp(spark):
 def test_dtw_paa_strategy_switch_and_exactness(spark):
     """The r06-item-8 strategy switch, pinned on both sides of the
     threshold: short series -> exact DP (auto == dtw_distances
-    bit-for-bit); past DTW_MAX_EXACT_LEN the probe says "paa" and the
-    PAA fold reproduces a plain-Python PAA+DP reference exactly
-    (floor means, integer cents)."""
+    bit-for-bit, and a short hourly series == a plain-Python DP);
+    past DTW_MAX_EXACT_LEN the probe says "paa" and the PAA fold
+    reproduces a plain-Python PAA+DP reference exactly (floor means,
+    integer cents)."""
     from datetime import datetime, timedelta
 
     from query_refinement_dsit_databases_2021_spark.operators.timeseries import (
@@ -1235,13 +1236,11 @@ def test_dtw_paa_strategy_switch_and_exactness(spark):
 
     t0 = datetime(2024, 1, 1)
 
-    def mk(series):
+    def mk(series, step=timedelta(days=1)):
         rows = []
         for key, vals in series.items():
             for d, v in enumerate(vals):
-                rows.append(
-                    (len(rows), t0 + timedelta(days=d), 1, key, v, "{}")
-                )
+                rows.append((len(rows), t0 + d * step, 1, key, v, "{}"))
         return spark.createDataFrame(
             rows,
             "event_id long, ts timestamp, user_id long, event_type string, "
@@ -1291,6 +1290,16 @@ def test_dtw_paa_strategy_switch_and_exactness(spark):
     assert r["dtw_cents"] == dtw_ref(
         paa_ref(long_series["x"], 8), paa_ref(long_series["y"], 8)
     )
+
+    # a short hourly series takes the exact branch on the hour bucket
+    hourly = {"p": [1.0, 4.0, 2.0, 8.0], "q": [2.0, 2.0, 5.0]}
+    got = dtw_distances_auto(
+        mk(hourly, timedelta(hours=1)), bucket="hour"
+    ).collect()
+    cents = {k: [int(v * 100) for v in vs] for k, vs in hourly.items()}
+    assert [tuple(r) for r in got] == [
+        ("p", "q", 4, 3, dtw_ref(cents["p"], cents["q"]))
+    ]
 
 
 def test_matrix_profile_auto_switch_covers_full_series(spark):

@@ -15,6 +15,7 @@ Rows are sorted by all columns (column names sorted first) before the
 compare, mirroring the driver's order-insensitive value hash.
 
 Usage: python tools/gate_sim.py [--sf-dir /root/testdata/sf0.01] [--all]
+       python tools/gate_sim.py --names 'ts_*,pipe_ann_pq_adc'
 """
 
 from __future__ import annotations
@@ -62,7 +63,8 @@ def main() -> int:
     p.add_argument(
         "--names",
         default=None,
-        help="comma-separated workload names to check (overrides --all/gate)",
+        help="comma-separated workload names to check (overrides --all/gate);"
+        " a name ending in * matches every workload with that prefix",
     )
     args = p.parse_args()
 
@@ -85,7 +87,10 @@ def main() -> int:
         )
     ws = workloads()
     if args.names:
-        names = [n.strip() for n in args.names.split(",") if n.strip()]
+        names = []
+        for n in filter(None, (n.strip() for n in args.names.split(","))):
+            hits = [w for w in ws if w.startswith(n[:-1])] if n.endswith("*") else [n]
+            names += [w for w in hits if w not in names]
     else:
         names = list(ws) if args.all else gate_order(list(ws), ROOT)[:GATE_WINDOW]
     failures = []
