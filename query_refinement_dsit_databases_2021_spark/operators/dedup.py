@@ -1,21 +1,37 @@
 """Deduplication operators for the large-scale training-data pipeline.
 
-Four families, all expressed as shuffle-parallel DataFrame algebra
-(no Python UDFs, no driver-side loops over data):
+Every operator is shuffle-parallel DataFrame algebra (no Python UDFs,
+no driver-side loops over data; ``cdc_chunks`` is one map-only Arrow
+pass). The families:
 
-- **Exact**: hash-groupBy on the full text (one shuffle, map-side
-  combinable count).
-- **MinHash + LSH**: shingle -> minhash signature -> band -> bucket
-  self-join. The self-join is keyed on (band, band_signature), so at
-  100 TB the candidate-pair blowup is bounded by bucket sizes, not by
-  |corpus|^2.
-- **SimHash**: 16-bit fingerprints from token hashes; near-dup pairs
-  found via the pigeonhole band trick (hamming <= 3 over 16 bits =>
-  at least one of four 4-bit bands matches exactly), again a bucketed
-  equi-join, never an all-pairs scan.
-- **N-gram Jaccard**: exact set overlap through the shingle inverted
-  index (join on shingle, count, divide) — O(sum of posting-list^2)
-  not O(n^2); the MinHash path is its approximation at scale.
+- **Exact**: hash-groupBy on the full text, the token bag or passage
+  hashes (``exact_dedup``, ``incremental_dedup``, ``bag_dedup``,
+  ``passage_dedup``, ``cdc_chunk_dedup``).
+- **MinHash + LSH**: shingle -> wide minhash signature -> band ->
+  bucket self-join, keyed on (band, band_signature), so candidate
+  pairs are bounded by bucket sizes, not |corpus|^2; inline and
+  standing-index incremental ingest; the estimate-vs-exact
+  attestation.
+- **SimHash**: 32-bit fingerprints, pairs through the pigeonhole band
+  join; ``neardup_components`` and ``cluster_representatives`` turn
+  pairs into clusters.
+- **Posting-index overlap**: exact shingle Jaccard and containment,
+  winnowing fingerprints, span profiles — joins on the inverted index,
+  O(sum of posting-list^2), not O(n^2).
+- **Blocked / set-level**: edit distance in first-token blocks,
+  benchmark decontamination, the source-overlap matrix.
+
+Each repeated step has one private definition that every operator
+goes through: ``_agreement`` (the wide-signature agreement count
+k = Σ (a_j == b_j)), ``_band_candidates`` (the (band, sig) self-join),
+``_cap_postings`` (the stop-key cap window), ``_overlap`` (the shingle
+intersection with both set sizes), ``_advise`` (the cap advisors'
+totals, count-of-counts median, 128-bit ppm shares and cap rule),
+``_advised`` (materialize -> advise -> cap -> join) and ``_shard_flags``
+(the incremental ``(doc_id, is_dup, dup_of)`` rollup). A frame an
+operator reads more than once goes through :func:`materialize`, unless
+the caller passed it in (``sig_wide``, ``shingle_rows``,
+``fingerprint_rows``).
 
 Determinism contract: every score is integer arithmetic or a single
 int/int division in double — bit-identical across Spark and the
@@ -26,7 +42,6 @@ from __future__ import annotations
 
 import functools
 import operator
-import weakref
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,26 +71,60 @@ SIMHASH_BANDS = 4  # 8 bits per band; hamming<=3 => >=1 band equal
 SIMHASH_MOD = 1 << SIMHASH_BITS
 
 
-def _release_with(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie the lifetime of internally ``persist()``-ed frames to the
-    returned result: the cache stays hot while the caller holds (and
-    may re-materialize) the result, and is unpersisted when the result
-    frame is garbage-collected. DataFrame ``persist`` registers the
-    plan in the JVM CacheManager, which the ContextCleaner never
-    GC-collects — so in a long-lived session repeated advised calls
-    would otherwise accumulate cached signature/shingle frames until
-    LRU eviction. The finalizer closes over only the cached frames
-    (never ``result``), so the result itself stays collectable."""
+def _cap_postings(
+    rows: DataFrame, key: list[str], max_posting: int | None
+) -> DataFrame:
+    """Drop the rows whose ``key`` holds more than ``max_posting`` rows
+    (stop shingles, stop fingerprints, template LSH buckets) with a
+    key-partitioned count window — the count shares the exchange the
+    self-join on ``key`` needs, so the cap costs no extra shuffle of
+    its own. ``None`` keeps every row."""
+    if max_posting is None:
+        return rows
+    n = F.count("*").over(Window.partitionBy(*key))
+    return rows.withColumn("_n", n).where(F.col("_n") <= max_posting).drop("_n")
 
-    def _release(frames=tuple(cached)) -> None:
-        for f in frames:
-            try:
-                f.unpersist(blocking=False)
-            except Exception:  # session already stopped / interpreter exit
-                pass
 
-    weakref.finalize(result, _release)
-    return result
+def _band_candidates(bsig: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)``, doc_a < doc_b, sharing >= 1 (band,
+    sig) bucket: the banded equi self-join."""
+    b1 = bsig.select(F.col("doc_id").alias("doc_a"), "band", "sig")
+    b2 = bsig.select(
+        F.col("doc_id").alias("doc_b"), "band", F.col("sig").alias("sig_b")
+    )
+    return (
+        b1.join(
+            b2,
+            (b1["band"] == b2["band"])
+            & (b1["sig"] == b2["sig_b"])
+            & (b1["doc_a"] < b2["doc_b"]),
+        )
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
+def _agreement(
+    cand: DataFrame, a: str, b: str, wide_a: DataFrame, wide_b: DataFrame,
+    n_hashes: int,
+) -> DataFrame:
+    """``(a, b, k)`` for each candidate pair: ``k`` = the number of equal
+    components of the two wide signatures (``a`` read from ``wide_a``,
+    ``b`` from ``wide_b``), compared inline on the joined rows — no
+    per-component join."""
+    wa = wide_a.select(
+        F.col("doc_id").alias(a),
+        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n_hashes)],
+    )
+    wb = wide_b.select(
+        F.col("doc_id").alias(b),
+        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n_hashes)],
+    )
+    k = functools.reduce(
+        operator.add,
+        [(F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(n_hashes)],
+    )
+    return cand.join(wa, a).join(wb, b).select(a, b, k.alias("k"))
 
 
 def exact_dedup(docs: DataFrame, by_hash: bool = False) -> DataFrame:
@@ -137,7 +186,7 @@ def minhash_signatures_wide(
     No parameter-table crossJoin, no per-(doc, j) row explosion: the
     only shuffle is the groupBy(doc_id).
 
-    ``shingle_rows``: precomputed (persisted) shingle frame, the same
+    ``shingle_rows``: precomputed (materialized) shingle frame, the same
     sharing seam as :func:`ngram_jaccard_pairs` — an ensemble caller
     (e.g. the consensus workload) tokenizes the corpus ONCE for every
     shingle-based detector (r09)."""
@@ -228,52 +277,25 @@ def minhash_lsh_pairs(
     organic buckets are tiny — the cap exists purely to bound the
     adversarial/template tail at corpus scale.
     """
-    # a caller-passed sig_wide is the caller's to release; one persisted
-    # here is tied to the result (the ngram_jaccard_pairs rule)
-    own = sig_wide is None
-    wide = minhash_signatures_wide(docs, n_hashes).persist() if own else sig_wide
-    bsig = lsh_band_signatures(wide, rows_per_band, n_hashes)
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "sig")
-        bsig = (
-            bsig.withColumn("_n", F.count("*").over(w))
-            .where(F.col("_n") <= max_bucket)
-            .drop("_n")
-        )
-    b1 = bsig.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b2 = bsig.select(
-        F.col("doc_id").alias("doc_b"), "band", F.col("sig").alias("sig_b")
+    wide = (
+        sig_wide
+        if sig_wide is not None
+        else materialize(minhash_signatures_wide(docs, n_hashes))
     )
-    cand = (
-        b1.join(
-            b2,
-            (b1["band"] == b2["band"])
-            & (b1["sig"] == b2["sig_b"])
-            & (b1["doc_a"] < b2["doc_b"]),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
+    bsig = _cap_postings(
+        lsh_band_signatures(wide, rows_per_band, n_hashes),
+        ["band", "sig"],
+        max_bucket,
     )
-    wa = wide.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n_hashes)],
-    )
-    wb = wide.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n_hashes)],
-    )
-    k = functools.reduce(
-        operator.add,
-        [(F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(n_hashes)],
-    )
+    cand = _band_candidates(bsig)
     est = (
-        cand.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .select("doc_a", "doc_b", (k / float(n_hashes)).alias("est_sim"))
+        _agreement(cand, "doc_a", "doc_b", wide, wide, n_hashes)
+        .select(
+            "doc_a", "doc_b", (F.col("k") / float(n_hashes)).alias("est_sim")
+        )
         .where(F.col("est_sim") >= threshold)
     )
-    out = est.select("doc_a", "doc_b", F.round("est_sim", 6).alias("est_sim"))
-    return _release_with(out, wide) if own else out
+    return est.select("doc_a", "doc_b", F.round("est_sim", 6).alias("est_sim"))
 
 
 # lsh_bucket_advisor decision constants (r06 verdict item 7). The
@@ -295,6 +317,93 @@ ADVISOR_BUCKET_MARGIN = 4
 ADVISOR_TOP_SHARE_PPM = 200_000  # == scale.SHUFFLE_SKEW_TOP1_PPM
 ADVISOR_CAP_FLOOR = 8  # == pipelines.MINHASH_MAX_BUCKET (import cycle)
 
+_PAIRS = "(c * (c - 1)) div 2"  # candidate pairs a key of c rows emits
+
+
+def _ppm(num: str, den: str) -> str:
+    """``1e6 * num DIV den`` in 128-bit (decimal(38,0) <-> HUGEINT):
+    1e6 · Σ c(c−1)/2 overflows int64 at real corpus sizes."""
+    d = "decimal(38,0)"
+    return (
+        f"CAST((CAST(1000000 AS {d}) * CAST({num} AS {d})) "
+        f"DIV CAST({den} AS {d}) AS BIGINT)"
+    )
+
+
+def _advise(
+    cnt: DataFrame, n_docs: "F.Column | DataFrame", signal: "F.Column",
+    names: tuple[str, str, str, str], margin: int, cap_floor: int,
+) -> DataFrame:
+    """The cap advisors' one-row verdict over a ``(key..., c)`` count
+    frame: ``(n_docs, <n_keys>, total_pairs, <max>, <median>, <share>,
+    pairs_per_doc_ppm, cap_recommended, recommended_cap)``, the
+    bracketed names taken from ``names`` in that order. ``n_docs`` is an
+    aggregate over the count frame when the keys fix it, else a one-row
+    ``(n_docs)`` frame; ``signal`` aggregates the pair mass whose share
+    of ``total_pairs`` decides the cap.
+
+    The median folds the count frame to its count-of-counts histogram
+    first (the ``grouping_skew_gini`` idiom), so the only global window
+    is over ≤ √(2·n_keys) rows and the statistic is integer-exact:
+    median = smallest size with cumulative key count ≥
+    ceil(n_keys/2). Cap ON iff the signal holds ≥
+    ``ADVISOR_TOP_SHARE_PPM`` of all pairs AND the largest key exceeds
+    ``cap_floor``; recommended value = ``greatest(margin · median,
+    cap_floor)``, NULL when the cap is off."""
+    by_cnt = not isinstance(n_docs, DataFrame)
+    tot = cnt.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum(F.expr(_PAIRS)).cast("long").alias("total_pairs"),
+        F.max("c").cast("long").alias("max_c"),
+        signal.cast("long").alias("signal_pairs"),
+        *([n_docs.alias("n_docs")] if by_cnt else []),
+    )
+    hist = cnt.groupBy(F.col("c").alias("x")).agg(F.count(F.lit(1)).alias("m"))
+    w_le = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    cum = hist.withColumn("cm", F.sum("m").over(w_le))
+    med = (
+        cum.crossJoin(F.broadcast(tot.select("n_keys")))
+        .where(F.expr("cm >= (n_keys + 1) div 2"))
+        .agg(F.min("x").cast("long").alias("median_c"))
+    )
+    share_ppm = (
+        f"CASE WHEN total_pairs > 0 THEN {_ppm('signal_pairs', 'total_pairs')}"
+        f" ELSE CAST(0 AS BIGINT) END"
+    )
+    cap_on = f"({share_ppm}) >= {ADVISOR_TOP_SHARE_PPM} AND max_c > {cap_floor}"
+    n_keys, max_c, median_c, share = names
+    out = tot if by_cnt else tot.crossJoin(F.broadcast(n_docs))
+    return (
+        out.crossJoin(F.broadcast(med))
+        .select(
+            "n_docs",
+            F.col("n_keys").alias(n_keys),
+            "total_pairs",
+            F.col("max_c").alias(max_c),
+            F.col("median_c").alias(median_c),
+            F.expr(share_ppm).alias(share),
+            F.expr(_ppm("total_pairs", "n_docs")).alias("pairs_per_doc_ppm"),
+            F.expr(cap_on).alias("cap_recommended"),
+            F.expr(
+                f"CASE WHEN {cap_on} THEN "
+                f"greatest({margin} * median_c, {cap_floor}) "
+                f"ELSE CAST(NULL AS BIGINT) END"
+            ).alias("recommended_cap"),
+        )
+    )
+
+
+def _advised(frame: DataFrame, advise, join) -> DataFrame:
+    """The adaptive forms' one dispatch: materialize the shared
+    expensive ``frame`` once, collect the one-row verdict of
+    ``advise(frame)``, then return ``join(frame, cap)`` with the
+    recommended cap (None when the advisor says the corpus is
+    organic)."""
+    frame = materialize(frame)
+    adv = advise(frame).collect()[0]
+    cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
+    return join(frame, cap)
+
 
 def lsh_bucket_advisor(
     docs: DataFrame,
@@ -314,14 +423,8 @@ def lsh_bucket_advisor(
     pathological tail.
 
     Plan shape: signatures → band keys → ONE (band, sig) count
-    aggregation (map-combinable) — the self-join itself never runs.
-    The median bucket size folds the count frame to its
-    count-of-counts histogram first (the ``grouping_skew_gini``
-    idiom), so the only global window is over ≤ √(2·n_buckets) rows
-    and the whole statistic is integer-exact: median = smallest size
-    with cumulative bucket count ≥ ceil(n_buckets/2). The ppm shares
-    run 128-bit (decimal(38,0) ↔ HUGEINT) because 1e6·Σ c(c−1)/2
-    overflows int64 at real corpus sizes.
+    aggregation (map-combinable) — the self-join itself never runs;
+    the statistics are :func:`_advise`'s.
 
     Decision rule (constants above): cap ON iff the top bucket holds
     ≥ ``ADVISOR_TOP_SHARE_PPM`` of all candidate pairs AND
@@ -333,61 +436,22 @@ def lsh_bucket_advisor(
     recommended_cap)`` — ``recommended_cap`` is NULL when the corpus
     is organic.
     """
-    n_bands = n_hashes // rows_per_band
-    # sig_wide: precomputed (persisted) signature frame, so an adaptive
-    # caller pays the most expensive stage ONCE for advisor + join
+    # sig_wide: precomputed (materialized) signature frame, so an
+    # adaptive caller pays the most expensive stage ONCE for advisor + join
     wide = (
         sig_wide
         if sig_wide is not None
         else minhash_signatures_wide(docs, n_hashes)
     )
-    bsig = lsh_band_signatures(wide, rows_per_band, n_hashes)
-    cnt = bsig.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("c"))
-    tot = cnt.agg(
-        F.sum("c").cast("long").alias("n_entries"),
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.expr("(c * (c - 1)) div 2")).cast("long").alias("total_pairs"),
-        F.max("c").cast("long").alias("max_bucket"),
-        F.max(F.expr("(c * (c - 1)) div 2")).cast("long").alias("top_pairs"),
+    cnt = (
+        lsh_band_signatures(wide, rows_per_band, n_hashes)
+        .groupBy("band", "sig")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    hist = cnt.groupBy(F.col("c").alias("x")).agg(F.count(F.lit(1)).alias("m"))
-    w_le = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("cm", F.sum("m").over(w_le))
-    med = (
-        cum.crossJoin(F.broadcast(tot.select("n_buckets")))
-        .where(F.expr("cm >= (n_buckets + 1) div 2"))
-        .agg(F.min("x").cast("long").alias("median_bucket"))
-    )
-    D = "decimal(38,0)"
-    share = (
-        f"CASE WHEN total_pairs > 0 THEN "
-        f"CAST((CAST(1000000 AS {D}) * CAST(top_pairs AS {D})) "
-        f"DIV CAST(total_pairs AS {D}) AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-    )
-    cap_on = (
-        f"({share}) >= {ADVISOR_TOP_SHARE_PPM} AND max_bucket > {cap_floor}"
-    )
-    return (
-        tot.crossJoin(F.broadcast(med))
-        .select(
-            F.expr(f"n_entries div {n_bands}").alias("n_docs"),
-            "n_buckets",
-            "total_pairs",
-            "max_bucket",
-            "median_bucket",
-            F.expr(share).alias("top_share_ppm"),
-            F.expr(
-                f"CAST((CAST(1000000 AS {D}) * CAST(total_pairs AS {D})) "
-                f"DIV CAST(n_entries div {n_bands} AS {D}) AS BIGINT)"
-            ).alias("pairs_per_doc_ppm"),
-            F.expr(cap_on).alias("cap_recommended"),
-            F.expr(
-                f"CASE WHEN {cap_on} THEN "
-                f"greatest({margin} * median_bucket, {cap_floor}) "
-                f"ELSE CAST(NULL AS BIGINT) END"
-            ).alias("recommended_cap"),
-        )
-    )
+    # every document holds one bucket entry per band
+    nd = F.expr(f"sum(c) div {n_hashes // rows_per_band}")
+    names = ("n_buckets", "max_bucket", "median_bucket", "top_share_ppm")
+    return _advise(cnt, nd, F.max(F.expr(_PAIRS)), names, margin, cap_floor)
 
 
 def minhash_lsh_pairs_advised(
@@ -409,20 +473,43 @@ def minhash_lsh_pairs_advised(
     each branch.
 
     The wide signature frame — the pipeline's most expensive stage —
-    is computed ONCE and persisted here: the advisor's 1-row collect
-    materializes it into cache, and the band self-join reuses the
-    cached frame instead of rebuilding it (r07 advice item)."""
-    wide = minhash_signatures_wide(docs, n_hashes).persist()
-    adv = lsh_bucket_advisor(
-        docs, n_hashes, rows_per_band, sig_wide=wide
-    ).collect()[0]
-    cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
-    return _release_with(
-        minhash_lsh_pairs(
+    is materialized ONCE: the advisor and the band self-join both read
+    it instead of rebuilding it (r07 advice item)."""
+    return _advised(
+        minhash_signatures_wide(docs, n_hashes),
+        lambda wide: lsh_bucket_advisor(
+            docs, n_hashes, rows_per_band, sig_wide=wide
+        ),
+        lambda wide, cap: minhash_lsh_pairs(
             docs, n_hashes, rows_per_band, threshold, max_bucket=cap,
             sig_wide=wide,
         ),
-        wide,
+    )
+
+
+def _shard_flags(
+    shard: DataFrame, cand: DataFrame, wide_s: DataFrame, wide_p: DataFrame,
+    n_hashes: int, threshold: float,
+) -> DataFrame:
+    """The incremental forms' rollup: one ``(doc_id, is_dup, dup_of)``
+    row per ``shard`` doc, ``dup_of`` = the smallest candidate partner
+    ``pid`` whose estimated Jaccard vs ``sid`` reaches ``threshold``
+    (−1 when none). ``sid`` signatures come from ``wide_s``, ``pid``
+    ones from ``wide_p``."""
+    dups = (
+        _agreement(cand, "sid", "pid", wide_s, wide_p, n_hashes)
+        .where(F.col("k") / float(n_hashes) >= threshold)
+        .groupBy("sid")
+        .agg(F.min("pid").alias("dup_of"))
+    )
+    return (
+        shard.select("doc_id")
+        .join(dups, shard["doc_id"] == dups["sid"], "left")
+        .select(
+            "doc_id",
+            F.col("dup_of").isNotNull().cast("long").alias("is_dup"),
+            F.coalesce("dup_of", F.lit(-1)).cast("long").alias("dup_of"),
+        )
     )
 
 
@@ -460,9 +547,9 @@ def incremental_minhash_dedup(
         "is_base", F.lit(0)
     )
     union = base.unionByName(shard)
-    wide = minhash_signatures_wide(
-        union.select("doc_id", "text"), n_hashes
-    ).persist()
+    wide = materialize(
+        minhash_signatures_wide(union.select("doc_id", "text"), n_hashes)
+    )
     flags = union.select("doc_id", "is_base")
     bsig = lsh_band_signatures(wide, rows_per_band, n_hashes).join(
         flags, "doc_id"
@@ -485,38 +572,7 @@ def incremental_minhash_dedup(
         .select("sid", "pid")
         .distinct()
     )
-    wa = wide.select(
-        F.col("doc_id").alias("sid"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n_hashes)],
-    )
-    wb = wide.select(
-        F.col("doc_id").alias("pid"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n_hashes)],
-    )
-    k = functools.reduce(
-        operator.add,
-        [(F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(n_hashes)],
-    )
-    dups = (
-        cand.join(wa, "sid")
-        .join(wb, "pid")
-        .where(k / float(n_hashes) >= threshold)
-        .groupBy("sid")
-        .agg(F.min("pid").alias("dup_of"))
-    )
-    out = (
-        shard.select("doc_id")
-        .join(dups, shard["doc_id"] == dups["sid"], "left")
-        .select(
-            "doc_id",
-            F.when(F.col("dup_of").isNotNull(), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("is_dup"),
-            F.coalesce("dup_of", F.lit(-1)).cast("long").alias("dup_of"),
-        )
-    )
-    return _release_with(out, wide)
+    return _shard_flags(shard, cand, wide, wide, n_hashes, threshold)
 
 
 # sig_bucket fan for the standing MinHash index: band dirs split into
@@ -581,7 +637,7 @@ def incremental_dedup_from_index(
     Returns one row per shard doc: ``(doc_id, is_dup, dup_of)`` with
     ``dup_of`` = smallest qualifying partner id, −1 when none."""
     shard = shard_docs.select("doc_id", "text")
-    swide = minhash_signatures_wide(shard, n_hashes).persist()
+    swide = materialize(minhash_signatures_wide(shard, n_hashes))
     sbands = lsh_band_signatures(swide, rows_per_band, n_hashes).withColumn(
         "sig_bucket", F.col("sig") % SIG_BUCKETS
     )
@@ -622,40 +678,8 @@ def incremental_dedup_from_index(
         .select("sid", "pid")
     )
     cand = cand_base.unionByName(cand_shard).distinct()
-    base_wide = spark.read.parquet(f"{path}/signatures")
-    wide_all = base_wide.unionByName(swide)
-    wa = swide.select(
-        F.col("doc_id").alias("sid"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n_hashes)],
-    )
-    wb = wide_all.select(
-        F.col("doc_id").alias("pid"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n_hashes)],
-    )
-    k = functools.reduce(
-        operator.add,
-        [(F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(n_hashes)],
-    )
-    dups = (
-        cand.join(wa, "sid")
-        .join(wb, "pid")
-        .where(k / float(n_hashes) >= threshold)
-        .groupBy("sid")
-        .agg(F.min("pid").alias("dup_of"))
-    )
-    out = (
-        shard.select("doc_id")
-        .join(dups, shard["doc_id"] == dups["sid"], "left")
-        .select(
-            "doc_id",
-            F.when(F.col("dup_of").isNotNull(), 1)
-            .otherwise(0)
-            .cast("long")
-            .alias("is_dup"),
-            F.coalesce("dup_of", F.lit(-1)).cast("long").alias("dup_of"),
-        )
-    )
-    return _release_with(out, swide)
+    wide_all = spark.read.parquet(f"{path}/signatures").unionByName(swide)
+    return _shard_flags(shard, cand, swide, wide_all, n_hashes, threshold)
 
 
 def simhash_fingerprints(
@@ -715,18 +739,10 @@ def simhash_pairs(
     distance is computed directly on the collision row — the two
     post-candidate fingerprint equi-joins (and their exchanges) are
     gone, and the hamming filter now runs BEFORE the distinct, so the
-    dedup exchange carries only surviving pairs. The fingerprint
-    frame is localCheckpointed (doc-count rows): with a held result a
-    persist+weakref-release tie is ~1 s faster (the fingerprint job
-    pipelines into the band join), but every real consumer of this
-    function DERIVES from the result and drops it (the workload casts
-    hamming, consensus projects columns, the cluster path feeds
-    components) — the weakref then fires before execution and the
-    fingerprint pass silently runs once per band-join side. The
-    checkpoint's lifetime is ContextCleaner-managed and caller-proof.
+    dedup exchange carries only surviving pairs.
     """
     width = SIMHASH_BITS // SIMHASH_BANDS
-    fp = simhash_fingerprints(docs, ws_rows=ws_rows).localCheckpoint()
+    fp = materialize(simhash_fingerprints(docs, ws_rows=ws_rows))
     bands = fp.select(
         "doc_id",
         "fingerprint",
@@ -996,51 +1012,17 @@ def minhash_estimate_error(
     collisions) surface with exact_ppm = 0 instead of silently
     dropping. Returns ``(doc_a, doc_b, est_ppm, exact_ppm, err_ppm)``.
     """
-    from query_refinement_dsit_databases_2021_spark.operators.textops import (
-        shingles as _shingles,
-    )
-
-    wide = minhash_signatures_wide(docs, n_hashes).persist()
-    bsig = lsh_band_signatures(wide, rows_per_band, n_hashes)
-    b1 = bsig.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b2 = bsig.select(
-        F.col("doc_id").alias("doc_b"), "band", F.col("sig").alias("sig_b")
-    )
-    cand = (
-        b1.join(
-            b2,
-            (b1["band"] == b2["band"])
-            & (b1["sig"] == b2["sig_b"])
-            & (b1["doc_a"] < b2["doc_b"]),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-        .persist()
-    )
-    wa = wide.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n_hashes)],
-    )
-    wb = wide.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n_hashes)],
-    )
-    k = functools.reduce(
-        operator.add,
-        [(F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(n_hashes)],
+    wide = materialize(minhash_signatures_wide(docs, n_hashes))
+    cand = materialize(
+        _band_candidates(lsh_band_signatures(wide, rows_per_band, n_hashes))
     )
     # integer ppm via int64 floor division (`div` / DuckDB `//`) — the
     # float path (floor of a double quotient) can land on the wrong
     # side of an integer boundary; true integer division cannot
-    est = (
-        cand.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (k.cast("long") * 1000000).alias("_en"),
-        )
-        .select("doc_a", "doc_b", F.expr(f"_en div {n_hashes}").alias("est_ppm"))
+    est = _agreement(cand, "doc_a", "doc_b", wide, wide, n_hashes).select(
+        "doc_a",
+        "doc_b",
+        F.expr(f"(CAST(k AS BIGINT) * 1000000) div {n_hashes}").alias("est_ppm"),
     )
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -1048,15 +1030,42 @@ def minhash_estimate_error(
         .distinct()
     )
     # r09 (guide §2.4): the candidate-restricted shingle frame feeds
-    # the self-join twice AND the size aggregate — persist it so the
+    # the self-join twice AND the size aggregate — materialized so the
     # tokenize+semi-join runs once, not three times. Sizes only ever
     # join back to candidate docs (est's doc_a/doc_b ⊆ cand_docs), so
     # aggregating them from the restricted frame is value-identical to
-    # the previous full-corpus aggregate and saves a whole corpus pass.
-    shc = _shingles(docs).join(cand_docs, "doc_id", "left_semi").persist()
-    sizes = shc.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shc.select(F.col("doc_id").alias("doc_a"), "s")
-    sb = shc.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
+    # a full-corpus aggregate and saves a whole corpus pass.
+    shc = materialize(shingles(docs).join(cand_docs, "doc_id", "left_semi"))
+    # every candidate doc has >= 1 shingle (it has a signature), so a
+    # candidate pair sharing none (a pure band-hash collision) has
+    # exact_ppm = 0 div (na + nb) = 0
+    exact = est.join(_overlap(shc, None), ["doc_a", "doc_b"], "left").select(
+        "doc_a",
+        "doc_b",
+        "est_ppm",
+        F.coalesce(
+            F.expr("(c * 1000000) div (na + nb - c)"), F.lit(0)
+        ).cast("long").alias("exact_ppm"),
+    )
+    return exact.select(
+        "doc_a",
+        "doc_b",
+        "est_ppm",
+        "exact_ppm",
+        F.abs(F.col("est_ppm") - F.col("exact_ppm")).alias("err_ppm"),
+    )
+
+
+def _overlap(sh: DataFrame, max_posting: int | None) -> DataFrame:
+    """``(doc_a, doc_b, c, na, nb)``, doc_a < doc_b, for every pair
+    sharing >= 1 row of the ``(doc_id, s)`` frame ``sh``: ``c`` shared
+    keys through the inverted-index self-join (stop keys capped at
+    ``max_posting``), ``na``/``nb`` the uncapped set sizes — so capped
+    scores under-estimate."""
+    capped = _cap_postings(sh, ["s"], max_posting)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sa = capped.select(F.col("doc_id").alias("doc_a"), "s")
+    sb = capped.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
     inter = (
         sa.join(sb, (sa["s"] == sb["s_b"]) & (sa["doc_a"] < sb["doc_b"]))
         .groupBy("doc_a", "doc_b")
@@ -1064,33 +1073,7 @@ def minhash_estimate_error(
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    c0 = F.coalesce(F.col("c"), F.lit(0)).cast("long")
-    exact = (
-        est.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_ppm",
-            (c0 * 1000000).alias("_xn"),
-            (F.col("na") + F.col("nb") - c0).cast("long").alias("_xd"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_ppm",
-            F.expr("_xn div _xd").alias("exact_ppm"),
-        )
-    )
-    out = exact.select(
-        "doc_a",
-        "doc_b",
-        "est_ppm",
-        "exact_ppm",
-        F.abs(F.col("est_ppm") - F.col("exact_ppm")).alias("err_ppm"),
-    )
-    return _release_with(out, wide, cand, shc)
+    return inter.join(na, "doc_a").join(nb, "doc_b")
 
 
 def ngram_jaccard_pairs(
@@ -1115,41 +1098,16 @@ def ngram_jaccard_pairs(
     filtered in the SAME shuffle that the self-join needs (one
     exchange on the shingle, ~2x faster than a groupBy + equi-join,
     measured at sf0.1)."""
-    # shingle_rows: precomputed (persisted) shingle frame, so an
+    # shingle_rows: precomputed (materialized) shingle frame, so an
     # adaptive caller pays the tokenize+distinct stage ONCE for
-    # advisor + join (mirrors minhash_lsh_pairs' sig_wide seam); the
-    # caller owns its lifetime, while a frame persisted here is tied
-    # to the result
-    own = shingle_rows is None
-    sh = shingles(docs).persist() if own else shingle_rows
-    if max_posting is not None:
-        w = Window.partitionBy("s")
-        joined_sh = (
-            sh.withColumn("_df", F.count("*").over(w))
-            .where(F.col("_df") <= max_posting)
-            .drop("_df")
-        )
-    else:
-        joined_sh = sh
-
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = joined_sh.select(F.col("doc_id").alias("doc_a"), "s")
-    sb = joined_sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    inter = (
-        sa.join(sb, (sa["s"] == sb["s_b"]) & (sa["doc_a"] < sb["doc_b"]))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    # advisor + join (mirrors minhash_lsh_pairs' sig_wide seam)
+    sh = shingle_rows if shingle_rows is not None else materialize(shingles(docs))
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    out = (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+    return (
+        _overlap(sh, max_posting)
         .where(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
-    return _release_with(out, sh) if own else out
 
 
 # posting_advisor decision constants (r07 verdict item 5 — unify the
@@ -1190,10 +1148,7 @@ def posting_advisor(
 
     Plan shape: shingles → ONE per-shingle count aggregation
     (map-combinable) + one countDistinct(doc_id) — the self-join never
-    runs. Median posting length folds the count frame to its
-    count-of-counts histogram (window over ≤ √(2·n_shingles) rows);
-    ppm shares run 128-bit (decimal(38,0)) because 1e6·Σ c(c−1)/2
-    overflows int64 at real corpus sizes.
+    runs; the statistics are :func:`_advise`'s.
 
     Decision rule (constants above; the share threshold is the LSH
     advisor's ``ADVISOR_TOP_SHARE_PPM``): cap ON iff posting lists
@@ -1207,57 +1162,10 @@ def posting_advisor(
     when the corpus is organic."""
     sh = shingle_rows if shingle_rows is not None else shingles(docs)
     cnt = sh.groupBy("s").agg(F.count(F.lit(1)).alias("c"))
-    tot = cnt.agg(
-        F.count(F.lit(1)).alias("n_shingles"),
-        F.sum(F.expr("(c * (c - 1)) div 2")).cast("long").alias("total_pairs"),
-        F.max("c").cast("long").alias("max_posting"),
-        F.sum(
-            F.expr(
-                f"CASE WHEN c > {cap_floor} THEN (c * (c - 1)) div 2 "
-                f"ELSE 0 END"
-            )
-        ).cast("long").alias("heavy_pairs"),
-    )
     nd = sh.agg(F.countDistinct("doc_id").cast("long").alias("n_docs"))
-    hist = cnt.groupBy(F.col("c").alias("x")).agg(F.count(F.lit(1)).alias("m"))
-    w_le = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("cm", F.sum("m").over(w_le))
-    med = (
-        cum.crossJoin(F.broadcast(tot.select("n_shingles")))
-        .where(F.expr("cm >= (n_shingles + 1) div 2"))
-        .agg(F.min("x").cast("long").alias("median_posting"))
-    )
-    D = "decimal(38,0)"
-    share = (
-        f"CASE WHEN total_pairs > 0 THEN "
-        f"CAST((CAST(1000000 AS {D}) * CAST(heavy_pairs AS {D})) "
-        f"DIV CAST(total_pairs AS {D}) AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-    )
-    cap_on = (
-        f"({share}) >= {ADVISOR_TOP_SHARE_PPM} AND max_posting > {cap_floor}"
-    )
-    return (
-        tot.crossJoin(F.broadcast(nd))
-        .crossJoin(F.broadcast(med))
-        .select(
-            "n_docs",
-            "n_shingles",
-            "total_pairs",
-            "max_posting",
-            "median_posting",
-            F.expr(share).alias("heavy_share_ppm"),
-            F.expr(
-                f"CAST((CAST(1000000 AS {D}) * CAST(total_pairs AS {D})) "
-                f"DIV CAST(n_docs AS {D}) AS BIGINT)"
-            ).alias("pairs_per_doc_ppm"),
-            F.expr(cap_on).alias("cap_recommended"),
-            F.expr(
-                f"CASE WHEN {cap_on} THEN "
-                f"greatest({margin} * median_posting, {cap_floor}) "
-                f"ELSE CAST(NULL AS BIGINT) END"
-            ).alias("recommended_cap"),
-        )
-    )
+    heavy = F.sum(F.expr(f"CASE WHEN c > {cap_floor} THEN {_PAIRS} ELSE 0 END"))
+    names = ("n_shingles", "max_posting", "median_posting", "heavy_share_ppm")
+    return _advise(cnt, nd, heavy, names, margin, cap_floor)
 
 
 def ngram_jaccard_pairs_advised(
@@ -1275,15 +1183,14 @@ def ngram_jaccard_pairs_advised(
     join together.
 
     The shingle frame — the pipeline's shared expensive stage — is
-    computed ONCE and persisted: the advisor's collect materializes it
-    into cache, and both the capped index and the union-size
-    denominators reuse the cached frame."""
-    sh = shingles(docs).persist()
-    adv = posting_advisor(docs, shingle_rows=sh).collect()[0]
-    cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
-    return _release_with(
-        ngram_jaccard_pairs(docs, threshold, max_posting=cap, shingle_rows=sh),
-        sh,
+    materialized ONCE: the advisor, the capped index and the
+    union-size denominators all read it."""
+    return _advised(
+        shingles(docs),
+        lambda sh: posting_advisor(docs, shingle_rows=sh),
+        lambda sh, cap: ngram_jaccard_pairs(
+            docs, threshold, max_posting=cap, shingle_rows=sh
+        ),
     )
 
 
@@ -1308,13 +1215,6 @@ def winnow_fingerprints(
     caller (or the advisor) computes it once. One posexplode + one
     per-doc window pass; the window argmin is the packed-key integer
     min documented on :func:`winnow_pairs`."""
-    from query_refinement_dsit_databases_2021_spark.operators.textops import (
-        SHINGLE_K,
-        gram_array,
-        rolling_hash,
-        tokens,
-    )
-
     kk = int(k if k is not None else SHINGLE_K)
     base = docs.select(
         "doc_id",
@@ -1376,15 +1276,7 @@ def winnow_pairs(
         if fingerprint_rows is not None
         else winnow_fingerprints(docs, k, w)
     )
-    if max_posting is not None:
-        wdf = Window.partitionBy("h")
-        capped = (
-            sel.withColumn("_df", F.count("*").over(wdf))
-            .where(F.col("_df") <= max_posting)
-            .drop("_df")
-        )
-    else:
-        capped = sel
+    capped = _cap_postings(sel, ["h"], max_posting)
     a = capped.select(F.col("doc_id").alias("doc_a"), "h")
     b = capped.select(F.col("doc_id").alias("doc_b"), F.col("h").alias("hb"))
     return (
@@ -1419,16 +1311,14 @@ def winnow_pairs_advised(
     clips nothing; cap_recommended still reads True with the
     heavy-share evidence, so callers needing a hard bound can apply
     ``cap_floor`` directly."""
-    sel = winnow_fingerprints(docs, k, w).persist()
-    adv = posting_advisor(
-        docs, shingle_rows=sel.select("doc_id", F.col("h").alias("s"))
-    ).collect()[0]
-    cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
-    return _release_with(
-        winnow_pairs(
+    return _advised(
+        winnow_fingerprints(docs, k, w),
+        lambda sel: posting_advisor(
+            docs, shingle_rows=sel.select("doc_id", F.col("h").alias("s"))
+        ),
+        lambda sel, cap: winnow_pairs(
             docs, k, w, min_shared, max_posting=cap, fingerprint_rows=sel
         ),
-        sel,
     )
 
 
@@ -1456,30 +1346,9 @@ def ngram_containment_pairs(
     shingles, sizes keep them), same documented contract. Returns
     ``(doc_a, doc_b, inter_size, cont_ppm)`` with doc_a < doc_b.
     """
-    own = shingle_rows is None  # as in ngram_jaccard_pairs
-    sh = shingles(docs).persist() if own else shingle_rows
-    if max_posting is not None:
-        w = Window.partitionBy("s")
-        joined_sh = (
-            sh.withColumn("_df", F.count("*").over(w))
-            .where(F.col("_df") <= max_posting)
-            .drop("_df")
-        )
-    else:
-        joined_sh = sh
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = joined_sh.select(F.col("doc_id").alias("doc_a"), "s")
-    sb = joined_sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
-    inter = (
-        sa.join(sb, (sa["s"] == sb["s_b"]) & (sa["doc_a"] < sb["doc_b"]))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    out = (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+    sh = shingle_rows if shingle_rows is not None else materialize(shingles(docs))
+    return (
+        _overlap(sh, max_posting)
         .select(
             "doc_a",
             "doc_b",
@@ -1490,7 +1359,6 @@ def ngram_containment_pairs(
         )
         .where(F.col("cont_ppm") >= threshold_ppm)
     )
-    return _release_with(out, sh) if own else out
 
 
 def ngram_containment_pairs_advised(
@@ -1503,14 +1371,12 @@ def ngram_containment_pairs_advised(
     (r07 verdict item 5's "unify"). Shingle frame computed ONCE for
     advisor + join; the oracle replays the identical dynamic
     decision."""
-    sh = shingles(docs).persist()
-    adv = posting_advisor(docs, shingle_rows=sh).collect()[0]
-    cap = int(adv["recommended_cap"]) if adv["cap_recommended"] else None
-    return _release_with(
-        ngram_containment_pairs(
+    return _advised(
+        shingles(docs),
+        lambda sh: posting_advisor(docs, shingle_rows=sh),
+        lambda sh, cap: ngram_containment_pairs(
             docs, threshold_ppm, max_posting=cap, shingle_rows=sh
         ),
-        sh,
     )
 
 

@@ -3,7 +3,10 @@
 Every iterative operator in this engine (pagerank/HITS/BFS loops,
 k-core peeling, connected components, the dedup closure frames)
 truncates loop lineage: loop invariants through :func:`materialize`,
-per-round state through a lazy ``localCheckpoint``. Round 9 used bare
+per-round state through a lazy ``localCheckpoint``. The dedup
+operators (``operators/dedup.py``) also hold every frame they read
+more than once through :func:`materialize`: signatures, shingles,
+winnowing and SimHash fingerprints, candidate pairs. Round 9 used bare
 ``localCheckpoint()`` everywhere; the round-9 verdict flagged two
 scale hazards this module closes:
 
@@ -86,8 +89,11 @@ def materialize(df: DataFrame) -> DataFrame:
     Mode (``spark.qr.materialize`` conf):
 
     - ``local`` (default): ``localCheckpoint`` — executor-local
-      blocks, ContextCleaner-managed lifetime; right in local mode and
-      for node-sized frames anywhere.
+      blocks, ContextCleaner-managed lifetime: they stay while any
+      frame whose plan reads them is alive (a frame derived from the
+      result too) and are released after the last one is
+      garbage-collected; right in local mode and for node-sized frames
+      anywhere.
     - ``reliable``: ``checkpoint()`` to the SparkContext checkpoint
       dir (must be set — fail loudly otherwise): the 100 TB setting
       for edge-sized invariants, per the executor-loss rule in

@@ -995,12 +995,12 @@ def _wl_curation_v4(spark, sf_dir):
     keep = (
         textops.gopher_rules(docs).where(F.col("keep") == 1).select("doc_id")
     )
-    kept = docs.join(keep, "doc_id").persist()
+    kept = materialize(docs.join(keep, "doc_id"))
     pairs = dedup.ngram_containment_pairs(
         kept, max_posting=JACCARD_MAX_POSTING
     )
     drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    deduped = kept.join(drop, "doc_id", "left_anti").persist()
+    deduped = materialize(kept.join(drop, "doc_id", "left_anti"))
     sp = hash_split(deduped.select("doc_id"), key="doc_id").select(
         "doc_id", "split"
     )
@@ -1053,7 +1053,7 @@ def _wl_curation_v5(spark, sf_dir):
         .where(F.col("score_ppm") >= 1_000_000)
         .select("doc_id")
     )
-    kept = docs.join(dsir_pass, "doc_id").persist()
+    kept = materialize(docs.join(dsir_pass, "doc_id"))
     templated = (
         dedup.dup_ngram_spans(kept)
         .where(F.col("dup_frac_ppm") > 600_000)
@@ -1198,17 +1198,22 @@ def _wl_dedup_pr(spark, sf_dir):
     int64; rates integer ppm (0 when the denominator is 0).
     """
     docs = _docs(spark, sf_dir)
+    # one shingle pass feeds both detectors (the consensus seam)
+    shingle_rows = materialize(textops.shingles(docs))
+    wide = materialize(
+        dedup.minhash_signatures_wide(docs, shingle_rows=shingle_rows)
+    )
     # both detectors' pair frames are referenced twice (semi-join +
     # denominator count), which re-embeds — and re-runs — each whole
     # detector plan; localCheckpoint runs each detector ONCE on its
     # pair-sized output (r09, guide §2.4)
     exact = materialize(
-        dedup.ngram_jaccard_pairs(docs, threshold=0.5).select(
-            "doc_a", "doc_b"
-        )
+        dedup.ngram_jaccard_pairs(
+            docs, threshold=0.5, shingle_rows=shingle_rows
+        ).select("doc_a", "doc_b")
     )
     cand = materialize(
-        dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b")
+        dedup.minhash_lsh_pairs(docs, sig_wide=wide).select("doc_a", "doc_b")
     )
     tp = cand.join(exact, ["doc_a", "doc_b"], "leftsemi")
     counts = (
@@ -1280,16 +1285,16 @@ def _wl_dedup_consensus(spark, sf_dir):
     # the shingle pass between the two shingle-based detectors; r10
     # extends the seam to SimHash): the token-array frame is
     # materialized once and every detector derives from it — SimHash
-    # explodes the raw tokens, the shingle frame (still persisted, it
+    # explodes the raw tokens, the shingle frame (also materialized, it
     # feeds two detectors) is built from the same arrays. Before, the
     # SimHash branch re-scanned and re-split the whole corpus.
     base = materialize(
         docs.select("doc_id", textops.tokens(F.col("text")).alias("ws"))
     )
-    shingle_rows = textops.shingles(docs, ws_rows=base).persist()
-    wide = dedup.minhash_signatures_wide(
-        docs, shingle_rows=shingle_rows
-    ).persist()
+    shingle_rows = materialize(textops.shingles(docs, ws_rows=base))
+    wide = materialize(
+        dedup.minhash_signatures_wide(docs, shingle_rows=shingle_rows)
+    )
     mh = dedup.minhash_lsh_pairs(docs, sig_wide=wide).select(
         "doc_a", "doc_b"
     )
@@ -1297,7 +1302,7 @@ def _wl_dedup_consensus(spark, sf_dir):
     ct = dedup.ngram_containment_pairs(
         docs, max_posting=JACCARD_MAX_POSTING, shingle_rows=shingle_rows
     ).select("doc_a", "doc_b")
-    out = (
+    return (
         mh.unionByName(sh)
         .unionByName(ct)
         .groupBy("doc_a", "doc_b")
@@ -1305,7 +1310,6 @@ def _wl_dedup_consensus(spark, sf_dir):
         .where(F.col("n_methods") >= CONSENSUS_MIN_VOTES)
         .orderBy("doc_a", "doc_b")
     )
-    return dedup._release_with(out, shingle_rows, wide)
 
 
 def _wl_quality(spark, sf_dir):
@@ -1385,7 +1389,7 @@ def _wl_curation_v6(spark, sf_dir):
         .where(F.col("label") == "keep")
         .select("doc_id")
     )
-    kept2 = kept.join(qc_keep, "doc_id").persist()
+    kept2 = materialize(kept.join(qc_keep, "doc_id"))
     survivors = dedup.exact_dedup(kept2).select(
         F.col("keep_id").alias("doc_id")
     )
@@ -2447,10 +2451,10 @@ def _wl_curation_v3(spark, sf_dir):
         .where(F.col("keep") == 1)
         .select("doc_id")
     )
-    # persist the filtered corpus: four downstream branches (LM stream,
-    # lang join, text selection, dedup) would otherwise each re-derive
-    # the Gopher pass — 20 corpus scans in the lazy DAG, measured
-    kept = docs.join(keep, "doc_id").persist()
+    # materialize the filtered corpus: four downstream branches (LM
+    # stream, lang join, text selection, dedup) would otherwise each
+    # re-derive the Gopher pass — 20 corpus scans in the lazy DAG, measured
+    kept = materialize(docs.join(keep, "doc_id"))
     scores = textops.bigram_lm_scores(kept)
     w = Window.partitionBy("lang").orderBy(
         F.col("avg_logp").desc(), F.col("doc_id").asc()
@@ -2461,7 +2465,7 @@ def _wl_curation_v3(spark, sf_dir):
         .where(F.col("tercile") <= 2)
     )
     # sel feeds both the survivor groupBy and the final join-back
-    sel = kept.select("doc_id", "text").join(hm, "doc_id").persist()
+    sel = materialize(kept.select("doc_id", "text").join(hm, "doc_id"))
     surv = sel.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     fin = sel.join(surv.select("doc_id"), "doc_id")
     return (

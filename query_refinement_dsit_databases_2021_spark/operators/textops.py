@@ -986,6 +986,7 @@ def bpe_train(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
             break
         pa, pb, c = top[0]["pa"], top[0]["pb"], int(top[0]["c"])
         merges.append((r, pa, pb, pa + pb, c))
+        # vocabulary-sized loop state: a local checkpoint, not materialize()
         vocab = vocab.select(
             F.expr(
                 "replace(w, ' ' || {pa} || ' ' || {pb} || ' ', "
@@ -1140,6 +1141,7 @@ def bpe_train_batched(
                     e=expr, pa=_sql_str(pa), pb=_sql_str(pb)
                 )
             )
+        # vocabulary-sized loop state: a local checkpoint, not materialize()
         vocab = vocab.select(F.expr(expr).alias("w"), "cnt").localCheckpoint()
     return spark.createDataFrame(
         merges, "round long, pair_a string, pair_b string, merged string, cnt long"
@@ -1260,6 +1262,7 @@ def bpe_apply(docs: DataFrame, rounds: int = BPE_ROUNDS) -> DataFrame:
         if not top:
             break
         pa, pb = top[0]["pa"], top[0]["pb"]
+        # vocabulary-sized loop state: a local checkpoint, not materialize()
         vocab = vocab.select(
             "word",
             F.expr(

@@ -50,9 +50,9 @@ def test_mode_conf_validated(spark, frame):
 
 def test_operators_route_through_materialize_modes(spark, tmp_path):
     """r10 verdict item 2: the edge-sized truncation sites in the graph
-    and dedup operators must go through :func:`materialize`, so that a
-    cluster can switch them to reliable checkpoints / DISK_ONLY persists
-    by conf alone. Forcing each mode end-to-end proves the wiring: under
+    and dedup operators, and the frames dedup reads more than once,
+    must go through :func:`materialize`, so that a cluster can switch
+    them to reliable checkpoints / DISK_ONLY persists by conf alone. Forcing each mode end-to-end proves the wiring: under
     ``reliable`` a bare ``localCheckpoint()`` would not touch the
     checkpoint dir, and results must be bit-identical across modes."""
     from query_refinement_dsit_databases_2021_spark.operators import (
@@ -69,14 +69,28 @@ def test_operators_route_through_materialize_modes(spark, tmp_path):
         "doc_a long, doc_b long",
     )
 
+    docs = spark.createDataFrame(
+        [
+            (1, "modes alpha beta gamma delta epsilon"),
+            (2, "modes alpha beta gamma delta epsilon"),
+            (3, "modes alpha beta gamma delta zeta"),
+            (4, "other words entirely here instead now"),
+        ],
+        "doc_id long, text string",
+    )
+
     def run():
         return {
             "pagerank": _rows(graph.pagerank(edges, 3)),
             "triangles": _rows(graph.triangle_count(edges)),
             "components": _rows(dedup.neardup_components(pairs)),
+            "minhash": _rows(dedup.minhash_lsh_pairs(docs)),
+            "simhash": _rows(dedup.simhash_pairs(docs)),
+            "jaccard_advised": _rows(dedup.ngram_jaccard_pairs_advised(docs)),
         }
 
     base = run()
+    assert all(base.values()), base
     ckpt_dir = tmp_path / "ckpt"
     jsc = spark.sparkContext._jsc.sc()
     prev_dir = jsc.getCheckpointDir()  # scala Option[String]

@@ -107,9 +107,10 @@ NOTES = {
         "per-language sorts, never a global order."
     ),
     "pipe_curation_chain_v3": (
-        "Four-stage composition: InMemoryTableScan on the persisted "
-        "Gopher-filtered corpus feeds the LM stream, the lang join, "
-        "the selection, and the dedup — one parquet pass, equi-joins "
+        "Four-stage composition: the Gopher-filtered corpus and the "
+        "tercile selection are each materialized once (the two Scan "
+        "ExistingRDD leaves), so this final plan is the exact-dedup "
+        "survivor groupBy joined back onto the selection — equi-joins "
         "only, no NLJ/Cartesian anywhere."
     ),
     "ts_cross_corr": (
@@ -249,7 +250,7 @@ NOTES = {
     "pipe_curation_chain_v5": (
         "Four certified stages composed: DSIR broadcast-ratio scoring, "
         "span-gate window, exact-dedup groupBy, mixture rollup — each "
-        "stage boundary is a persisted doc_id-keyed frame."
+        "stage boundary is a materialized doc_id-keyed frame."
     ),
     "pipe_ann_ivfpq": (
         "Residual encode: broadcast centroid join + map-side code "
@@ -322,8 +323,8 @@ NOTES = {
     ),
     "pipe_curation_chain_v6": (
         "Denylist and classifier gates both reduce to per-doc "
-        "aggregates joined back onto the kept corpus (persisted once); "
-        "dedup survivors and the fertility manifest reuse it."
+        "aggregates joined back onto the kept corpus (materialized "
+        "once); dedup survivors and the fertility manifest reuse it."
     ),
     "pipe_vocab_prune_impact": (
         "Same single-Exchange MapInPandas shape as the segmenter — "
