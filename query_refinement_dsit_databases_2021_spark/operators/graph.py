@@ -21,12 +21,28 @@ decided in one place:
   map-side from the canonical set (half the shuffled bytes of
   deduplicating both directions).
 - :func:`_nodes` is the distinct node set of a directed edge list.
+- :func:`_degrees` is the ``(n, d)`` degree table of a canonical set.
 - :func:`_triangles` enumerates each triangle ``a < b < c`` of a
   canonical set exactly once as ``e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)``.
-- :func:`_min_plus_bfs` is the one BFS convergence loop, keyed by
-  ``node`` or by ``(seed, node)``.
 - :func:`_copurchase_edges` and :func:`_cosupplier_edges` are the two
   lineitem self-join graphs the workloads share.
+
+Every loop runs on one of two cores, each the only copy of its step:
+
+- :func:`_propagate` is one round of a fixed-round loop (pagerank,
+  PPR, katz, both HITS half-steps, label propagation): a message
+  projected from the node state joins the edge frame on the sending
+  endpoint, is aggregated per receiving node and folded back onto the
+  node frame by the caller's fold.
+- :func:`_fixpoint` is the one convergence loop (BFS, kcore, ktruss):
+  step, truncate, and compare a ``(count, ...)`` probe with the
+  previous round's, raising after ``max_iters`` rounds.
+
+Both truncate every round's state with a lazy ``localCheckpoint``
+that the next job materializes, and both decide the broadcast of the
+node-sized side through :func:`_broadcast_if`, priced by
+``materialize.broadcast_ok`` on a row count the loop already probed.
+Loop invariants (edges, node frames) go through ``materialize`` once.
 
 Exactness: every score is an int64 (or exact rational) computed with
 floor division, so results are bit-identical across engines and
@@ -40,17 +56,14 @@ wedge join when the wedge mass is small, and otherwise the
 degree-ordered adjacency intersection (orientation by ``(degree,
 node)`` bounds every out-list by √(2m)).
 
-Loop-invariant frames (edges, node state, adjacency) go through
-``materialize`` once; convergence loops truncate lineage with lazy
-local checkpoints that their ``count`` probe materializes in the same
-job. The DuckDB oracles are plain SQL: fixed-round loops unroll into
-CTE chains, convergence loops into bounded unrolls with a guard that
+The DuckDB oracles are plain SQL: fixed-round loops unroll into CTE
+chains, convergence loops into bounded unrolls with a guard that
 errors if the last two rounds still differ.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from query_refinement_dsit_databases_2021_spark.operators.materialize import (
@@ -92,12 +105,78 @@ def _nodes(edges: DataFrame) -> DataFrame:
     )
 
 
+def _degrees(und: DataFrame) -> DataFrame:
+    """Degree table ``(n, d)`` of a canonical edge set."""
+    return (
+        und.select(F.explode(F.array("a", "b")).alias("n"))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
 def _triangles(und: DataFrame) -> DataFrame:
     """Every triangle ``a < b < c`` of a canonical edge set, once:
     ``e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)``."""
     e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
     e3 = und.select("a", F.col("b").alias("c"))
     return und.join(e2, "b").join(e3, ["a", "c"])
+
+
+def _broadcast_if(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` with a broadcast hint while ``n_rows`` of it fit
+    ``broadcast_ok``; past the bound the join shuffles."""
+    return F.broadcast(df) if broadcast_ok(n_rows, df) else df
+
+
+def _propagate(
+    edges: DataFrame,
+    state: DataFrame,
+    msg: Column,
+    agg: Column,
+    fold,
+    n_nodes: int,
+    send: str = "src",
+    recv: str = "dst",
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """One round of a fixed-round loop. Every node of ``state`` sends
+    ``msg`` (computed on the node-sized state, so the edge frame joins
+    one small side) along each ``send`` → ``recv`` edge; ``agg``
+    aggregates the messages ``m`` per receiving ``node`` (and ``by``),
+    and ``fold`` turns that frame, broadcast by the same decision as
+    the message (a fold that joins it skips the node frame's shuffle,
+    one job per round), into the next state. The state is a lazy
+    local checkpoint, so the next round plans against materialized
+    blocks and the truncation costs no job of its own (at sf0.1 it
+    ran pagerank in 0.53× and katz in 0.80× of the untruncated
+    loop's time)."""
+    sent = state.select(F.col("node").alias(send), msg.alias("m"))
+    got = (
+        edges.join(_broadcast_if(sent, n_nodes), send)
+        .groupBy(F.col(recv).alias("node"), *by)
+        .agg(agg)
+    )
+    return fold(_broadcast_if(got, n_nodes)).localCheckpoint(eager=False)
+
+
+def _fixpoint(
+    state: DataFrame, step, max_iters: int, name: str, *probe: Column
+) -> DataFrame:
+    """The convergence loop: ``state = step(state)`` until the
+    ``(count, *probe)`` aggregate of a round equals the previous
+    round's; ``step`` gets ``state`` broadcast-hinted by its counted
+    size. Each round's state is a lazy local checkpoint that its
+    probe materializes in the same job. ``max_iters`` bounds the
+    rounds, the one that confirms the fixpoint included."""
+    state = state.localCheckpoint(eager=False)
+    prev = state.agg(F.count(F.lit(1)), *probe).first()
+    for _ in range(max_iters):
+        state = step(_broadcast_if(state, prev[0])).localCheckpoint(eager=False)
+        cur = state.agg(F.count(F.lit(1)), *probe).first()
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(f"{name} did not converge in {max_iters} rounds")
 
 
 # fixed-point PageRank constants: ranks carry 1e9 units per node of
@@ -119,40 +198,16 @@ def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
     which is what lets a 1000-executor run be byte-compared against a
     single-node oracle. Dangling nodes keep receiving the teleport
     share; their outgoing mass is dropped (documented contract).
+    Returns ``(node, rank)``.
 
-    One shuffle per iteration (groupBy dst). The per-edge send value
-    is computed on the NODE-sized frame first (rank ⋈ outdeg, both
-    node-sized) so the edge table joins exactly ONE small side per
-    iteration instead of two — a 5-rep round-robin A/B at sf0.1
-    measured 4.29 s vs 4.70 s median. At the FIXED iteration counts
-    these operators contract (4-5 rounds) the lineage stays shallow
-    enough that per-round localCheckpoint costs MORE than it saves
-    (same A/B: 7.8 s — an eager job per round); the truncation
-    belongs only in convergence loops of unbounded depth (kcore,
-    components, label propagation). Returns ``(node, rank)``.
-
-    Send frame: broadcast while the probed node frame fits
-    ``materialize.broadcast_ok``'s 160 MB bound, which keeps the EDGE
-    table out of every per-iteration shuffle — 1.65× at 100M edges /
-    10M nodes (`graph_scale.csv`).
-    Loop-INVARIANT materialization (r09 optimization, guide §2.4):
-    ``edges``, ``nodes`` and ``deg`` are referenced by every iteration,
-    so leaving them lazy embeds the whole upstream edge derivation (for
-    the workload: a fact-table join + distinct) once per reference —
-    the captured sf0.1 plan held 44 parquet scans / 43 Exchanges across
-    5 iterations, and at 100 TB that is 5+ full passes over the fact
-    table. One eager ``localCheckpoint`` per invariant (three
-    node/edge-sized jobs, the same truncation pattern as
-    :func:`kcore`/:func:`label_propagation`) collapses the loop plan to
-    joins against materialized tables. The r07 A/B that rejected
-    checkpointing here adjudicated PER-ROUND checkpoints of the
-    loop-carried ``ranks`` (an eager job per round); invariants are
-    checkpointed ONCE, outside the loop.
-    Past the broadcast bound the probe path runs the plain equi-join
-    loop, which `graph_scale.csv` measured linear to 300M edges / 30M
-    nodes; a co-partitioned shuffle-hash form was removed because its
-    only A/B (a forced 20M-edge point) read 31.6 s vs 33.5 s and it
-    ran 1.3-1.45x slower at sf0.1.
+    One :func:`_propagate` round per iteration. The node state carries
+    the loop-invariant ``outdeg``, so the per-edge send value is a
+    projection of the state, and the edge table joins exactly one
+    small side per iteration (a 5-rep round-robin A/B at sf0.1 measured
+    4.29 s vs 4.70 s for joining state and degree separately). The
+    send frame broadcast is 1.65× at 100M edges / 10M nodes
+    (`graph_scale.csv`); past the bound the plain equi-join loop
+    measured linear to 300M edges / 30M nodes.
     """
     return _rank_fixed_point(edges, iterations)
 
@@ -166,44 +221,37 @@ def _rank_fixed_point(
     start with mass and receive the teleport share)."""
     edges = materialize(edges.select("src", "dst").distinct())
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # node state carries the loop-invariant outdeg (NULL for dangling
-    # nodes) and the seed flag, so the per-iteration send frame is a
-    # pure PROJECTION of the state instead of a state ⋈ deg join — one
-    # join and its exchange removed per iteration.
+    # outdeg is NULL for dangling nodes, whose NULL message no edge sends
     ndeg = _nodes(edges).join(deg, F.col("node") == deg.src, "left")
     if seeds is None:
-        ndeg = ndeg.select("node", "outdeg").localCheckpoint()
+        ndeg = ndeg.select("node", "outdeg")
         init, teleport = F.lit(INIT_MASS), F.lit(TELEPORT)
     else:
         seed_flag = F.broadcast(
             seeds.select(F.col("node"), F.lit(True).alias("_seed"))
         )
-        ndeg = (
-            ndeg.join(seed_flag, "node", "left")
-            .select("node", "outdeg", "_seed")
-            .localCheckpoint()
-        )
+        ndeg = ndeg.join(seed_flag, "node", "left").select("node", "outdeg", "_seed")
         init = F.when(F.col("_seed"), F.lit(INIT_MASS)).otherwise(F.lit(0))
         teleport = F.when(F.col("_seed"), F.lit(TELEPORT)).otherwise(F.lit(0))
-    bcast = broadcast_ok(ndeg.count(), ndeg)
-    ranks = ndeg.select("node", init.cast("long").alias("rank"), "outdeg")
-    for _ in range(iterations):
-        send = ranks.where(F.col("outdeg").isNotNull()).select(
-            F.col("node").alias("src"),
-            F.expr("(85 * rank DIV 100) DIV outdeg").alias("c"),
-        )
-        if bcast:
-            send = F.broadcast(send)
-        contrib = (
-            edges.join(send, "src")
-            .select(F.col("dst").alias("node"), "c")
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = ndeg.join(contrib, "node", "left").select(
+    ndeg = ndeg.localCheckpoint(eager=False)
+    n = ndeg.count()
+
+    def fold(c: DataFrame) -> DataFrame:
+        return ndeg.join(c, "node", "left").select(
             "node",
             (teleport + F.coalesce(F.col("c"), F.lit(0))).cast("long").alias("rank"),
             "outdeg",
+        )
+
+    ranks = ndeg.select("node", init.cast("long").alias("rank"), "outdeg")
+    for _ in range(iterations):
+        ranks = _propagate(
+            edges,
+            ranks,
+            F.expr("(85 * rank DIV 100) DIV outdeg"),
+            F.sum("m").alias("c"),
+            fold,
+            n,
         )
     return ranks.select("node", "rank")
 
@@ -219,9 +267,9 @@ HITS_ITERATIONS = 4
 def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     list ``(src, dst)`` — the authority-transfer companion to
-    :func:`pagerank`, and the same Spark iteration shape: a FIXED
-    number of synchronous rounds, each one edge-join + one groupBy
-    shuffle per half-step.
+    :func:`pagerank`: a FIXED number of synchronous rounds, each two
+    :func:`_propagate` half-steps (authority from in-neighbors' hub
+    scores, then hub from out-neighbors' authority scores).
 
     Exactness: textbook HITS L2-normalizes each half-step; floating
     normalization is summation-order-sensitive, so this uses the
@@ -231,88 +279,47 @@ def hits(edges: DataFrame, iterations: int = HITS_ITERATIONS) -> DataFrame:
     across engines and partitionings while preserving the relative
     magnitudes the rescale-invariant HITS iteration is defined by.
 
-    Each half-step's raw frame feeds BOTH the rescale join and its
-    max — the dual-consumer shape that distinguishes this loop from
-    :func:`pagerank`'s single-consumer chain, and the reason the raw
-    frames are eagerly ``localCheckpoint``-ed (node-sized — cheap):
-    without truncation each reference re-embeds the whole prior
-    lineage and the PLAN grows ~5.5× per iteration (measured; the
-    crossJoin(max) variant additionally OOM'd the driver at 4
-    iterations on a 6 k-edge graph), while the checkpointed form is
-    plan-linear — pinned in test_plan_budgets. The max itself is a
-    bounded scalar collect (ONE row per half-step, the BPE-argmax
-    convention). Nodes without in-edges get authority 0; without
-    out-edges, hub 0. (pagerank's fixed-depth loop measured
-    localCheckpoint as a net LOSS — that guidance is for linear
-    chains; dual-consumer rescale loops need the truncation.)
-
-    Score frame: broadcast by the same probe and bound as
-    :func:`pagerank`'s send frame — 2.13× at 100M edges / 10M nodes.
+    Each half-step's aggregate feeds both the rescale join and its
+    max, which arrives as a 1-row broadcast cross join inside the
+    same job (no driver collect). Because every half-step's state is
+    truncated, the plan stays linear in iterations (pinned in
+    test_plan_budgets); untruncated, each reference re-embeds the
+    prior lineage and the plan grows ~5.5× per iteration. Nodes
+    without in-edges get authority 0; without out-edges, hub 0. The
+    score broadcast is 2.13× at 100M edges / 10M nodes.
 
     Returns ``(node, authority, hub)`` for every node.
     """
-    # loop invariants materialized ONCE (r09, same rationale as
-    # :func:`pagerank`): edges are referenced twice per iteration and
-    # nodes twice, so lazy frames re-embed the upstream edge derivation
-    # (a fact-table join for the workload) 8+ times across 4 iterations
     edges = materialize(edges.select("src", "dst").distinct())
-    nodes = _nodes(edges).localCheckpoint()
-    bcast = broadcast_ok(nodes.count(), nodes)
-    hint = F.broadcast if bcast else (lambda df: df)
+    nodes = _nodes(edges).localCheckpoint(eager=False)
+    n = nodes.count()
+
+    def rescale(score: str):
+        def fold(c: DataFrame) -> DataFrame:
+            mx = F.broadcast(c.agg(F.max("c").alias("mx")))
+            return (
+                nodes.join(c, "node", "left")
+                .crossJoin(mx)
+                .select(
+                    "node",
+                    F.expr(f"coalesce(c, 0) * {HITS_SCALE} DIV mx")
+                    .cast("long")
+                    .alias(score),
+                )
+            )
+
+        return fold
+
     hub = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("h"))
     auth = None
-    # r10 (guide §5 — no scalar collects in the loop): the per-half-step
-    # rescale max used to be a driver `.collect()` — an extra eager JOB
-    # per half-step, 8 per run on top of the 8 checkpoint jobs. The max
-    # is now a 1-row broadcast cross join over the SAME checkpointed
-    # raw frame: identical value (max is order-free), computed inside
-    # the NEXT half-step's job instead of its own. Jobs per iteration:
-    # 4 → 2. The old crossJoin-OOM hazard (docstring above) applied to
-    # the UNCHECKPOINTED form — here the cross join reads a
-    # materialized scan, so the plan stays linear (still pinned by
-    # test_plan_budgets).
     for _ in range(iterations):
-        a_raw = (
-            edges.join(hint(hub), edges.src == hub.node)
-            .select(F.col("dst").alias("node"), "h")
-            .groupBy("node")
-            .agg(F.sum("h").alias("raw"))
-        ).localCheckpoint(eager=False)
-        a_mx = F.broadcast(a_raw.agg(F.max("raw").alias("mx")))
-        auth = (
-            nodes.join(a_raw, "node", "left")
-            .crossJoin(a_mx)
-            .select(
-                "node",
-                F.expr(f"coalesce(raw, 0) * {HITS_SCALE} DIV mx")
-                .cast("long")
-                .alias("a"),
-            )
+        auth = _propagate(edges, hub, F.col("h"), F.sum("m").alias("c"), rescale("a"), n)
+        hub = _propagate(
+            edges, auth, F.col("a"), F.sum("m").alias("c"), rescale("h"), n,
+            send="dst", recv="src",
         )
-        h_raw = (
-            edges.join(hint(auth), edges.dst == auth.node)
-            .select(F.col("src").alias("node"), "a")
-            .groupBy("node")
-            .agg(F.sum("a").alias("raw"))
-        ).localCheckpoint(eager=False)
-        h_mx = F.broadcast(h_raw.agg(F.max("raw").alias("mx")))
-        hub = (
-            nodes.join(h_raw, "node", "left")
-            .crossJoin(h_mx)
-            .select(
-                "node",
-                F.expr(f"coalesce(raw, 0) * {HITS_SCALE} DIV mx")
-                .cast("long")
-                .alias("h"),
-            )
-        )
-    return (
-        auth.join(hub, "node")
-        .select(
-            "node",
-            F.col("a").alias("authority"),
-            F.col("h").alias("hub"),
-        )
+    return auth.join(hub, "node").select(
+        "node", F.col("a").alias("authority"), F.col("h").alias("hub")
     )
 
 
@@ -536,23 +543,28 @@ def triangle_count(
     ``und``: optional pre-canonicalized, pre-materialized ``(a, b)``
     edge frame (``a < b``, distinct) — :func:`clustering_coefficient`
     shares its own canonical frame so the edge derivation is
-    canonicalized and materialized ONCE, not twice.
+    canonicalized and materialized ONCE, not twice. A row with
+    ``a >= b`` raises ``ValueError``.
     """
     if und is None:
         und = materialize(_undirected(edges))
-    # the degree table serves the gate AND the big path's orientation;
-    # its bounded aggregate yields exact n_nodes (dense-kernel memory
-    # gate), exact m and the exact wedge mass in ONE job
-    deg = (
-        und.select(F.explode(F.array(F.col("a"), F.col("b"))).alias("n"))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    # the degree table serves the gate AND the big path's orientation:
+    # the gate's job materializes it, and one bounded aggregate yields
+    # exact n_nodes (dense-kernel memory gate), m and the wedge mass.
+    # A row with a >= b explodes into a NULL node, which the gate counts.
+    deg = _degrees(
+        und.select("a", F.when(F.col("a") < F.col("b"), F.col("b")).alias("b"))
+    ).localCheckpoint(eager=False)
     gate = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("d").alias("sd"),
         F.sum(F.expr("d * (d - 1) DIV 2")).alias("wedge_mass"),
+        F.sum(F.when(F.col("n").isNull(), F.col("d"))).alias("bad"),
     ).first()
+    if gate["bad"]:
+        raise ValueError(
+            f"triangle_count: und has {gate['bad']} rows with a >= b"
+        )
     n_nodes = gate["n_nodes"] or 0
     m = (gate["sd"] or 0) // 2
     if n_nodes <= TRI_DENSE_MAX_NODES and m <= TRI_DENSE_MAX_EDGES:
@@ -926,9 +938,9 @@ def bfs_distances(
     run until a fixpoint round changes nothing (the distance sum is
     monotone non-increasing once a node is reached, and the reached
     set only grows, so ``(count, sum)`` stabilizing IS convergence).
-    Rounds = graph diameter; each costs one equi-join + one groupBy.
-    ``localCheckpoint`` truncates the iterative lineage exactly as in
-    :func:`dedup.neardup_components`.
+    Rounds = graph diameter; each is one :func:`_fixpoint` round of
+    one equi-join + one groupBy. ``max_iters`` bounds the rounds that
+    still reach or shorten something; one more round confirms.
 
     ``edges``: ``(src, dst)`` (canonicalized to undirected here);
     ``sources``: ``(node)`` at distance 0, or ``None`` for "the
@@ -954,9 +966,7 @@ def bfs_distances(
     canon = materialize(_undirected(edges, keep_loops=True))
     if sources is None:
         sources = canon.agg(F.min("a").alias("node"))
-    dist = sources.select(
-        F.col("node"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=False)
+    dist = sources.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
     return _min_plus_bfs(_adjacency(canon), dist, ["node"], max_iters)
 
 
@@ -968,40 +978,21 @@ def _min_plus_bfs(
     ``(*keys, dist)`` with ``keys`` ending in ``node``; each round every
     key takes ``min(own dist, neighbor dist + 1)`` over ``adj``, until
     the ``(count, sum)`` probe stops changing."""
-    prev = (dist.count(), 0)
-    for _ in range(max_iters + 1):
-        # broadcast the frontier while it fits (r09; r10: BYTE-based
-        # bound — rows x schema width vs BROADCAST_MAX_BYTES, see
-        # materialize.broadcast_ok): the reached-set size is already
-        # tracked by the convergence tuple, so the per-round decision
-        # is free; beyond the bound the plain equi-join shuffles as
-        # before. The checkpoint is LAZY (r10): the probe aggregate
-        # below materializes the round's state in the SAME job — one
-        # job per round instead of checkpoint + probe.
-        hint = F.broadcast if broadcast_ok(prev[0], dist) else (
-            lambda df: df
-        )
-        stepped = (
-            adj.join(hint(dist), adj.n == dist.node)
+
+    def step(d: DataFrame) -> DataFrame:
+        return (
+            adj.join(d, adj.n == d.node)
             .select(
                 *keys[:-1],
                 F.col("nb").alias("node"),
                 (F.col("dist") + 1).alias("dist"),
             )
-            .unionByName(dist.select(*keys, "dist"))
+            .unionByName(d.select(*keys, "dist"))
             .groupBy(*keys)
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
-        agg = stepped.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        cur = (agg["n"], agg["s"])
-        dist = stepped
-        if cur == prev:
-            return dist
-        prev = cur
-    raise RuntimeError(f"bfs_distances did not converge in {max_iters} rounds")
+
+    return _fixpoint(dist, step, max_iters + 1, "bfs_distances", F.sum("dist"))
 
 
 def _bfs_distances_multi(
@@ -1022,7 +1013,7 @@ def _bfs_distances_multi(
     canon = materialize(_undirected(edges, keep_loops=True))
     dist = edges.sparkSession.createDataFrame(
         [(int(s), int(s), 0) for s in seeds], "seed long, node long, dist long"
-    ).localCheckpoint()
+    )
     return _min_plus_bfs(_adjacency(canon), dist, ["seed", "node"], max_iters)
 
 
@@ -1193,7 +1184,7 @@ def link_prediction(edges: DataFrame, k: int = 20) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cn"))
     )
     non_edges = cn.join(und, ["a", "b"], "left_anti")
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+    deg = _degrees(und)
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     return (
@@ -1288,7 +1279,7 @@ def resource_allocation(edges: DataFrame, k: int = 20) -> DataFrame:
     # same materialize-once treatment as :func:`link_prediction` (r09)
     und = materialize(_undirected(edges))
     adj = _adjacency(und)
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+    deg = _degrees(und)
     w1 = adj.select(F.col("n").alias("c"), F.col("nb").alias("a"))
     w2 = adj.select(F.col("n").alias("c"), F.col("nb").alias("b"))
     scores = (
@@ -1357,15 +1348,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     # materialize once (r09): und feeds the wedge count AND the
     # triangle enumeration — lazily the edge derivation ran twice
     und = materialize(_undirected(edges))
-    adj = und.select(
-        F.explode(F.array(F.col("a"), F.col("b"))).alias("n")
-    )
-    wedges = (
-        adj.groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .agg(
-            F.sum(F.expr("d * (d - 1) DIV 2")).cast("long").alias("n_wedges")
-        )
+    wedges = _degrees(und).agg(
+        F.sum(F.expr("d * (d - 1) DIV 2")).cast("long").alias("n_wedges")
     )
     # coalesce: a triangle-free graph yields an EMPTY corner frame, so
     # the sum is NULL, not 0. The canonical frame is shared (r10): und
@@ -1429,11 +1413,10 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     table onto the edge list + ONE map-combinable moment aggregate.
     Returns one row ``(n_ends, assortativity)``.
     """
-    # materialize once + explode-adjacency (r09): adj feeds the degree
-    # table and the moment join — lazily that re-ran the edge
-    # derivation three times
-    adj = _adjacency(materialize(_undirected(edges)))
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+    # materialized once: und feeds the degree table and the adjacency
+    und = materialize(_undirected(edges))
+    adj = _adjacency(und)
+    deg = _degrees(und)
     dx = deg.select(F.col("n"), F.col("d").alias("x"))
     dy = deg.select(F.col("n").alias("nb"), F.col("d").alias("y"))
     m = (
@@ -1505,45 +1488,35 @@ def kcore(
     filtering, community seeding; Seidman 1983). Rounds needed = the
     peel depth, typically ~log of the degree spread.
 
-    Per round: two semi-joins restrict the adjacency list to
-    survivors (both endpoints), one map-combinable groupBy recomputes
-    degrees, an integer filter keeps deg >= k; ``localCheckpoint``
-    truncates the loop lineage. Convergence is the survivor COUNT
-    stabilizing — valid because the alive set only shrinks. All
-    integers; the peeled set is unique regardless of removal order
-    (standard k-core property), so partitioning cannot change it.
+    Per :func:`_fixpoint` round: two semi-joins restrict the adjacency
+    list to the survivors (both endpoints), one map-combinable groupBy
+    recomputes degrees, an integer filter keeps ``d >= k``. The loop
+    state is the survivors' ``(n, d)``, so the result is the last
+    round's state. Convergence is the survivor COUNT stabilizing —
+    valid because the alive set only shrinks. All integers; the peeled
+    set is unique regardless of removal order (standard k-core
+    property), so partitioning cannot change it.
 
     Returns ``(node, core_degree)`` for the k-core members — degrees
     measured inside the core.
     """
-    # explode-based symmetric adjacency: the canonical set (and the
-    # caller's whole edge derivation under it) evaluated once (r09)
-    adj = materialize(_adjacency(_undirected(edges)))
-    # lazy checkpoint + count probe = one job (r10)
-    alive = adj.select("n").distinct().localCheckpoint(eager=False)
-    prev = alive.count()
-    for _ in range(max_iters):
-        deg = (
+    und = materialize(_undirected(edges))
+    adj = _adjacency(und)
+
+    def step(nd: DataFrame) -> DataFrame:
+        alive = nd.select("n")
+        return (
             adj.join(alive, "n", "leftsemi")
             .join(alive.select(F.col("n").alias("nb")), "nb", "leftsemi")
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("d"))
+            .where(F.col("d") >= k)
         )
-        alive = deg.where(F.col("d") >= k).select("n").localCheckpoint(
-            eager=False
-        )
-        cur = alive.count()
-        if cur == prev:
-            return (
-                deg.where(F.col("d") >= k)
-                .select(
-                    F.col("n").alias("node"),
-                    F.col("d").cast("long").alias("core_degree"),
-                )
-                .orderBy("node")
-            )
-        prev = cur
-    raise RuntimeError(f"kcore did not converge in {max_iters} peel rounds")
+
+    core = _fixpoint(_degrees(und), step, max_iters, "kcore")
+    return core.select(
+        F.col("n").alias("node"), F.col("d").cast("long").alias("core_degree")
+    ).orderBy("node")
 
 
 def _wl_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1605,43 +1578,36 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     a distributed engine can make reproducible). A fixed round count
     keeps the oracle an unrolled CTE chain.
 
-    Per round: one adjacency⋈labels equi-join, one map-combinable
-    groupBy(node, label), one argmax window per node;
-    ``localCheckpoint`` truncates the loop lineage (same pattern as
-    pagerank/kcore). All counts integer; tie-break total.
-
-    Label frame: broadcast into the adjacency join by the same probe
-    and bound as :func:`pagerank`'s send frame — 1.26× at 30M edges /
-    3M nodes (the groupBy(n, label) shuffle after the join runs
-    either way).
+    Per :func:`_propagate` round: every node sends its label to its
+    neighbors, one map-combinable groupBy(node, label) counts them and
+    one argmax window per node folds the counts into the next labels.
+    All counts integer; tie-break total. The label broadcast is 1.26×
+    at 30M edges / 3M nodes (the groupBy(node, label) shuffle after
+    the join runs either way).
 
     Returns ``(node, label)`` after ``rounds`` rounds.
     """
-    # loop invariant materialized once (r09): adj is joined EVERY
-    # round, so lazily each round re-ran the whole edge derivation
     adj = materialize(_adjacency(_undirected(edges)))
-    labels = adj.select(F.col("n").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+    labels = (
+        adj.select(F.col("n").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+        .localCheckpoint(eager=False)
     )
-    bcast = broadcast_ok(labels.count(), labels)
-    hint = F.broadcast if bcast else (lambda df: df)
-    w = Window.partitionBy("n").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(rounds):
-        nb_labels = adj.join(
-            hint(labels), adj["nb"] == labels["node"]
-        ).select(adj["n"].alias("n"), "label")
-        counts = nb_labels.groupBy("n", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        # lazy checkpoint (r10): the plan is truncated at creation, but
-        # the round executes inside the NEXT consumer's job — the whole
-        # fixed-round loop runs as one job cascade instead of one eager
-        # checkpoint job per round
-        labels = (
+    n = labels.count()
+    w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("m"))
+
+    def fold(counts: DataFrame) -> DataFrame:
+        return (
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select(F.col("n").alias("node"), "label")
-            .localCheckpoint(eager=False)
+            .select("node", F.col("m").alias("label"))
+        )
+
+    for _ in range(rounds):
+        labels = _propagate(
+            adj, labels, F.col("label"), F.count(F.lit(1)).alias("cnt"), fold, n,
+            send="nb", recv="n", by=("m",),
         )
     return labels
 
@@ -1702,59 +1668,60 @@ def modularity(edges: DataFrame, communities: DataFrame) -> DataFrame:
     ``div`` truncates toward zero while DuckDB's ``//`` floors — the
     pmod form makes both floor).
 
-    Plan: two broadcast label joins onto the edge list + two
-    map-combinable groupBys (per-label intra-edges, per-label degree)
-    + a 1-row rollup. Returns ``(m_edges, n_communities, q_num,
-    q_den, q_ppm)``.
+    Plan: one pass. Each canonical edge is tagged with both endpoint
+    labels by broadcast left joins and exploded into its two endpoints
+    (the first carries the intra-community flag); one groupBy(label)
+    gives ``(e_in, d_tot)`` and one global aggregate gives ``m`` (half
+    the endpoints, so it counts every edge), ``n_communities`` and
+    ``q_num = 4m·Σe_in − Σd_tot²``. An unlabeled endpoint adds to
+    neither sum, a label with no edges is no community, and an
+    assignment with no community returns no row. Returns ``(m_edges,
+    n_communities, q_num, q_den, q_ppm)``.
     """
-    # materialized once: und feeds the tagged join, the degree table
-    # and the edge count
-    und = materialize(_undirected(edges))
     la = communities.select(F.col("node").alias("a"), F.col("label").alias("lab_a"))
     lb = communities.select(F.col("node").alias("b"), F.col("label").alias("lab_b"))
-    tagged = und.join(F.broadcast(la), "a").join(F.broadcast(lb), "b")
-    e_c = (
-        tagged.where(F.col("lab_a") == F.col("lab_b"))
-        .groupBy(F.col("lab_a").alias("label"))
-        .agg(F.count(F.lit(1)).alias("e_in"))
-    )
-    deg = (
-        und.select(F.col("a").alias("n")).unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    d_c = (
-        deg.join(
-            F.broadcast(communities.select(F.col("node").alias("n"), "label")), "n"
-        )
-        .groupBy("label")
-        .agg(F.sum("d").alias("d_tot"))
-    )
-    m_row = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    per_c = (
-        d_c.join(e_c, "label", "left")
-        .select("label", F.coalesce("e_in", F.lit(0)).alias("e_in"), "d_tot")
-        .crossJoin(F.broadcast(m_row))
+    ends = (
+        _undirected(edges)
+        .join(F.broadcast(la), "a", "left")
+        .join(F.broadcast(lb), "b", "left")
         .select(
-            "m",
-            (
-                F.lit(4) * F.col("m") * F.col("e_in")
-                - F.col("d_tot") * F.col("d_tot")
-            ).alias("contrib"),
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("lab_a").alias("label"),
+                        F.col("lab_a").eqNullSafe(F.col("lab_b")).cast("long").alias("inner"),
+                    ),
+                    F.struct(F.col("lab_b").alias("label"), F.lit(0).cast("long").alias("inner")),
+                )
+            ).alias("e")
         )
+        .groupBy(F.col("e.label").alias("label"))
+        .agg(F.sum("e.inner").alias("e_in"), F.count(F.lit(1)).alias("d_tot"))
     )
-    return per_c.groupBy("m").agg(
-        F.count(F.lit(1)).cast("long").alias("n_communities"),
-        F.sum("contrib").cast("long").alias("q_num"),
-    ).select(
-        F.col("m").alias("m_edges"),
-        "n_communities",
-        "q_num",
-        (F.lit(4) * F.col("m") * F.col("m")).cast("long").alias("q_den"),
-        F.expr(
-            "CAST((1000000 * q_num - pmod(1000000 * q_num, 4 * m_edges * m_edges))"
-            " div (4 * m_edges * m_edges) AS BIGINT)"
-        ).alias("q_ppm"),
+    labeled = F.col("label").isNotNull()
+    return (
+        ends.agg(
+            F.expr("CAST(sum(d_tot) DIV 2 AS BIGINT)").alias("m_edges"),
+            F.count("label").cast("long").alias("n_communities"),
+            F.sum(F.when(labeled, F.col("e_in"))).alias("s_in"),
+            F.sum(F.when(labeled, F.col("d_tot") * F.col("d_tot"))).alias("s_dd"),
+        )
+        .where(F.col("n_communities") > 0)
+        .select(
+            "m_edges",
+            "n_communities",
+            (F.lit(4) * F.col("m_edges") * F.col("s_in") - F.col("s_dd"))
+            .cast("long")
+            .alias("q_num"),
+            (F.lit(4) * F.col("m_edges") * F.col("m_edges")).cast("long").alias("q_den"),
+        )
+        .select(
+            "*",
+            F.expr(
+                "CAST((1000000 * q_num - pmod(1000000 * q_num, q_den))"
+                " div q_den AS BIGINT)"
+            ).alias("q_ppm"),
+        )
     )
 
 
@@ -1958,30 +1925,26 @@ def katz_centrality(
     like PageRank's 85/100 damping, so the result is bit-reproducible
     under any partitioning.
 
-    ``x_{k+1}(v) = INIT + (Σ_{u→v} x_k(u)) // 2`` — one shuffle per
-    iteration (groupBy dst), the iteration count part of the operator
-    contract so the oracle unrolls it into a CTE chain. Returns the
-    top 20 ``(node, katz)`` under a total order.
+    ``x_{k+1}(v) = INIT + (Σ_{u→v} x_k(u)) // 2`` — one
+    :func:`_propagate` round per iteration, the iteration count part of
+    the operator contract so the oracle unrolls it into a CTE chain.
+    Returns the top 20 ``(node, katz)`` under a total order.
     """
-    # loop invariants materialized once (r09, same rationale as
-    # :func:`pagerank`: each iteration otherwise re-derives both)
     edges = materialize(edges.select("src", "dst").distinct())
-    nodes = _nodes(edges).localCheckpoint()
+    nodes = _nodes(edges).localCheckpoint(eager=False)
+    n = nodes.count()
+
+    def fold(c: DataFrame) -> DataFrame:
+        return nodes.join(c, "node", "left").select(
+            "node",
+            (F.lit(KATZ_INIT) + F.expr("coalesce(c, 0L) div 2"))
+            .cast("long")
+            .alias("katz"),
+        )
+
     x = nodes.select("node", F.lit(KATZ_INIT).cast("long").alias("katz"))
     for _ in range(iterations):
-        contrib = (
-            edges.join(x, edges.src == x.node)
-            .select(F.col("dst").alias("node"), F.col("katz"))
-            .groupBy("node")
-            .agg(F.sum("katz").alias("c"))
-        )
-        x = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(KATZ_INIT)
-                + F.expr("coalesce(c, 0L) div 2")
-            ).cast("long").alias("katz"),
-        )
+        x = _propagate(edges, x, F.col("katz"), F.sum("m").alias("c"), fold, n)
     return x.orderBy(F.desc("katz"), "node").limit(20)
 
 
@@ -2158,13 +2121,12 @@ def ktruss(
     degree). The standard cohesive-subgraph extractor where k-core is
     too permissive — spam-ring and community-kernel mining.
 
-    Per round: one triangle enumeration over the surviving edge set
-    (:func:`_triangles`, the same two-equi-join plan as
-    :func:`triangle_count`'s wedge branch), an
-    explode of each triangle into its three member edges, ONE
-    map-combinable groupBy(a, b) for support, and an integer filter
-    ``support >= k - 2``; ``localCheckpoint`` truncates loop lineage.
-    Convergence is the edge COUNT stabilizing — valid because the
+    Per :func:`_fixpoint` round: one triangle enumeration over the
+    surviving edge set (:func:`_triangles`, the same two-equi-join plan
+    as :func:`triangle_count`'s wedge branch), an explode of each
+    triangle into its three member edges, ONE map-combinable
+    groupBy(a, b) for support, and an integer filter ``support >= k -
+    2``. Convergence is the edge COUNT stabilizing — valid because the
     surviving set only shrinks, and the fixpoint is unique regardless
     of removal order (standard truss property), so partitioning
     cannot change the result. Rounds needed = peel depth (2-3 on the
@@ -2175,17 +2137,11 @@ def ktruss(
     Returns ``(node_a, node_b, support)`` for the k-truss edges —
     support measured inside the truss — ordered by (node_a, node_b).
     """
-    alive = materialize(_undirected(edges))
-    prev = alive.count()
-    for _ in range(max_iters):
-        # one enumeration per round (r09): the 3-branch union of tri
-        # projections re-ran the two-join enumeration three times;
-        # explode emits each triangle's three member edges map-side.
-        # Lazy localCheckpoint (not materialize): the count below
-        # materializes the round in the same job, and under the disk
-        # mode a per-round persist would never be unpersisted
-        sup = (
-            _triangles(alive).select(
+
+    def step(alive: DataFrame) -> DataFrame:
+        return (
+            _triangles(alive)
+            .select(
                 F.explode(
                     F.array(
                         F.struct("a", "b"),
@@ -2198,18 +2154,14 @@ def ktruss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("s"))
             .where(F.col("s") >= int(k) - 2)
-            .localCheckpoint(eager=False)
         )
-        alive = sup.select("a", "b")
-        cur = alive.count()
-        if cur == prev:
-            return sup.select(
-                F.col("a").alias("node_a"),
-                F.col("b").alias("node_b"),
-                F.col("s").cast("long").alias("support"),
-            ).orderBy("node_a", "node_b")
-        prev = cur
-    raise RuntimeError(f"ktruss did not converge in {max_iters} peel rounds")
+
+    sup = _fixpoint(_undirected(edges), step, max_iters, "ktruss")
+    return sup.select(
+        F.col("a").alias("node_a"),
+        F.col("b").alias("node_b"),
+        F.col("s").cast("long").alias("support"),
+    ).orderBy("node_a", "node_b")
 
 
 def _wl_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -57,6 +57,17 @@ def test_triangles_exact_on_known_graph(spark):
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
+@pytest.mark.parametrize(
+    "rows", [[(1, 2), (2, 3), (1, 3), (3, 3)], [(1, 2), (2, 3), (1, 3), (2, 1)]]
+)
+def test_triangles_reject_non_canonical_und(spark, rows):
+    """``und`` must hold ``a < b``: a self-loop or a reversed pair
+    raises instead of corrupting degrees and counts."""
+    und = spark.createDataFrame(rows, "a long, b long")
+    with pytest.raises(ValueError, match="a >= b"):
+        triangle_count(None, und=und)
+
+
 def test_triangles_brute_force_cross_check(spark):
     # pseudo-random-ish but deterministic graph; brute-force O(n^3)
     edges = [((i * 7) % 11, (i * 5 + 3) % 11) for i in range(40)]
@@ -350,6 +361,21 @@ def test_modularity_hand_values(spark):
     assert rb["q_num"] < 0
     # floor semantics: python // floors, matching the pmod idiom
     assert rb["q_ppm"] == (1_000_000 * rb["q_num"]) // rb["q_den"]
+
+    # node 6 unlabeled: its endpoints add to neither e_c nor d_c, but
+    # m still counts all 7 edges; label 2 has no edges, so no community
+    part = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 0), (4, 1), (5, 1), (9, 2)],
+        "node long, label long",
+    )
+    rp = modularity(edges, part).collect()[0]
+    assert rp["m_edges"] == 7 and rp["n_communities"] == 2
+    # e = (3, 1), d = (7, 3 + 2): (4*7*3 - 49) + (4*7*1 - 25) = 38
+    assert rp["q_num"] == 38 and rp["q_den"] == 196
+    assert rp["q_ppm"] == (1_000_000 * 38) // 196
+
+    # an empty assignment returns no row
+    assert modularity(edges, part.where("node < 0")).count() == 0
 
 
 def test_modularity_leaves_no_cache_entry(spark):
@@ -662,14 +688,48 @@ def test_ktruss_order_invariant_under_repartition(spark):
     assert one == two
 
 
+@pytest.mark.parametrize(
+    "op, kwargs, edges, bound",
+    [
+        # eccentricity 4 from the minimum node
+        ("bfs_distances", {"sources": None}, [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)], 4),
+        # the pendant path 4-5-6 peels one node per round
+        ("kcore", {"k": 2}, [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)], 4),
+        # the second kernel loses its outer edges, then its shared edge
+        (
+            "ktruss",
+            {"k": 4},
+            [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+            + [(10, 11), (10, 12), (11, 12), (10, 13), (11, 13)],
+            3,
+        ),
+    ],
+)
+def test_fixpoint_max_iters_bound(spark, op, kwargs, edges, bound):
+    """``max_iters`` bounds the loop's rounds (for BFS the rounds that
+    change the distances, for kcore and ktruss every peel round, the
+    confirming one included): one short raises, the exact bound
+    returns the default's rows."""
+    from query_refinement_dsit_databases_2021_spark.operators import graph
+
+    fn = getattr(graph, op)
+    df = spark.createDataFrame(edges, "src long, dst long")
+    want = sorted(map(tuple, fn(df, **kwargs).collect()))
+    assert want
+    assert sorted(map(tuple, fn(df, **kwargs, max_iters=bound).collect())) == want
+    with pytest.raises(RuntimeError, match="did not converge"):
+        fn(df, **kwargs, max_iters=bound - 1)
+
+
 def test_loop_broadcast_probe_output_invariant(
     spark, monkeypatch, materialize_mode
 ):
-    """pagerank, hits and label_propagation each probe their node-sized
-    loop frame once and broadcast it while ``broadcast_ok`` holds. On a
-    small graph the real rule adds one broadcast hint per loop join;
-    with the rule forced False the loop joins carry none. Both paths
-    are bit-identical under every ``spark.qr.materialize`` mode.
+    """pagerank, katz, hits and label_propagation each probe their
+    node count once, and every propagation round broadcasts its
+    message and its aggregate while ``broadcast_ok`` holds. On a small
+    graph the real rule adds those hints; with the rule forced False
+    the rounds carry none. Both paths are
+    bit-identical under every ``spark.qr.materialize`` mode.
 
     The loops truncate lineage with ``localCheckpoint``, so the hints
     are counted over the analyzed plan of every frame the operator
@@ -697,18 +757,21 @@ def test_loop_broadcast_probe_output_invariant(
         hints = sum(p.count("strategy=broadcast") for p in plans)
         return hints, sorted(map(tuple, out.collect()))
 
-    # (operator, loop joins it runs against its node-sized frame)
+    # (operator, hints its rounds add): two per round; each HITS
+    # half-step's rescale fold reads its aggregate twice, so both of
+    # that half-step's hints show twice
     cases = [
-        (lambda e: graph.pagerank(e, 3), 3),
-        (lambda e: graph.hits(e, 2), 4),
-        (lambda e: graph.label_propagation(e, 2), 2),
+        (lambda e: graph.pagerank(e, 3), 6),
+        (lambda e: graph.katz_centrality(e, 3), 6),
+        (lambda e: graph.hits(e, 2), 16),
+        (lambda e: graph.label_propagation(e, 2), 4),
     ]
-    for op, loop_joins in cases:
+    for op, hints in cases:
         real_hints, real_rows = run(op)
         monkeypatch.setattr(graph, "broadcast_ok", lambda n, df: False)
         forced_hints, forced_rows = run(op)
         monkeypatch.undo()
-        assert real_hints - forced_hints == loop_joins
+        assert real_hints - forced_hints == hints
         assert real_rows == forced_rows and real_rows
 
 

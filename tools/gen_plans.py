@@ -120,10 +120,11 @@ NOTES = {
         "final closed form."
     ),
     "graph_pagerank": (
-        "Five join+agg rounds: every contribution agg is "
-        "hash-partitioned with a map-side partial sum; equi-joins only "
-        "(no NLJ/Cartesian); TakeOrderedAndProject for the final "
-        "top-20 — ranks never globally sorted."
+        "Every round's state is a lazy local checkpoint, so the plan is "
+        "the last round's ranks (Scan ExistingRDD) under a "
+        "TakeOrderedAndProject for the top-20 — ranks never globally "
+        "sorted. The per-round join+agg shape is pinned in "
+        "test_plan_budgets and by test_graph_job_budget."
     ),
     "ops_bloom_prefilter": (
         "All three filter consultations are BroadcastHashJoins over "
@@ -268,10 +269,11 @@ NOTES = {
         "is inline column arithmetic on the two wide rows."
     ),
     "graph_modularity": (
-        "Two broadcast label joins onto the undirected edge list, two "
-        "map-combinable groupBys (intra-edges, degrees), a 1-row "
-        "rollup. The q_ppm floor-division rides the pmod idiom so "
-        "Spark matches DuckDB's floor semantics on negative Q."
+        "One pass: two broadcast left label joins onto the undirected "
+        "edge list, a map-side endpoint explode, ONE map-combinable "
+        "groupBy(label) for (e_in, d_tot) and a 1-row rollup. The q_ppm "
+        "floor-division rides the pmod idiom so Spark matches DuckDB's "
+        "floor semantics on negative Q."
     ),
     "ts_mann_kendall": (
         "The daily table is checkpointed (Scan ExistingRDD), so events "
